@@ -35,13 +35,18 @@ object Queries {
 
   // ---------- shared helpers ----------
 
-  /** events.ts has shipped as parquet TIMESTAMP(NANOS) in some
-    * generator versions and TIMESTAMP(MICROS) in others — adapt to
-    * whichever this dir carries. Nanos: Spark 4 reads it only as long
+  /** events.ts ships in three parquet layouts: INT64 micros
+    * (TIMESTAMP_NTZ) in the fixture tables (TESTDATA.md), INT96
+    * (TIMESTAMP) in GenData output under Spark's default
+    * `outputTimestampType`, and INT64 nanos from older generators —
+    * adapt to whichever this dir carries. The layout is read from one
+    * footer on the driver ([[graft.sources.ParquetSchema.of]], no Spark
+    * job) after the confs below are set, so nanos resolve to long.
+    * Nanos: Spark 4 reads them only as long
     * (spark.sql.legacy.parquet.nanosAsLong), truncate to micros —
-    * identical to DuckDB's ns→us cast. Micros: arrives as a timestamp
-    * type already; normalize NTZ → session-UTC timestamp so both
-    * shapes produce the same downstream column type. */
+    * identical to DuckDB's ns→us cast. Micros and INT96 arrive as a
+    * timestamp type already; normalize NTZ → session-UTC timestamp so
+    * every layout produces the same downstream column type. */
   def events(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // The micros branch's NTZ→timestamp cast reads the wall clock in
@@ -51,8 +56,10 @@ object Queries {
     // GenData/tests) already pins UTC; force it here too so embedding
     // Queries in a foreign session cannot silently diverge.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
-    raw.schema("ts").dataType match {
+    val path = s"$dir/events.parquet"
+    val schema = graft.sources.ParquetSchema.of(spark, path)
+    val raw = spark.read.schema(schema).parquet(path)
+    schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
       case _ =>

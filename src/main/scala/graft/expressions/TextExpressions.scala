@@ -327,7 +327,9 @@ final class TokenListLookup(lists: Seq[Seq[String]]) extends Serializable {
       ws.foreach { w =>
         val k = UTF8String.fromString(w)
         val cur = m.get(k)
-        m.put(k, if (cur == null) Array(i) else cur :+ i)
+        // a word repeated inside one list still counts once per token
+        if (cur == null) m.put(k, Array(i))
+        else if (cur.last != i) m.put(k, cur :+ i)
       }
     }
     m

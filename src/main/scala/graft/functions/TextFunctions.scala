@@ -42,10 +42,6 @@ object TextFunctions {
   /** BPE-ish token count — the corpus-cost proxy. */
   def bpeTokenCount(text: Column): Column = size(bpeTokens(text))
 
-  /** Count of tokens that appear in `words` (codegen'd; no UDF). */
-  def keywordHits(toks: Column, words: Seq[String]): Column =
-    size(filter(toks, t => t.isInCollection(words.map(lit))))
-
   // ---- shared single-pass stats (round-12) ----
   // The scoring functions below (quality / language-ID / sentiment)
   // each needed 1-5 keyword-hit scans plus an array_distinct — 7+
@@ -106,13 +102,6 @@ object TextFunctions {
     when(statN(toks) === 0, lit(0.0))
       .otherwise(
         stats(toks).getField("n_distinct").cast("double") / statN(toks))
-
-  /** Mean token length; 0 for empty docs. */
-  def avgTokenLen(toks: Column): Column =
-    when(size(toks) === 0, lit(0.0))
-      .otherwise(
-        aggregate(toks, lit(0L), (acc, t) => acc + length(t)).cast("double")
-          / size(toks))
 
   /** Composite quality score in [0,1]: rewards diversity and length,
     * penalizes stopword stuffing. Deterministic, SQL-expressible. */

@@ -23,11 +23,6 @@ object Sources {
     spark.read.schema(schema).csv(path).toDF(names: _*)
   }
 
-  /** S5: header CSV with a declared schema. */
-  def csvWithHeader(spark: SparkSession, path: String,
-      schema: StructType): DataFrame =
-    spark.read.option("header", "true").schema(schema).csv(path)
-
   /** S6: constant column injection (`lit("bitcoin")` role). */
   def withConstant(df: DataFrame, name: String, value: String): DataFrame =
     df.withColumn(name, lit(value))
@@ -70,11 +65,26 @@ object Sources {
   */
 object Writers {
 
-  /** K5 parity: single-file CSV (kills write parallelism — reference
-    * artifact contract only; never for large outputs). */
-  def singleFileCsv(df: DataFrame, path: String): Unit =
-    df.coalesce(1).write.mode("overwrite")
-      .option("header", "true").csv(path)
+  /** K5+K6 dual write: `df` as parquet at `parquetPath`, then the
+    * single-file header CSV at `csvPath` DERIVED from that parquet
+    * artifact, so `df` is computed once and the two artifacts cannot
+    * diverge. The read-back takes `df.schema` (no inference job), and
+    * `coalesce(1)` + a sort on (file name, row index) replays the
+    * parquet rows in written order — part files are numbered in
+    * partition order — with no shuffle. The single CSV file kills
+    * write parallelism: reference artifact contract only, never for
+    * large outputs. */
+  def parquetWithCsv(df: DataFrame, parquetPath: String,
+      csvPath: String): Unit = {
+    parquet(df, parquetPath)
+    df.sparkSession.read.schema(df.schema).parquet(parquetPath)
+      .select(col("*"), col("_metadata.file_name").as("__file"),
+        col("_metadata.row_index").as("__row"))
+      .coalesce(1)
+      .sortWithinPartitions("__file", "__row")
+      .drop("__file", "__row")
+      .write.mode("overwrite").option("header", "true").csv(csvPath)
+  }
 
   /** K6: plain parquet overwrite. */
   def parquet(df: DataFrame, path: String): Unit =

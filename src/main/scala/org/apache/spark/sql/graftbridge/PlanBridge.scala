@@ -99,4 +99,9 @@ object PlanBridge {
     if (!exp.extraOptimizations.contains(r))
       exp.extraOptimizations = exp.extraOptimizations :+ r
   }
+
+  /** `s` with every field, array element and map value nullable — the
+    * `private[spark]` rule file sources apply to a relation's schema. */
+  def asNullable(s: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = s.asNullable
 }

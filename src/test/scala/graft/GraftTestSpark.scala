@@ -4,6 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole forked test JVM. */
 object GraftTestSpark {
+  /** Root of the read-only fixture tables (TESTDATA.md): sf0.001,
+    * sf0.01 and sf0.1 directories of one parquet file per table. */
+  val testData = "/root/testdata"
+
   /** Create a temp dir REGISTERED for JVM-exit deletion — every spec
     * temp dir (sources, sinks, checkpoints) goes through here so test
     * runs don't accrete directories under java.io.tmpdir. */

@@ -1,10 +1,13 @@
 package graft
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions.sum
+import org.apache.spark.sql.functions.{col, lit, repeat, sum}
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.batch.BatchJobs
+import graft.sources.Writers
 import graft.streaming.{StreamOps, StreamingJobs}
 
 /** Job-topology wiring: the reference-shaped fan-outs run end to end
@@ -374,14 +377,76 @@ class JobsSpec extends AnyFunSuite {
     }
   }
 
+  /** Parquet artifact rows in written order: part files by name (they
+    * are numbered in partition order), rows by index within a file. */
+  private def parquetRows(path: String): Seq[Row] =
+    spark.read.parquet(path)
+      .select(col("*"), col("_metadata.file_name").as("__file"),
+        col("_metadata.row_index").as("__row"))
+      .orderBy("__file", "__row").drop("__file", "__row")
+      .collect().toSeq
+
+  /** The single CSV file of a CSV artifact directory. */
+  private def csvFile(path: String): java.io.File = {
+    val parts = new java.io.File(path).listFiles()
+      .filter(_.getName.startsWith("part-"))
+    assert(parts.length === 1, path)
+    parts.head
+  }
+
+  private def csvRows(path: String, schema: StructType): Seq[Row] = {
+    csvFile(path) // exactly one part file
+    spark.read.schema(schema).option("header", "true")
+      .option("multiLine", "true").csv(path).collect().toSeq
+  }
+
+  private def text(f: java.io.File): String =
+    new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+
   test("batch job bundle writes csv + parquet report tree") {
     val dir = GraftTestSpark.tmpDir("graftbatch")
-    BatchJobs.run(spark, "/root/testdata/sf0.001", dir, "terms")
+    val data = s"${GraftTestSpark.testData}/sf0.001"
+    for (job <- Seq("profiles", "terms")) {
+      BatchJobs.run(spark, data, dir, job)
+      BatchJobs.jobs(job).foreach { q =>
+        val pqPath = s"$dir/$job/parquet/$q"
+        val pq = parquetRows(pqPath)
+        assert(pq.nonEmpty, q)
+        val csvPath = s"$dir/$job/csv/$q"
+        assert(csvRows(csvPath, spark.read.parquet(pqPath).schema) === pq, q)
+        // the same bytes as a CSV written straight from the query
+        val direct = s"$dir/direct/$q"
+        Queries.all(q)(spark, data).coalesce(1).write
+          .option("header", "true").csv(direct)
+        assert(text(csvFile(csvPath)) === text(csvFile(direct)), q)
+      }
+    }
     val csv = spark.read.option("header", "true")
       .csv(s"$dir/terms/csv/q18_top_tokens")
     assert(csv.count() === 20)
-    val pq = spark.read.parquet(s"$dir/terms/parquet/q27_extract_terms")
-    assert(pq.count() > 0)
+  }
+
+  test("csv artifact replays a multi-file parquet artifact in written order") {
+    val dir = GraftTestSpark.tmpDir("graftmulti")
+    // four range slices with growing rows: a size-ordered file read
+    // (how Spark packs scan partitions) would put the last slice first
+    val df = spark.range(0, 400, 1, 4).select(col("id"),
+      repeat(lit("x"), (col("id") / 100).cast("int") * 40 + 1).as("pad"))
+    Writers.parquetWithCsv(df, s"$dir/pq", s"$dir/csv")
+    assert(new java.io.File(s"$dir/pq").list()
+      .count(_.startsWith("part-")) === 4)
+    val rows = csvRows(s"$dir/csv", df.schema)
+    assert(rows.map(_.getLong(0)) === (0L until 400L))
+    assert(rows === parquetRows(s"$dir/pq"))
+  }
+
+  test("csv artifact of an empty result is its header alone") {
+    val dir = GraftTestSpark.tmpDir("graftempty")
+    val df = spark.range(0).select(col("id"), lit("a").as("s"))
+    Writers.parquetWithCsv(df, s"$dir/pq", s"$dir/csv")
+    assert(parquetRows(s"$dir/pq").isEmpty)
+    assert(csvRows(s"$dir/csv", df.schema).isEmpty)
+    assert(text(csvFile(s"$dir/csv")).trim === "id,s")
   }
 
   test("every catalog query referenced by a batch job exists") {

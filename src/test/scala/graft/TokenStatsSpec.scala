@@ -95,6 +95,20 @@ class TokenStatsSpec extends AnyFunSuite {
         || (col("g_new") <=> col("g_ref")) === false).count() === 0)
   }
 
+  test("a word repeated inside one keyword list counts once per token") {
+    val lists = Seq(Seq("fast", "join", "fast"), Seq("zz", "zz", "zz"),
+      Seq("the"))
+    val stats = graft.expressions.TextExpressions
+      .tokenListStats(col("toks"), lists).getField("hits")
+    val df = docs.select(
+      (stats +: lists.map(refHits(col("toks"), _))): _*)
+      .toDF("hits" +: lists.indices.map(i => s"ref$i"): _*)
+    val bad = df.where(lists.indices.map(i =>
+      element_at(col("hits"), i + 1) =!= col(s"ref$i")).reduce(_ || _))
+    assert(bad.count() === 0)
+    assert(df.where(col("ref0") > 0).count() > 0)
+  }
+
   test("one stats evaluation is shared across scores (CSE)") {
     // all scoring functions build the SAME TokenListStats expression;
     // the physical plan of a multi-score projection must contain the
