@@ -1,10 +1,12 @@
 package graft.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayData, CollationSupport, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -409,6 +411,118 @@ case class TokenListStats(child: Expression, lists: Seq[Seq[String]])
     copy(child = c)
 }
 
+/** Precompiled literal counters for [[SentimentCounts]]: each pattern
+  * list as UTF-8 byte strings, plus the `lower()` settings of the
+  * expression's input. Built once per expression instance and shipped
+  * as a codegen reference object. */
+final class SentimentKernel(posEmoji: Seq[String], negEmoji: Seq[String],
+    posWords: Seq[String], negWords: Seq[String],
+    collationId: Int, useIcu: Boolean) extends Serializable {
+  private def utf8(ps: Seq[String]): Array[Array[Byte]] = {
+    require(ps.forall(_.nonEmpty), "sentiment patterns must be non-empty")
+    ps.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toArray
+  }
+  private val posE = utf8(posEmoji)
+  private val negE = utf8(negEmoji)
+  private val posW = utf8(posWords)
+  private val negW = utf8(negWords)
+
+  /** Non-overlapping left-to-right occurrences of `p` in `s`. On
+    * valid UTF-8 a byte match of a whole encoded pattern starts and
+    * ends on character boundaries, so this is the character count that
+    * `(length(s) - length(regexp_replace(s, quote(p), ""))) / length(p)`
+    * yields. */
+  private def occurrences(s: UTF8String, p: Array[Byte]): Int = {
+    val last = s.numBytes() - p.length
+    var c = 0
+    var i = 0
+    while (i <= last) {
+      var j = 0
+      while (j < p.length && s.getByte(i + j) == p(j)) j += 1
+      if (j == p.length) { c += 1; i += p.length } else i += 1
+    }
+    c
+  }
+
+  private def hits(s: UTF8String, ps: Array[Array[Byte]]): Int = {
+    var c = 0
+    var k = 0
+    while (k < ps.length) { c += occurrences(s, ps(k)); k += 1 }
+    c
+  }
+
+  /** struct(pos_emoji, neg_emoji, pos_words, neg_words, exclamations,
+    * letters, uppers): emoji and `!` hits on `text`, word hits on
+    * `lower(text)` (Spark's own lowercasing for the input's collation),
+    * and the ASCII letters / uppercase ASCII letters of `text`. */
+  def counts(text: UTF8String): InternalRow = {
+    val lowered =
+      CollationSupport.Lower.exec(text, collationId, useIcu)
+    var excl = 0
+    var letters = 0
+    var uppers = 0
+    var i = 0
+    val n = text.numBytes()
+    while (i < n) {
+      val b = text.getByte(i)
+      if (b == '!') excl += 1
+      else if (b >= 'A' && b <= 'Z') { letters += 1; uppers += 1 }
+      else if (b >= 'a' && b <= 'z') letters += 1
+      i += 1
+    }
+    new GenericInternalRow(Array[Any](hits(text, posE), hits(text, negE),
+      hits(lowered, posW), hits(lowered, negW), excl, letters, uppers))
+  }
+}
+
+/** The raw counts behind the reference's sentiment score
+  * (job3_sentiment.py:154-243) in one pass per row: positive/negative
+  * emoji hits, positive/negative keyword hits on the lowercased text,
+  * `!` count, ASCII letter count and uppercase ASCII letter count.
+  * Every count is of non-overlapping left-to-right literal occurrences
+  * per pattern, summed over a list: on valid UTF-8 input, what the
+  * earlier formulation computed with one `regexp_replace` length
+  * difference per pattern. The lowercasing is `lower()`'s: the input's
+  * collation and `spark.sql.icu.caseMappings.enabled`, read as `Lower`
+  * reads it. Null text gives a null struct. */
+case class SentimentCounts(child: Expression, posEmoji: Seq[String],
+    negEmoji: Seq[String], posWords: Seq[String], negWords: Seq[String])
+    extends UnaryExpression {
+  override def dataType: DataType = StructType(Seq(
+    "pos_emoji", "neg_emoji", "pos_words", "neg_words", "exclamations",
+    "letters", "uppers").map(StructField(_, IntegerType, nullable = false)))
+  override def prettyName: String = "sentiment_counts"
+
+  override def checkInputDataTypes()
+      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    child.dataType match {
+      case _: StringType =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case other =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+          s"$prettyName requires a string input, got ${other.simpleString}")
+    }
+
+  private lazy val useIcu: Boolean =
+    SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)
+
+  @transient private lazy val kernel = new SentimentKernel(
+    posEmoji, negEmoji, posWords, negWords,
+    child.dataType.asInstanceOf[StringType].collationId, useIcu)
+
+  override def nullSafeEval(input: Any): Any =
+    kernel.counts(input.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("sentimentKernel", kernel,
+      classOf[SentimentKernel].getName)
+    defineCodeGen(ctx, ev, c => s"$ref.counts($c)")
+  }
+
+  override protected def withNewChildInternal(c: Expression): SentimentCounts =
+    copy(child = c)
+}
+
 /** Distinct word n-gram shingles — semantics of
   * `array_distinct(shingles(tokens(text), n))`. */
 case class WordShingles(child: Expression, n: Int)
@@ -600,6 +714,14 @@ object TextExpressions {
     * column for the given keyword lists (native). */
   def tokenListStats(tokens: Column, lists: Seq[Seq[String]]): Column =
     ColumnBridge.column(TokenListStats(ColumnBridge.expression(tokens), lists))
+
+  /** Single-pass sentiment counts of a text column (native); see
+    * [[SentimentCounts]]. */
+  def sentimentCounts(text: Column, posEmoji: Seq[String],
+      negEmoji: Seq[String], posWords: Seq[String],
+      negWords: Seq[String]): Column =
+    ColumnBridge.column(SentimentCounts(ColumnBridge.expression(text),
+      posEmoji, negEmoji, posWords, negWords))
 
   /** Winnowed rolling-hash fingerprint sketch (native). */
   def winnowFingerprints(text: Column, w: Int, t: Int): Column =

@@ -179,43 +179,30 @@ object TextFunctions {
     negEmoji = Seq("😢", "💀", "📉", "😡", "🐻"),
     posWords = PosWords, negWords = NegWords)
 
-  /** Occurrences of a literal substring (not token-bound — the
-    * reference uses substring containment, job3_sentiment.py:188-189). */
-  def substrCount(text: Column, sub: String): Column = {
-    // Spark length() counts codepoints (UTF8String.numChars), so the
-    // divisor must too — String.length would double-count emoji.
-    val subLen = sub.codePointCount(0, sub.length)
-    ((length(text) - length(regexp_replace(text,
-      java.util.regex.Pattern.quote(sub), ""))) / subLen).cast("int")
-  }
-
-  private def totalHits(text: Column, subs: Seq[String]): Column =
-    subs.map(substrCount(text, _)).reduce(_ + _)
-
-  def exclamationCount(text: Column): Column = substrCount(text, "!")
-
-  /** Ratio of uppercase letters among letters; 0 when no letters. */
-  def capsRatio(text: Column): Column = {
-    val letters = length(regexp_replace(text, "[^a-zA-Z]", ""))
-    val uppers = length(regexp_replace(text, "[^A-Z]", ""))
-    when(letters === 0, lit(0.0))
-      .otherwise(uppers.cast("double") / letters)
-  }
+  /** The raw counts the score is built from, in one native pass per row
+    * ([[graft.expressions.SentimentCounts]]): emoji hits, keyword hits
+    * on the lowercased text (substring containment, not token-bound —
+    * the reference's test, job3_sentiment.py:188-189), `!` count and
+    * ASCII letter / uppercase counts. `sentimentScoreFull` and
+    * `sentimentStruct` build the SAME expression, so subexpression
+    * elimination evaluates it once per row. */
+  private def sentimentCounts(text: Column, cfg: SentimentConfig): Column =
+    graft.expressions.TextExpressions.sentimentCounts(text,
+      cfg.posEmoji, cfg.negEmoji, cfg.posWords, cfg.negWords)
 
   /** Full reference-parity sentiment score (see weights above). */
   def sentimentScoreFull(text: Column,
       cfg: SentimentConfig = DefaultSentiment): Column = {
-    val posE = totalHits(text, cfg.posEmoji)
-    val negE = totalHits(text, cfg.negEmoji)
-    val lowered = lower(text)
-    val posW = totalHits(lowered, cfg.posWords)
-    val negW = totalHits(lowered, cfg.negWords)
-    val exclPenalty = when(exclamationCount(text) > 3, -3).otherwise(0)
-    val letters = length(regexp_replace(text, "[^a-zA-Z]", ""))
+    val k = sentimentCounts(text, cfg)
+    val exclPenalty = when(k.getField("exclamations") > 3, -3).otherwise(0)
+    val letters = k.getField("letters")
+    val capsRatio = when(letters === 0, lit(0.0))
+      .otherwise(k.getField("uppers").cast("double") / letters)
     val capsPenalty =
-      when(letters >= 5 && capsRatio(text) > 0.5, -2).otherwise(0)
-    (posE * 2 - negE * 2 + posW - negW + exclPenalty + capsPenalty)
-      .cast("int")
+      when(letters >= 5 && capsRatio > 0.5, -2).otherwise(0)
+    (k.getField("pos_emoji") * 2 - k.getField("neg_emoji") * 2
+      + k.getField("pos_words") - k.getField("neg_words")
+      + exclPenalty + capsPenalty).cast("int")
   }
 
   /** The reference's 5-way priority ladder WITH its order dependency:
@@ -233,8 +220,8 @@ object TextFunctions {
     * (the reference returns a 6-field struct, job3_sentiment.py:234-241). */
   def sentimentStruct(text: Column,
       cfg: SentimentConfig = DefaultSentiment): Column = {
-    val posE = totalHits(text, cfg.posEmoji)
-    val negE = totalHits(text, cfg.negEmoji)
+    val posE = sentimentCounts(text, cfg).getField("pos_emoji")
+    val negE = sentimentCounts(text, cfg).getField("neg_emoji")
     val score = sentimentScoreFull(text, cfg)
     val stype = sentimentTypeFull(score, posE, negE)
     struct(

@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger
 /** Sink builders mirroring the reference's output topology
   * (SURVEY §2.2 K1-K7): per-query checkpointed parquet append sinks,
   * foreachBatch reporting, a pluggable index sink (the OpenSearch
-  * role), and multi-query fan-out with awaitAnyTermination.
+  * role), and multi-query fan-out with a wait on any of its queries.
   */
 object Sinks {
 
@@ -193,9 +193,16 @@ object Sinks {
     sink.indexDocs(index, rows)
   }
 
-  /** K7: start many queries off one logical source and block on any
-    * termination (improvement over the reference, which awaits only the
-    * console query — job2.py:389). */
-  def awaitAny(spark: SparkSession, queries: Seq[StreamingQuery]): Unit =
-    spark.streams.awaitAnyTermination()
+  /** K7: block until any of `queries` terminates (improvement over the
+    * reference, which awaits only the console query — job2.py:389), and
+    * rethrow its failure if it failed. Other queries of the session are
+    * ignored: unlike `spark.streams.awaitAnyTermination()`, an unrelated
+    * query that stopped earlier neither ends the wait nor is waited on
+    * (`spark` is not consulted). Polls every 100 ms. */
+  def awaitAny(spark: SparkSession, queries: Seq[StreamingQuery]): Unit = {
+    require(queries.nonEmpty, "awaitAny needs at least one query")
+    while (queries.forall(_.isActive)) Thread.sleep(100)
+    queries.filterNot(_.isActive).flatMap(_.exception).headOption
+      .foreach(e => throw e)
+  }
 }

@@ -42,31 +42,44 @@ object StreamingJobs {
         s"$outDir/metrics", s"$outDir/chk/metrics", trigger).start())
   }
 
-  /** The TWEET-domain jobs from the raw 15-field envelope: job1's
-    * chained bot-detection metrics (SQ1-SQ5), job5's viral/VIP alert
-    * stream (SQ14), and job3's sentiment metrics (SQ10-SQ11) — each
-    * query with its own source plan and checkpoint (T11/T12). */
-  def startTweetPipelines(spark: SparkSession, raw: () => DataFrame,
-      outDir: String, trigger: String = "60 seconds")
-      : Seq[StreamingQuery] = {
+  /** The TWEET-domain jobs from the raw 15-field envelope, unstarted,
+    * by sink name: job1's chained bot-detection metrics (SQ1-SQ5),
+    * job5's viral/VIP alert stream (SQ14), and job3's sentiment metrics
+    * (SQ10-SQ11).
+    *
+    * Each pipeline calls `raw()` once, so each query has one source
+    * (its own Kafka offsets, T12) and decodes a record once per scan:
+    * viral/VIP and sentiment scan it once, bot metrics twice (SQ1 must
+    * be aggregated before the union, see
+    * `TweetAlerts.botDetectionMetrics`). */
+  def tweetPipelines(raw: () => DataFrame): Seq[(String, DataFrame)] = {
     def tweetsOf(df: DataFrame) =
       TweetAlerts.promoted(StreamOps.decodeJsonEnvelope(df, Tweet.schema))
-    val bot = TweetAlerts.botDetectionMetrics(raw())
-    val viralVip = StreamOps.alertUnion(Seq(
-      TweetAlerts.viralAlerts(tweetsOf(raw())),
-      TweetAlerts.vipAlerts(tweetsOf(raw()))))
-    val sentiment = TweetAlerts.sentimentMetrics(
-      TweetAlerts.sentimentAlerts(
-        tweetsOf(raw())
-          .withWatermark("timestamp", StreamOps.WatermarkDelay)))
     Seq(
-      Sinks.parquetAppend(bot,
-        s"$outDir/bot_metrics", s"$outDir/chk/bot_metrics", trigger).start(),
-      Sinks.parquetAppend(viralVip,
-        s"$outDir/viral_vip", s"$outDir/chk/viral_vip", trigger).start(),
-      Sinks.parquetAppend(sentiment,
-        s"$outDir/sentiment", s"$outDir/chk/sentiment", trigger).start())
+      "bot_metrics" -> TweetAlerts.botDetectionMetrics(raw()),
+      "viral_vip" -> TweetAlerts.viralVipAlerts(tweetsOf(raw())),
+      "sentiment" -> TweetAlerts.sentimentMetrics(
+        TweetAlerts.sentimentAlerts(
+          tweetsOf(raw())
+            .withWatermark("timestamp", StreamOps.WatermarkDelay))))
   }
+
+  /** Starts [[tweetPipelines]], in that order, each with its own parquet
+    * sink `outDir/<name>` and checkpoint `outDir/chk/<name>` (T11).
+    *
+    * Checkpoints written by the earlier topology cannot be resumed.
+    * The offset log keeps one entry per scan, and Spark rejects a log
+    * whose entry count differs from the query's: bot metrics went from
+    * 4 scans to 2, viral/VIP from 2 sources to 1. The union feeding
+    * bot metrics' state also changed shape. Start all three pipelines
+    * on new checkpoints. */
+  def startTweetPipelines(spark: SparkSession, raw: () => DataFrame,
+      outDir: String, trigger: String = "60 seconds")
+      : Seq[StreamingQuery] =
+    tweetPipelines(raw).map { case (name, df) =>
+      Sinks.parquetAppend(df,
+        s"$outDir/$name", s"$outDir/chk/$name", trigger).start()
+    }
 
   /** job4-analog (session tracking): session-window metrics. */
   def startSessions(spark: SparkSession, events: DataFrame,
