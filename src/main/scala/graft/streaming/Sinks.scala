@@ -12,15 +12,32 @@ object Sinks {
 
   /** K1: streaming parquet append sink — per-query checkpoint dir and
     * processing-time trigger, exactly the reference layout
-    * (job2.py:326-342). */
+    * (job2.py:326-342). Installs [[CheckpointFiles]] on the session
+    * unless the caller chose a checkpoint file manager. */
   def parquetAppend(df: DataFrame, path: String, checkpoint: String,
-      triggerInterval: String = "60 seconds"): DataStreamWriter[Row] =
+      triggerInterval: String = "60 seconds"): DataStreamWriter[Row] = {
+    defaultCheckpointFiles(df.sparkSession)
     df.writeStream
       .format("parquet")
       .outputMode("append")
       .option("path", path)
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.ProcessingTime(triggerInterval))
+  }
+
+  /** Sets the session's checkpoint file manager to [[CheckpointFiles]]
+    * when the session has none: the one session default graft installs.
+    * It changes no plan and no result, only how checkpoint files are
+    * written, and a value the caller set is never overridden. It goes on
+    * the starting session because Spark builds every checkpoint log and
+    * state store of the query from that session's conf (the file sink's
+    * `_spark_metadata` log directly, the rest from the clone it takes at
+    * `start()`). The key stays set: every later streaming query of the
+    * session uses [[CheckpointFiles]] too, also one not built here (the
+    * catalog replay helper, a plain `writeStream`). */
+  private def defaultCheckpointFiles(spark: SparkSession): Unit =
+    if (spark.conf.getOption(CheckpointFiles.ConfKey).isEmpty)
+      spark.conf.set(CheckpointFiles.ConfKey, classOf[CheckpointFiles].getName)
 
   /** K2: foreachBatch reporting sink. The reference pretty-prints and
     * re-aggregates per batch on the driver; the callback receives the
@@ -40,9 +57,11 @@ object Sinks {
     * checkpoint commit replays the batch, duplicating its assignment
     * rows. Probe ranking already dedups (query_id, neighbor_id) so
     * SERVING results are unchanged; a strict-storage deployment would
-    * stage per-batchId directories and commit by rename. */
+    * stage per-batchId directories and commit by rename. Installs
+    * [[CheckpointFiles]] as [[parquetAppend]] does. */
   def vectorIngest(embStream: DataFrame, indexPath: String,
-      checkpoint: String): DataStreamWriter[Row] =
+      checkpoint: String): DataStreamWriter[Row] = {
+    defaultCheckpointFiles(embStream.sparkSession)
     embStream.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
@@ -50,6 +69,7 @@ object Sinks {
         if (!batch.isEmpty)
           graft.operators.VectorIndex.append(batch, indexPath)
       }
+  }
 
   /** K2 concrete impl: the reference's per-batch console report
     * (batch count + grouped tallies pretty-printed on the driver —

@@ -821,38 +821,82 @@ class StreamingSpec extends AnyFunSuite {
     assert(ids.toSeq === Seq(1L, 2L))
   }
 
-  test("T11 checkpoint recovery: restart resumes from offsets, exactly-once output") {
-    // stop a checkpointed query, add data, restart the SAME pipeline
-    // against the SAME checkpoint: the second run must process only
-    // the new file — no re-emission of batch-1 rows, none lost
-    val srcDir = java.nio.file.Paths.get(GraftTestSpark.tmpDir("graft-src"))
-    val outDir = GraftTestSpark.tmpDir("graft-out")
-    val chkDir = GraftTestSpark.tmpDir("graft-chk")
-    def writeFile(name: String, lines: Seq[String]): Unit =
-      java.nio.file.Files.write(srcDir.resolve(name),
-        String.join("\n", lines: _*).getBytes("UTF-8"))
-    def run(): Unit = {
-      val events = StreamOps.withEventTime(StreamOps.decodeJsonEnvelope(
-        spark.readStream.text(srcDir.toString)))
-      val q = events.writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", chkDir)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+  // T11 inputs: (name suffix, checkpoint file manager of the first run,
+  // of the restart). Each runs on a new session with the manager set, so
+  // a restart resumes files written by the other manager. The unsuffixed
+  // input runs Spark's own manager on both runs, whatever managers the
+  // shared session's earlier queries were given.
+  private val checkpointFiles = classOf[graft.streaming.CheckpointFiles].getName
+  private val fileContextManager = classOf[org.apache.spark.sql.execution
+    .streaming.checkpointing.FileContextBasedCheckpointFileManager].getName
+  Seq(
+    ("", fileContextManager, fileContextManager),
+    (": CheckpointFiles -> CheckpointFiles", checkpointFiles, checkpointFiles),
+    (": FileContext manager -> CheckpointFiles",
+      fileContextManager, checkpointFiles),
+    (": CheckpointFiles -> FileContext manager",
+      checkpointFiles, fileContextManager)
+  ).foreach { case (suffix, firstManager, restartManager) =>
+    test("T11 checkpoint recovery: restart resumes from offsets, " +
+        s"exactly-once output$suffix") {
+      // stop a checkpointed query, add data, restart the SAME pipeline
+      // against the SAME checkpoint: the second run must process only
+      // the new file — no re-emission of batch-1 rows, none lost. A
+      // stateful query (dedup by event type) over the same files must
+      // keep its state across its own restart.
+      val session = spark.newSession()
+      val srcDir = java.nio.file.Paths.get(GraftTestSpark.tmpDir("graft-src"))
+      def writeFile(name: String, lines: Seq[String]): Unit =
+        java.nio.file.Files.write(srcDir.resolve(name),
+          String.join("\n", lines: _*).getBytes("UTF-8"))
+      // runs the pipeline until it has read every file, returns the rows read
+      def run(outDir: String, chkDir: String, manager: String,
+          dedupTypes: Boolean = false): Long = {
+        session.conf.set(graft.streaming.CheckpointFiles.ConfKey, manager)
+        val events = StreamOps.withEventTime(StreamOps.decodeJsonEnvelope(
+          session.readStream.text(srcDir.toString)))
+        val q = (if (dedupTypes) events.dropDuplicates("event_type") else events)
+          .writeStream.format("parquet")
+          .option("path", outDir).option("checkpointLocation", chkDir)
+          .outputMode("append")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+        q.recentProgress.map(_.numInputRows).sum
+      }
+      def output(outDir: String) =
+        session.read.parquet(outDir).orderBy("event_id").collect().toSeq
+      val outDir = GraftTestSpark.tmpDir("graft-out")
+      val chkDir = GraftTestSpark.tmpDir("graft-chk")
+      val typesOut = GraftTestSpark.tmpDir("graft-out")
+      val typesChk = GraftTestSpark.tmpDir("graft-chk")
+      writeFile("f1.json", Seq(
+        json(1, "2024-01-01 10:00:00", 1, "view", 1.0),
+        json(2, "2024-01-01 10:01:00", 1, "view", 1.0)))
+      // first incarnation processes f1, then terminates
+      run(outDir, chkDir, firstManager)
+      run(typesOut, typesChk, firstManager, dedupTypes = true)
+      writeFile("f2.json", Seq(
+        json(3, "2024-01-01 10:02:00", 2, "purchase", 9.0),
+        json(4, "2024-01-01 10:03:00", 2, "view", 1.0)))
+      // restart from the same checkpoint: it reads f2's two rows only
+      val restartRows = run(outDir, chkDir, restartManager)
+      assert(restartRows === 2L, s"restart read $restartRows rows, not f2's 2")
+      run(typesOut, typesChk, restartManager, dedupTypes = true)
+      val ids = session.read.parquet(outDir)
+        .select($"event_id").as[Long].collect().sorted.toSeq
+      assert(ids === Seq(1L, 2L, 3L, 4L),
+        s"restart broke exactly-once: $ids")
+      val uninterrupted = GraftTestSpark.tmpDir("graft-out")
+      run(uninterrupted, GraftTestSpark.tmpDir("graft-chk"), restartManager)
+      assert(output(outDir) === output(uninterrupted))
+      // f2's "view" repeats a type seen before the restart: it is
+      // dropped only if the dedup state survived the restart
+      val types = session.read.parquet(typesOut)
+        .select($"event_type").as[String].collect().sorted.toSeq
+      assert(types === Seq("purchase", "view"),
+        s"dedup state lost on restart: $types")
     }
-    writeFile("f1.json", Seq(
-      json(1, "2024-01-01 10:00:00", 1, "view", 1.0),
-      json(2, "2024-01-01 10:01:00", 1, "view", 1.0)))
-    run() // first incarnation processes f1, then terminates
-    writeFile("f2.json", Seq(
-      json(3, "2024-01-01 10:02:00", 2, "purchase", 9.0),
-      json(4, "2024-01-01 10:03:00", 2, "view", 1.0)))
-    run() // restart from the same checkpoint
-    val ids = spark.read.parquet(outDir)
-      .select($"event_id").as[Long].collect().sorted.toSeq
-    assert(ids === Seq(1L, 2L, 3L, 4L),
-      s"restart broke exactly-once: $ids")
   }
 
   test("K2 console report runs engine-side aggregation per batch") {
