@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType, TimestampType}
 
 import graft.functions.TextFunctions._
 import graft.operators.{Analytics, Dedup, Similarity, VectorIndex}
@@ -41,30 +42,28 @@ object Queries {
     * `outputTimestampType`, and INT64 nanos from older generators —
     * adapt to whichever this dir carries. The layout is read from one
     * footer on the driver ([[graft.sources.ParquetSchema.of]], no Spark
-    * job) after the confs below are set, so nanos resolve to long.
-    * Nanos: Spark 4 reads them only as long
-    * (spark.sql.legacy.parquet.nanosAsLong), truncate to micros —
-    * identical to DuckDB's ns→us cast. Micros and INT96 arrive as a
-    * timestamp type already; normalize NTZ → session-UTC timestamp so
-    * every layout produces the same downstream column type. */
+    * job), which resolves nanos to long. Nanos are read as that long
+    * and truncated to micros (`timestamp_micros(ts div 1000)`,
+    * identical to DuckDB's ns→us cast). Micros and INT96 are read as
+    * `TimestampType` directly: the reader takes an NTZ column's stored
+    * micros as the UTC instant, with no cast through the session time
+    * zone, so every layout gives the same instants and column type.
+    *
+    * Writes no session conf, so concurrent builders can share the
+    * session. A session whose time zone is not UTC keeps it, and `ts`
+    * still holds the same instants; only functions that render or
+    * bucket `ts` by wall clock (`hour`, `date_format`) follow that
+    * session's zone. */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // The micros branch's NTZ→timestamp cast reads the wall clock in
-    // the SESSION timezone, while the nanos branch (timestamp_micros)
-    // is timezone-independent — a non-UTC session would shift one
-    // branch and not the other. Every entry point (Bench/Verify/
-    // GenData/tests) already pins UTC; force it here too so embedding
-    // Queries in a foreign session cannot silently diverge.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     val path = s"$dir/events.parquet"
-    val schema = graft.sources.ParquetSchema.of(spark, path)
-    val raw = spark.read.schema(schema).parquet(path)
-    schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case _ =>
-        raw.withColumn("ts", col("ts").cast("timestamp"))
-    }
+    val footer = graft.sources.ParquetSchema.of(spark, path)
+    if (footer("ts").dataType == LongType)
+      spark.read.schema(footer).parquet(path)
+        .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+    else
+      spark.read.schema(StructType(footer.map(f =>
+        if (f.name == "ts") f.copy(dataType = TimestampType) else f)))
+        .parquet(path)
   }
 
   def t(spark: SparkSession, dir: String): Tables = Tables(spark, dir)

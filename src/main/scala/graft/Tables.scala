@@ -17,7 +17,7 @@ import graft.sources.ParquetSchema
   * `o_orderdate`, `l_shipdate`) differ by producer — INT64 micros
   * (TIMESTAMP_NTZ) in the fixture tables, INT96 (TIMESTAMP) in
   * GenData output under Spark's default `outputTimestampType`, INT64
-  * nanos (long under `nanosAsLong`) from older generators.
+  * nanos (resolved as long) from older generators.
   */
 final case class Tables(spark: SparkSession, dir: String) {
   private def t(name: String): DataFrame = {

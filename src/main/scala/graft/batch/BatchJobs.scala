@@ -1,5 +1,8 @@
 package graft.batch
 
+import java.util.concurrent.{ConcurrentLinkedQueue, ExecutionException, Executors}
+
+import org.apache.commons.lang3.exception.ExceptionUtils
 import org.apache.spark.sql.SparkSession
 
 import graft.Queries
@@ -34,12 +37,56 @@ object BatchJobs {
     "terms" -> Seq("q18_top_tokens", "q27_extract_terms",
       "q42_tfidf_terms"))
 
+  /** Writes every query of `job` under `outDir/job/{parquet,csv}/<q>`.
+    *
+    * The queries are independent, so each is built and written as one
+    * task on a fixed pool of `jobs(job).size` threads, named
+    * `batch-<job>-<n>`, created by this call and ended (shut down, every
+    * thread joined) before it returns or throws: while the driver plans,
+    * commits and renames one report, the executors run another's jobs.
+    * Plans and artifact bytes are those of a serial write. Pool threads
+    * are started on the calling thread, so they inherit its Spark local
+    * properties (job group and description, scheduler pool, any caller
+    * tag): `cancelJobGroup` on the caller's group reaches every write.
+    *
+    * Failure contract: the call waits for every task, then throws one
+    * `RuntimeException` naming each failed query with its root cause
+    * (the first failure is the cause, the others are suppressed). The
+    * artifacts of the queries that succeeded are written in full.
+    */
   def run(spark: SparkSession, sfDir: String, outDir: String,
-      job: String): Unit =
-    jobs(job).foreach { q =>
-      Writers.parquetWithCsv(Queries.all(q)(spark, sfDir),
-        s"$outDir/$job/parquet/$q", s"$outDir/$job/csv/$q")
+      job: String): Unit = {
+    val queries = jobs(job)
+    val threads = new ConcurrentLinkedQueue[Thread]()
+    val pool = Executors.newFixedThreadPool(queries.size, { (r: Runnable) =>
+      val t = new Thread(r, s"batch-$job-${threads.size + 1}")
+      threads.add(t)
+      t
+    })
+    try {
+      val tasks = queries.map { q =>
+        val write: Runnable = () => Writers.parquetWithCsv(
+          Queries.all(q)(spark, sfDir),
+          s"$outDir/$job/parquet/$q", s"$outDir/$job/csv/$q")
+        q -> pool.submit(write)
+      }
+      val failed = tasks.flatMap { case (q, task) =>
+        try { task.get(); None }
+        catch { case e: ExecutionException => Some(q -> e.getCause) }
+      }
+      failed.headOption.foreach { case (_, first) =>
+        val e = new RuntimeException(s"batch job $job: ${failed.size} of " +
+          s"${queries.size} queries failed: " + failed.map { case (q, c) =>
+            s"$q: ${ExceptionUtils.getRootCauseMessage(c)}" }.mkString("; "),
+          first)
+        failed.tail.foreach { case (_, c) => e.addSuppressed(c) }
+        throw e
+      }
+    } finally {
+      pool.shutdown()
+      threads.forEach(_.join())
     }
+  }
 
   def runAll(spark: SparkSession, sfDir: String, outDir: String): Unit =
     jobs.keys.toSeq.sorted.foreach(run(spark, sfDir, outDir, _))

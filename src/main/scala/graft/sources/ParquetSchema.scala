@@ -8,6 +8,7 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.graftbridge.PlanBridge
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Driver-side parquet schema resolution with no Spark job.
@@ -17,8 +18,12 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * and resolves it the way that job does: the Spark row-metadata JSON
   * when the file carries it (any Spark-written file), else the
   * physical schema through `ParquetToSparkSchemaConverter` under the
-  * session's parquet confs (`nanosAsLong`, `inferTimestampNTZ`,
-  * `binaryAsString`, `int96AsTimestamp`). Every field comes back
+  * session's parquet confs (`inferTimestampNTZ`, `binaryAsString`,
+  * `int96AsTimestamp`), except that an INT64 nanos timestamp always
+  * resolves to long (`nanosAsLong`, set on a driver-local copy of the
+  * session conf, never on the session): inference would throw on it,
+  * and a reader that requests it as long gets the raw nanos whatever
+  * the session sets. Every field comes back
   * nullable, as the inferred relation schema does. Pass the result to
   * `spark.read.schema(...)`: the read then lists files and plans with
   * no job. Nothing is cached — each call reads the footer again, so a
@@ -53,7 +58,8 @@ object ParquetSchema {
     val meta = try reader.getFileMetaData finally reader.close()
     val schema = Option(meta.getKeyValueMetaData.get(SparkRowMetadataKey))
       .map(DataType.fromJson(_).asInstanceOf[StructType])
-      .getOrElse(new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+      .getOrElse(new ParquetToSparkSchemaConverter(spark.sessionState.conf
+        .copy(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG -> true))
         .convert(meta.getSchema))
     PlanBridge.asNullable(schema)
   }

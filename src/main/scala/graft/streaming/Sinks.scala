@@ -217,9 +217,9 @@ object Sinks {
     * reference, which awaits only the console query — job2.py:389), and
     * rethrow its failure if it failed. Other queries of the session are
     * ignored: unlike `spark.streams.awaitAnyTermination()`, an unrelated
-    * query that stopped earlier neither ends the wait nor is waited on
-    * (`spark` is not consulted). Polls every 100 ms. */
-  def awaitAny(spark: SparkSession, queries: Seq[StreamingQuery]): Unit = {
+    * query that stopped earlier neither ends the wait nor is waited on.
+    * Polls every 100 ms. */
+  def awaitAny(queries: Seq[StreamingQuery]): Unit = {
     require(queries.nonEmpty, "awaitAny needs at least one query")
     while (queries.forall(_.isActive)) Thread.sleep(100)
     queries.filterNot(_.isActive).flatMap(_.exception).headOption

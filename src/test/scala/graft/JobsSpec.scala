@@ -426,6 +426,87 @@ class JobsSpec extends AnyFunSuite {
     assert(csv.count() === 20)
   }
 
+  test("building every batch job query writes no session conf") {
+    val s = spark.newSession()
+    // a value no query would write back: UTC is the JVM-wide default
+    s.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    val before = s.conf.getAll
+    BatchJobs.jobs.values.flatten.foreach(q =>
+      assert(Queries.all(q)(s, s"${GraftTestSpark.testData}/sf0.001")
+        .schema.nonEmpty, q))
+    assert(s.conf.getAll === before)
+  }
+
+  private def poolThreads(job: String): Seq[Thread] =
+    Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread]).toSeq
+      .filter(t => t.getName.startsWith(s"batch-$job-") && t.isAlive)
+
+  test("batch job: a failing query is named with its cause, the others are written in full, no pool thread outlives run") {
+    val data = GraftTestSpark.tmpDir("graftnodocs")
+    // every table of `profiles` but documents: q24 fails, q05/q06 run
+    java.nio.file.Files.copy(
+      java.nio.file.Paths.get(s"${GraftTestSpark.testData}/sf0.001/events.parquet"),
+      java.nio.file.Paths.get(s"$data/events.parquet"))
+    val dir = GraftTestSpark.tmpDir("graftfail")
+    val e = intercept[RuntimeException](
+      BatchJobs.run(spark, data, s"$dir/run", "profiles"))
+    assert(poolThreads("profiles").isEmpty)
+    assert(e.getMessage.startsWith(
+      "batch job profiles: 1 of 3 queries failed: q24_source_profile: "), e.getMessage)
+    assert(e.getMessage.contains(s"$data/documents.parquet"), e.getMessage)
+    assert(e.getCause !== null)
+    assert(e.getSuppressed.isEmpty)
+    for (q <- Seq("q05_event_pivot", "q06_user_behavior")) {
+      Writers.parquetWithCsv(Queries.all(q)(spark, data),
+        s"$dir/serial/parquet/$q", s"$dir/serial/csv/$q")
+      val (pq, serialPq) = (s"$dir/run/profiles/parquet/$q", s"$dir/serial/parquet/$q")
+      assert(parquetRows(pq).nonEmpty, q)
+      assert(parquetRows(pq) === parquetRows(serialPq), q)
+      def parts(p: String) =
+        new java.io.File(p).list().count(_.startsWith("part-"))
+      assert(parts(pq) === parts(serialPq), q)
+      assert(new java.io.File(s"$pq/_SUCCESS").exists, q)
+      assert(text(csvFile(s"$dir/run/profiles/csv/$q")) ===
+        text(csvFile(s"$dir/serial/csv/$q")), q)
+    }
+    assert(!new java.io.File(s"$dir/run/profiles/parquet/q24_source_profile").exists)
+  }
+
+  test("batch job writes carry the caller's job group and local properties") {
+    val sc = spark.sparkContext
+    val (group, key) = ("graft-batch-group", "graft.batch.marker")
+    val props = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]()
+    val flushed = new java.util.concurrent.Semaphore(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties.getProperty(key) == "flush") flushed.release()
+        else props.add(e.properties): Unit
+    }
+    val dir = GraftTestSpark.tmpDir("graftprops")
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "profiles report")
+      sc.setLocalProperty(key, "batch")
+      BatchJobs.run(spark, s"${GraftTestSpark.testData}/sf0.001", dir, "profiles")
+      sc.clearJobGroup()
+      sc.setLocalProperty(key, "flush")
+      spark.range(1).count()
+      assert(flushed.tryAcquire(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus flush")
+    } finally {
+      sc.clearJobGroup()
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+    val seen = props.toArray(Array.empty[java.util.Properties]).toSeq
+    // at least a parquet and a CSV write per query
+    assert(seen.size >= 2 * BatchJobs.jobs("profiles").size)
+    seen.foreach { p =>
+      assert(p.getProperty("spark.jobGroup.id") === group)
+      assert(p.getProperty(key) === "batch")
+    }
+  }
+
   test("csv artifact replays a multi-file parquet artifact in written order") {
     val dir = GraftTestSpark.tmpDir("graftmulti")
     // four range slices with growing rows: a size-ordered file read

@@ -26,8 +26,8 @@ class ParquetSchemaSpec extends AnyFunSuite {
   private val tables = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** `Queries.events` reads under `nanosAsLong`; compare under it too
-    * (inference throws on a nanos column without it). */
+  /** `ParquetSchema.of` resolves nanos under `nanosAsLong`; infer under
+    * it too (inference throws on a nanos column without it). */
   private def withNanosAsLong[A](body: => A): A = {
     val key = "spark.sql.legacy.parquet.nanosAsLong"
     val old = spark.conf.getOption(key)
@@ -99,6 +99,35 @@ class ParquetSchemaSpec extends AnyFunSuite {
       .orderBy("event_id").select("ts").collect().map(_.getTimestamp(0))
     assert(ts.map(_.toInstant.toString).toSeq ===
       Seq("2024-01-01T10:00:05.123456Z", "2024-01-01T11:00:00Z"))
+  }
+
+  test("events() gives the UTC instants on a non-UTC session, in every layout and reader, and writes no conf") {
+    val gen = GraftTestSpark.tmpDir("graftgents")
+    graft.tools.GenData.gen(spark, gen, 1, Some(Set("events")))
+    val fixture = s"${GraftTestSpark.testData}/sf0.01"
+    // one row per layout: row count, and ts as epoch micros (which do
+    // not depend on the session time zone): min, max, and the xor of a
+    // hash of (event_id, ts) over every row
+    def instants(s: org.apache.spark.sql.SparkSession, dir: String) =
+      Queries.events(s, dir).selectExpr("count(*)", "min(unix_micros(ts))",
+        "max(unix_micros(ts))", "bit_xor(xxhash64(event_id, unix_micros(ts)))")
+        .head()
+    val layouts = Seq(fixture, gen, nanosDir)
+    val utc = layouts.map(instants(spark, _))
+    assert((utc.last.getLong(1), utc.last.getLong(2)) ===
+      ((1704103205123456L, 1704106800000000L)))
+    val la = spark.newSession()
+    la.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    for (vectorized <- Seq("true", "false")) {
+      la.conf.set("spark.sql.parquet.enableVectorizedReader", vectorized)
+      val before = la.conf.getAll
+      assert(layouts.map(instants(la, _)) === utc, s"vectorized=$vectorized")
+      assert(la.conf.getAll === before)
+    }
+    // the session keeps its own zone: wall-clock rendering follows it
+    val hours = Seq(spark, la).map(s => Queries.events(s, nanosDir)
+      .orderBy("event_id").selectExpr("hour(ts)").head().getInt(0))
+    assert(hours === Seq(10, 2))
   }
 
   /** Jobs started by `body` on this thread, counted by a listener

@@ -189,7 +189,7 @@ class TweetPipelinesSpec extends AnyFunSuite {
     val qa = start(a, "await_a")
     val qb = start(b, "await_b")
     try {
-      val waiting = Future(Sinks.awaitAny(spark, Seq(qa, qb)))
+      val waiting = Future(Sinks.awaitAny(Seq(qa, qb)))
       Thread.sleep(1500)
       assert(!waiting.isCompleted, "returned before any given query ended")
       qb.stop()
@@ -198,7 +198,7 @@ class TweetPipelinesSpec extends AnyFunSuite {
 
       val c = MemoryStream[Int]
       val qc = start(c, "await_c")
-      val failing = Future(Sinks.awaitAny(spark, Seq(qa, qc)))
+      val failing = Future(Sinks.awaitAny(Seq(qa, qc)))
       c.addData(-1)
       val e = intercept[StreamingQueryException](
         Await.result(failing, 60.seconds))
