@@ -49,14 +49,7 @@ object Bench {
       sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSeq)
     def selected(name: String): Boolean =
       only.forall(_.exists(name.startsWith))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftExtensions.session(s"local[$cpus]", cpus.toInt)
     // Warm up the session (codegen, file index, shuffle machinery) so
     // the first timed query isn't charged ~5 s of JVM startup.
     spark.range(1000000).selectExpr("sum(id)").collect()

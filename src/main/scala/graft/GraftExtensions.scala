@@ -1,23 +1,24 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.expressions.{CosineSim, HammingDist, JaccardSim, JaroWinkler, MinhashSig, OverlapSim, SimHashBits, Tokenize, WinnowFingerprints, WordShingles, ZOrderKey}
 
-/** `spark.sql.extensions` entry point — the zero-code-change way to
-  * get the engine's native SQL surface (SURVEY §7.3's preferred
-  * registration path):
+/** The engine's one table of native SQL functions, optimizer rules and
+  * planner strategies, as a `spark.sql.extensions` entry point:
   *
   * {{{
   * spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   * }}}
   *
-  * Unlike [[GraftFunctions.register]] (imperative, per-session, temp
-  * functions), extension-injected functions are part of the session's
-  * catalog from construction — present in every derived `newSession()`
-  * and usable from pure-SQL tooling that never touches Scala.
+  * [[GraftExtensions.session]] builds every graft session with it, and
+  * [[GraftExtensions.ensure]] installs the same table into a session
+  * built without it. Extension-injected functions and rules are part of
+  * the session from construction: present in every derived session and
+  * usable from pure-SQL tooling that never touches Scala.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -91,4 +92,52 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       exprs => WinnowFingerprints(exprs.head,
         intArg(exprs(1)), intArg(exprs(2)))))
   }
+}
+
+object GraftExtensions {
+
+  /** The table above, applied once to a detached extensions object so
+    * that [[ensure]] reads back the very rules and functions the
+    * extension injects: nothing is listed twice. */
+  private val table: SparkSessionExtensions = {
+    val ext = new SparkSessionExtensions
+    new GraftExtensions()(ext)
+    ext
+  }
+
+  /** The one graft session factory: `master`, `shufflePartitions`
+    * shuffle partitions, the UTC session time zone, no UI, WARN logging,
+    * and [[GraftExtensions]] injected. `confs` are the few settings a
+    * caller really needs on top (a cluster master, AQE off, a warehouse
+    * dir); they win over the defaults. Returns the active session when
+    * one exists, as `getOrCreate` does. */
+  def session(master: String, shufflePartitions: Int,
+      confs: (String, String)*): SparkSession = {
+    val b = SparkSession.builder()
+      .master(master)
+      .config("spark.sql.shuffle.partitions", shufflePartitions.toLong)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .withExtensions(new GraftExtensions)
+    val s = confs.foldLeft(b) { case (b, (k, v)) => b.config(k, v) }
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
+  /** Installs the graft table into `spark` if it lacks it, so a session
+    * built without the extension (a caller's own `SparkSession.builder`)
+    * plans every catalog query under the same rules as one built by
+    * [[session]]. Idempotent, and safe under concurrent callers on one
+    * session (the install is serialized per session). A session built
+    * with the extension already has the table and gets nothing.
+    *
+    * Placement: a foreign session gets the rules in
+    * `experimental.extraOptimizations`, Spark's final "User Provided
+    * Optimizers" batch, and the strategies in
+    * `experimental.extraStrategies`; the extension puts its rules in the
+    * operator-optimization batch. Both plan the catalog to the same
+    * graft exec nodes (`SessionIsolationSpec`). Derived sessions keep
+    * the install only through `cloneSession`. */
+  def ensure(spark: SparkSession): Unit = PlanBridge.install(spark, table)
 }

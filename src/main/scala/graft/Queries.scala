@@ -900,6 +900,14 @@ object Queries {
     base
   }
 
+  /** The replay's scale-adaptive state-partition derivation, pure for
+    * testability: one partition per 4 MB of staged input, floor 4,
+    * capped at the session's configured shuffle partitions. Grows with
+    * data, never exceeds the cluster-tuned value. */
+  private[graft] def replayStateParts(stagedBytes: Long, confParts: Int): Int =
+    math.max(4L, (stagedBytes + (4L << 20) - 1) / (4L << 20))
+      .min(confParts.toLong).toInt
+
   /** Shared AvailableNow replay harness for the streaming-semantics
     * oracle queries (q52/q73/q105): stream the staged data+clock
     * layout through `pipeline`, sink to a fresh checkpointed parquet
@@ -909,19 +917,6 @@ object Queries {
     * every dir is registered for JVM-exit deletion so repeated bench
     * runs (n samples × 3 replay queries × SFs) do not accumulate
     * parquet+checkpoint dirs under java.io.tmpdir across processes. */
-  /** The replay's scale-adaptive state-partition derivation, pure for
-    * testability: one partition per `targetBytes` (default 4 MB) of
-    * staged input, floor 4, capped at the session's configured shuffle
-    * partitions; an explicit pin wins outright. Grows with data, never
-    * exceeds the cluster-tuned value. */
-  private[graft] def replayStateParts(stagedBytes: Long, confParts: Int,
-      targetBytes: Option[Long], pinned: Option[Int]): Int =
-    pinned.getOrElse {
-      val target = targetBytes.getOrElse(4L << 20)
-      math.max(4L, (stagedBytes + target - 1) / target)
-        .min(confParts.toLong).toInt
-    }
-
   private def replayToParquet(spark: SparkSession, dir: String,
       tag: String)(pipeline: DataFrame => DataFrame): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
@@ -931,10 +926,6 @@ object Queries {
       .toFile
     deleteRecursivelyOnExit(tmpFile)
     val tmp = tmpFile.getAbsolutePath
-    val stream = spark.readStream
-      .schema(ev.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(base.getAbsolutePath + "/*")
     // Scale-adaptive state partitioning (guide §2: derive partitioning
     // from input size, not a constant): the stateful operators in the
     // replayed topology create one state-store instance PER SHUFFLE
@@ -943,45 +934,41 @@ object Queries {
     // bounded replay (measured at sf0.1: the three q132 join stages ran
     // 32 tasks × ~2 s of state overhead on < 1 MB of rows; 8.3 s →
     // 3.0 s wall with right-sized partitions). Partitions derive from
-    // the staged input bytes (one per ~4 MB, floor 4) and are capped by
-    // the session's configured shuffle partitions, so a production-size
-    // replay keeps the cluster-tuned value; the partition count only
-    // shrinks when the data provably doesn't need it. The session conf
-    // is restored after the (blocking) replay; a fresh checkpoint per
-    // invocation means no stored state-partition count can conflict.
-    // Overrides: spark.graft.replay.statePartitions pins the count,
-    // spark.graft.replay.targetPartitionBytes tunes the derivation.
+    // the staged input bytes and are capped by the session's configured
+    // shuffle partitions, so a production-size replay keeps the
+    // cluster-tuned value. The stream runs on a clone of the caller's
+    // session that carries the count (the caller's session is never
+    // written; the clone keeps its time zone, which `fmtTs` reads inside
+    // the stream); a fresh checkpoint per invocation means no stored
+    // state-partition count can conflict.
     val stagedBytes = {
       def sz(d: java.io.File): Long = Option(d.listFiles())
         .map(_.filter(_.getName.endsWith(".parquet")).map(_.length).sum)
         .getOrElse(0L)
       sz(new java.io.File(base, "data")) + sz(new java.io.File(base, "clock"))
     }
-    val stateParts = replayStateParts(stagedBytes,
-      spark.sessionState.conf.numShufflePartitions,
-      spark.conf.getOption("spark.graft.replay.targetPartitionBytes")
-        .map(_.toLong),
-      spark.conf.getOption("spark.graft.replay.statePartitions")
-        .map(_.toInt))
-    val oldParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", stateParts)
-    try {
-      val q = pipeline(stream).writeStream.format("parquet")
-        .option("path", s"$tmp/out")
-        .option("checkpointLocation", s"$tmp/chk")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // diagnostic only (never set by the driver): per-batch duration
-      // breakdown for attributing replay wall time to micro-batch
-      // phases (planning / WAL commit / state commit / addBatch)
-      if (sys.env.contains("SPARK_GRAFT_REPLAY_DEBUG"))
-        q.recentProgress.foreach { pr =>
-          System.err.println(s"[replay $tag] batch ${pr.batchId} " +
-            s"rows=${pr.numInputRows} durationMs=${pr.durationMs}")
-        }
-    } finally spark.conf.set("spark.sql.shuffle.partitions", oldParts)
+    val replay = org.apache.spark.sql.graftbridge.PlanBridge.cloneSession(spark)
+    replay.conf.set("spark.sql.shuffle.partitions", replayStateParts(stagedBytes,
+      spark.sessionState.conf.numShufflePartitions).toLong)
+    val stream = replay.readStream
+      .schema(ev.schema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(base.getAbsolutePath + "/*")
+    val q = pipeline(stream).writeStream.format("parquet")
+      .option("path", s"$tmp/out")
+      .option("checkpointLocation", s"$tmp/chk")
+      .outputMode("append")
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    // diagnostic only (off unless the env var is set): per-batch duration
+    // breakdown for attributing replay wall time to micro-batch
+    // phases (planning / WAL commit / state commit / addBatch)
+    if (sys.env.contains("SPARK_GRAFT_REPLAY_DEBUG"))
+      q.recentProgress.foreach { pr =>
+        System.err.println(s"[replay $tag] batch ${pr.batchId} " +
+          s"rows=${pr.numInputRows} durationMs=${pr.durationMs}")
+      }
     spark.read.parquet(s"$tmp/out")
   }
 
@@ -3104,9 +3091,6 @@ object Queries {
     * with NO df cap — the rewrite implements the user's predicate
     * verbatim, not the capped mining heuristic. */
   def q135JaccardJoin(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftbridge.PlanBridge
-    PlanBridge.addOptimization(spark, graft.plans.JaccardJoinRewrite)
-    PlanBridge.addStrategy(spark, graft.plans.JaccardJoinStrategy)
     val docs = t(spark, dir).documents
     val a = docs.select(col("doc_id").as("id_a"), col("text").as("text_a"))
     val b = docs.select(col("doc_id").as("id_b"), col("text").as("text_b"))
@@ -3127,9 +3111,6 @@ object Queries {
     * dilutes (q70's metric, here as naive-SQL surface). Oracle:
     * literal uncapped pairwise containment. */
   def q136OverlapJoin(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftbridge.PlanBridge
-    PlanBridge.addOptimization(spark, graft.plans.JaccardJoinRewrite)
-    PlanBridge.addStrategy(spark, graft.plans.JaccardJoinStrategy)
     val docs = t(spark, dir).documents
     val a = docs.select(col("doc_id").as("id_a"), col("text").as("text_a"))
     val b = docs.select(col("doc_id").as("id_b"), col("text").as("text_b"))
@@ -5715,9 +5696,6 @@ object Queries {
     * q142 vocabulary rule), and the join itself is exact at any
     * vocabulary size via the segment index — never all-pairs. */
   def q206LevJoin(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftbridge.PlanBridge
-    PlanBridge.addOptimization(spark, graft.plans.LevenshteinJoinRewrite)
-    PlanBridge.addStrategy(spark, graft.plans.LevenshteinJoinStrategy)
     val vocab = t(spark, dir).documents
       .select(explode(tokens(col("text"))).as("term"))
       .groupBy(col("term")).agg(count(lit(1)).as("df"))
@@ -6321,17 +6299,14 @@ object Queries {
     * SQL plans as SimilarityBandedJoinExec with geometry derived from
     * the join's own threshold — BandGeometry.derive(0.35) = 16 bands ×
     * 4 bits (recall ≥ 0.9 at the threshold). Both confs live on a
-    * DERIVED session (`newSession`), so nothing leaks into the shared
-    * catalog session. The LSH is deterministic (integer Rademacher
+    * DERIVED session (`PlanBridge.cloneSession`: the caller's confs and
+    * rule table plus these two), so nothing leaks into the caller's
+    * session. The LSH is deterministic (integer Rademacher
     * signatures), so the oracle replays banding + gate bit-for-bit at
     * 16×4 — same contract as q131, which pins the explicit-geometry
     * operator-API form of this plan at 8×8. */
   def q224SimJoinSqlLargeLarge(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftbridge.PlanBridge
-    val s = spark.newSession()
-    PlanBridge.addOptimization(s, graft.plans.SimilarityJoinRewrite)
-    PlanBridge.addStrategy(s, graft.plans.SimilarityJoinStrategy)
-    GraftFunctions.register(s)
+    val s = org.apache.spark.sql.graftbridge.PlanBridge.cloneSession(spark)
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     s.conf.set(graft.plans.SimilarityJoinRewrite.LargeLargeConf, "banded")
     t(s, dir).embeddings.createOrReplaceTempView("emb_q224")
@@ -6364,11 +6339,7 @@ object Queries {
     * signatures, so the oracle replays the banding + exact gate
     * bit-for-bit. */
   def q225SimJoinWideBand(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftbridge.PlanBridge
-    val s = spark.newSession()
-    PlanBridge.addOptimization(s, graft.plans.SimilarityJoinRewrite)
-    PlanBridge.addStrategy(s, graft.plans.SimilarityJoinStrategy)
-    GraftFunctions.register(s)
+    val s = org.apache.spark.sql.graftbridge.PlanBridge.cloneSession(spark)
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     s.conf.set(graft.plans.SimilarityJoinRewrite.LargeLargeConf, "banded")
     s.conf.set(graft.plans.SimilarityJoinStrategy.SignatureBitsConf, "256")
@@ -6386,6 +6357,9 @@ object Queries {
 
   // ---------- registry ----------
 
+  /** The catalog. Every entry first runs [[GraftExtensions.ensure]] on
+    * its session, so a query plans under the graft rule table whatever
+    * built the session and whatever ran in it before. */
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q01_pricing_summary" -> (q01PricingSummary _),
     "q02_revenue_by_segment" -> (q02RevenueBySegment _),
@@ -6610,5 +6584,9 @@ object Queries {
     "q222_distribution_drift" -> (q222DistributionDrift _),
     "q223_quantile_bound" -> (q223QuantileBound _),
     "q224_simjoin_sql_large" -> (q224SimJoinSqlLargeLarge _),
-    "q225_simjoin_wide_band" -> (q225SimJoinWideBand _))
+    "q225_simjoin_wide_band" -> (q225SimJoinWideBand _)
+  ).transform { (_, query) => (spark: SparkSession, dir: String) =>
+    GraftExtensions.ensure(spark)
+    query(spark, dir)
+  }
 }

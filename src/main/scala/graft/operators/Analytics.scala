@@ -185,15 +185,15 @@ object Analytics {
     * schema to [[asofJoin]] (inclusive <=, max-payload tie-break at
     * equal timestamps, nulls when no prior right row), but planned as
     * one co-partitioned sort-merge pass instead of union + window
-    * carry. Registers [[graft.plans.AsOfJoinStrategy]] on the session
-    * if `GraftExtensions` didn't already inject it. */
+    * carry. Runs [[graft.GraftExtensions.ensure]] so that a session
+    * built without the extension can plan the node. */
   def asofJoinExec(left: DataFrame, right: DataFrame, key: String,
       leftTime: String, rightTime: String,
       asofCols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.graftbridge.PlanBridge
     require(asofCols.nonEmpty, "asofCols must name at least one column")
     val spark = left.sparkSession
-    PlanBridge.addStrategy(spark, graft.plans.AsOfJoinStrategy)
+    graft.GraftExtensions.ensure(spark)
     // prune + rename the right side up front (the custom node is
     // opaque to column pruning, so the projection must be below it);
     // payload columns get their output names before the join

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.plans.{SimilarityJoinPlan, SimilarityJoinStrategy, SimJoinRegime}
+import graft.plans.{SimilarityJoinPlan, SimJoinRegime}
 
 /** Approximate-nearest-neighbor / similarity search over an embedding
   * column (SURVEY §7.4 extension surface).
@@ -259,7 +259,7 @@ object Similarity {
     require(overlap.isEmpty,
       s"cosineJoin sides must have disjoint column names; shared: $overlap")
     val spark = left.sparkSession
-    PlanBridge.addStrategy(spark, SimilarityJoinStrategy)
+    graft.GraftExtensions.ensure(spark)
     val l = left.withColumn(leftVecCol, col(leftVecCol).cast("array<double>"))
     // re-alias the right side so a self-join never carries duplicate
     // expression ids into the joined output

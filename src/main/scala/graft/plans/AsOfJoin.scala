@@ -36,10 +36,9 @@ case class AsOfJoinPlan(
     copy(left = newLeft, right = newRight)
 }
 
-/** Plans [[AsOfJoinPlan]] to [[AsOfJoinExec]]. Injected via
-  * `GraftExtensions` (`injectPlannerStrategy`) and, for sessions built
-  * without the extension, registered idempotently by
-  * `Analytics.asofJoinExec` through `spark.experimental`. */
+/** Plans [[AsOfJoinPlan]] to [[AsOfJoinExec]]. Listed in
+  * `GraftExtensions`, which a session built without the extension gets
+  * through `GraftExtensions.ensure` (run by `Analytics.asofJoinExec`). */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case AsOfJoinPlan(l, r, lk, rk, lt, rt, ties) =>

@@ -19,10 +19,10 @@ import org.apache.spark.sql.types.IntegerType
   *
   * Null semantics are preserved (null inputs make both sides null).
   * Only literal int thresholds are rewritten — a per-row threshold
-  * column (q58's relative bound) must stay unbounded. Registered via
-  * [[graft.GraftExtensions]] (`injectOptimizerRule`); the fuzzy-dedup
-  * verify stage is the intended beneficiary once its bound is
-  * absolute.
+  * column (q58's relative bound) must stay unbounded. Listed in
+  * [[graft.GraftExtensions]], so every graft session and every catalog
+  * query plans with it; the fuzzy-dedup verify stage is the intended
+  * beneficiary once its bound is absolute.
   */
 object BoundLevenshteinRule extends Rule[LogicalPlan] {
 

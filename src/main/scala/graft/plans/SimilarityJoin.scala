@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.DoubleType
 import graft.expressions.CosineSim
 
 // (companion API: graft.operators.Similarity.cosineJoin builds this
-// plan; GraftExtensions and PlanBridge register the strategy + rule)
+// plan; GraftExtensions lists the strategy + rule)
 
 /** How a [[SimilarityJoinPlan]] may be executed.
   *

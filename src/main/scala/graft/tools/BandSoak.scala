@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
@@ -50,16 +50,10 @@ object BandSoak {
       if (args.length > 3) args(3).split(",").toSeq.map(_.toInt)
       else Seq.empty[Int]
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // AQE off so the executed plan IS the exec node we read
-      // metrics from (no AdaptiveSparkPlanExec indirection)
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // AQE off so the executed plan IS the exec node we read
+    // metrics from (no AdaptiveSparkPlanExec indirection)
+    val spark = graft.GraftExtensions.session(s"local[$cpus]", cpus.toInt,
+      "spark.sql.adaptive.enabled" -> "false")
 
     @volatile var maxTaskMs = 0L
     @volatile var runStartMs = 0L

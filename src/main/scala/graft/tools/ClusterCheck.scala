@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -105,20 +105,13 @@ object ClusterCheck {
       .filter(_.nonEmpty)
       .map(p => new java.io.File(p).getAbsolutePath)
       .mkString(java.io.File.pathSeparator)
-    val spark = SparkSession.builder()
-      .master("local-cluster[2,4,2048]")
-      .appName("graft-cluster-check")
-      .config("spark.executor.extraClassPath", execCp)
+    val spark = GraftExtensions.session("local-cluster[2,4,2048]", 8,
+      "spark.app.name" -> "graft-cluster-check",
+      "spark.executor.extraClassPath" -> execCp,
       // the Worker builds the executor launch command through the
       // launcher library, whose scala-version probe needs this when
       // the JVM wasn't started by load-spark-env.sh (as under sbt)
-      .config("spark.executorEnv.SPARK_SCALA_VERSION", "2.13")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.executorEnv.SPARK_SCALA_VERSION" -> "2.13")
 
     // wait for both executor JVMs so every check actually distributes
     val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000

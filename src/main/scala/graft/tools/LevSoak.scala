@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale soak for the levenshtein-threshold join exec
@@ -26,16 +25,7 @@ object LevSoak {
     val k = if (args.length > 1) args(1).toInt else 1
     val mode = if (args.length > 2) args(2) else "both"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    org.apache.spark.sql.graftbridge.PlanBridge.addOptimization(
-      spark, graft.plans.LevenshteinJoinRewrite)
-    org.apache.spark.sql.graftbridge.PlanBridge.addStrategy(
-      spark, graft.plans.LevenshteinJoinStrategy)
+    val spark = graft.GraftExtensions.session(s"local[$cpus]", cpus.toInt)
 
     def run(tag: String, df: org.apache.spark.sql.DataFrame): Unit = {
       val a = df.select(col("id").as("id_a"), col("s").as("s_a"))

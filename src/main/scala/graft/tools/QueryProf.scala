@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 
 /** Per-query profiling aid for optimization rounds: runs each named
@@ -17,19 +16,12 @@ object QueryProf {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val n = sys.env.getOrElse("SPARK_GRAFT_PROF_N", "2").toInt
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
     // A/B experiment hook: SPARK_GRAFT_PROF_CONF="k=v;k=v"
-    val spark = sys.env.get("SPARK_GRAFT_PROF_CONF")
-      .map(_.split(";").filter(_.contains("=")).foldLeft(b0) { (b, kv) =>
-        val Array(k, v) = kv.split("=", 2); b.config(k, v)
-      }).getOrElse(b0)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val confs = sys.env.get("SPARK_GRAFT_PROF_CONF").toSeq
+      .flatMap(_.split(";").filter(_.contains("=")))
+      .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }
+    val spark = graft.GraftExtensions.session(s"local[$cpus]", cpus.toInt,
+      confs: _*)
     spark.range(1000000).selectExpr("sum(id)").collect()
 
     case class StageRow(stageId: Int, name: String, tasks: Int,

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** SemDeDup scale probe: `SemSoak <sfDir> <k> [threshold]` times the
@@ -17,13 +16,7 @@ object SemSoak {
     val k = args(1).toInt
     val threshold = if (args.length > 2) args(2).toDouble else 0.35
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftExtensions.session(s"local[$cpus]", cpus.toInt)
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
     val n = emb.count()

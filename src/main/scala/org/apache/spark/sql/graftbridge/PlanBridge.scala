@@ -1,9 +1,8 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
-import org.apache.spark.sql.execution.SparkStrategy
 
 /** Bridge into the `private[sql]` plan↔Dataset converters for custom
   * logical operators ([[graft.plans.AsOfJoinPlan]]): Spark exposes no
@@ -76,29 +75,39 @@ object PlanBridge {
     val total = internalRdd.count()
     val out = classic.Dataset.ofRows(session,
       org.apache.spark.sql.execution.LogicalRDD.fromDataset(
-        internalRdd, ds, isStreaming = false))
+        internalRdd, ds, isStreaming = false).newInstance())
     (out, total, acc.value)
   }
 
-  /** Idempotently add an extra planner strategy to a live session —
-    * the registration path for sessions built without
-    * `spark.sql.extensions=graft.GraftExtensions`. */
-  def addStrategy(spark: SparkSession, s: SparkStrategy): Unit = {
-    val exp = spark.asInstanceOf[classic.SparkSession].experimental
-    if (!exp.extraStrategies.contains(s))
-      exp.extraStrategies = exp.extraStrategies :+ s
+  /** Installs `ext`'s optimizer rules, planner strategies and
+    * functions into a live session built without it (the body of
+    * `graft.GraftExtensions.ensure`). A session whose own extensions
+    * already carry the rules gets nothing. The check and the writes run
+    * under the session's `ExperimentalMethods` lock, because its two
+    * vars are read-modify-write; Spark reads them as volatiles. */
+  def install(spark: SparkSession, ext: SparkSessionExtensions): Unit = {
+    val s = spark.asInstanceOf[classic.SparkSession]
+    val rules = ext.buildOptimizerRules(s)
+    val exp = s.experimental
+    def present = rules.forall(exp.extraOptimizations.contains)
+    if (!present && !rules.forall(s.extensions.buildOptimizerRules(s).contains))
+      exp.synchronized {
+        if (!present) {
+          ext.registerFunctions(s.sessionState.functionRegistry)
+          exp.extraStrategies ++=
+            ext.buildPlannerStrategies(s).filterNot(exp.extraStrategies.contains)
+          exp.extraOptimizations ++= rules.filterNot(exp.extraOptimizations.contains)
+        }
+      }
   }
 
-  /** Idempotently add an extra optimizer rule to a live session (the
-    * `experimental.extraOptimizations` batch runs after the main
-    * optimizer, so rewrites here see constant-folded, predicate-pushed
-    * plans). Same role as [[addStrategy]] for rule injection. */
-  def addOptimization(spark: SparkSession,
-      r: org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan]): Unit = {
-    val exp = spark.asInstanceOf[classic.SparkSession].experimental
-    if (!exp.extraOptimizations.contains(r))
-      exp.extraOptimizations = exp.extraOptimizations :+ r
-  }
+  /** A derived session that starts as a copy of `spark`'s state
+    * (runtime confs such as the session time zone, functions,
+    * experimental rules and strategies, temp views), so a caller can
+    * change its confs without touching `spark`'s. Spark's
+    * `newSession()` would start from the defaults instead. */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
 
   /** `s` with every field, array element and map value nullable — the
     * `private[spark]` rule file sources apply to a relation's schema. */

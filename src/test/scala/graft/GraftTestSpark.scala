@@ -25,14 +25,8 @@ object GraftTestSpark {
     try body finally graft.operators.Caches.releaseAll()
 
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir", tmpDir("graftwh"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftExtensions.session("local[4]", 4,
+      "spark.sql.warehouse.dir" -> tmpDir("graftwh"))
     s.sparkContext.setLogLevel("ERROR")
     s
   }

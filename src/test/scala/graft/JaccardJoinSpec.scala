@@ -2,12 +2,11 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.PlanBridge
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.expressions.{TextExpressions, TextKernels}
-import graft.plans.{JaccardInvertedJoinExec, JaccardJoinRewrite, JaccardJoinStrategy}
+import graft.plans.JaccardInvertedJoinExec
 
 /** The jaccard-threshold join extension: naive SQL/DataFrame join
   * predicates on jaccard_sim rewrite onto the exact shingle
@@ -15,12 +14,6 @@ import graft.plans.{JaccardInvertedJoinExec, JaccardJoinRewrite, JaccardJoinStra
 class JaccardJoinSpec extends AnyFunSuite {
   lazy val spark = GraftTestSpark.spark
   import spark.implicits._
-
-  private def install(): Unit = {
-    PlanBridge.addOptimization(spark, JaccardJoinRewrite)
-    PlanBridge.addStrategy(spark, JaccardJoinStrategy)
-    GraftFunctions.register(spark)
-  }
 
   private val docRows = Seq(
     (1L, "the quick brown fox jumps over the lazy dog"),
@@ -59,7 +52,6 @@ class JaccardJoinSpec extends AnyFunSuite {
 
   test("naive SQL jaccard_sim join rewrites to the inverted-index exec " +
       "and matches the scalar ground truth") {
-    install()
     side("id_a", "text_a").createOrReplaceTempView("jj_a")
     side("id_b", "text_b").createOrReplaceTempView("jj_b")
     val out = spark.sql(
@@ -76,7 +68,6 @@ class JaccardJoinSpec extends AnyFunSuite {
 
   test("DataFrame-built naive predicate rewrites too; flipped literal " +
       "form and 2-arg default shingle width both match") {
-    install()
     val jac = TextExpressions.jaccardSim(col("text_a"), col("text_b"), 3)
     val df = side("id_a", "text_a").join(side("id_b", "text_b"),
       jac >= lit(0.3) && col("id_a") < col("id_b"))
@@ -94,7 +85,6 @@ class JaccardJoinSpec extends AnyFunSuite {
 
   test("join semantics are per row pair: duplicate-content rows each " +
       "emit, and null/short texts never qualify") {
-    install()
     // ids 1 and 2 are identical content: every pair one of them forms,
     // the other must form too — the exec must not collapse identical
     // texts into one row
@@ -113,7 +103,6 @@ class JaccardJoinSpec extends AnyFunSuite {
 
   test("threshold 0 does NOT rewrite (a no-shared-shingle pair would " +
       "qualify, which the inverted index cannot see)") {
-    install()
     val jac = TextExpressions.jaccardSim(col("text_a"), col("text_b"), 3)
     val df = side("id_a", "text_a").join(side("id_b", "text_b"),
       jac >= lit(0.0) && col("id_a") < col("id_b"))
@@ -150,7 +139,6 @@ class JaccardJoinSpec extends AnyFunSuite {
 
   test("overlap_sim join rewrites to the same exec with the containment " +
       "score: embedded short doc qualifies where jaccard dilutes it") {
-    install()
     // doc 20 is fully contained in doc 21: overlap 1.0, jaccard ≈ 0.3
     val contained = Seq(
       (20L, "alpha beta gamma delta epsilon"),
@@ -201,7 +189,6 @@ class JaccardJoinSpec extends AnyFunSuite {
   }
 
   test("exec result is stable under input repartitioning") {
-    install()
     val jac = TextExpressions.jaccardSim(col("text_a"), col("text_b"), 3)
     val df = side("id_a", "text_a").repartition(5)
       .join(side("id_b", "text_b").repartition(3),

@@ -2,10 +2,9 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.PlanBridge
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.plans.{BoundLevenshteinRule, LevenshteinJoinKernels, LevenshteinJoinRewrite, LevenshteinJoinStrategy}
+import graft.plans.LevenshteinJoinKernels
 
 /** The edit-distance-threshold join extension: naive SQL/DataFrame
   * join predicates on levenshtein rewrite onto the exact
@@ -14,11 +13,6 @@ import graft.plans.{BoundLevenshteinRule, LevenshteinJoinKernels, LevenshteinJoi
 class LevenshteinJoinSpec extends AnyFunSuite {
   lazy val spark = GraftTestSpark.spark
   import spark.implicits._
-
-  private def install(): Unit = {
-    PlanBridge.addOptimization(spark, LevenshteinJoinRewrite)
-    PlanBridge.addStrategy(spark, LevenshteinJoinStrategy)
-  }
 
   /** Reference codepoint Levenshtein — the classic full DP, written
     * independently of both Spark's kernel and the exec. */
@@ -66,7 +60,6 @@ class LevenshteinJoinSpec extends AnyFunSuite {
 
   test("naive SQL levenshtein join rewrites to the segment exec and " +
       "matches the reference DP") {
-    install()
     side("id_a", "text_a").createOrReplaceTempView("lv_a")
     side("id_b", "text_b").createOrReplaceTempView("lv_b")
     val out = spark.sql(
@@ -83,7 +76,6 @@ class LevenshteinJoinSpec extends AnyFunSuite {
 
   test("all predicate spellings rewrite: flipped literal, strict <, " +
       "and the banded form BoundLevenshteinRule produces") {
-    install()
     side("id_a", "text_a").createOrReplaceTempView("lv_a")
     side("id_b", "text_b").createOrReplaceTempView("lv_b")
     val forms = Seq(
@@ -106,8 +98,6 @@ class LevenshteinJoinSpec extends AnyFunSuite {
     // BoundLevenshteinRule rewrites lev(a,b) <= k into lev(a,b,k) >= 0
     // anywhere, including join conditions; the join rule recognizes
     // that form too, so installation order cannot matter
-    PlanBridge.addOptimization(spark, BoundLevenshteinRule)
-    install()
     val df = side("id_a", "text_a").join(side("id_b", "text_b"),
       levenshtein(col("text_a"), col("text_b")) <= lit(2)
         && col("id_a") < col("id_b"))
@@ -117,7 +107,6 @@ class LevenshteinJoinSpec extends AnyFunSuite {
 
   test("k = 0 (exact equality) and k = 1 regimes; empty and 1-char " +
       "strings ride the empty-segment keys, never a special case") {
-    install()
     for (k <- 0 to 1) {
       val df = side("id_a", "text_a").join(side("id_b", "text_b"),
         levenshtein(col("text_a"), col("text_b")) <= lit(k)
@@ -133,7 +122,6 @@ class LevenshteinJoinSpec extends AnyFunSuite {
   }
 
   test("null texts never join (inner-join null predicate semantics)") {
-    install()
     val withNull = (words :+ (99L, null.asInstanceOf[String]))
       .toDF("id_a", "text_a")
     val right = words.toDF("id_b", "text_b")
@@ -197,7 +185,6 @@ class LevenshteinJoinSpec extends AnyFunSuite {
   test("escalated multi-segment regime end-to-end: a shared-prefix " +
       "corpus large enough to trip the hot-segment bound still matches " +
       "brute force exactly") {
-    install()
     val rnd = new scala.util.Random(19)
     // 600 rows, one 12-char constant prefix, one length: segment-0 df
     // = 600 > hotBound (max(256, 8*sqrt(600)) = 256), so the exec must
@@ -240,7 +227,6 @@ class LevenshteinJoinSpec extends AnyFunSuite {
 
   test("hot shared-prefix input (generated key column): exact result, " +
       "no naive shape") {
-    install()
     // every name shares a long constant prefix at one length — the
     // adversarial hot-segment case the exec docs call out; correctness
     // must hold even where the candidate set degrades toward n²
@@ -262,7 +248,6 @@ class LevenshteinJoinSpec extends AnyFunSuite {
 
   test("randomized end-to-end equivalence vs brute force (dense " +
       "small-alphabet strings, k = 0..2)") {
-    install()
     val rnd = new scala.util.Random(7)
     val alphabet = "abcde" // small alphabet -> dense near-pair space
     val rows = (0 until 80).map(i => (i.toLong,
@@ -285,7 +270,6 @@ class LevenshteinJoinSpec extends AnyFunSuite {
   }
 
   test("exec result is stable under input repartitioning") {
-    install()
     val df = side("id_a", "text_a").repartition(5)
       .join(side("id_b", "text_b").repartition(3),
         levenshtein(col("text_a"), col("text_b")) <= lit(2)

@@ -193,6 +193,16 @@ object PlanChecks {
     out.toSeq
   }
 
+  /** Node names of every graft physical operator in `plan`, in walk
+    * order: which whole-operator extensions the planner chose. */
+  def graftExecs(plan: SparkPlan): Seq[String] = {
+    val out = scala.collection.mutable.ArrayBuffer[String]()
+    new Walker(_ => (), p =>
+      if (p.getClass.getName.startsWith("graft.")) out += p.nodeName
+    ).physical(plan)
+    out.toSeq
+  }
+
   /** The THIRD scale-killer class: a parquet scan that reads EVERY
     * column of a wide table. Column pruning is Catalyst's cheapest
     * win — a 100 TB scan that ships `text` to compute `count(*)` is

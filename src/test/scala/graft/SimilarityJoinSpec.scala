@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.PlanBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.expressions.VectorExpressions
@@ -108,7 +107,6 @@ class SimilarityJoinSpec extends AnyFunSuite {
 
   test("naive cosine_sim >= t join condition rewrites to the exact " +
       "operator, residual conjuncts survive as a filter") {
-    PlanBridge.addOptimization(spark, SimilarityJoinRewrite)
     val cond = VectorExpressions.cosineSim(
       col("va").cast("array<double>"),
       col("vb").cast("array<double>")) >= lit(0.9) &&
@@ -127,8 +125,6 @@ class SimilarityJoinSpec extends AnyFunSuite {
   test("large-large naive join: default keeps the cartesian the user " +
       "wrote; the session flag opts into the banded operator; an " +
       "invalid flag value fails the query") {
-    PlanBridge.addOptimization(spark, SimilarityJoinRewrite)
-    PlanBridge.addStrategy(spark, graft.plans.SimilarityJoinStrategy)
     def naive = {
       val cond = VectorExpressions.cosineSim(
         col("va").cast("array<double>"),

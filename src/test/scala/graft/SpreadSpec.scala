@@ -48,17 +48,13 @@ class SpreadSpec extends AnyFunSuite {
 
   test("replay state partitions derive from staged bytes with floor and cap") {
     // tiny replay → floor
-    assert(Queries.replayStateParts(2L << 20, 32, None, None) === 4)
+    assert(Queries.replayStateParts(2L << 20, 32) === 4)
     // grows with data: 130 MB at 4 MB target → 33, capped at conf 32
-    assert(Queries.replayStateParts(130L << 20, 32, None, None) === 32)
+    assert(Queries.replayStateParts(130L << 20, 32) === 32)
     // below the cap the derivation is ceil(bytes/target)
-    assert(Queries.replayStateParts(40L << 20, 32, None, None) === 10)
-    // explicit target changes the derivation
-    assert(Queries.replayStateParts(40L << 20, 32, Some(8L << 20), None) === 5)
-    // pin wins outright
-    assert(Queries.replayStateParts(2L << 20, 32, None, Some(16)) === 16)
+    assert(Queries.replayStateParts(40L << 20, 32) === 10)
     // a big cluster conf is never exceeded, a small one is respected
-    assert(Queries.replayStateParts(1L << 40, 2000, None, None) === 2000)
-    assert(Queries.replayStateParts(1L << 40, 8, None, None) === 8)
+    assert(Queries.replayStateParts(1L << 40, 2000) === 2000)
+    assert(Queries.replayStateParts(1L << 40, 8) === 8)
   }
 }

@@ -165,8 +165,7 @@ class TextFunctionsSpec extends AnyFunSuite {
       === 0.9611111111111111)
   }
 
-  test("jaro_winkler is callable from pure SQL via GraftFunctions.register") {
-    GraftFunctions.register(spark)
+  test("jaro_winkler is callable from pure SQL on a graft session") {
     val r = spark.sql(
       "SELECT jaro_winkler('dixon', 'dicksonx') AS jw").collect()
     assert(r(0).getDouble(0) === 0.8133333333333332)

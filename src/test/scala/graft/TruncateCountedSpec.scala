@@ -58,4 +58,13 @@ class TruncateCountedSpec extends AnyFunSuite {
       .collect().map(r => (r.getBoolean(0), r.getLong(1))).toMap
     assert(joined === Map(true -> 10L, false -> 10L))
   }
+
+  test("the truncated frame joins back to its own input on a key") {
+    val df = (1 to 20).map(i => (i.toLong, i * 10L)).toDF("k", "v")
+    val (out, _, _) = Lineage.truncateCounted(df, None)
+    val joined = out.join(df, out("k") === df("k"))
+      .select(out("k"), out("v"), df("v"))
+      .as[(Long, Long, Long)].collect().sorted
+    assert(joined === (1 to 20).map(i => (i.toLong, i * 10L, i * 10L)))
+  }
 }
