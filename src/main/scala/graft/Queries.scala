@@ -961,14 +961,6 @@ object Queries {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    // diagnostic only (off unless the env var is set): per-batch duration
-    // breakdown for attributing replay wall time to micro-batch
-    // phases (planning / WAL commit / state commit / addBatch)
-    if (sys.env.contains("SPARK_GRAFT_REPLAY_DEBUG"))
-      q.recentProgress.foreach { pr =>
-        System.err.println(s"[replay $tag] batch ${pr.batchId} " +
-          s"rows=${pr.numInputRows} durationMs=${pr.durationMs}")
-      }
     spark.read.parquet(s"$tmp/out")
   }
 

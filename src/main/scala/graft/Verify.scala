@@ -18,26 +18,14 @@ object Verify {
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] $name failed: ${Bench.rootCause(e)}")
       }
       // release operator-internal persists between queries (lifecycle
       // contract — see graft.operators.Caches)
       graft.operators.Caches.releaseAll()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val subset = SparkEntry.oracleSql.filter(e => selected(e._1))
-      .toSeq.map { case (k, v) => (q(k), q(v)) }
+      .toSeq.map { case (k, v) => (jsonString(k), jsonString(v)) }
     val path = Paths.get(s"$outDir/oracle_sql.json")
     // a SUBSET run into a dir already holding a fuller oracle map
     // MERGES (subset entries replace their keys, the rest survive):
@@ -50,6 +38,20 @@ object Verify {
     Files.writeString(path, mergedJson(existing, subset))
     spark.stop()
   }
+
+  /** `s` as a quoted JSON string. Escapes backslash, quote and ALL
+    * control chars (<0x20) — a tab or CR in builder-authored SQL would
+    * otherwise make the driver's json.load fail and silently zero the
+    * round's correctness. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 
   /** Subset entries replace their keys in `existingJson`; everything
     * else survives verbatim. */

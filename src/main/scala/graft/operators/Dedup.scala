@@ -227,7 +227,7 @@ object Dedup {
       // merge-count on the sorted sigs (round-11): same count as
       // size(array_intersect(...)) on sorted distinct arrays, without
       // the per-pair hash-set build — the verification stage's CPU was
-      // ~1 s/task at sf0.1 (QueryProf q192)
+      // ~1 s/task at sf0.1 (q192)
       .withColumn("shared",
         graft.expressions.VectorExpressions.sortedIntersectCount(
           col("sig_a"), col("sig_b")))

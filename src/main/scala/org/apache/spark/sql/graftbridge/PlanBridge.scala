@@ -109,6 +109,12 @@ object PlanBridge {
   def cloneSession(spark: SparkSession): SparkSession =
     spark.asInstanceOf[classic.SparkSession].cloneSession()
 
+  /** Blocks until every event posted to `sc`'s listener bus so far has
+    * reached every listener (the bus delivers asynchronously). Throws a
+    * `TimeoutException` after Spark's 10 s bound. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /** `s` with every field, array element and map value nullable — the
     * `private[spark]` rule file sources apply to a relation's schema. */
   def asNullable(s: org.apache.spark.sql.types.StructType)

@@ -24,6 +24,21 @@ object GraftTestSpark {
   def withCaches[A](body: => A): A =
     try body finally graft.operators.Caches.releaseAll()
 
+  /** A session on the shared context built as a caller's own
+    * `SparkSession.builder()` builds one: without the graft extension. */
+  def plainSession(): SparkSession = {
+    spark.sparkContext // the shared context exists first
+    val active = SparkSession.getActiveSession
+    val default = SparkSession.getDefaultSession
+    SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
+    try SparkSession.builder().getOrCreate()
+    finally {
+      SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
+      default.foreach(SparkSession.setDefaultSession)
+      active.foreach(SparkSession.setActiveSession)
+    }
+  }
+
   lazy val spark: SparkSession = {
     val s = GraftExtensions.session("local[4]", 4,
       "spark.sql.warehouse.dir" -> tmpDir("graftwh"))

@@ -476,11 +476,9 @@ class JobsSpec extends AnyFunSuite {
     val sc = spark.sparkContext
     val (group, key) = ("graft-batch-group", "graft.batch.marker")
     val props = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]()
-    val flushed = new java.util.concurrent.Semaphore(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (e.properties.getProperty(key) == "flush") flushed.release()
-        else props.add(e.properties): Unit
+        props.add(e.properties): Unit
     }
     val dir = GraftTestSpark.tmpDir("graftprops")
     sc.addSparkListener(listener)
@@ -488,11 +486,7 @@ class JobsSpec extends AnyFunSuite {
       sc.setJobGroup(group, "profiles report")
       sc.setLocalProperty(key, "batch")
       BatchJobs.run(spark, s"${GraftTestSpark.testData}/sf0.001", dir, "profiles")
-      sc.clearJobGroup()
-      sc.setLocalProperty(key, "flush")
-      spark.range(1).count()
-      assert(flushed.tryAcquire(60, java.util.concurrent.TimeUnit.SECONDS),
-        "listener bus flush")
+      org.apache.spark.sql.graftbridge.PlanBridge.drainListenerBus(sc)
     } finally {
       sc.clearJobGroup()
       sc.setLocalProperty(key, null)

@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, classic}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.plans.LevenshteinJoinKernels
+import graft.plans.{BoundLevenshteinRule, LevenshteinJoinKernels, LevenshteinJoinRewrite, LevenshteinJoinStrategy}
 
 /** The edit-distance-threshold join extension: naive SQL/DataFrame
   * join predicates on levenshtein rewrite onto the exact
@@ -97,12 +97,24 @@ class LevenshteinJoinSpec extends AnyFunSuite {
       "rewrite firing first must not hide the join from this rule") {
     // BoundLevenshteinRule rewrites lev(a,b) <= k into lev(a,b,k) >= 0
     // anywhere, including join conditions; the join rule recognizes
-    // that form too, so installation order cannot matter
-    val df = side("id_a", "text_a").join(side("id_b", "text_b"),
-      levenshtein(col("text_a"), col("text_b")) <= lit(2)
-        && col("id_a") < col("id_b"))
-    assert(hasExec(df))
-    assert(pairs(df).toSet === expected(2))
+    // that form too, so installation order cannot matter. Each order
+    // runs on a session without the graft extension, whose only rules
+    // are the two under test.
+    val rules = Seq(BoundLevenshteinRule, LevenshteinJoinRewrite)
+    for (order <- Seq(rules, rules.reverse)) {
+      val s = GraftTestSpark.plainSession()
+      val exp = s.asInstanceOf[classic.SparkSession].experimental
+      exp.extraOptimizations = order
+      exp.extraStrategies = Seq(LevenshteinJoinStrategy)
+      def sideOf(idCol: String, textCol: String) =
+        s.createDataFrame(words).toDF(idCol, textCol)
+      val df = sideOf("id_a", "text_a").join(sideOf("id_b", "text_b"),
+        levenshtein(col("text_a"), col("text_b")) <= lit(2)
+          && col("id_a") < col("id_b"))
+      val clue = order.map(_.ruleName).mkString(" then ")
+      assert(hasExec(df), clue)
+      assert(pairs(df).toSet === expected(2), clue)
+    }
   }
 
   test("k = 0 (exact equality) and k = 1 regimes; empty and 1-char " +

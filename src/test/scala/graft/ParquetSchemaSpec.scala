@@ -1,6 +1,5 @@
 package graft
 
-import java.util.concurrent.{Semaphore, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.hadoop.conf.Configuration
@@ -9,6 +8,7 @@ import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.graftbridge.PlanBridge
 import org.apache.spark.sql.types.{LongType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -131,28 +131,21 @@ class ParquetSchemaSpec extends AnyFunSuite {
   }
 
   /** Jobs started by `body` on this thread, counted by a listener
-    * that sees the thread-local property every job inherits. A marked
-    * flush job afterwards drains the asynchronous listener bus. */
+    * that sees the thread-local property every job inherits. */
   private def jobsStartedBy(body: => Unit): Int = {
     val sc = spark.sparkContext
     val key = "graft.probe"
     val started = new AtomicInteger()
-    val flushed = new Semaphore(0)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty(key)) match {
-          case Some("body") => started.incrementAndGet(): Unit
-          case Some("flush") => flushed.release()
-          case _ =>
-        }
+        if (Option(e.properties).map(_.getProperty(key)).contains("body"))
+          started.incrementAndGet(): Unit
     }
     sc.addSparkListener(listener)
     try {
       sc.setLocalProperty(key, "body")
       body
-      sc.setLocalProperty(key, "flush")
-      spark.range(1).count()
-      assert(flushed.tryAcquire(60, TimeUnit.SECONDS), "listener bus flush")
+      PlanBridge.drainListenerBus(sc)
       started.get()
     } finally {
       sc.setLocalProperty(key, null)

@@ -1,11 +1,12 @@
 package graft
 
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, Executors, Semaphore, TimeUnit}
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, Executors, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{SparkSession, classic}
+import org.apache.spark.sql.graftbridge.PlanBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.plans.{AsOfJoinStrategy, BoundLevenshteinRule, JaccardJoinRewrite, JaccardJoinStrategy, LevenshteinJoinRewrite, LevenshteinJoinStrategy, SimilarityJoinRewrite, SimilarityJoinStrategy}
@@ -22,21 +23,6 @@ class SessionIsolationSpec extends AnyFunSuite {
   private def rules(s: SparkSession) = {
     val exp = s.asInstanceOf[classic.SparkSession].experimental
     (exp.extraOptimizations, exp.extraStrategies)
-  }
-
-  /** A session on the shared context built as a caller's own
-    * `SparkSession.builder()` builds one: without the graft extension. */
-  private def plainSession(): SparkSession = {
-    spark.sparkContext // the shared context exists first
-    val active = SparkSession.getActiveSession
-    val default = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-    try SparkSession.builder().getOrCreate()
-    finally {
-      SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-      default.foreach(SparkSession.setDefaultSession)
-      active.foreach(SparkSession.setActiveSession)
-    }
   }
 
   private val isolated = Seq("q52_chained_metrics", "q73_", "q105_",
@@ -69,33 +55,24 @@ class SessionIsolationSpec extends AnyFunSuite {
     val s = spark.newSession()
     // the replay sizes its state to 4 partitions at sf0.001
     s.conf.set("spark.sql.shuffle.partitions", "7")
-    val key = "graft.isolation.probe"
     val seen = new ConcurrentLinkedQueue[String]()
-    val flushed = new Semaphore(0)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty(key) == "flush")
-          flushed.release()
-        else seen.add(s.conf.get("spark.sql.shuffle.partitions"))
+        seen.add(s.conf.get("spark.sql.shuffle.partitions")): Unit
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
     try {
       val out = Queries.all(named("q52_chained_metrics"))(s, dir)
       assert(out.count() > 0)
-      sc.setLocalProperty(key, "flush")
-      spark.range(1).count()
-      assert(flushed.tryAcquire(60, TimeUnit.SECONDS), "listener bus flush")
-    } finally {
-      sc.setLocalProperty(key, null)
-      sc.removeSparkListener(listener)
-    }
+      PlanBridge.drainListenerBus(sc)
+    } finally sc.removeSparkListener(listener)
     assert(seen.size > 2, "the replay ran its micro-batches")
     assert(seen.asScala.toSet === Set("7"))
   }
 
   test("catalog queries plan to the same graft operators on a factory session and on a plain session after ensure") {
-    val plain = plainSession()
+    val plain = GraftTestSpark.plainSession()
     assert(!plain.catalog.functionExists("jaccard_sim"))
     assert(rules(plain) === ((Nil, Nil)))
     for (q <- graftPlanned.map(named)) GraftTestSpark.withCaches {
@@ -108,7 +85,7 @@ class SessionIsolationSpec extends AnyFunSuite {
   }
 
   test("ensure from 8 threads installs each rule and strategy once; an extension-built session gets nothing") {
-    val fresh = plainSession()
+    val fresh = GraftTestSpark.plainSession()
     val start = new CountDownLatch(1)
     val pool = Executors.newFixedThreadPool(8)
     try {
