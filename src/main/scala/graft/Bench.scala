@@ -2,6 +2,7 @@ package graft
 import org.apache.commons.lang3.exception.ExceptionUtils
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.graftbridge.PlanBridge
 import org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent
 
@@ -350,18 +351,24 @@ object Bench {
   /** One sample's layer record, summed over the jobs tagged with it:
     * scheduler counts, executor time split into CPU and GC, I/O bytes,
     * the three slowest stages, and — for a streaming replay — its
-    * micro-batch count and summed `durationMs` phases. */
+    * micro-batch count and summed `durationMs` phases. A slow stage
+    * carries its name (Spark's call site), the operator scopes of its
+    * RDDs (`ops`: `Exchange`, `WholeStageCodegen (2)`, `Scan parquet`,
+    * ...) and the SQL execution that ran it (`sql_id`, null outside
+    * one). */
   private[graft] final class Layer {
     var jobs, stages, tasks, batches = 0
     var jobWallMs, taskMs, cpuNs, gcMs = 0L
     var inputBytes, shuffleReadBytes, shuffleWriteBytes, spillBytes = 0L
-    /** (stage name, wall ms, task ms), slowest first. */
-    var slowest = List.empty[(String, Long, Long)]
+    /** (stage name, wall ms, task ms, ops, sql id), slowest first. */
+    var slowest = List.empty[(String, Long, Long, Seq[String], Option[String])]
     val batchMs = scala.collection.mutable.TreeMap.empty[String, Long]
 
     def json: String = {
-      val top = slowest.map { case (name, wall, task) =>
-        s"""{"name":${Verify.jsonString(name)},"wall_ms":$wall,"task_ms":$task}"""
+      val top = slowest.map { case (name, wall, task, ops, sqlId) =>
+        s"""{"name":${Verify.jsonString(name)},"wall_ms":$wall,"task_ms":$task,""" +
+          s""""ops":${ops.map(Verify.jsonString).mkString("[", ",", "]")},""" +
+          s""""sql_id":${sqlId.getOrElse("null")}}"""
       }.mkString("[", ",", "]")
       val phases = batchMs.map { case (k, v) => s""""$k":$v""" }
         .mkString("{", ",", "}")
@@ -391,7 +398,9 @@ object Bench {
       new java.util.concurrent.ConcurrentHashMap[String, Layer]()
     // the rest is touched by the bus thread only
     private val jobStart = scala.collection.mutable.HashMap.empty[Int, (String, Long)]
-    private val stageTag = scala.collection.mutable.HashMap.empty[Int, String]
+    /** stage id → (sample tag, SQL execution id) */
+    private val stageTag =
+      scala.collection.mutable.HashMap.empty[Int, (String, Option[String])]
     private val queryTag = scala.collection.mutable.HashMap.empty[String, String]
     sc.addSparkListener(this)
 
@@ -423,10 +432,13 @@ object Bench {
       }
 
     override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-      prop(e.properties, SampleKey).foreach(stageTag(e.stageInfo.stageId) = _)
+      prop(e.properties, SampleKey).foreach { tag =>
+        stageTag(e.stageInfo.stageId) =
+          (tag, prop(e.properties, SQLExecution.EXECUTION_ID_KEY))
+      }
 
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-      stageTag.remove(e.stageInfo.stageId).foreach { tag =>
+      stageTag.remove(e.stageInfo.stageId).foreach { case (tag, sqlId) =>
         val (si, l) = (e.stageInfo, layer(tag))
         val m = si.taskMetrics
         l.stages += 1
@@ -440,7 +452,8 @@ object Bench {
         l.spillBytes += m.memoryBytesSpilled + m.diskBytesSpilled
         val wall = (for (s <- si.submissionTime; c <- si.completionTime)
           yield c - s).getOrElse(0L)
-        l.slowest = ((si.name, wall, m.executorRunTime) :: l.slowest)
+        val ops = PlanBridge.scopeNames(si)
+        l.slowest = ((si.name, wall, m.executorRunTime, ops, sqlId) :: l.slowest)
           .sortBy(-_._2).take(3)
       }
 

@@ -31,8 +31,6 @@ import graft.functions.TextFunctions._
   */
 object Relevance {
 
-  val Buckets = 256
-
   /** Hashed-bigram bucket stream: (doc_id, b) one row per adjacent
     * token pair, b = first two hex chars of md5("f|" + bigram). */
   private def bigramBuckets(docs: DataFrame, idCol: String,

@@ -5,6 +5,24 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.IntegerType
 
+/** The four spellings of `levenshtein(a, b) <= k` against a literal int
+  * bound, as (a, b, k): `lev <= k` and `k >= lev` for k >= 0, and
+  * `lev < k` and `k > lev` as k − 1 for k >= 1. [[BoundLevenshteinRule]]
+  * and [[LevenshteinJoinRewrite]] both read them here. */
+private[plans] object LevenshteinAtMost {
+  def unapply(e: Expression): Option[(Expression, Expression, Int)] = e match {
+    case LessThanOrEqual(Levenshtein(a, b, None), Literal(k: Int, IntegerType))
+        if k >= 0 => Some((a, b, k))
+    case GreaterThanOrEqual(Literal(k: Int, IntegerType), Levenshtein(a, b, None))
+        if k >= 0 => Some((a, b, k))
+    case LessThan(Levenshtein(a, b, None), Literal(k: Int, IntegerType))
+        if k >= 1 => Some((a, b, k - 1))
+    case GreaterThan(Literal(k: Int, IntegerType), Levenshtein(a, b, None))
+        if k >= 1 => Some((a, b, k - 1))
+    case _ => None
+  }
+}
+
 /** Optimizer rule: bound Levenshtein predicates.
   *
   * `levenshtein(a, b) <= k` evaluates the full O(|a|·|b|) DP per row
@@ -26,19 +44,9 @@ import org.apache.spark.sql.types.IntegerType
   */
 object BoundLevenshteinRule extends Rule[LogicalPlan] {
 
-  private def bounded(a: Expression, b: Expression, k: Int): Expression =
-    GreaterThanOrEqual(
-      Levenshtein(a, b, Some(Literal(k))), Literal(0))
-
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformAllExpressions {
-      case LessThanOrEqual(Levenshtein(a, b, None), Literal(k: Int, IntegerType))
-          if k >= 0 => bounded(a, b, k)
-      case GreaterThanOrEqual(Literal(k: Int, IntegerType), Levenshtein(a, b, None))
-          if k >= 0 => bounded(a, b, k)
-      case LessThan(Levenshtein(a, b, None), Literal(k: Int, IntegerType))
-          if k >= 1 => bounded(a, b, k - 1)
-      case GreaterThan(Literal(k: Int, IntegerType), Levenshtein(a, b, None))
-          if k >= 1 => bounded(a, b, k - 1)
+      case LevenshteinAtMost(a, b, k) =>
+        GreaterThanOrEqual(Levenshtein(a, b, Some(Literal(k))), Literal(0))
     }
 }

@@ -1,8 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, Expression, GreaterThanOrEqual, LessThanOrEqual, Literal}
-import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, Filter, Join, LogicalPlan}
-import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, GreaterThanOrEqual, LessThanOrEqual, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 import org.apache.spark.sql.types.DoubleType
@@ -84,66 +83,29 @@ object JaccardJoinStrategy extends SparkStrategy {
   * cannot discover (and which the user should write as a cross join,
   * because it is one).
   *
-  * Residual conjuncts (`... AND a.id < b.id`) survive as a Filter on
-  * top of the rewritten node.
+  * The split, operand orientation and residual `Filter` are
+  * [[ThresholdJoinRewrite]]'s; this rule keeps the spellings
+  * `jaccard_sim|overlap_sim(..) >= t` and `t <= ..` and the t > 0 guard.
   */
 object JaccardJoinRewrite extends Rule[LogicalPlan] {
 
-  /** Recognizes a set-similarity scalar: (operands, n, metric). */
-  private def setSim(e: Expression)
-      : Option[(Expression, Expression, Int, SetSimMetric)] = e match {
-    case j: JaccardSim =>
-      Some((j.left, j.right, j.n, SetSimMetric.Jaccard))
-    case o: OverlapSim =>
-      Some((o.left, o.right, o.n, SetSimMetric.Overlap))
-    case _ => None
-  }
-
-  /** Splits `cond` into (set-sim-threshold predicate, residuals). */
-  private def extract(cond: Expression, l: LogicalPlan, r: LogicalPlan)
-      : Option[(Expression, Expression, Int, Double, SetSimMetric,
-        Seq[Expression])] = {
-    val conjuncts = splitConjunctivePredicates(cond)
-    conjuncts.iterator.map {
-      case GreaterThanOrEqual(e, Literal(t: Double, DoubleType)) if t > 0 =>
-        setSim(e).flatMap { case (a, b, n, m) =>
-          sided(a, b, l, r).map { case (lt, rt) => (lt, rt, n, t, m) }
-        }
-      case LessThanOrEqual(Literal(t: Double, DoubleType), e) if t > 0 =>
-        setSim(e).flatMap { case (a, b, n, m) =>
-          sided(a, b, l, r).map { case (lt, rt) => (lt, rt, n, t, m) }
-        }
+  /** A set-similarity scalar: (operands, n, metric). */
+  private object SetSim {
+    def unapply(e: Expression)
+        : Option[(Expression, Expression, Int, SetSimMetric)] = e match {
+      case j: JaccardSim => Some((j.left, j.right, j.n, SetSimMetric.Jaccard))
+      case o: OverlapSim => Some((o.left, o.right, o.n, SetSimMetric.Overlap))
       case _ => None
-    }.zipWithIndex.collectFirst { case (Some((lt, rt, n, t, m)), i) =>
-      (lt, rt, n, t, m, conjuncts.take(i) ++ conjuncts.drop(i + 1))
     }
   }
 
-  /** Orients the metric's operands: one must resolve entirely against
-    * the left child, the other against the right (both metrics are
-    * symmetric, so flipping is free). */
-  private def sided(a: Expression, b: Expression,
-      l: LogicalPlan, r: LogicalPlan): Option[(Expression, Expression)] =
-    if (a.references.subsetOf(l.outputSet) &&
-        b.references.subsetOf(r.outputSet)) Some((a, b))
-    else if (b.references.subsetOf(l.outputSet) &&
-        a.references.subsetOf(r.outputSet)) Some((b, a))
-    else None
-
-  private def splitConjunctivePredicates(e: Expression): Seq[Expression] =
-    e match {
-      case And(a, b) =>
-        splitConjunctivePredicates(a) ++ splitConjunctivePredicates(b)
-      case other => other :: Nil
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    ThresholdJoinRewrite(plan) {
+      case GreaterThanOrEqual(SetSim(a, b, n, m), Literal(t: Double, DoubleType))
+          if t > 0 => (a, b, (n, t, m))
+      case LessThanOrEqual(Literal(t: Double, DoubleType), SetSim(a, b, n, m))
+          if t > 0 => (a, b, (n, t, m))
+    } { case (l, r, lt, rt, (n, t, m)) =>
+      Some(JaccardJoinPlan(l, r, lt, rt, n, t, m))
     }
-
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case j @ Join(l, r, Inner | Cross, Some(cond), _) =>
-      extract(cond, l, r) match {
-        case Some((lt, rt, n, t, m, residual)) =>
-          val jac = JaccardJoinPlan(l, r, lt, rt, n, t, m)
-          residual.reduceOption(And).map(Filter(_, jac)).getOrElse(jac)
-        case None => j
-      }
-  }
 }

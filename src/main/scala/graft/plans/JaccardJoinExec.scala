@@ -2,9 +2,8 @@ package graft.plans
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, JoinedRow, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
-import org.apache.spark.storage.StorageLevel
 
 import graft.expressions.TextKernels
 
@@ -12,7 +11,7 @@ import graft.expressions.TextKernels
   * 3-column quicksort ordering (lids, rids, sizes) by (lid, rid).
   * Exists because the quadratic occurrence slice must live as packed
   * longs, never as boxed records in a Spark-tracked collection (see
-  * [[JaccardInvertedJoinExec.doExecute]]'s memory note). */
+  * [[InvertedIndexJoin.pairs]]'s memory note). */
 private[graft] object JaccardJoinKernels {
   def sortByPair(l: Array[Long], r: Array[Long], s: Array[Long],
       lo: Int, hi: Int): Unit = {
@@ -69,7 +68,7 @@ private[graft] object JaccardJoinKernels {
     out.iterator
   }
 
-  /** The hybrid per-partition grouping (see the exec's doExecute
+  /** The hybrid per-partition grouping (see [[InvertedIndexJoin.pairs]]'s
     * comment): in-memory up to [[MaxInMemoryRecords]], task-local
     * sub-bucket spill files past it. */
   def groupAndFilter(iter: Iterator[((Long, Long), Long)], t: Double,
@@ -141,15 +140,12 @@ private[graft] object JaccardJoinKernels {
   * id + text table; this exec carries whole rows and needs no id
   * column).
   *
-  * Four keyed stages, no O(n·m) anywhere:
+  * Four keyed stages, no O(n·m) anywhere. Stages 1, 3 and 4 are
+  * [[InvertedIndexJoin]]'s; this exec keeps the postings and the
+  * threshold:
   *
-  *  1. index: each side's rows get a synthetic (partition, ordinal)
-  *     rowId; the indexed RDDs are persisted (MEMORY_AND_DISK) because
-  *     they are consumed twice — postings now, row payloads at
-  *     join-back — and a recomputation between those two uses could
-  *     reorder rows under a shuffling child, silently remapping ids
-  *     (the classic zipWithIndex hazard). ContextCleaner unpersists
-  *     them when the RDDs are garbage-collected after the job.
+  *  1. index: each side's rows get a persisted synthetic rowId
+  *     ([[InvertedIndexJoin.indexed]]).
   *  2. postings: (shingleKey → (rowId, setSize)) — 64-bit xxhash64
   *     keys and two scalars per posting, never the shingle string and
   *     never the row (the same slim-shuffle contract as q22).
@@ -160,7 +156,7 @@ private[graft] object JaccardJoinKernels {
   *     each partition's slice in packed primitive long columns and
   *     counting consecutive (lId, rId) runs (never a boxed hash or
   *     tracked sorter over the quadratic candidate set; see the
-  *     doExecute memory note). jaccard = shared / (na + nb − shared),
+  *     [[InvertedIndexJoin.pairs]] memory note). jaccard = shared / (na + nb − shared),
   *     filter ≥ threshold — identical integer arithmetic to
   *     [[graft.expressions.TextKernels.jaccardSim]], so the boundary
   *     double compares equal and the rewrite is semantics-preserving.
@@ -190,21 +186,6 @@ case class JaccardInvertedJoinExec(
       newLeft: SparkPlan, newRight: SparkPlan): JaccardInvertedJoinExec =
     copy(left = newLeft, right = newRight)
 
-  /** Rows with a synthetic id unique within this exec's side:
-    * (partitionId << 33) | ordinal. 33 bits of ordinal per partition;
-    * a partition crossing 2^33 rows would collide ids — at the
-    * 128 MiB-split sizing the engine uses, partitions are orders of
-    * magnitude below that. */
-  private def indexed(child: SparkPlan): RDD[(Long, UnsafeRow)] =
-    child.execute().mapPartitionsWithIndex { (pid, iter) =>
-      var i = 0L
-      iter.map { row =>
-        val id = (pid.toLong << 33) | i
-        i += 1
-        (id, row.asInstanceOf[UnsafeRow].copy())
-      }
-    }.persist(StorageLevel.MEMORY_AND_DISK)
-
   private def postings(idx: RDD[(Long, UnsafeRow)], textE: Expression,
       attrs: Seq[Attribute], shingleN: Int): RDD[(Long, (Long, Int))] =
     idx.mapPartitions { iter =>
@@ -222,90 +203,15 @@ case class JaccardInvertedJoinExec(
     }
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val t = threshold
-    val shingleN = n
-    val overlap = metric == SetSimMetric.Overlap
-    val outAttrs = output
-    val lOut = left.output
-    val rOut = right.output
-    val lTextE = leftText
-    val rTextE = rightText
+    val lIdx = InvertedIndexJoin.indexed(left)
+    val rIdx = InvertedIndexJoin.indexed(right)
     val nPart = conf.numShufflePartitions
-
-    val lIdx = indexed(left)
-    val rIdx = indexed(right)
-
-    // The pair-count stage's input is QUADRATIC in per-shingle df
-    // (the driver data measures 100× candidate growth for 10× docs
-    // while true pairs stay linear — 237M occurrences at 50k docs on
-    // a hot closed vocabulary), so it must never sit in a tracked
-    // Spark collection: both a reduceByKey's combiner maps and a
-    // repartitionAndSort's ExternalSorter OOM'd an 8 GB local[32]
-    // heap here — SizeEstimator undercounts boxed nested tuples, so
-    // 32 concurrent tasks legally acquire more execution memory than
-    // the heap physically holds before any spill triggers. The shape
-    // that survives: (a) the shuffle WRITE streams — the partitioner
-    // stays at/below spark.shuffle.sort.bypassMergeThreshold's
-    // default (200), so BypassMergeSortShuffleWriter writes records
-    // straight to per-partition files with zero buffering; (b) the
-    // per-partition grouping runs in OUR primitive long columns
-    // (24 bytes/record, no estimator in the loop): pack, 3-column
-    // quicksort on (lid, rid), streaming run count. A partition's
-    // slice must fit as 24 B/record in task memory — ~40M records
-    // per task at typical budgets, far past the measured hot-corpus
-    // load and width-tunable via the partitioner if ever reached.
-    // the cogroup is widened independently of the pair partitioner:
-    // its read-side ExternalAppendOnlyMap holds every shingle KEY of
-    // the partition (46M distinct keys at 1M heavy-tailed docs —
-    // 1.4M keys of CompactBuffers per task at nPart OOM'd; wider
-    // bounds it), while the pair stage below must stay ≤ 200
-    // partitions for the buffer-free bypass write. Width scales with
-    // the INPUT's partition count so a small join doesn't pay 450
-    // tasks of scheduling (fixed nPart*8 + 200 measured 2.5× slower
-    // than necessary at sf0.1) while a corpus-scale one still fans
-    // out.
-    val inParts = math.max(lIdx.getNumPartitions, rIdx.getNumPartitions)
-    val cogroupWidth =
-      math.max(nPart, math.min(nPart * 8, inParts * 4))
-    val pairWidth = math.min(200, cogroupWidth)
-    val occurrences: RDD[((Long, Long), Long)] =
-      postings(lIdx, lTextE, lOut, shingleN)
-        .cogroup(postings(rIdx, rTextE, rOut, shingleN), cogroupWidth)
-        .flatMap { case (_, (ls, rs)) =>
-          if (ls.isEmpty || rs.isEmpty) Iterator.empty
-          else {
-            val la = ls.toArray
-            rs.iterator.flatMap { case (rid, nb) =>
-              la.iterator.map { case (lid, na) =>
-                ((lid, rid), (na.toLong << 32) | (nb.toLong & 0xffffffffL))
-              }
-            }
-          }
-        }
-    // Per task, the slice is grouped in packed primitive columns with
-    // a HYBRID memory bound: up to 4M records (~96 MB) buffer and
-    // sort in memory; past that, everything streams to 16 task-local
-    // sub-bucket spill files by pair hash (24-byte fixed records,
-    // sequential IO) and each sub-bucket loads, sorts and run-counts
-    // ALONE — peak task memory is then slice/16 regardless of corpus
-    // (1.15B occurrences at 1M heavy-tailed docs ÷ 200 partitions
-    // ÷ 16 ≈ 9 MB loads; the unchunked version held the whole 140 MB
-    // slice × 32 concurrent tasks and OOM'd on allocation transients,
-    // while the always-spill version taxed the common small case).
-    val qualifying: RDD[(Long, Long)] = occurrences
-      .partitionBy(new org.apache.spark.HashPartitioner(pairWidth))
-      .mapPartitions { iter =>
-        JaccardJoinKernels.groupAndFilter(iter, t, overlap = overlap)
-      }
-
-    qualifying
-      .join(lIdx, nPart)
-      .map { case (_, (rid, lRow)) => (rid, lRow) }
-      .join(rIdx, nPart)
-      .mapPartitions { iter =>
-        val joined = new JoinedRow
-        val proj = UnsafeProjection.create(outAttrs, outAttrs)
-        iter.map { case (_, (lRow, rRow)) => proj(joined(lRow, rRow)) }
-      }
+    val qualifying = InvertedIndexJoin.pairs(
+      postings(lIdx, leftText, left.output, n),
+      postings(rIdx, rightText, right.output, n),
+      InvertedIndexJoin.cogroupCap(nPart, lIdx, rIdx), threshold,
+      overlap = metric == SetSimMetric.Overlap)(identity)
+    InvertedIndexJoin.joinBack(qualifying, lIdx, rIdx, nPart, output,
+      verify = None)
   }
 }

@@ -1,8 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Levenshtein, Literal}
-import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, Filter, Join, LogicalPlan}
-import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, GreaterThanOrEqual, LessThanOrEqual, Levenshtein, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 import org.apache.spark.sql.types.IntegerType
@@ -58,79 +57,28 @@ object LevenshteinJoinStrategy extends SparkStrategy {
 
 /** Optimizer rule: a naive edit-distance-threshold join —
   * `a JOIN b ON levenshtein(a.s, b.s) <= k` (any of the four
-  * comparison spellings, or the banded `levenshtein(a, b, k) >= 0`
-  * form [[BoundLevenshteinRule]] may already have produced — the two
+  * [[LevenshteinAtMost]] spellings, or the banded
+  * `levenshtein(a, b, k) >= 0` form [[BoundLevenshteinRule]] may already have produced — the two
   * rules are injected side by side and must compose in either order)
   * — becomes a [[LevenshteinJoinPlan]], so it plans as the
   * segment-pigeonhole join instead of BNLJ/CartesianProduct.
   *
   * Exact at any size, so no gate beyond k >= 0 (a negative bound is
-  * an always-false predicate the main optimizer folds first).
-  * Residual conjuncts (`... AND a.id < b.id`) survive as a Filter on
-  * top of the rewritten node.
+  * an always-false predicate the main optimizer folds first). The
+  * split, operand orientation and residual `Filter` are
+  * [[ThresholdJoinRewrite]]'s.
   */
 object LevenshteinJoinRewrite extends Rule[LogicalPlan] {
 
-  /** Recognizes an edit-distance bound: (a, b, k) with the predicate
-    * equivalent to levenshtein(a,b) <= k. */
-  private def boundK(e: Expression): Option[(Expression, Expression, Int)] =
-    e match {
-      case LessThanOrEqual(Levenshtein(a, b, None),
-          Literal(k: Int, IntegerType)) if k >= 0 => Some((a, b, k))
-      case GreaterThanOrEqual(Literal(k: Int, IntegerType),
-          Levenshtein(a, b, None)) if k >= 0 => Some((a, b, k))
-      case LessThan(Levenshtein(a, b, None),
-          Literal(k: Int, IntegerType)) if k >= 1 => Some((a, b, k - 1))
-      case GreaterThan(Literal(k: Int, IntegerType),
-          Levenshtein(a, b, None)) if k >= 1 => Some((a, b, k - 1))
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    ThresholdJoinRewrite(plan) {
+      case LevenshteinAtMost(a, b, k) => (a, b, k)
       // the banded form: levenshtein(a, b, k) >= 0 (and its flip)
       case GreaterThanOrEqual(
           Levenshtein(a, b, Some(Literal(k: Int, IntegerType))),
-          Literal(0, IntegerType)) if k >= 0 => Some((a, b, k))
+          Literal(0, IntegerType)) if k >= 0 => (a, b, k)
       case LessThanOrEqual(Literal(0, IntegerType),
           Levenshtein(a, b, Some(Literal(k: Int, IntegerType))))
-          if k >= 0 => Some((a, b, k))
-      case _ => None
-    }
-
-  /** Splits `cond` into (edit-bound predicate, residuals). */
-  private def extract(cond: Expression, l: LogicalPlan, r: LogicalPlan)
-      : Option[(Expression, Expression, Int, Seq[Expression])] = {
-    val conjuncts = splitConjunctivePredicates(cond)
-    conjuncts.iterator.map { c =>
-      boundK(c).flatMap { case (a, b, k) =>
-        sided(a, b, l, r).map { case (lt, rt) => (lt, rt, k) }
-      }
-    }.zipWithIndex.collectFirst { case (Some((lt, rt, k)), i) =>
-      (lt, rt, k, conjuncts.take(i) ++ conjuncts.drop(i + 1))
-    }
-  }
-
-  /** Orients the operands: one must resolve entirely against the left
-    * child, the other against the right (Levenshtein is symmetric, so
-    * flipping is free). */
-  private def sided(a: Expression, b: Expression,
-      l: LogicalPlan, r: LogicalPlan): Option[(Expression, Expression)] =
-    if (a.references.subsetOf(l.outputSet) &&
-        b.references.subsetOf(r.outputSet)) Some((a, b))
-    else if (b.references.subsetOf(l.outputSet) &&
-        a.references.subsetOf(r.outputSet)) Some((b, a))
-    else None
-
-  private def splitConjunctivePredicates(e: Expression): Seq[Expression] =
-    e match {
-      case And(a, b) =>
-        splitConjunctivePredicates(a) ++ splitConjunctivePredicates(b)
-      case other => other :: Nil
-    }
-
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case j @ Join(l, r, Inner | Cross, Some(cond), _) =>
-      extract(cond, l, r) match {
-        case Some((lt, rt, k, residual)) =>
-          val lev = LevenshteinJoinPlan(l, r, lt, rt, k)
-          residual.reduceOption(And).map(Filter(_, lev)).getOrElse(lev)
-        case None => j
-      }
-  }
+          if k >= 0 => (a, b, k)
+    } { (l, r, lt, rt, k) => Some(LevenshteinJoinPlan(l, r, lt, rt, k)) }
 }

@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, JoinedRow, Levenshtein, Literal, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, GreaterThanOrEqual, Levenshtein, Literal, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
 import org.apache.spark.storage.StorageLevel
 
@@ -54,17 +54,13 @@ private[graft] object LevenshteinJoinKernels {
     h
   }
 
-  /** Index-side keys: the m = k+1 segments of this string (the
-    * baseline PassJoin regime). */
-  def postingKeys(cps: Array[Int], k: Int): Array[Long] =
-    postingKeysM(cps, k + 1)
-
-  /** Index-side keys for an arbitrary segment count m ≥ k+1 (the
-    * multi-segment regime): all m segment keys. k edits destroy at
-    * most k of the m segments, so ≥ m−k survive verbatim (within the
-    * ±k probe window) — which is what lets the exec INDEX only the
-    * k+1 lowest-df segments per row and stay lossless: any k+1 of
-    * them still contain ≥ 1 survivor by the same pigeonhole. */
+  /** Index-side keys: all m segment keys of this string — m = k+1 in
+    * the baseline PassJoin regime, any m ≥ k+1 in the multi-segment
+    * regime. k edits destroy at most k of the m segments, so ≥ m−k
+    * survive verbatim (within the ±k probe window) — which is what
+    * lets the exec INDEX only the k+1 lowest-df segments per row and
+    * stay lossless: any k+1 of them still contain ≥ 1 survivor by the
+    * same pigeonhole. */
   def postingKeysM(cps: Array[Int], m: Int): Array[Long] = {
     val l = cps.length
     val out = new Array[Long](m)
@@ -76,23 +72,18 @@ private[graft] object LevenshteinJoinKernels {
     out
   }
 
-  /** Probe-side keys: for every candidate indexed length
-    * L ∈ [|b|−k, |b|+k] and segment i, the substrings of b with
-    * segment i's length starting within ±k of segment i's position —
-    * if lev(a, b) ≤ k then some segment of a survives verbatim in b
-    * (pigeonhole: k edits destroy ≤ k of the k+1 segments) and the
-    * ≤ k edits before it shift its start by ≤ k, so the window is
-    * complete. O(k³) keys per row — constant for the small k an
-    * edit-distance join means. Zero-length segments (strings shorter
-    * than k+1) probe the empty slice once per (i, L): an empty
-    * segment is trivially preserved, keeping short strings inside
-    * the same lossless key space rather than a special-cased
-    * short-bucket cross. */
-  def probeKeys(cps: Array[Int], k: Int): Array[Long] =
-    probeKeysM(cps, k, k + 1)
-
-  /** Probe keys for an arbitrary segment count m — the same window
-    * enumeration over all m ordinals. O(k²·m) keys per row. */
+  /** Probe-side keys for m segments: for every candidate indexed
+    * length L ∈ [|b|−k, |b|+k] and segment i < m, the substrings of b
+    * with segment i's length starting within ±k of segment i's
+    * position — if lev(a, b) ≤ k then some segment of a survives
+    * verbatim in b (pigeonhole: k edits destroy ≤ k of the m ≥ k+1
+    * segments) and the ≤ k edits before it shift its start by ≤ k, so
+    * the window is complete. O(k²·m) keys per row — O(k³) at m = k+1,
+    * constant for the small k an edit-distance join means. Zero-length
+    * segments (strings shorter than m) probe the empty slice once per
+    * (i, L): an empty segment is trivially preserved, keeping short
+    * strings inside the same lossless key space rather than a
+    * special-cased short-bucket cross. */
   def probeKeysM(cps: Array[Int], k: Int, m: Int): Array[Long] = {
     val nb = cps.length
     // exact upper bound: (2k+1) lengths × m segments × (2k+1) window
@@ -127,22 +118,21 @@ private[graft] object LevenshteinJoinKernels {
   * (the PassJoin shape — Li et al., PVLDB 2011) + banded-DP
   * verification.
   *
-  * Four keyed stages, no O(n·m) anywhere — structurally the
-  * [[JaccardInvertedJoinExec]] pipeline with segment keys in place of
-  * shingle keys:
+  * Four keyed stages, no O(n·m) anywhere — the [[InvertedIndexJoin]]
+  * pipeline [[JaccardInvertedJoinExec]] also runs, with segment keys
+  * in place of shingle keys. This exec keeps the keys, the df
+  * escalation, the widths and the verify expression:
   *
-  *  1. index: synthetic (partition << 33 | ordinal) rowIds, persisted
-  *     (consumed twice — the zipWithIndex hazard note on the jaccard
-  *     exec applies verbatim);
+  *  1. index: persisted synthetic rowIds ([[InvertedIndexJoin.indexed]]);
   *  2. keys: left rows emit their k+1 segment keys, right rows emit
   *     the O(k³) probe-window keys (see
-  *     [[LevenshteinJoinKernels.probeKeys]]); 8-byte packed
+  *     [[LevenshteinJoinKernels.probeKeysM]]); 8-byte packed
   *     (ordinal, length, content-hash) keys — never the string;
   *  3. candidates: cogroup by key, emit (lid, rid) co-occurrences,
   *     dedup in the hybrid packed-primitive grouping
-  *     ([[JaccardJoinKernels.groupAndFilter]] at t = 0 — a run of
-  *     equal pairs emits once, with the same in-memory/spill-file
-  *     memory bound the jaccard exec measured at 1.15B occurrences);
+  *     ([[InvertedIndexJoin.pairs]] at t = 0 — a run of equal pairs
+  *     emits once, with the same in-memory/spill-file memory bound
+  *     the jaccard exec measured at 1.15B occurrences);
   *  4. join-back + verify: the (small) candidate set joins each side
   *     by rowId and each pair runs ONE banded O(len·k) Levenshtein
   *     (the [[BoundLevenshteinRule]] kernel: `levenshtein(a, b, k)`
@@ -181,16 +171,6 @@ case class LevenshteinSegmentJoinExec(
       newLeft: SparkPlan, newRight: SparkPlan): LevenshteinSegmentJoinExec =
     copy(left = newLeft, right = newRight)
 
-  private def indexed(child: SparkPlan): RDD[(Long, UnsafeRow)] =
-    child.execute().mapPartitionsWithIndex { (pid, iter) =>
-      var i = 0L
-      iter.map { row =>
-        val id = (pid.toLong << 33) | i
-        i += 1
-        (id, row.asInstanceOf[UnsafeRow].copy())
-      }
-    }.persist(StorageLevel.MEMORY_AND_DISK)
-
   private def keyed(idx: RDD[(Long, UnsafeRow)], textE: Expression,
       attrs: Seq[Attribute], kk: Int, m: Int, probe: Boolean)
       : RDD[(Long, Long)] =
@@ -212,22 +192,15 @@ case class LevenshteinSegmentJoinExec(
 
   override protected def doExecute(): RDD[InternalRow] = {
     val kk = k
-    val outAttrs = output
     val lOut = left.output
     val rOut = right.output
     val lTextE = leftText
     val rTextE = rightText
     val nPart = conf.numShufflePartitions
 
-    val lIdx = indexed(left)
-    val rIdx = indexed(right)
-
-    // same width policy as the jaccard exec: the cogroup widens with
-    // input size (its read-side map holds every distinct key of the
-    // partition), while the pair stage stays <= 200 partitions for
-    // the buffer-free bypass shuffle write
-    val inParts = math.max(lIdx.getNumPartitions, rIdx.getNumPartitions)
-    val capWidth = math.max(nPart, math.min(nPart * 8, inParts * 4))
+    val lIdx = InvertedIndexJoin.indexed(left)
+    val rIdx = InvertedIndexJoin.indexed(right)
+    val capWidth = InvertedIndexJoin.cogroupCap(nPart, lIdx, rIdx)
 
     // ---- segment-df regime choice (multi-segment PassJoin) ----
     // The baseline m = k+1 segmentation degrades to n² candidates on
@@ -262,11 +235,10 @@ case class LevenshteinSegmentJoinExec(
     // left-posting keys per partition (its read-side map holds every
     // distinct key of a partition; the probe side adds the same-order
     // (2k+1)-window expansion), floored at the session width and
-    // capped by the jaccard exec's input-derived policy so a 100 TB
-    // input still widens with its data.
+    // capped by the input-derived policy so a 100 TB input still
+    // widens with its data.
     val volWidth = (sum0 / 125000L + 1L).toInt
     val cogroupWidth = math.min(capWidth, math.max(nPart, volWidth))
-    val pairWidth = math.min(200, cogroupWidth)
     // the stats/selection shuffles carry one (key, id) pair per
     // posting key — narrower still (~2M pairs per partition)
     val statsWidth = math.max(8L,
@@ -294,7 +266,7 @@ case class LevenshteinSegmentJoinExec(
           // persisted: the selMax action below materializes it, and
           // the main cogroup reuses it instead of recomputing the
           // join+aggregate chain (ContextCleaner unpersists once the
-          // reference drops — the jaccard exec's pattern)
+          // reference drops — InvertedIndexJoin.indexed's pattern)
           .persist(StorageLevel.MEMORY_AND_DISK)
         // the cost that matters is the df of the keys actually KEPT
         selMax = selected.mapValues(_ => 1L).reduceByKey(_ + _, statsWidth)
@@ -310,49 +282,19 @@ case class LevenshteinSegmentJoinExec(
       }
     }
 
-    val occurrences: RDD[((Long, Long), Long)] =
-      lPost
-        .cogroup(keyed(rIdx, rTextE, rOut, kk, probeM, probe = true),
-          cogroupWidth)
-        .flatMap { case (_, (ls, rs)) =>
-          if (ls.isEmpty || rs.isEmpty) Iterator.empty
-          else {
-            val la = ls.toArray
-            rs.iterator.flatMap { rid =>
-              la.iterator.map(lid => ((lid, rid), 0x100000001L))
-            }
-          }
-        }
     // dedup candidates in the packed-primitive hybrid grouping: with
-    // the overlap metric and packed (1,1) sizes a run of ANY length
-    // scores run/min(1,1) = run >= 1 > t = 0, so every distinct
-    // (lid, rid) emits exactly once regardless of how many segment
-    // keys the pair met on (the jaccard metric would go negative
-    // past runs of 2 — s/(2-s) — and silently drop the pair)
-    val candidates: RDD[(Long, Long)] = occurrences
-      .partitionBy(new org.apache.spark.HashPartitioner(pairWidth))
-      .mapPartitions { iter =>
-        JaccardJoinKernels.groupAndFilter(iter, 0.0, overlap = true)
-      }
-
-    candidates
-      .join(lIdx, nPart)
-      .map { case (_, (rid, lRow)) => (rid, lRow) }
-      .join(rIdx, nPart)
-      .mapPartitions { iter =>
-        val joined = new JoinedRow
-        // ONE banded DP per candidate: levenshtein(a, b, k) >= 0 is
-        // the user's predicate exactly (BoundLevenshteinRule's
-        // equivalence), evaluated on the joined row
-        val verify = UnsafeProjection.create(
-          Seq(Levenshtein(lTextE, rTextE, Some(Literal(kk)))), outAttrs)
-        val proj = UnsafeProjection.create(outAttrs, outAttrs)
-        iter.flatMap { case (_, (lRow, rRow)) =>
-          val jr = joined(lRow, rRow)
-          val v = verify(jr)
-          if (!v.isNullAt(0) && v.getInt(0) >= 0) Iterator.single(proj(jr))
-          else Iterator.empty
-        }
-      }
+    // the overlap metric and sizes (1, 1) a run of ANY length scores
+    // run/min(1,1) = run >= 1 > t = 0, so every distinct (lid, rid)
+    // emits exactly once regardless of how many segment keys the pair
+    // met on (the jaccard metric would go negative past runs of 2 —
+    // s/(2-s) — and silently drop the pair)
+    val candidates = InvertedIndexJoin.pairs(lPost,
+      keyed(rIdx, rTextE, rOut, kk, probeM, probe = true), cogroupWidth,
+      0.0, overlap = true)((id: Long) => (id, 1))
+    // ONE banded DP per candidate: levenshtein(a, b, k) >= 0 is the
+    // user's predicate exactly (BoundLevenshteinRule's equivalence)
+    InvertedIndexJoin.joinBack(candidates, lIdx, rIdx, nPart, output,
+      verify = Some(GreaterThanOrEqual(
+        Levenshtein(lTextE, rTextE, Some(Literal(kk))), Literal(0))))
   }
 }

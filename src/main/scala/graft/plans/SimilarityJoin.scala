@@ -1,8 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, Expression, GreaterThanOrEqual, LessThanOrEqual, Literal}
-import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, Filter, Join, LogicalPlan}
-import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, GreaterThanOrEqual, LessThanOrEqual, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 import org.apache.spark.sql.internal.SQLConf
@@ -304,8 +303,11 @@ object SimilarityJoinStrategy extends SparkStrategy {
   * [[graft.operators.Similarity.cosineJoin]] with
   * [[SimJoinRegime.Banded]], but reachable from pure SQL tooling.
   *
-  * Residual conjuncts (`... AND a.id < b.id`) survive as a Filter on
-  * top of the rewritten node.
+  * The split, operand orientation and residual `Filter` are
+  * [[ThresholdJoinRewrite]]'s. When the first oriented cosine conjunct
+  * has to be declined (neither side broadcasts, `largeLarge` is
+  * `cartesian`), the whole join stays as written: later conjuncts are
+  * not tried.
   */
 object SimilarityJoinRewrite extends Rule[LogicalPlan] {
 
@@ -327,59 +329,25 @@ object SimilarityJoinRewrite extends Rule[LogicalPlan] {
         s"$LargeLargeConf must be 'cartesian' or 'banded', got '$other'")
     }
 
-  /** Splits `cond` into (cosine-threshold predicate, residuals). */
-  private def extract(cond: Expression, l: LogicalPlan, r: LogicalPlan)
-      : Option[(Expression, Expression, Double, Seq[Expression])] = {
-    val conjuncts = splitConjunctivePredicates(cond)
-    conjuncts.iterator.map {
-      case GreaterThanOrEqual(c: CosineSim, Literal(t: Double, DoubleType)) =>
-        sided(c, l, r).map { case (lv, rv) => (lv, rv, t) }
-      case LessThanOrEqual(Literal(t: Double, DoubleType), c: CosineSim) =>
-        sided(c, l, r).map { case (lv, rv) => (lv, rv, t) }
-      case _ => None
-    }.zipWithIndex.collectFirst { case (Some((lv, rv, t)), i) =>
-      (lv, rv, t, conjuncts.take(i) ++ conjuncts.drop(i + 1))
-    }
-  }
-
-  /** Orients the cosine's operands: one must resolve entirely against
-    * the left child, the other against the right. */
-  private def sided(c: CosineSim, l: LogicalPlan, r: LogicalPlan)
-      : Option[(Expression, Expression)] =
-    if (c.left.references.subsetOf(l.outputSet) &&
-        c.right.references.subsetOf(r.outputSet)) Some((c.left, c.right))
-    else if (c.right.references.subsetOf(l.outputSet) &&
-        c.left.references.subsetOf(r.outputSet)) Some((c.right, c.left))
-    else None
-
   private def broadcastable(l: LogicalPlan, r: LogicalPlan): Boolean = {
     val bc = SQLConf.get.autoBroadcastJoinThreshold
     bc > 0 && (l.stats.sizeInBytes <= bc || r.stats.sizeInBytes <= bc)
   }
 
-  private def splitConjunctivePredicates(e: Expression): Seq[Expression] =
-    e match {
-      case And(a, b) =>
-        splitConjunctivePredicates(a) ++ splitConjunctivePredicates(b)
-      case other => other :: Nil
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    ThresholdJoinRewrite(plan) {
+      case GreaterThanOrEqual(c: CosineSim, Literal(t: Double, DoubleType)) =>
+        (c.left, c.right, t)
+      case LessThanOrEqual(Literal(t: Double, DoubleType), c: CosineSim) =>
+        (c.left, c.right, t)
+    } { (l, r, lv, rv, t) =>
+      // conf is consulted only once a cosine predicate is in hand: an
+      // invalid value must fail THIS query, not every join in the
+      // session. None declines, and the join stays as written.
+      val regime =
+        if (broadcastable(l, r)) Some(SimJoinRegime.Exact)
+        else largeLargeRegime
+      regime.map(SimilarityJoinPlan(l, r, lv, rv, t, _,
+        bands = 0, bandBits = 0))
     }
-
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case j @ Join(l, r, Inner | Cross, Some(cond), _) =>
-      extract(cond, l, r) match {
-        case Some((lv, rv, t, residual)) =>
-          // conf is consulted only once a cosine predicate is in hand:
-          // an invalid value must fail THIS query, not every join in
-          // the session
-          val regime =
-            if (broadcastable(l, r)) Some(SimJoinRegime.Exact)
-            else largeLargeRegime
-          regime.fold(j: LogicalPlan) { reg =>
-            val sim = SimilarityJoinPlan(l, r, lv, rv, t,
-              reg, bands = 0, bandBits = 0)
-            residual.reduceOption(And).map(Filter(_, sim)).getOrElse(sim)
-          }
-        case None => j
-      }
-  }
 }

@@ -386,8 +386,6 @@ case class SimilarityBandedJoinExec(
     val numOut = longMetric("numOutputRows")
     val candMetric = longMetric("candPairs")
     val bucketMetric = longMetric("numBuckets")
-    val warnPairs = conf.getConfString(
-      SimilarityBandedJoinExec.WarnPairsConf, "1000000000").toLong
     val maxPairs = conf.getConfString(
       SimilarityBandedJoinExec.MaxBucketPairsConf, "0").toLong
     maxAcc = new MaxLongAccumulator
@@ -497,10 +495,11 @@ case class SimilarityBandedJoinExec(
             candMetric.add(cand)
             bucketMetric.add(1)
             maxAccL.add(cand)
-            if (cand > warnPairs)
+            if (cand > SimilarityBandedJoinExec.WarnPairs)
               log.warn(s"banded similarity join: bucket $bucket cell " +
                 s"$cell pairs ${lRows.length}x${rRows.length} = $cand " +
-                s"candidates in ONE task (warn bound $warnPairs) — set " +
+                "candidates in ONE task (warn bound " +
+                s"${SimilarityBandedJoinExec.WarnPairs}) — set " +
                 s"${SimilarityBandedJoinExec.MaxBucketPairsConf} to " +
                 "grid-split oversized buckets")
             lRows.iterator.flatMap { case (lSig, l) =>
@@ -521,10 +520,10 @@ case class SimilarityBandedJoinExec(
 
 object SimilarityBandedJoinExec {
   /** Oversized-bucket WARNING bound (candidate pairs in one bucket
-    * cell; default 1e9 ≈ a minute of sequential gated dots): exceeding
-    * it logs an executor-side warning naming the bucket and the
-    * mitigation conf. Observation only — the plan is unchanged. */
-  val WarnPairsConf = "spark.graft.similarityJoin.bucketWarnPairs"
+    * cell; 1e9 ≈ a minute of sequential gated dots): exceeding it logs
+    * an executor-side warning naming the bucket and the mitigation
+    * conf. Observation only — the plan is unchanged. */
+  val WarnPairs = 1000000000L
 
   /** Opt-in hot-bucket mitigation bound: when > 0, buckets whose
     * |left|×|right| cross product exceeds it are grid-split into

@@ -42,62 +42,3 @@ object Tweet {
     "user_followers", "user_friends", "user_favourites", "user_verified",
     "date", "text", "hashtags", "source", "is_retweet")
 }
-
-/** K4 output contracts: the index-document schemas the reference
-  * declares as OpenSearch mappings — its only explicit output schemas
-  * (FIXTURES.md §3). Each case class is a golden-row shape; `schema`
-  * vals give the StructType for sink bootstrap / validation. */
-object OutputContracts {
-
-  /** Bot/viral/VIP alert (job1_bots.py:59-75, select :171-182;
-    * job5.py:44-59). */
-  final case class Alert(
-      crypto_type: String, alert_type: String, alert_priority: String,
-      alert_reason: String, user_name: String,
-      user_followers: Option[Int], user_verified: Option[Boolean],
-      text: String, timestamp: String)
-
-  /** Windowed alert metrics (job1_bots.py:77-91, 322-331). */
-  final case class WindowedAlertMetrics(
-      window_start: String, window_end: String, crypto_type: String,
-      alert_type: String, alert_priority: String, total_alerts: Long,
-      unique_users: Long, metric_type: String, timestamp: String)
-
-  /** Trending hashtag row (job2.py:43-71, 183-197, 248-261). */
-  final case class TrendingHashtag(
-      window_start: String, window_end: String, crypto_type: String,
-      hashtag: String, count: Long, rank: Option[Int],
-      percentage: Option[Double])
-
-  /** Hashtag usage metrics (job2.py:73-91, 284-306). */
-  final case class HashtagUsageMetrics(
-      window_start: String, window_end: String, crypto_type: String,
-      total_tweets: Long, total_hashtags: Long, unique_hashtags: Long,
-      avg_hashtags_per_tweet: Double)
-
-  /** Sentiment alert (job3_sentiment.py:70-88, 257-270). */
-  final case class SentimentAlert(
-      crypto_type: String, sentiment_type: String, alert_priority: String,
-      alert_reason: String, user_name: String,
-      user_followers: Option[Int], user_verified: Option[Boolean],
-      text: String, timestamp: String, sentiment_score: Float,
-      pos_emoji_count: Int, neg_emoji_count: Int)
-
-  /** Cleaned location row (job4_locationsreal_time.py:54-86, 151-160). */
-  final case class LocationRow(
-      crypto_type: String, location_clean: String,
-      original_location: String, user_name: String,
-      user_followers: Option[Int], user_verified: Option[Boolean],
-      tweet_text: String, timestamp: String)
-
-  val alertSchema: StructType = Encoders.product[Alert].schema
-  val windowedAlertMetricsSchema: StructType =
-    Encoders.product[WindowedAlertMetrics].schema
-  val trendingHashtagSchema: StructType =
-    Encoders.product[TrendingHashtag].schema
-  val hashtagUsageMetricsSchema: StructType =
-    Encoders.product[HashtagUsageMetrics].schema
-  val sentimentAlertSchema: StructType =
-    Encoders.product[SentimentAlert].schema
-  val locationRowSchema: StructType = Encoders.product[LocationRow].schema
-}

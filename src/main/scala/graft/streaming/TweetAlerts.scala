@@ -7,9 +7,9 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** The reference's Tweet-domain alert detectors (SQ2-SQ4, SQ14),
   * re-expressed over the canonical [[Tweet]] schema. All are stateless
-  * filter+project streams (reference T7) emitting the
-  * [[OutputContracts.Alert]] shape (+ user_friends where the reference
-  * includes it); they compose with `StreamOps.alertUnion` and
+  * filter+project streams (reference T7) emitting the alert columns
+  * `baseCols` lists, `timestamp` as a TimestampType (+ user_friends
+  * where the reference includes it); they compose with `StreamOps.alertUnion` and
   * `StreamOps.windowedMetrics` into the SQ5 topology.
   *
   * Each detector is defined once, as a [[Detector]]: the rows it fires

@@ -150,20 +150,37 @@ object ClusterCheck {
       .sortBy(_._1)
 
     // ---- 2. custom exec: broadcast-gate cosine join ≡ reference ----
+    val embA = emb.select(col("vec_id").as("id_a"), col("embedding").as("va"))
+      .where(col("id_a") < 50)
+    val embB = emb.select(col("vec_id").as("id_b"), col("embedding").as("vb"))
+    lazy val cosineRef = (for {
+      (ia, va) <- vecs if ia < 50
+      (ib, vb) <- vecs if ia != ib
+      if cosine(va, vb) >= 0.35
+    } yield (ia, ib)).toSet
     check("simjoin_exact") {
-      val a = emb.select(col("vec_id").as("id_a"), col("embedding").as("va"))
-        .where(col("id_a") < 50)
-      val b = emb.select(col("vec_id").as("id_b"), col("embedding").as("vb"))
-      val got = Similarity.cosineJoin(a, b, "va", "vb", 0.35, SimJoinRegime.Exact)
+      val got = Similarity.cosineJoin(embA, embB, "va", "vb", 0.35, SimJoinRegime.Exact)
         .where(col("id_a") =!= col("id_b"))
         .select("id_a", "id_b")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val ref = (for {
-        (ia, va) <- vecs if ia < 50
-        (ib, vb) <- vecs if ia != ib
-        if cosine(va, vb) >= 0.35
-      } yield (ia, ib)).toSet
-      (got == ref, s"${got.size} pairs (ref ${ref.size})")
+      (got == cosineRef, s"${got.size} pairs (ref ${cosineRef.size})")
+    }
+
+    // ---- 2b. naive SQL cosine join → broadcast-gate exec ≡ ref ----
+    check("cosine_rewrite") {
+      embA.createOrReplaceTempView("cc_emb_a")
+      embB.createOrReplaceTempView("cc_emb_b")
+      val q = spark.sql(
+        """SELECT a.id_a, b.id_b
+          |FROM cc_emb_a a JOIN cc_emb_b b
+          |  ON cosine_sim(CAST(a.va AS ARRAY<DOUBLE>),
+          |                CAST(b.vb AS ARRAY<DOUBLE>)) >= 0.35D
+          | AND a.id_a <> b.id_b""".stripMargin)
+      val got = q.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val hasExec = q.queryExecution.executedPlan.toString
+        .contains("SimilarityBroadcastGate")
+      (got == cosineRef && hasExec,
+        s"${got.size} pairs (ref ${cosineRef.size}), customExec=$hasExec")
     }
 
     // ---- 3. banded regime: identical sets under different ----------

@@ -115,6 +115,12 @@ object PlanBridge {
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
 
+  /** The distinct operator-scope names of a stage's RDDs in RDD id
+    * order (`Scan parquet`, `WholeStageCodegen (2)`, `Exchange`, ...):
+    * `RDDOperationScope` is `private[spark]`. */
+  def scopeNames(si: org.apache.spark.scheduler.StageInfo): Seq[String] =
+    si.rddInfos.sortBy(_.id).flatMap(_.scope.map(_.name)).distinct
+
   /** `s` with every field, array element and map value nullable — the
     * `private[spark]` rule file sources apply to a relation's schema. */
   def asNullable(s: org.apache.spark.sql.types.StructType)

@@ -204,6 +204,11 @@ class BenchLineSpec extends AnyFunSuite {
       assert(q05.jobs >= 1 && q05.stages >= 1 && q05.taskMs > 0, q05.json)
       assert(q05.tasks >= q05.stages && q05.batches === 0, q05.json)
       assert(q05.slowest.nonEmpty && q05.slowest.size <= 3, q05.json)
+      // every slow stage names the operators it ran
+      assert(q05.slowest.forall(_._4.nonEmpty), q05.json)
+      val top = om.readTree(q05.json).get("slowest_stages")
+      assert(top.size === q05.slowest.size, q05.json)
+      top.forEach(st => assert(st.get("ops").size > 0 && st.has("sql_id"), q05.json))
       // a tag already taken reads as empty
       assert(layers.take("q05#1").jobs === 0)
     }

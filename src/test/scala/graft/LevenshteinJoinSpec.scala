@@ -158,8 +158,8 @@ class LevenshteinJoinSpec extends AnyFunSuite {
       val cpsB = LevenshteinJoinKernels.codePoints(b)
       for (k <- 0 to 3) {
         if (refLev(a, b) <= k) {
-          val post = LevenshteinJoinKernels.postingKeys(cpsA, k).toSet
-          val probe = LevenshteinJoinKernels.probeKeys(cpsB, k).toSet
+          val post = LevenshteinJoinKernels.postingKeysM(cpsA, k + 1).toSet
+          val probe = LevenshteinJoinKernels.probeKeysM(cpsB, k, k + 1).toSet
           assert(post.intersect(probe).nonEmpty,
             s"pair within $k lost by blocking: '$a' vs '$b' " +
               s"(lev=${refLev(a, b)})")
