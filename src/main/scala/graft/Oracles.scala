@@ -81,7 +81,7 @@ object Oracles {
     * must EQUAL the in-memory compose (same centroids vec_id%250=0,
     * queries vec_id<8, k=5, nprobe=2) — that equality IS the persisted
     * lifecycle's contract, so both keys carry one oracle. */
-  private val IVF_PROBE_SQL =
+  private val IVF_PROBE_CTES =
     """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
       |cent AS (SELECT vec_id AS cent_id, e AS ce FROM v WHERE vec_id % 250 = 0),
       |assigned AS (SELECT vec_id AS neighbor_id, e AS cv, cent_id FROM (
@@ -97,16 +97,19 @@ object Oracles {
       |  round(list_dot_product(v.e, c.ce)
       |   /(sqrt(list_dot_product(v.e, v.e))*sqrt(list_dot_product(c.ce, c.ce))), 6)
       |  DESC, c.cent_id) AS crank
-      |FROM v CROSS JOIN cent c WHERE v.vec_id < 8) WHERE crank <= 2),
-      |s AS (SELECT DISTINCT p.query_id, a.neighbor_id,
-      |round(list_dot_product(p.qv, a.cv)
-      | /(sqrt(list_dot_product(p.qv, p.qv))*sqrt(list_dot_product(a.cv, a.cv))), 4) AS sim
-      |FROM probed p JOIN assigned a ON p.cent_id = a.cent_id
-      |WHERE p.query_id <> a.neighbor_id)
-      |SELECT query_id, "rank", neighbor_id, sim FROM (
-      |SELECT query_id, neighbor_id, sim,
-      |row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS "rank"
-      |FROM s) WHERE "rank" <= 5 ORDER BY query_id, "rank"""".stripMargin
+      |FROM v CROSS JOIN cent c WHERE v.vec_id < 8) WHERE crank <= 2)""".stripMargin
+
+  private val IVF_PROBE_SQL =
+    s"""$IVF_PROBE_CTES,
+       |s AS (SELECT DISTINCT p.query_id, a.neighbor_id,
+       |round(list_dot_product(p.qv, a.cv)
+       | /(sqrt(list_dot_product(p.qv, p.qv))*sqrt(list_dot_product(a.cv, a.cv))), 4) AS sim
+       |FROM probed p JOIN assigned a ON p.cent_id = a.cent_id
+       |WHERE p.query_id <> a.neighbor_id)
+       |SELECT query_id, "rank", neighbor_id, sim FROM (
+       |SELECT query_id, neighbor_id, sim,
+       |row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS "rank"
+       |FROM s) WHERE "rank" <= 5 ORDER BY query_id, "rank"""".stripMargin
 
   /** Portable tokenizer mirror of TextFunctions.tokens. */
   private val TOKS =
@@ -173,6 +176,49 @@ object Oracles {
        |ss AS (SELECT doc_id, sh, len(sh) AS n_sh FROM sh0 WHERE len(sh) > 0)
        |""".stripMargin
 
+  /** q22's capped posting join over [[SHINGLE_CTES]]' `ss`: postings,
+    * the stop-shingle cap (df <= 1000), the capped postings `fp` and
+    * the candidate pairs `pairs` with their shared-shingle counts. */
+  private def cappedPairCtes(fp: String, pairs: String): String =
+    s"""post AS (SELECT doc_id, n_sh, unnest(sh) AS shingle FROM ss),
+       |keep AS (SELECT shingle FROM post GROUP BY shingle HAVING count(*) <= 1000),
+       |$fp AS (SELECT p.doc_id, p.n_sh, p.shingle FROM post p JOIN keep k ON p.shingle = k.shingle),
+       |$pairs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+       |  a.n_sh AS na, b.n_sh AS nb, count(*) AS shared
+       |FROM $fp a JOIN $fp b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+       |GROUP BY 1, 2, 3, 4)""".stripMargin
+
+  /** `jp`, the candidates of `pairs` with rounded jaccard >= 0.2, and
+    * their symmetric edge list `edges`. */
+  private def jaccardEdgeCtes(pairs: String): String =
+    s"""jp AS (SELECT id_a, id_b FROM $pairs
+       |  WHERE round(CAST(shared AS DOUBLE)/(na+nb-shared), 4) >= 0.2),
+       |${edgesCte("edges", "jp")}""".stripMargin
+
+  /** The symmetric edge list `name` of the canonical (id_a < id_b) pair
+    * CTE `pairs`; `m` is "" or " MATERIALIZED". */
+  private def edgesCte(name: String, pairs: String, m: String = ""): String =
+    s"""$name AS$m (SELECT id_a AS src, id_b AS dst FROM $pairs
+       |  UNION ALL SELECT id_b, id_a FROM $pairs)""".stripMargin
+
+  /** Connected components of `edges` as a recursive closure (the query
+    * needs WITH RECURSIVE): `lab` maps each node to its min reachable
+    * id, the fixpoint label of Spark's min-label propagation. */
+  private val CLOSURE_CTES =
+    """reach(id, r) AS (
+      |  SELECT DISTINCT src, src FROM edges
+      |  UNION
+      |  SELECT e.src, reach.r FROM reach JOIN edges e ON e.dst = reach.id),
+      |lab AS (SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id)""".stripMargin
+
+  /** Shingles -> capped candidates (CTE `pairs`) -> jaccard edges ->
+    * closure labels `lab`. */
+  private def textClosureCtes(pairs: String): String =
+    s"""${SHINGLE_CTES.replaceFirst("WITH ", "WITH RECURSIVE ")},
+       |${cappedPairCtes("fpp", pairs)},
+       |${jaccardEdgeCtes(pairs)},
+       |$CLOSURE_CTES""".stripMargin
+
   /** The shared pair-mining + transitive-closure CTE chain the q109-
     * q113 pipeline oracles all start from: word-3-gram posting list →
     * stop-shingle cap → candidate pairs (`prs`) → jaccard ≥ 0.2 pairs
@@ -180,24 +226,470 @@ object Oracles {
     * labels (`lab`). Identical closures to the independent
     * q71/q85/q91/q93 oracles; unreferenced tail CTEs are inlined away
     * by DuckDB, so every stage pays only for what it reads. */
-  private val PAIR_CLOSURE_CTES =
-    s"""${SHINGLE_CTES.replaceFirst("WITH ", "WITH RECURSIVE ")},
+  private val PAIR_CLOSURE_CTES = textClosureCtes("prs")
+
+  /** Per-cluster sizes over `lab` (q71/q81/q92). */
+  private val CLUSTER_SIZES =
+    """SELECT cluster_id, count(*) AS n_members, max(doc_id) AS max_member
+      |FROM lab GROUP BY cluster_id ORDER BY cluster_id""".stripMargin
+
+  /** q71/q92: the text closure's cluster sizes. */
+  private val TEXT_CLUSTERS_SQL =
+    s"""${textClosureCtes("pairs")}
+       |$CLUSTER_SIZES""".stripMargin
+
+  /** Cluster sizes plus per-cluster edge counts over `lab` and the pair
+    * CTE `pairs` (q110/q118). */
+  private def clusterEdgeRollup(pairs: String): String =
+    s"""sz AS (SELECT cluster_id, count(*) AS n_members,
+       |  max(doc_id) AS max_member FROM lab GROUP BY cluster_id),
+       |pc AS (SELECT l.cluster_id, count(*) AS n_pairs
+       |  FROM $pairs p JOIN lab l ON p.id_a = l.doc_id GROUP BY 1)
+       |SELECT sz.cluster_id, sz.n_members, sz.max_member, pc.n_pairs
+       |FROM sz JOIN pc ON sz.cluster_id = pc.cluster_id
+       |ORDER BY sz.cluster_id""".stripMargin
+
+  /** q22's mined pair set (q109/q116). */
+  private val PIPELINE_MINE_SQL =
+    s"""${PAIR_CLOSURE_CTES}
+       |SELECT id_a, id_b, CAST(shared AS BIGINT) AS shared,
+       |round(CAST(shared AS DOUBLE)/(na+nb-shared), 4) AS jaccard
+       |FROM prs
+       |WHERE round(CAST(shared AS DOUBLE)/(na+nb-shared), 4) >= 0.2
+       |ORDER BY id_a, id_b""".stripMargin
+
+  /** q85's golden-record merge per closure cluster (q85/q111). */
+  private val SURVIVOR_SQL =
+    s"""${PAIR_CLOSURE_CTES}
+       |SELECT lab.cluster_id, count(*) AS n_members,
+       |CAST(max(length(documents.text)) AS BIGINT) AS best_text_len,
+       |array_to_string(list_sort(list(DISTINCT documents.source)), ',')
+       |  AS merged_sources
+       |FROM lab JOIN documents ON lab.doc_id = documents.doc_id
+       |GROUP BY lab.cluster_id ORDER BY lab.cluster_id""".stripMargin
+
+  /** q91's drop ladder per (source, decision): exact dup -> near dup
+    * (closure `lab`) -> quality < 0.62 -> keep (q91/q112). */
+  private val CLEAN_EXPORT_SQL =
+    s"""${PAIR_CLOSURE_CTES},
+       |bse AS (SELECT doc_id, source,
+       |  md5(array_to_string($TOKS, ' ')) AS fp,
+       |  round((CASE WHEN len($TOKS)=0 THEN 0.0
+       |    ELSE CAST(len(list_distinct($TOKS)) AS DOUBLE)/len($TOKS) END)*0.5
+       |   + (1.0-(CASE WHEN len($TOKS)=0 THEN 0.0
+       |    ELSE CAST(len(list_filter($TOKS, x -> list_contains(['the','a'], x))) AS DOUBLE)/len($TOKS) END))*0.3
+       |   + least(CAST(len($TOKS) AS DOUBLE)/100.0, 1.0)*0.2, 4) AS q
+       |FROM documents),
+       |kf AS (SELECT fp, min(doc_id) AS keep_id FROM bse GROUP BY fp),
+       |dec AS (SELECT b.source,
+       |  CASE WHEN b.doc_id <> kf.keep_id THEN 'drop_exact_dup'
+       |       WHEN lab.cluster_id IS NOT NULL
+       |         AND lab.cluster_id <> b.doc_id THEN 'drop_near_dup'
+       |       WHEN b.q < 0.62 THEN 'drop_low_quality'
+       |       ELSE 'keep' END AS decision
+       |FROM bse b JOIN kf ON b.fp = kf.fp
+       |LEFT JOIN lab ON b.doc_id = lab.doc_id)
+       |SELECT source, decision, count(*) AS n
+       |FROM dec GROUP BY source, decision ORDER BY source, decision""".stripMargin
+
+  /** q93's PageRank over `edges`, replayed move-for-move in integer
+    * arithmetic: `//` (DuckDB floor div) == Spark `div` on the
+    * non-negative values used here; sums CAST to BIGINT (DuckDB sum ->
+    * HUGEINT) (q93/q113). */
+  private val PAGERANK_SQL =
+    """deg AS (SELECT src, count(*) AS d FROM edges GROUP BY src),
+      |nn AS (SELECT count(*) AS n, 1000000000000 // count(*) AS base,
+      |  (15 * (1000000000000 // count(*))) // 100 AS tele FROM deg),
+      |r0 AS (SELECT src AS id, base AS r FROM deg, nn),
+      |c1 AS (SELECT e.dst AS id, CAST(sum(r.r // dg.d) AS BIGINT) AS s
+      |  FROM edges e JOIN deg dg ON e.src = dg.src JOIN r0 r ON r.id = e.src GROUP BY e.dst),
+      |r1 AS (SELECT d.src AS id, CAST(tele + (85 * coalesce(c.s, 0)) // 100 AS BIGINT) AS r
+      |  FROM deg d CROSS JOIN nn LEFT JOIN c1 c ON c.id = d.src),
+      |c2 AS (SELECT e.dst AS id, CAST(sum(r.r // dg.d) AS BIGINT) AS s
+      |  FROM edges e JOIN deg dg ON e.src = dg.src JOIN r1 r ON r.id = e.src GROUP BY e.dst),
+      |r2 AS (SELECT d.src AS id, CAST(tele + (85 * coalesce(c.s, 0)) // 100 AS BIGINT) AS r
+      |  FROM deg d CROSS JOIN nn LEFT JOIN c2 c ON c.id = d.src),
+      |c3 AS (SELECT e.dst AS id, CAST(sum(r.r // dg.d) AS BIGINT) AS s
+      |  FROM edges e JOIN deg dg ON e.src = dg.src JOIN r2 r ON r.id = e.src GROUP BY e.dst),
+      |r3 AS (SELECT d.src AS id, CAST(tele + (85 * coalesce(c.s, 0)) // 100 AS BIGINT) AS r
+      |  FROM deg d CROSS JOIN nn LEFT JOIN c3 c ON c.id = d.src)
+      |SELECT r3.id AS doc_id, d.d AS out_deg, r3.r AS rank_fp
+      |FROM r3 JOIN deg d ON d.src = r3.id
+      |ORDER BY rank_fp DESC, doc_id""".stripMargin
+
+  /** The near-dup embedding graph's 2-probe IVF assignment (q54's
+    * mining): vectors `v`, the vec_id % 100 centroids `cent` and each
+    * vector's 2 nearest centroids `assigned` (6-dp cosine, centroid-id
+    * tie-break). `m` is "" or " MATERIALIZED". */
+  private def embedAssignCtes(m: String): String =
+    s"""v AS$m (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+       |cent AS$m (SELECT vec_id AS cent_id, e AS ce FROM v WHERE vec_id % 100 = 0),
+       |assigned AS$m (SELECT vec_id, e, cent_id FROM (
+       |SELECT v.vec_id, v.e, c.cent_id,
+       |row_number() OVER (PARTITION BY v.vec_id ORDER BY
+       |  round(list_dot_product(v.e, c.ce)
+       |   /(sqrt(list_dot_product(v.e, v.e))*sqrt(list_dot_product(c.ce, c.ce))), 6)
+       |  DESC, c.cent_id) AS crank
+       |FROM v CROSS JOIN cent c) WHERE crank <= 2)""".stripMargin
+
+  /** [[embedAssignCtes]] plus the graph's canonical edges `pairs`:
+    * same-bucket pairs with 4-dp cosine >= `t`. */
+  private def embedGraphCtes(pairs: String, t: String, m: String = ""): String =
+    s"""${embedAssignCtes(m)},
+       |$pairs AS$m (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
+       |FROM assigned a JOIN assigned b
+       |  ON a.cent_id = b.cent_id AND a.vec_id < b.vec_id
+       |WHERE round(list_dot_product(a.e, b.e)
+       |   /(sqrt(list_dot_product(a.e, a.e))*sqrt(list_dot_product(b.e, b.e))), 4) >= $t)""".stripMargin
+
+  /** q102's wedge + closing-edge join over the canonical pairs `jp`:
+    * each triangle once. */
+  private val TRIANGLES_CTE =
+    """tri AS (SELECT e1.id_a AS a, e1.id_b AS b, e2.id_b AS c
+      |  FROM jp e1 JOIN jp e2 ON e1.id_b = e2.id_a
+      |  JOIN jp e3 ON e3.id_a = e1.id_a AND e3.id_b = e2.id_b)""".stripMargin
+
+  /** q31's 30-minute sessionization: `g` flags a new session when the
+    * gap to the user's previous event exceeds 1800 s, `s` numbers the
+    * sessions (`sid`) by a running sum. `gCols`/`sCols` lead the two
+    * select lists; `sEnd` closes `s`. No leading WITH. */
+  private def sessionCtes(gCols: String, sCols: String,
+      sEnd: String = " FROM g)"): String =
+    s"""g AS (SELECT $gCols
+       |CASE WHEN lag(ts) OVER w IS NULL
+       |  OR date_diff('second', lag(ts) OVER w, ts) > 1800
+       |  THEN 1 ELSE 0 END AS new_session
+       |FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+       |s AS (SELECT $sCols
+       |sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
+       |  ROWS UNBOUNDED PRECEDING) AS sid$sEnd""".stripMargin
+
+  /** [[sessionCtes]] plus `sess`, each session's [st, en] epoch-second
+    * span (q207/q209). */
+  private val SESSION_SPAN_CTES =
+    s"""${sessionCtes("user_id, ts, event_id,", "user_id, ts,")},
+       |sess AS (SELECT user_id, sid,
+       |  CAST(min(floor(epoch(ts))) AS BIGINT) AS st,
+       |  CAST(max(floor(epoch(ts))) AS BIGINT) AS en
+       |  FROM s GROUP BY 1, 2)""".stripMargin
+
+  /** q123's retention sweep over the threshold-expanded pair set `e`
+    * (threshold_bp, id_a, id_b): pairs, docs touched, keep-lowest-id
+    * drops and retention against the row count of `corpus`. */
+  private def retentionSweep(corpus: String): String =
+    s"""a1 AS (SELECT threshold_bp, count(*) AS n_pairs,
+       |  count(DISTINCT id_b) AS n_dropped FROM e GROUP BY 1),
+       |ex AS (SELECT threshold_bp, id_a AS did FROM e
+       |  UNION ALL SELECT threshold_bp, id_b FROM e),
+       |a2 AS (SELECT threshold_bp, count(DISTINCT did) AS n_docs_touched
+       |  FROM ex GROUP BY 1),
+       |tot AS (SELECT count(*) AS n_total FROM $corpus)
+       |SELECT a1.threshold_bp, a1.n_pairs, a2.n_docs_touched,
+       |a1.n_dropped,
+       |round(1.0e0 - CAST(a1.n_dropped AS DOUBLE)/n_total, 4) AS retention
+       |FROM a1 JOIN a2 USING (threshold_bp) CROSS JOIN tot
+       |ORDER BY threshold_bp""".stripMargin
+
+  /** One deterministic k-means assignment as CTE `out`: each row of
+    * `s` to its nearest centroid in `cents` by 6-dp-rounded cosine
+    * with centroid-id tie-break; `rank` names the rank column and the
+    * rows kept (e.g. "rk = 1", "crank <= 2"). */
+  private def kmAssignCte(out: String, cols: String, cents: String,
+      s: String = "v", rank: String = "rk = 1", where: String = ""): String =
+    s"""$out AS (SELECT $cols FROM (
+       |  SELECT $s.id, $s.vv, c.cent_id,
+       |  row_number() OVER (PARTITION BY $s.id ORDER BY
+       |    round(list_dot_product($s.vv, c.cv)
+       |     /(sqrt(list_dot_product($s.vv, $s.vv))*sqrt(list_dot_product(c.cv, c.cv))), 6)
+       |    DESC, c.cent_id) AS ${rank.takeWhile(_ != ' ')}
+       |  FROM $s CROSS JOIN $cents c$where) WHERE $rank)""".stripMargin
+
+  /** The fixed-point mean `m<i>` of assignment CTE `from` (1e-6 long
+    * sums, 64 = fixture embedding dim) and, with `cent`, the centroid
+    * list `c<i>`. */
+  private def kmMeanCtes(i: Int, from: String, cent: Boolean = true): String =
+    s"""m$i AS (SELECT cent_id, CAST(p.pos AS INT) AS pos,
+       |  CAST(sum(CAST(round(vv[CAST(p.pos AS INT)+1]*1e6) AS BIGINT)) AS DOUBLE)/1e6/count(*) AS m
+       |  FROM $from CROSS JOIN (SELECT unnest(range(64)) AS pos) p
+       |  GROUP BY cent_id, p.pos)""".stripMargin +
+      (if (cent) s",\nc$i AS (SELECT cent_id, list(m ORDER BY pos) AS cv FROM m$i GROUP BY cent_id)" else "")
+
+  /** q55's two-iteration k=4 fit over `v`, through `m2` (q55/q196). */
+  private val KMEANS_FIT2_CTES =
+    s"""WITH v AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
+       |c0 AS (SELECT id AS cent_id, vv AS cv FROM v ORDER BY id LIMIT 4),
+       |${kmAssignCte("a1", "id, vv, cent_id", "c0")},
+       |${kmMeanCtes(1, "a1")},
+       |${kmAssignCte("a2", "id, vv, cent_id", "c1")},
+       |${kmMeanCtes(2, "a2", cent = false)}""".stripMargin
+
+  /** q131's banded-LSH replay: integer Rademacher signatures of `nBits`
+    * hyperplanes (bit i of vec = sign of sum_d sgn(i,d)*round(e[d]*1e6),
+    * sgn from the Wang-hash avalanche mix, see
+    * SimilarityJoinKernels.hyperplaneSign), `bands` bands of `width`
+    * bits, candidates = band-bucket collisions, exact raw-cosine gate
+    * `t` (q131/q224/q225). */
+  private def bandedSimjoinSql(nBits: Int, width: Int, bands: Int,
+      t: String): String =
+    s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
+       |  FROM embeddings),
+       |qv AS (SELECT vec_id, e,
+       |  list_transform(e, x -> CAST(round(x*1e6) AS BIGINT)) AS q FROM v),
+       |sgn AS (SELECT bit, dim,
+       |  CASE WHEN ((xor(x4, x4 >> 15) >> 16) & 1) = 1
+       |    THEN 1 ELSE -1 END AS s
+       |FROM (SELECT bit, dim,
+       |    (xor(x2, x2 >> 4) * 668265261) % 4294967296 AS x4
+       |  FROM (SELECT bit, dim,
+       |      (xor(xor(s0, 61), s0 >> 16) * 9) % 4294967296 AS x2
+       |    FROM (SELECT b.i AS bit, d.d AS dim, b.i*1000003 + d.d AS s0
+       |      FROM (SELECT unnest(range($nBits)) AS i) b
+       |      CROSS JOIN (SELECT unnest(range(64)) AS d) d)))),
+       |bit AS (SELECT vec_id, g.bit AS bit,
+       |  CASE WHEN sum(g.s * q[CAST(g.dim+1 AS INT)]) > 0
+       |  THEN '1' ELSE '0' END AS bv
+       |FROM qv CROSS JOIN sgn g
+       |GROUP BY vec_id, g.bit),
+       |sig AS (SELECT vec_id, string_agg(bv, '' ORDER BY bit) AS bits
+       |FROM bit GROUP BY vec_id),
+       |banded AS (SELECT vec_id, b.b AS band,
+       |  substring(bits, CAST(b.b*$width+1 AS INT), $width) AS bucket
+       |FROM sig CROSS JOIN (SELECT unnest(range($bands)) AS b) b),
+       |cand AS (SELECT DISTINCT l.vec_id AS id_a, r.vec_id AS id_b
+       |FROM banded l JOIN banded r
+       |  ON l.band = r.band AND l.bucket = r.bucket
+       |  AND l.vec_id < r.vec_id),
+       |s AS (SELECT c.id_a, c.id_b,
+       |  list_dot_product(a.e, b.e)
+       |   /(sqrt(list_dot_product(a.e, a.e))*sqrt(list_dot_product(b.e, b.e)))
+       |  AS sim
+       |FROM cand c JOIN v a ON a.vec_id = c.id_a
+       |  JOIN v b ON b.vec_id = c.id_b)
+       |SELECT id_a, id_b, round(sim, 4) AS sim FROM s
+       |WHERE sim >= $t ORDER BY id_a, id_b""".stripMargin
+
+  /** The suite-drift versions: baseline `v1` (even doc_ids) and next
+    * `v2` (odd), no leading WITH (q219/q222/q223); [[DRIFT_CTES]] adds
+    * the n_chars-squashed copy `v2d`. */
+  private val DOC_HALVES =
+    """v1 AS (SELECT * FROM documents WHERE doc_id % 2 = 0),
+      |v2 AS (SELECT * FROM documents WHERE doc_id % 2 = 1)""".stripMargin
+  private val DRIFT_CTES =
+    s"""$DOC_HALVES,
+       |v2d AS (SELECT source, text, lang, n_chars // 3 AS n_chars
+       |  FROM v2)""".stripMargin
+
+  /** q222's baseline histogram edges: exact nearest-rank edges of `v1`'s
+    * n_chars over its distinct-value cumulative counts (`nv` from `b`),
+    * then the 8-bin `spine`. */
+  private val HIST_EDGE_CTES =
+    """cnts AS (SELECT CAST(n_chars AS DOUBLE) AS v,
+      |  CAST(count(*) AS BIGINT) AS cnt FROM v1
+      |  WHERE n_chars IS NOT NULL GROUP BY 1),
+      |cum AS (SELECT v, cnt,
+      |  sum(cnt) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum
+      |  FROM cnts),
+      |rk AS (SELECT i, (i * nv + 7) // 8 AS r
+      |  FROM (SELECT unnest([1, 2, 3, 4, 5, 6, 7]) AS i), b),
+      |edges AS (SELECT i, min(v) AS e FROM rk JOIN cum
+      |  ON rk.r > cum.cum - cum.cnt AND rk.r <= cum.cum GROUP BY i),
+      |spine AS (SELECT unnest(range(8)) AS bin)""".stripMargin
+
+  /** Per-bin counts `c` of `src`'s n_chars against `edges`, on the
+    * full `spine`, as CTE `out`. */
+  private def binCountCte(out: String, c: String, src: String): String =
+    s"""$out AS (SELECT spine.bin,
+       |  CAST(coalesce(x.$c, 0) AS BIGINT) AS $c FROM spine
+       |  LEFT JOIN (SELECT (SELECT count(*) FROM edges
+       |      WHERE CAST(t.n_chars AS DOUBLE) >= e) AS bin,
+       |      CAST(count(*) AS BIGINT) AS $c
+       |    FROM $src t WHERE n_chars IS NOT NULL GROUP BY 1) x
+       |  ON spine.bin = x.bin)""".stripMargin
+
+  /** The constraint-report head: per `key`, each constraint's metric
+    * against its threshold under its `op`. */
+  private def verdictHead(key: String): String =
+    s"""SELECT $key, constraint_type, column_name, metric, threshold,
+       |  CASE WHEN op = '>=' THEN metric >= threshold
+       |    ELSE metric <= threshold END AS passed
+       |FROM (""".stripMargin
+
+  /** q160's BM25 CTEs: postings, df, lengths and corpus stats, the five
+    * fixed queries, and per (query, doc) `score_fp`, the sum of 1e-6
+    * fixed-point per-term scores (q160/q212). */
+  private val BM25_CTES =
+    s"""WITH toks AS (SELECT doc_id, unnest($TOKS) AS term FROM documents),
+       |post AS (SELECT term, doc_id, count(*) AS tf
+       |  FROM toks GROUP BY 1, 2),
+       |dft AS (SELECT term, count(*) AS df FROM post GROUP BY 1),
+       |lens AS (SELECT doc_id, count(*) AS len FROM toks GROUP BY 1),
+       |stats AS (SELECT count(*) AS n_docs,
+       |  CAST(sum(len) AS BIGINT) AS total_len FROM lens),
+       |qs AS (SELECT * FROM (VALUES (1, 'hash join'),
+       |  (2, 'window agg sort'), (3, 'spark stream batch'),
+       |  (4, 'vector query'), (5, 'slow scan filter'))
+       |  AS t(query_id, qtext)),
+       |qt AS (SELECT query_id, unnest(list_filter(
+       |  string_split_regex(lower(trim(qtext)), '\\s+'),
+       |  x -> length(x) > 0)) AS term FROM qs),
+       |sc AS (SELECT q.query_id, p.doc_id,
+       |  ln(1.0e0 + (s.n_docs - d.df + 0.5e0) / (d.df + 0.5e0)) AS idf,
+       |  p.tf * 2.2e0 / (p.tf + 1.2e0 * (0.25e0
+       |    + 0.75e0 * l.len * s.n_docs / s.total_len)) AS sat
+       |  FROM post p JOIN qt q ON q.term = p.term
+       |  JOIN dft d ON d.term = p.term
+       |  JOIN lens l ON l.doc_id = p.doc_id
+       |  CROSS JOIN stats s),
+       |agg AS (SELECT query_id, doc_id,
+       |  CAST(sum(CAST(round(idf * sat * 1000000.0e0) AS BIGINT))
+       |    AS BIGINT) AS score_fp
+       |  FROM sc GROUP BY 1, 2)""".stripMargin
+
+  /** The purchase -> latest-prior-signup as-of join (q26, and q74/q76,
+    * whose Spark operators differ but whose semantics must not). */
+  private val ASOF_SQL =
+    """SELECT p.event_id, p.user_id, s.event_id AS asof_event_id
+      |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
+      |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'signup') s
+      |ON p.user_id = s.user_id AND p.ts >= s.ts
+      |ORDER BY p.event_id""".stripMargin
+
+  /** Per-customer spend in integer cents, `pc` (q198/q203). */
+  private val CUSTOMER_SPEND_CTE =
+    """pc AS (SELECT o_custkey,
+      |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
+      |    AS BIGINT) AS x
+      |  FROM orders GROUP BY 1)""".stripMargin
+
+  /** The portable md5-HLL register chain (q107): per (`key`, bucket),
+    * the register rank `r` of each hash in `h`'s column `h`, via CTEs
+    * `x`, `z`, `r`. */
+  private def hllRankCtes(key: String, h: String, x: String, z: String,
+      r: String): String =
+    s"""$x AS (SELECT $key,
+       |  (strpos('0123456789abcdef', h[1]) - 1) * 16
+       |    + strpos('0123456789abcdef', h[2]) - 1 AS bucket,
+       |  substring(h, 3, 12) AS h12 FROM $h),
+       |$z AS (SELECT $key, bucket, h12,
+       |  length(regexp_extract(h12, '^(0*)', 1)) AS zc FROM $x),
+       |$r AS (SELECT $key, bucket,
+       |  CASE WHEN zc = 12 THEN 49 ELSE zc * 4
+       |    + CASE substring(h12, zc + 1, 1) WHEN '1' THEN 3
+       |      WHEN '2' THEN 2 WHEN '3' THEN 2 WHEN '4' THEN 1
+       |      WHEN '5' THEN 1 WHEN '6' THEN 1 WHEN '7' THEN 1
+       |      ELSE 0 END + 1 END AS r FROM $z)""".stripMargin
+
+  /** The LinearCounting-corrected HLL estimate `m<i>` per source of the
+    * register CTE `g<i>` (q220). */
+  private def hllEstimateCtes(i: Int): String =
+    s"""s$i AS (SELECT source,
+       |  CAST(sum(1::BIGINT << (49 - r)) AS BIGINT) AS s_used,
+       |  count(*) AS n_buckets FROM g$i GROUP BY 1),
+       |e$i AS (SELECT source, 256 - n_buckets AS v,
+       |  0.7213e0/(1.0e0+1.079e0/256.0e0)*65536.0e0*562949953421312.0e0
+       |    / (s_used + (256 - n_buckets) * 562949953421312::BIGINT)
+       |    AS raw FROM s$i),
+       |m$i AS (SELECT source, round(CASE WHEN v > 0 AND raw <= 640.0e0
+       |  THEN 256.0e0 * ln(256.0e0 / v) ELSE raw END, 2) AS est
+       |  FROM e$i)""".stripMargin
+
+  /** q19's language-guess scores: per-language keyword hits over `toks`. */
+  private val LANG_SCORES =
+    """len(list_filter(toks, x -> list_contains(['the','a','fast','slow'], x))) AS s_en,
+      |len(list_filter(toks, x -> list_contains(['key','order','table'], x))) AS s_es,
+      |len(list_filter(toks, x -> list_contains(['scan','merge','part'], x))) AS s_de,
+      |len(list_filter(toks, x -> list_contains(['window','small','hash'], x))) AS s_fr,
+      |len(list_filter(toks, x -> list_contains(['join','batch','stream'], x))) AS s_zh""".stripMargin
+
+  /** q19's language guess: the arg-max score, ties to the earlier lang. */
+  private val LANG_GUESS =
+    """CASE WHEN greatest(s_en,s_es,s_de,s_fr,s_zh)=0 THEN 'unknown'
+      | WHEN s_en>=s_es AND s_en>=s_de AND s_en>=s_fr AND s_en>=s_zh THEN 'en'
+      | WHEN s_es>=s_de AND s_es>=s_fr AND s_es>=s_zh THEN 'es'
+      | WHEN s_de>=s_fr AND s_de>=s_zh THEN 'de'
+      | WHEN s_fr>=s_zh THEN 'fr' ELSE 'zh' END AS guess""".stripMargin
+
+  /** q149's cross-doc 4-gram coverage: tokens `tok`, positional grams,
+    * grams seen in two docs (`dg`) and the covered positions `cov`. */
+  private val GRAM4_COVER_CTES =
+    s"""WITH tok AS (SELECT doc_id, $TOKS AS tk FROM documents),
+       |gr0 AS (SELECT doc_id,
+       |  CASE WHEN len(tk) < 4 THEN []::BIGINT[]
+       |    ELSE range(1, len(tk)-2) END AS ps,
+       |  CASE WHEN len(tk) < 4 THEN []::VARCHAR[]
+       |    ELSE list_transform(range(1, len(tk)-2),
+       |      i -> array_to_string(tk[i:i+3], ' ')) END AS gs
+       |  FROM tok),
+       |gr AS (SELECT doc_id, unnest(ps) AS pos, unnest(gs) AS g FROM gr0),
+       |dg AS (SELECT g FROM gr GROUP BY g HAVING min(doc_id) <> max(doc_id)),
+       |cov AS (SELECT DISTINCT gr.doc_id, gr.pos + o.o AS cp
+       |  FROM gr JOIN dg USING (g)
+       |  CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS o) o)""".stripMargin
+
+  /** q153's removal tail over covered positions `cov`: the kept tokens
+    * of `src`'s docs re-join in order and fingerprint as md5. */
+  private def spanRemovalSql(src: String): String =
+    s"""tp AS (SELECT doc_id, unnest(range(1, len(tk)+1)) AS cp,
+       |  unnest(tk) AS tok FROM $src),
+       |kept AS (SELECT t.doc_id, t.cp, t.tok FROM tp t
+       |  LEFT JOIN cov c ON c.doc_id = t.doc_id AND c.cp = t.cp
+       |  WHERE c.doc_id IS NULL),
+       |cl AS (SELECT doc_id, count(*) AS kept_tokens,
+       |  md5(string_agg(tok, ' ' ORDER BY cp)) AS cleaned_fp
+       |  FROM kept GROUP BY doc_id)
+       |SELECT t.doc_id, CAST(len(tk) AS BIGINT) AS n_tokens,
+       |CAST(coalesce(kept_tokens, 0) AS BIGINT) AS kept_tokens,
+       |CAST(len(tk) - coalesce(kept_tokens, 0) AS BIGINT)
+       |  AS removed_tokens,
+       |coalesce(cleaned_fp, md5('')) AS cleaned_fp
+       |FROM $src t LEFT JOIN cl USING (doc_id) ORDER BY doc_id""".stripMargin
+
+  /** q23's MinHash signatures `sig` over `ss`: 8 md5-seeded mins. */
+  private val MINHASH_SIG_CTE =
+    """sig AS (SELECT doc_id, sh, n_sh,
+      |  list_transform(range(0, 8), s -> list_aggregate(
+      |    list_transform(sh, x -> md5(CAST(s AS VARCHAR) || '|' || x)), 'min')) AS sig
+      |FROM ss)""".stripMargin
+
+  /** q23's LSH pairs replayed (4 bands x 2 rows, rounded jaccard >= 0.2)
+    * as CTE `lp`; `m` is "" or " MATERIALIZED" (q192/q200). */
+  private def lshPairCtes(m: String): String =
+    s"""$MINHASH_SIG_CTE,
+       |banded AS (SELECT s.doc_id, t.b AS band,
+       |  md5(array_to_string(s.sig[t.b*2+1:t.b*2+2], '#')) AS bucket
+       |FROM sig s CROSS JOIN (SELECT unnest(range(4)) AS b) t),
+       |lc AS (SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
+       |FROM banded l JOIN banded r ON l.band = r.band
+       |  AND l.bucket = r.bucket AND l.doc_id < r.doc_id),
+       |lp AS$m (SELECT c.id_a, c.id_b FROM lc c
+       |  JOIN ss a ON c.id_a = a.doc_id JOIN ss b ON c.id_b = b.doc_id
+       |  WHERE round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
+       |    / (a.n_sh + b.n_sh - len(list_intersect(a.sh, b.sh))), 4)
+       |    >= 0.2)""".stripMargin
+
+  /** The uncapped posting join: every same-shingle doc pair with its
+    * shared count (q135/q136). */
+  private val UNCAPPED_PAIR_CTES =
+    s"""${SHINGLE_CTES},
        |post AS (SELECT doc_id, n_sh, unnest(sh) AS shingle FROM ss),
-       |keep AS (SELECT shingle FROM post GROUP BY shingle HAVING count(*) <= 1000),
-       |fpp AS (SELECT p.doc_id, p.n_sh, p.shingle FROM post p JOIN keep k ON p.shingle = k.shingle),
-       |prs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+       |pairs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
        |  a.n_sh AS na, b.n_sh AS nb, count(*) AS shared
-       |FROM fpp a JOIN fpp b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-       |GROUP BY 1, 2, 3, 4),
-       |jp AS (SELECT id_a, id_b FROM prs
-       |  WHERE round(CAST(shared AS DOUBLE)/(na+nb-shared), 4) >= 0.2),
-       |edges AS (SELECT id_a AS src, id_b AS dst FROM jp
-       |  UNION ALL SELECT id_b, id_a FROM jp),
-       |reach(id, r) AS (
-       |  SELECT DISTINCT src, src FROM edges
-       |  UNION
-       |  SELECT e.src, reach.r FROM reach JOIN edges e ON e.dst = reach.id),
-       |lab AS (SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id)""".stripMargin
+       |FROM post a JOIN post b ON a.shingle = b.shingle
+       |  AND a.doc_id < b.doc_id
+       |GROUP BY 1, 2, 3, 4)""".stripMargin
+
+  /** q95's token-weighted quality `q` per doc with its `source` and
+    * token count `ws` (q95/q96). */
+  private val SOURCE_QUALITY_CTES =
+    s"""WITH d AS (SELECT doc_id, source, $TOKS AS toks FROM documents),
+       |m AS (SELECT doc_id, source, len(toks) AS n,
+       |  CAST(len(list_filter(toks, x -> list_contains(['the','a'], x))) AS DOUBLE) AS stop_hits,
+       |  CAST(len(list_distinct(toks)) AS DOUBLE) AS uniq_cnt FROM d),
+       |q AS (SELECT doc_id, source, n AS ws,
+       |  round((CASE WHEN n=0 THEN 0.0 ELSE uniq_cnt/n END)*0.5
+       |   + (1.0-(CASE WHEN n=0 THEN 0.0 ELSE stop_hits/n END))*0.3
+       |   + least(CAST(n AS DOUBLE)/100.0, 1.0)*0.2, 4) AS q FROM m)""".stripMargin
+
 
   val all: Map[String, String] = Map(
     "q01_pricing_summary" ->
@@ -343,21 +835,13 @@ object Oracles {
          |m AS (SELECT lang, len(toks) AS n,
          |CAST(len(list_filter(toks, x -> list_contains(['the','a'], x))) AS DOUBLE) AS stop_hits,
          |CAST(len(list_distinct(toks)) AS DOUBLE) AS uniq_cnt,
-         |len(list_filter(toks, x -> list_contains(['the','a','fast','slow'], x))) AS s_en,
-         |len(list_filter(toks, x -> list_contains(['key','order','table'], x))) AS s_es,
-         |len(list_filter(toks, x -> list_contains(['scan','merge','part'], x))) AS s_de,
-         |len(list_filter(toks, x -> list_contains(['window','small','hash'], x))) AS s_fr,
-         |len(list_filter(toks, x -> list_contains(['join','batch','stream'], x))) AS s_zh
+         |$LANG_SCORES
          |FROM d),
          |q AS (SELECT lang, n,
          |round((CASE WHEN n=0 THEN 0.0 ELSE uniq_cnt/n END)*0.5
          | + (1.0-(CASE WHEN n=0 THEN 0.0 ELSE stop_hits/n END))*0.3
          | + least(CAST(n AS DOUBLE)/100.0, 1.0)*0.2, 4) AS quality,
-         |CASE WHEN greatest(s_en,s_es,s_de,s_fr,s_zh)=0 THEN 'unknown'
-         | WHEN s_en>=s_es AND s_en>=s_de AND s_en>=s_fr AND s_en>=s_zh THEN 'en'
-         | WHEN s_es>=s_de AND s_es>=s_fr AND s_es>=s_zh THEN 'es'
-         | WHEN s_de>=s_fr AND s_de>=s_zh THEN 'de'
-         | WHEN s_fr>=s_zh THEN 'fr' ELSE 'zh' END AS guess
+         |$LANG_GUESS
          |FROM m)
          |SELECT lang, count(*) AS n_docs,
          |round(avg(quality), 4) AS avg_quality,
@@ -385,13 +869,7 @@ object Oracles {
 
     "q22_jaccard_pairs" ->
       s"""${SHINGLE_CTES},
-         |post AS (SELECT doc_id, n_sh, unnest(sh) AS shingle FROM ss),
-         |keep AS (SELECT shingle FROM post GROUP BY shingle HAVING count(*) <= 1000),
-         |fp AS (SELECT p.doc_id, p.n_sh, p.shingle FROM post p JOIN keep k ON p.shingle = k.shingle),
-         |pairs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |  a.n_sh AS na, b.n_sh AS nb, count(*) AS shared
-         |FROM fp a JOIN fp b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-         |GROUP BY 1, 2, 3, 4)
+         |${cappedPairCtes("fp", "pairs")}
          |SELECT id_a, id_b, shared, jaccard FROM (
          |SELECT id_a, id_b, CAST(shared AS BIGINT) AS shared,
          |round(CAST(shared AS DOUBLE)/(na+nb-shared), 4) AS jaccard FROM pairs)
@@ -417,10 +895,7 @@ object Oracles {
 
     "q23_minhash_lsh" ->
       s"""${SHINGLE_CTES},
-         |sig AS (SELECT doc_id, sh, n_sh,
-         |  list_transform(range(0, 8), s -> list_aggregate(
-         |    list_transform(sh, x -> md5(CAST(s AS VARCHAR) || '|' || x)), 'min')) AS sig
-         |FROM ss),
+         |$MINHASH_SIG_CTE,
          |banded AS (SELECT s.doc_id, s.n_sh, t.b AS band,
          |  md5(array_to_string(s.sig[t.b*2+1:t.b*2+2], '#')) AS bucket
          |FROM sig s CROSS JOIN (SELECT unnest(range(4)) AS b) t),
@@ -456,12 +931,7 @@ object Oracles {
         |row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS "rank"
         |FROM s) WHERE "rank" <= 5 ORDER BY query_id, "rank"""".stripMargin,
 
-    "q26_asof_join" ->
-      """SELECT p.event_id, p.user_id, s.event_id AS asof_event_id
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'signup') s
-        |ON p.user_id = s.user_id AND p.ts >= s.ts
-        |ORDER BY p.event_id""".stripMargin,
+    "q26_asof_join" -> ASOF_SQL,
 
     "q27_extract_terms" ->
       """WITH m AS (SELECT doc_id,
@@ -495,21 +965,13 @@ object Oracles {
          |ORDER BY 1, 2""".stripMargin,
 
     "q31_sessions" ->
-      """WITH g AS (SELECT user_id, ts, event_id,
-        |CASE WHEN lag(ts) OVER w IS NULL
-        |  OR date_diff('second', lag(ts) OVER w, ts) > 1800
-        |  THEN 1 ELSE 0 END AS new_session
-        |FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |s AS (SELECT user_id,
-        |sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |  ROWS UNBOUNDED PRECEDING) AS sid
-        |FROM g),
-        |per_sess AS (SELECT user_id, sid, count(*) AS sess_events
-        |FROM s GROUP BY user_id, sid)
-        |SELECT user_id, count(*) AS n_sessions,
-        |CAST(sum(sess_events) AS BIGINT) AS n_events,
-        |max(sess_events) AS max_session_events
-        |FROM per_sess GROUP BY user_id ORDER BY user_id""".stripMargin,
+      s"""WITH ${sessionCtes("user_id, ts, event_id,", "user_id,", "\nFROM g)")},
+         |per_sess AS (SELECT user_id, sid, count(*) AS sess_events
+         |FROM s GROUP BY user_id, sid)
+         |SELECT user_id, count(*) AS n_sessions,
+         |CAST(sum(sess_events) AS BIGINT) AS n_events,
+         |max(sess_events) AS max_session_events
+         |FROM per_sess GROUP BY user_id ORDER BY user_id""".stripMargin,
 
     "q32_range_join" ->
       """SELECT p.event_id, p.user_id, count(v.vts) AS n_prior_views
@@ -634,13 +1096,7 @@ object Oracles {
     // stop-shingles). Threshold filters the UNROUNDED value, exactly
     // like the Spark predicate; rounding is display-only.
     "q135_jaccard_join" ->
-      s"""${SHINGLE_CTES},
-         |post AS (SELECT doc_id, n_sh, unnest(sh) AS shingle FROM ss),
-         |pairs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |  a.n_sh AS na, b.n_sh AS nb, count(*) AS shared
-         |FROM post a JOIN post b ON a.shingle = b.shingle
-         |  AND a.doc_id < b.doc_id
-         |GROUP BY 1, 2, 3, 4)
+      s"""$UNCAPPED_PAIR_CTES
          |SELECT id_a, id_b,
          |round(CAST(shared AS DOUBLE)/(na+nb-shared), 4) AS jaccard
          |FROM pairs WHERE CAST(shared AS DOUBLE)/(na+nb-shared) >= 0.2
@@ -649,13 +1105,7 @@ object Oracles {
     // q136: the containment twin — same uncapped posting join, score
     // = shared/min(na, nb), threshold on the unrounded value
     "q136_overlap_join" ->
-      s"""${SHINGLE_CTES},
-         |post AS (SELECT doc_id, n_sh, unnest(sh) AS shingle FROM ss),
-         |pairs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |  a.n_sh AS na, b.n_sh AS nb, count(*) AS shared
-         |FROM post a JOIN post b ON a.shingle = b.shingle
-         |  AND a.doc_id < b.doc_id
-         |GROUP BY 1, 2, 3, 4)
+      s"""$UNCAPPED_PAIR_CTES
          |SELECT id_a, id_b,
          |round(CAST(shared AS DOUBLE)/least(na, nb), 4) AS overlap
          |FROM pairs WHERE CAST(shared AS DOUBLE)/least(na, nb) >= 0.5
@@ -667,39 +1117,29 @@ object Oracles {
     // member drops iff a strictly-more-central qualifying duplicate
     // exists in its cluster; kept_id = the most central one.
     "q137_semantic_dedup" ->
-      """WITH v AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
-        |c0 AS (SELECT id AS cent_id, vv AS cv FROM v ORDER BY id LIMIT 6),
-        |a1 AS (SELECT id, vv, cent_id FROM (
-        |  SELECT v.id, v.vv, c.cent_id,
-        |  row_number() OVER (PARTITION BY v.id ORDER BY
-        |    round(list_dot_product(v.vv, c.cv)
-        |     /(sqrt(list_dot_product(v.vv, v.vv))*sqrt(list_dot_product(c.cv, c.cv))), 6)
-        |    DESC, c.cent_id) AS rk
-        |  FROM v CROSS JOIN c0 c) WHERE rk = 1),
-        |m1 AS (SELECT cent_id, CAST(p.pos AS INT) AS pos,
-        |  CAST(sum(CAST(round(vv[CAST(p.pos AS INT)+1]*1e6) AS BIGINT)) AS DOUBLE)/1e6/count(*) AS m
-        |  FROM a1 CROSS JOIN (SELECT unnest(range(64)) AS pos) p
-        |  GROUP BY cent_id, p.pos),
-        |c1 AS (SELECT cent_id, list(m ORDER BY pos) AS cv FROM m1 GROUP BY cent_id),
-        |asg AS (SELECT id, vv, cent_id, cscore FROM (
-        |  SELECT v.id, v.vv, c.cent_id,
-        |  round(list_dot_product(v.vv, c.cv)
-        |   /(sqrt(list_dot_product(v.vv, v.vv))*sqrt(list_dot_product(c.cv, c.cv))), 6) AS cscore,
-        |  row_number() OVER (PARTITION BY v.id ORDER BY
-        |    round(list_dot_product(v.vv, c.cv)
-        |     /(sqrt(list_dot_product(v.vv, v.vv))*sqrt(list_dot_product(c.cv, c.cv))), 6)
-        |    DESC, c.cent_id) AS rk
-        |  FROM v CROSS JOIN c1 c) WHERE rk = 1),
-        |pairs AS (SELECT a.cent_id, a.id AS id_a, b.id AS id_b, b.cscore AS cb,
-        |  round(list_dot_product(a.vv, b.vv)
-        |   /(sqrt(list_dot_product(a.vv, a.vv))*sqrt(list_dot_product(b.vv, b.vv))), 4) AS sim
-        |  FROM asg a JOIN asg b ON a.cent_id = b.cent_id AND a.id <> b.id
-        |  WHERE b.cscore > a.cscore OR (b.cscore = a.cscore AND b.id < a.id)),
-        |q AS (SELECT cent_id, id_a, id_b, sim,
-        |  row_number() OVER (PARTITION BY id_a ORDER BY cb DESC, id_b) AS kr
-        |  FROM pairs WHERE sim >= 0.35)
-        |SELECT cent_id, id_a AS dropped_id, id_b AS kept_id, sim AS drop_sim
-        |FROM q WHERE kr = 1 ORDER BY dropped_id""".stripMargin,
+      s"""WITH v AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
+         |c0 AS (SELECT id AS cent_id, vv AS cv FROM v ORDER BY id LIMIT 6),
+         |${kmAssignCte("a1", "id, vv, cent_id", "c0")},
+         |${kmMeanCtes(1, "a1")},
+         |asg AS (SELECT id, vv, cent_id, cscore FROM (
+         |  SELECT v.id, v.vv, c.cent_id,
+         |  round(list_dot_product(v.vv, c.cv)
+         |   /(sqrt(list_dot_product(v.vv, v.vv))*sqrt(list_dot_product(c.cv, c.cv))), 6) AS cscore,
+         |  row_number() OVER (PARTITION BY v.id ORDER BY
+         |    round(list_dot_product(v.vv, c.cv)
+         |     /(sqrt(list_dot_product(v.vv, v.vv))*sqrt(list_dot_product(c.cv, c.cv))), 6)
+         |    DESC, c.cent_id) AS rk
+         |  FROM v CROSS JOIN c1 c) WHERE rk = 1),
+         |pairs AS (SELECT a.cent_id, a.id AS id_a, b.id AS id_b, b.cscore AS cb,
+         |  round(list_dot_product(a.vv, b.vv)
+         |   /(sqrt(list_dot_product(a.vv, a.vv))*sqrt(list_dot_product(b.vv, b.vv))), 4) AS sim
+         |  FROM asg a JOIN asg b ON a.cent_id = b.cent_id AND a.id <> b.id
+         |  WHERE b.cscore > a.cscore OR (b.cscore = a.cscore AND b.id < a.id)),
+         |q AS (SELECT cent_id, id_a, id_b, sim,
+         |  row_number() OVER (PARTITION BY id_a ORDER BY cb DESC, id_b) AS kr
+         |  FROM pairs WHERE sim >= 0.35)
+         |SELECT cent_id, id_a AS dropped_id, id_b AS kept_id, sim AS drop_sim
+         |FROM q WHERE kr = 1 ORDER BY dropped_id""".stripMargin,
 
     // q138: build(base) + append(increment) must be indistinguishable
     // from build(full) — so the oracle is q41's in-memory IVF compose
@@ -800,18 +1240,7 @@ object Oracles {
          |  5500, 6000]) AS threshold_bp),
          |e AS (SELECT t.threshold_bp, p.id_a, p.id_b
          |  FROM pb p JOIN th t ON p.bp >= t.threshold_bp),
-         |a1 AS (SELECT threshold_bp, count(*) AS n_pairs,
-         |  count(DISTINCT id_b) AS n_dropped FROM e GROUP BY 1),
-         |ex AS (SELECT threshold_bp, id_a AS did FROM e
-         |  UNION ALL SELECT threshold_bp, id_b FROM e),
-         |a2 AS (SELECT threshold_bp, count(DISTINCT did) AS n_docs_touched
-         |  FROM ex GROUP BY 1),
-         |tot AS (SELECT count(*) AS n_total FROM embeddings)
-         |SELECT a1.threshold_bp, a1.n_pairs, a2.n_docs_touched,
-         |a1.n_dropped,
-         |round(1.0e0 - CAST(a1.n_dropped AS DOUBLE)/n_total, 4) AS retention
-         |FROM a1 JOIN a2 USING (threshold_bp) CROSS JOIN tot
-         |ORDER BY threshold_bp""".stripMargin,
+         |${retentionSweep("embeddings")}""".stripMargin,
 
     // q147: multi-probe SemDeDup — candidates from the 2-nearest-
     // bucket assignment (boundary pairs meet in shared secondary
@@ -873,19 +1302,7 @@ object Oracles {
     // min(doc)<>max(doc); spans by gaps-and-islands. Oracle positions
     // are 1-based vs Spark's 0-based — islands are shift-invariant.
     "q149_dup_spans" ->
-      s"""WITH tok AS (SELECT doc_id, $TOKS AS tk FROM documents),
-         |gr0 AS (SELECT doc_id,
-         |  CASE WHEN len(tk) < 4 THEN []::BIGINT[]
-         |    ELSE range(1, len(tk)-2) END AS ps,
-         |  CASE WHEN len(tk) < 4 THEN []::VARCHAR[]
-         |    ELSE list_transform(range(1, len(tk)-2),
-         |      i -> array_to_string(tk[i:i+3], ' ')) END AS gs
-         |  FROM tok),
-         |gr AS (SELECT doc_id, unnest(ps) AS pos, unnest(gs) AS g FROM gr0),
-         |dg AS (SELECT g FROM gr GROUP BY g HAVING min(doc_id) <> max(doc_id)),
-         |cov AS (SELECT DISTINCT gr.doc_id, gr.pos + o.o AS cp
-         |  FROM gr JOIN dg USING (g)
-         |  CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS o) o),
+      s"""$GRAM4_COVER_CTES,
          |isl AS (SELECT doc_id, cp,
          |  cp - row_number() OVER (PARTITION BY doc_id ORDER BY cp) AS isl
          |  FROM cov),
@@ -903,33 +1320,8 @@ object Oracles {
     // q153: q149's covered positions, inverted — kept tokens re-join
     // in order (string_agg ORDER BY pos) and fingerprint as md5.
     "q153_dup_span_removal" ->
-      s"""WITH tok AS (SELECT doc_id, $TOKS AS tk FROM documents),
-         |gr0 AS (SELECT doc_id,
-         |  CASE WHEN len(tk) < 4 THEN []::BIGINT[]
-         |    ELSE range(1, len(tk)-2) END AS ps,
-         |  CASE WHEN len(tk) < 4 THEN []::VARCHAR[]
-         |    ELSE list_transform(range(1, len(tk)-2),
-         |      i -> array_to_string(tk[i:i+3], ' ')) END AS gs
-         |  FROM tok),
-         |gr AS (SELECT doc_id, unnest(ps) AS pos, unnest(gs) AS g FROM gr0),
-         |dg AS (SELECT g FROM gr GROUP BY g HAVING min(doc_id) <> max(doc_id)),
-         |cov AS (SELECT DISTINCT gr.doc_id, gr.pos + o.o AS cp
-         |  FROM gr JOIN dg USING (g)
-         |  CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS o) o),
-         |tp AS (SELECT doc_id, unnest(range(1, len(tk)+1)) AS cp,
-         |  unnest(tk) AS tok FROM tok),
-         |kept AS (SELECT t.doc_id, t.cp, t.tok FROM tp t
-         |  LEFT JOIN cov c ON c.doc_id = t.doc_id AND c.cp = t.cp
-         |  WHERE c.doc_id IS NULL),
-         |cl AS (SELECT doc_id, count(*) AS kept_tokens,
-         |  md5(string_agg(tok, ' ' ORDER BY cp)) AS cleaned_fp
-         |  FROM kept GROUP BY doc_id)
-         |SELECT t.doc_id, CAST(len(tk) AS BIGINT) AS n_tokens,
-         |CAST(coalesce(kept_tokens, 0) AS BIGINT) AS kept_tokens,
-         |CAST(len(tk) - coalesce(kept_tokens, 0) AS BIGINT)
-         |  AS removed_tokens,
-         |coalesce(cleaned_fp, md5('')) AS cleaned_fp
-         |FROM tok t LEFT JOIN cl USING (doc_id) ORDER BY doc_id""".stripMargin,
+      s"""$GRAM4_COVER_CTES,
+         |${spanRemovalSql("tok")}""".stripMargin,
 
     // q154: SCD2 build — lag change detection, running-sum version
     // ids, lead range close. version must CAST to BIGINT (DuckDB
@@ -1003,32 +1395,7 @@ object Oracles {
     // association order); per-term scores round to 1e-6 fixed point
     // and sum as BIGINTs so multi-term float order cannot matter.
     "q160_bm25_retrieval" ->
-      s"""WITH toks AS (SELECT doc_id, unnest($TOKS) AS term FROM documents),
-         |post AS (SELECT term, doc_id, count(*) AS tf
-         |  FROM toks GROUP BY 1, 2),
-         |dft AS (SELECT term, count(*) AS df FROM post GROUP BY 1),
-         |lens AS (SELECT doc_id, count(*) AS len FROM toks GROUP BY 1),
-         |stats AS (SELECT count(*) AS n_docs,
-         |  CAST(sum(len) AS BIGINT) AS total_len FROM lens),
-         |qs AS (SELECT * FROM (VALUES (1, 'hash join'),
-         |  (2, 'window agg sort'), (3, 'spark stream batch'),
-         |  (4, 'vector query'), (5, 'slow scan filter'))
-         |  AS t(query_id, qtext)),
-         |qt AS (SELECT query_id, unnest(list_filter(
-         |  string_split_regex(lower(trim(qtext)), '\\s+'),
-         |  x -> length(x) > 0)) AS term FROM qs),
-         |sc AS (SELECT q.query_id, p.doc_id,
-         |  ln(1.0e0 + (s.n_docs - d.df + 0.5e0) / (d.df + 0.5e0)) AS idf,
-         |  p.tf * 2.2e0 / (p.tf + 1.2e0 * (0.25e0
-         |    + 0.75e0 * l.len * s.n_docs / s.total_len)) AS sat
-         |  FROM post p JOIN qt q ON q.term = p.term
-         |  JOIN dft d ON d.term = p.term
-         |  JOIN lens l ON l.doc_id = p.doc_id
-         |  CROSS JOIN stats s),
-         |agg AS (SELECT query_id, doc_id,
-         |  CAST(sum(CAST(round(idf * sat * 1000000.0e0) AS BIGINT))
-         |    AS BIGINT) AS score_fp
-         |  FROM sc GROUP BY 1, 2),
+      s"""$BM25_CTES,
          |rk AS (SELECT CAST(query_id AS BIGINT) AS query_id, doc_id,
          |  score_fp, row_number() OVER (PARTITION BY query_id
          |    ORDER BY score_fp DESC, doc_id) AS "rank"
@@ -1134,28 +1501,22 @@ object Oracles {
 
     // q163: q31's session break + session-ordered lead trigrams.
     "q163_session_paths" ->
-      """WITH g AS (SELECT user_id, ts, event_id, event_type,
-        |CASE WHEN lag(ts) OVER w IS NULL
-        |  OR date_diff('second', lag(ts) OVER w, ts) > 1800
-        |  THEN 1 ELSE 0 END AS new_session
-        |FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |s AS (SELECT user_id, ts, event_id, event_type,
-        |sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |  ROWS UNBOUNDED PRECEDING) AS sid FROM g),
-        |tri AS (SELECT event_type || '>' || lead(event_type, 1) OVER sw
-        |  || '>' || lead(event_type, 2) OVER sw AS path,
-        |  CAST(user_id AS VARCHAR) || '#' || CAST(sid AS VARCHAR) AS sess,
-        |  lead(event_type, 2) OVER sw AS t3
-        |FROM s WINDOW sw AS (PARTITION BY user_id, sid
-        |  ORDER BY ts, event_id)),
-        |p AS (SELECT path, count(*) AS n,
-        |  count(DISTINCT sess) AS n_sessions
-        |FROM tri WHERE t3 IS NOT NULL GROUP BY path),
-        |r AS (SELECT path, n, n_sessions,
-        |  row_number() OVER (ORDER BY n DESC, path) AS "rank" FROM p)
-        |SELECT "rank", path, CAST(n AS BIGINT) AS n,
-        |CAST(n_sessions AS BIGINT) AS n_sessions
-        |FROM r WHERE "rank" <= 20 ORDER BY "rank"""".stripMargin,
+      s"""WITH ${sessionCtes("user_id, ts, event_id, event_type,",
+           "user_id, ts, event_id, event_type,")},
+         |tri AS (SELECT event_type || '>' || lead(event_type, 1) OVER sw
+         |  || '>' || lead(event_type, 2) OVER sw AS path,
+         |  CAST(user_id AS VARCHAR) || '#' || CAST(sid AS VARCHAR) AS sess,
+         |  lead(event_type, 2) OVER sw AS t3
+         |FROM s WINDOW sw AS (PARTITION BY user_id, sid
+         |  ORDER BY ts, event_id)),
+         |p AS (SELECT path, count(*) AS n,
+         |  count(DISTINCT sess) AS n_sessions
+         |FROM tri WHERE t3 IS NOT NULL GROUP BY path),
+         |r AS (SELECT path, n, n_sessions,
+         |  row_number() OVER (ORDER BY n DESC, path) AS "rank" FROM p)
+         |SELECT "rank", path, CAST(n AS BIGINT) AS n,
+         |CAST(n_sessions AS BIGINT) AS n_sessions
+         |FROM r WHERE "rank" <= 20 ORDER BY "rank"""".stripMargin,
 
     // q165: CDC MERGE — same log slices, row_number compaction
     // (seq DESC, op DESC), anti-join+union apply, per-source audit
@@ -1254,34 +1615,19 @@ object Oracles {
 
     // q167: q102's pair CTEs + degree explode; floor-bp integer cc.
     "q167_clustering_coeff" ->
-      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-        |cent AS (SELECT vec_id AS cent_id, e AS ce FROM v WHERE vec_id % 100 = 0),
-        |assigned AS (SELECT vec_id, e, cent_id FROM (
-        |SELECT v.vec_id, v.e, c.cent_id,
-        |row_number() OVER (PARTITION BY v.vec_id ORDER BY
-        |  round(list_dot_product(v.e, c.ce)
-        |   /(sqrt(list_dot_product(v.e, v.e))*sqrt(list_dot_product(c.ce, c.ce))), 6)
-        |  DESC, c.cent_id) AS crank
-        |FROM v CROSS JOIN cent c) WHERE crank <= 2),
-        |jp AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-        |FROM assigned a JOIN assigned b
-        |  ON a.cent_id = b.cent_id AND a.vec_id < b.vec_id
-        |WHERE round(list_dot_product(a.e, b.e)
-        |   /(sqrt(list_dot_product(a.e, a.e))*sqrt(list_dot_product(b.e, b.e))), 4) >= 0.30),
-        |deg AS (SELECT vec_id, count(*) AS deg FROM (
-        |  SELECT id_a AS vec_id FROM jp
-        |  UNION ALL SELECT id_b FROM jp) GROUP BY 1),
-        |tri AS (SELECT e1.id_a AS a, e1.id_b AS b, e2.id_b AS c
-        |  FROM jp e1 JOIN jp e2 ON e1.id_b = e2.id_a
-        |  JOIN jp e3 ON e3.id_a = e1.id_a AND e3.id_b = e2.id_b),
-        |tc AS (SELECT vec_id, count(*) AS n_triangles FROM (
-        |  SELECT unnest([a, b, c]) AS vec_id FROM tri) GROUP BY 1)
-        |SELECT d.vec_id, CAST(deg AS BIGINT) AS deg,
-        |CAST(coalesce(n_triangles, 0) AS BIGINT) AS n_triangles,
-        |CAST(2 * CAST(coalesce(n_triangles, 0) AS HUGEINT) * 10000
-        |  // (CAST(deg AS HUGEINT) * (deg - 1)) AS BIGINT) AS cc_bp
-        |FROM deg d LEFT JOIN tc USING (vec_id) WHERE deg >= 2
-        |ORDER BY cc_bp DESC, vec_id""".stripMargin,
+      s"""WITH ${embedGraphCtes("jp", "0.30")},
+         |deg AS (SELECT vec_id, count(*) AS deg FROM (
+         |  SELECT id_a AS vec_id FROM jp
+         |  UNION ALL SELECT id_b FROM jp) GROUP BY 1),
+         |$TRIANGLES_CTE,
+         |tc AS (SELECT vec_id, count(*) AS n_triangles FROM (
+         |  SELECT unnest([a, b, c]) AS vec_id FROM tri) GROUP BY 1)
+         |SELECT d.vec_id, CAST(deg AS BIGINT) AS deg,
+         |CAST(coalesce(n_triangles, 0) AS BIGINT) AS n_triangles,
+         |CAST(2 * CAST(coalesce(n_triangles, 0) AS HUGEINT) * 10000
+         |  // (CAST(deg AS HUGEINT) * (deg - 1)) AS BIGINT) AS cc_bp
+         |FROM deg d LEFT JOIN tc USING (vec_id) WHERE deg >= 2
+         |ORDER BY cc_bp DESC, vec_id""".stripMargin,
 
     // q168: DuckDB's jaro_winkler_similarity IS the reference the
     // Spark-side native expression was fuzz-pinned against; threshold
@@ -1385,50 +1731,36 @@ object Oracles {
     // q171: q167's pair CTEs; 6 unrolled peel rounds (degree, keep,
     // both-endpoint edge filter) mirror kcoreBounded exactly.
     "q171_kcore" ->
-      """WITH v AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-        |cent AS MATERIALIZED (SELECT vec_id AS cent_id, e AS ce FROM v WHERE vec_id % 100 = 0),
-        |assigned AS MATERIALIZED (SELECT vec_id, e, cent_id FROM (
-        |SELECT v.vec_id, v.e, c.cent_id,
-        |row_number() OVER (PARTITION BY v.vec_id ORDER BY
-        |  round(list_dot_product(v.e, c.ce)
-        |   /(sqrt(list_dot_product(v.e, v.e))*sqrt(list_dot_product(c.ce, c.ce))), 6)
-        |  DESC, c.cent_id) AS crank
-        |FROM v CROSS JOIN cent c) WHERE crank <= 2),
-        |jp AS MATERIALIZED (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-        |FROM assigned a JOIN assigned b
-        |  ON a.cent_id = b.cent_id AND a.vec_id < b.vec_id
-        |WHERE round(list_dot_product(a.e, b.e)
-        |   /(sqrt(list_dot_product(a.e, a.e))*sqrt(list_dot_product(b.e, b.e))), 4) >= 0.30),
-        |e0 AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM jp
-        |  UNION ALL SELECT id_b, id_a FROM jp),
-        |d1 AS MATERIALIZED (SELECT src, count(*) AS d FROM e0 GROUP BY 1),
-        |k1 AS MATERIALIZED (SELECT src FROM d1 WHERE d >= 3),
-        |e1 AS MATERIALIZED (SELECT e.src, e.dst FROM e0 e
-        |  JOIN k1 a ON e.src = a.src JOIN k1 b ON e.dst = b.src),
-        |d2 AS MATERIALIZED (SELECT src, count(*) AS d FROM e1 GROUP BY 1),
-        |k2 AS MATERIALIZED (SELECT src FROM d2 WHERE d >= 3),
-        |e2 AS MATERIALIZED (SELECT e.src, e.dst FROM e1 e
-        |  JOIN k2 a ON e.src = a.src JOIN k2 b ON e.dst = b.src),
-        |d3 AS MATERIALIZED (SELECT src, count(*) AS d FROM e2 GROUP BY 1),
-        |k3 AS MATERIALIZED (SELECT src FROM d3 WHERE d >= 3),
-        |e3 AS MATERIALIZED (SELECT e.src, e.dst FROM e2 e
-        |  JOIN k3 a ON e.src = a.src JOIN k3 b ON e.dst = b.src),
-        |d4 AS MATERIALIZED (SELECT src, count(*) AS d FROM e3 GROUP BY 1),
-        |k4 AS MATERIALIZED (SELECT src FROM d4 WHERE d >= 3),
-        |e4 AS MATERIALIZED (SELECT e.src, e.dst FROM e3 e
-        |  JOIN k4 a ON e.src = a.src JOIN k4 b ON e.dst = b.src),
-        |d5 AS MATERIALIZED (SELECT src, count(*) AS d FROM e4 GROUP BY 1),
-        |k5 AS MATERIALIZED (SELECT src FROM d5 WHERE d >= 3),
-        |e5 AS MATERIALIZED (SELECT e.src, e.dst FROM e4 e
-        |  JOIN k5 a ON e.src = a.src JOIN k5 b ON e.dst = b.src),
-        |d6 AS MATERIALIZED (SELECT src, count(*) AS d FROM e5 GROUP BY 1),
-        |k6 AS MATERIALIZED (SELECT src FROM d6 WHERE d >= 3),
-        |e6 AS MATERIALIZED (SELECT e.src, e.dst FROM e5 e
-        |  JOIN k6 a ON e.src = a.src JOIN k6 b ON e.dst = b.src),
-        |fin AS (SELECT src AS vec_id, count(*) AS core_deg
-        |  FROM e6 GROUP BY 1)
-        |SELECT vec_id, CAST(core_deg AS BIGINT) AS core_deg
-        |FROM fin ORDER BY vec_id""".stripMargin,
+      s"""WITH ${embedGraphCtes("jp", "0.30", " MATERIALIZED")},
+         |${edgesCte("e0", "jp", " MATERIALIZED")},
+         |d1 AS MATERIALIZED (SELECT src, count(*) AS d FROM e0 GROUP BY 1),
+         |k1 AS MATERIALIZED (SELECT src FROM d1 WHERE d >= 3),
+         |e1 AS MATERIALIZED (SELECT e.src, e.dst FROM e0 e
+         |  JOIN k1 a ON e.src = a.src JOIN k1 b ON e.dst = b.src),
+         |d2 AS MATERIALIZED (SELECT src, count(*) AS d FROM e1 GROUP BY 1),
+         |k2 AS MATERIALIZED (SELECT src FROM d2 WHERE d >= 3),
+         |e2 AS MATERIALIZED (SELECT e.src, e.dst FROM e1 e
+         |  JOIN k2 a ON e.src = a.src JOIN k2 b ON e.dst = b.src),
+         |d3 AS MATERIALIZED (SELECT src, count(*) AS d FROM e2 GROUP BY 1),
+         |k3 AS MATERIALIZED (SELECT src FROM d3 WHERE d >= 3),
+         |e3 AS MATERIALIZED (SELECT e.src, e.dst FROM e2 e
+         |  JOIN k3 a ON e.src = a.src JOIN k3 b ON e.dst = b.src),
+         |d4 AS MATERIALIZED (SELECT src, count(*) AS d FROM e3 GROUP BY 1),
+         |k4 AS MATERIALIZED (SELECT src FROM d4 WHERE d >= 3),
+         |e4 AS MATERIALIZED (SELECT e.src, e.dst FROM e3 e
+         |  JOIN k4 a ON e.src = a.src JOIN k4 b ON e.dst = b.src),
+         |d5 AS MATERIALIZED (SELECT src, count(*) AS d FROM e4 GROUP BY 1),
+         |k5 AS MATERIALIZED (SELECT src FROM d5 WHERE d >= 3),
+         |e5 AS MATERIALIZED (SELECT e.src, e.dst FROM e4 e
+         |  JOIN k5 a ON e.src = a.src JOIN k5 b ON e.dst = b.src),
+         |d6 AS MATERIALIZED (SELECT src, count(*) AS d FROM e5 GROUP BY 1),
+         |k6 AS MATERIALIZED (SELECT src FROM d6 WHERE d >= 3),
+         |e6 AS MATERIALIZED (SELECT e.src, e.dst FROM e5 e
+         |  JOIN k6 a ON e.src = a.src JOIN k6 b ON e.dst = b.src),
+         |fin AS (SELECT src AS vec_id, count(*) AS core_deg
+         |  FROM e6 GROUP BY 1)
+         |SELECT vec_id, CAST(core_deg AS BIGINT) AS core_deg
+         |FROM fin ORDER BY vec_id""".stripMargin,
 
     // q172: running-max-end island break over variable-length
     // intervals; epoch seconds keep everything integer.
@@ -1722,22 +2054,8 @@ object Oracles {
            |    ORDER BY c DESC, lbl) AS rn FROM c$i) WHERE rn = 1)"""
           .stripMargin
       }.mkString(",\n")
-      s"""WITH v AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-         |cent AS MATERIALIZED (SELECT vec_id AS cent_id, e AS ce FROM v WHERE vec_id % 100 = 0),
-         |assigned AS MATERIALIZED (SELECT vec_id, e, cent_id FROM (
-         |SELECT v.vec_id, v.e, c.cent_id,
-         |row_number() OVER (PARTITION BY v.vec_id ORDER BY
-         |  round(list_dot_product(v.e, c.ce)
-         |   /(sqrt(list_dot_product(v.e, v.e))*sqrt(list_dot_product(c.ce, c.ce))), 6)
-         |  DESC, c.cent_id) AS crank
-         |FROM v CROSS JOIN cent c) WHERE crank <= 2),
-         |jp AS MATERIALIZED (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-         |FROM assigned a JOIN assigned b
-         |  ON a.cent_id = b.cent_id AND a.vec_id < b.vec_id
-         |WHERE round(list_dot_product(a.e, b.e)
-         |   /(sqrt(list_dot_product(a.e, a.e))*sqrt(list_dot_product(b.e, b.e))), 4) >= 0.30),
-         |e0 AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM jp
-         |  UNION ALL SELECT id_b, id_a FROM jp),
+      s"""WITH ${embedGraphCtes("jp", "0.30", " MATERIALIZED")},
+         |${edgesCte("e0", "jp", " MATERIALIZED")},
          |l0 AS MATERIALIZED (SELECT DISTINCT src AS id, src AS lbl FROM e0),
          |$rounds,
          |co AS (SELECT lbl AS community, CAST(count(*) AS BIGINT)
@@ -1760,14 +2078,8 @@ object Oracles {
            |    FROM p JOIN p${i - 1} pp ON pp.s = p.a GROUP BY 1) x
            |  ON x.s = st.s)""".stripMargin
       }.mkString(",\n")
-      s"""WITH g AS (SELECT user_id, ts, event_id, event_type,
-         |CASE WHEN lag(ts) OVER w IS NULL
-         |  OR date_diff('second', lag(ts) OVER w, ts) > 1800
-         |  THEN 1 ELSE 0 END AS new_session
-         |FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-         |s AS (SELECT user_id, ts, event_id, event_type,
-         |sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-         |  ROWS UNBOUNDED PRECEDING) AS sid FROM g),
+      s"""WITH ${sessionCtes("user_id, ts, event_id, event_type,",
+           "user_id, ts, event_id, event_type,")},
          |tr AS (SELECT event_type AS a, lead(event_type, 1) OVER sw AS b
          |FROM s WINDOW sw AS (PARTITION BY user_id, sid
          |  ORDER BY ts, event_id)),
@@ -1865,59 +2177,48 @@ object Oracles {
     // q188: q107's register chain, then inclusion-exclusion over
     // the register-max union merge; estimates replay exactly.
     "q188_hll_intersection" ->
-      """WITH p AS (SELECT DISTINCT event_type, user_id FROM events),
-        |hh AS (SELECT event_type, user_id,
-        |  md5('hll|' || CAST(user_id AS VARCHAR)) AS h FROM p),
-        |hx AS (SELECT event_type,
-        |  (strpos('0123456789abcdef', h[1]) - 1) * 16
-        |    + strpos('0123456789abcdef', h[2]) - 1 AS bucket,
-        |  substring(h, 3, 12) AS h12 FROM hh),
-        |zz AS (SELECT event_type, bucket, h12,
-        |  length(regexp_extract(h12, '^(0*)', 1)) AS zc FROM hx),
-        |rk AS (SELECT event_type, bucket,
-        |  CASE WHEN zc = 12 THEN 49 ELSE zc * 4
-        |    + CASE substring(h12, zc + 1, 1) WHEN '1' THEN 3
-        |      WHEN '2' THEN 2 WHEN '3' THEN 2 WHEN '4' THEN 1
-        |      WHEN '5' THEN 1 WHEN '6' THEN 1 WHEN '7' THEN 1
-        |      ELSE 0 END + 1 END AS r FROM zz),
-        |regs AS MATERIALIZED (SELECT event_type, bucket, max(r) AS r
-        |  FROM rk GROUP BY 1, 2),
-        |pt AS (SELECT event_type,
-        |  round(0.7213e0/(1.0e0+1.079e0/256.0e0)*65536.0e0*562949953421312.0e0
-        |    / (s_used + (256 - nb) * 562949953421312::BIGINT), 2) AS est
-        |  FROM (SELECT event_type,
-        |    CAST(sum(1::BIGINT << (49 - r)) AS BIGINT) AS s_used,
-        |    count(*) AS nb FROM regs GROUP BY 1)),
-        |tp AS (SELECT a.event_type AS ta, b.event_type AS tb
-        |  FROM (SELECT DISTINCT event_type FROM regs) a
-        |  JOIN (SELECT DISTINCT event_type FROM regs) b
-        |  ON a.event_type < b.event_type),
-        |ur AS (SELECT ta, tb, bucket, max(r) AS r FROM (
-        |  SELECT tp.ta, tp.tb, g.bucket, g.r FROM tp
-        |    JOIN regs g ON g.event_type = tp.ta
-        |  UNION ALL SELECT tp.ta, tp.tb, g.bucket, g.r FROM tp
-        |    JOIN regs g ON g.event_type = tp.tb) GROUP BY 1, 2, 3),
-        |eu AS (SELECT ta, tb,
-        |  round(0.7213e0/(1.0e0+1.079e0/256.0e0)*65536.0e0*562949953421312.0e0
-        |    / (s_used + (256 - nb) * 562949953421312::BIGINT), 2)
-        |    AS est_union
-        |  FROM (SELECT ta, tb,
-        |    CAST(sum(1::BIGINT << (49 - r)) AS BIGINT) AS s_used,
-        |    count(*) AS nb FROM ur GROUP BY 1, 2)),
-        |ex AS (SELECT a.event_type AS ta, b.event_type AS tb,
-        |  CAST(count(*) AS BIGINT) AS exact_inter
-        |  FROM p a JOIN p b ON a.user_id = b.user_id
-        |    AND a.event_type < b.event_type GROUP BY 1, 2)
-        |SELECT eu.ta, eu.tb, pa.est AS est_a, pb.est AS est_b,
-        |eu.est_union,
-        |round(pa.est + pb.est - eu.est_union, 2) AS est_inter,
-        |ex.exact_inter,
-        |round((round(pa.est + pb.est - eu.est_union, 2) - ex.exact_inter)
-        |  / nullif(ex.exact_inter, 0), 4) AS rel_err
-        |FROM eu JOIN pt pa ON pa.event_type = eu.ta
-        |JOIN pt pb ON pb.event_type = eu.tb
-        |JOIN ex ON ex.ta = eu.ta AND ex.tb = eu.tb
-        |ORDER BY eu.ta, eu.tb""".stripMargin,
+      s"""WITH p AS (SELECT DISTINCT event_type, user_id FROM events),
+         |hh AS (SELECT event_type, user_id,
+         |  md5('hll|' || CAST(user_id AS VARCHAR)) AS h FROM p),
+         |${hllRankCtes("event_type", "hh", "hx", "zz", "rk")},
+         |regs AS MATERIALIZED (SELECT event_type, bucket, max(r) AS r
+         |  FROM rk GROUP BY 1, 2),
+         |pt AS (SELECT event_type,
+         |  round(0.7213e0/(1.0e0+1.079e0/256.0e0)*65536.0e0*562949953421312.0e0
+         |    / (s_used + (256 - nb) * 562949953421312::BIGINT), 2) AS est
+         |  FROM (SELECT event_type,
+         |    CAST(sum(1::BIGINT << (49 - r)) AS BIGINT) AS s_used,
+         |    count(*) AS nb FROM regs GROUP BY 1)),
+         |tp AS (SELECT a.event_type AS ta, b.event_type AS tb
+         |  FROM (SELECT DISTINCT event_type FROM regs) a
+         |  JOIN (SELECT DISTINCT event_type FROM regs) b
+         |  ON a.event_type < b.event_type),
+         |ur AS (SELECT ta, tb, bucket, max(r) AS r FROM (
+         |  SELECT tp.ta, tp.tb, g.bucket, g.r FROM tp
+         |    JOIN regs g ON g.event_type = tp.ta
+         |  UNION ALL SELECT tp.ta, tp.tb, g.bucket, g.r FROM tp
+         |    JOIN regs g ON g.event_type = tp.tb) GROUP BY 1, 2, 3),
+         |eu AS (SELECT ta, tb,
+         |  round(0.7213e0/(1.0e0+1.079e0/256.0e0)*65536.0e0*562949953421312.0e0
+         |    / (s_used + (256 - nb) * 562949953421312::BIGINT), 2)
+         |    AS est_union
+         |  FROM (SELECT ta, tb,
+         |    CAST(sum(1::BIGINT << (49 - r)) AS BIGINT) AS s_used,
+         |    count(*) AS nb FROM ur GROUP BY 1, 2)),
+         |ex AS (SELECT a.event_type AS ta, b.event_type AS tb,
+         |  CAST(count(*) AS BIGINT) AS exact_inter
+         |  FROM p a JOIN p b ON a.user_id = b.user_id
+         |    AND a.event_type < b.event_type GROUP BY 1, 2)
+         |SELECT eu.ta, eu.tb, pa.est AS est_a, pb.est AS est_b,
+         |eu.est_union,
+         |round(pa.est + pb.est - eu.est_union, 2) AS est_inter,
+         |ex.exact_inter,
+         |round((round(pa.est + pb.est - eu.est_union, 2) - ex.exact_inter)
+         |  / nullif(ex.exact_inter, 0), 4) AS rel_err
+         |FROM eu JOIN pt pa ON pa.event_type = eu.ta
+         |JOIN pt pb ON pb.event_type = eu.tb
+         |JOIN ex ON ex.ta = eu.ta AND ex.tb = eu.tb
+         |ORDER BY eu.ta, eu.tb""".stripMargin,
 
     // q189: PAA frames are integer SUMS; tercile symbols by exact
     // nearest-rank cross-multiplication; motifs from lead windows.
@@ -2035,21 +2336,7 @@ object Oracles {
          |    AND a.doc_id < b.doc_id
          |  GROUP BY 1, 2, 3, 4)
          |  WHERE round(CAST(shared AS DOUBLE)/(na+nb-shared), 4) >= 0.2),
-         |sig AS (SELECT doc_id, sh, n_sh,
-         |  list_transform(range(0, 8), s -> list_aggregate(
-         |    list_transform(sh, x -> md5(CAST(s AS VARCHAR) || '|' || x)), 'min')) AS sig
-         |FROM ss),
-         |banded AS (SELECT s.doc_id, t.b AS band,
-         |  md5(array_to_string(s.sig[t.b*2+1:t.b*2+2], '#')) AS bucket
-         |FROM sig s CROSS JOIN (SELECT unnest(range(4)) AS b) t),
-         |lc AS (SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
-         |FROM banded l JOIN banded r ON l.band = r.band
-         |  AND l.bucket = r.bucket AND l.doc_id < r.doc_id),
-         |lp AS MATERIALIZED (SELECT c.id_a, c.id_b FROM lc c
-         |  JOIN ss a ON c.id_a = a.doc_id JOIN ss b ON c.id_b = b.doc_id
-         |  WHERE round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-         |    / (a.n_sh + b.n_sh - len(list_intersect(a.sh, b.sh))), 4)
-         |    >= 0.2),
+         |${lshPairCtes(" MATERIALIZED")},
          |nt AS (SELECT count(*) AS n_truth FROM tp),
          |rows_out AS (
          |  SELECT 'capped_df50' AS regime,
@@ -2196,20 +2483,7 @@ object Oracles {
          |cov AS (SELECT DISTINCT gr.doc_id, gr.pos + o.o AS cp
          |  FROM gr JOIN eg USING (g)
          |  CROSS JOIN (SELECT unnest([0, 1, 2, 3, 4]) AS o) o),
-         |tp AS (SELECT doc_id, unnest(range(1, len(tk)+1)) AS cp,
-         |  unnest(tk) AS tok FROM tr),
-         |kept AS (SELECT t.doc_id, t.cp, t.tok FROM tp t
-         |  LEFT JOIN cov c ON c.doc_id = t.doc_id AND c.cp = t.cp
-         |  WHERE c.doc_id IS NULL),
-         |cl AS (SELECT doc_id, count(*) AS kept_tokens,
-         |  md5(string_agg(tok, ' ' ORDER BY cp)) AS cleaned_fp
-         |  FROM kept GROUP BY doc_id)
-         |SELECT t.doc_id, CAST(len(tk) AS BIGINT) AS n_tokens,
-         |CAST(coalesce(kept_tokens, 0) AS BIGINT) AS kept_tokens,
-         |CAST(len(tk) - coalesce(kept_tokens, 0) AS BIGINT)
-         |  AS removed_tokens,
-         |coalesce(cleaned_fp, md5('')) AS cleaned_fp
-         |FROM tr t LEFT JOIN cl USING (doc_id) ORDER BY doc_id""".stripMargin,
+         |${spanRemovalSql("tr")}""".stripMargin,
 
     // q150: signs from md5('rp|j|d') first-nibble parity (strpos over
     // the hex alphabet); all sums are fixed-point BIGINT so the only
@@ -2376,13 +2650,7 @@ object Oracles {
 
     "q47_crossmodal" ->
       s"""${SHINGLE_CTES},
-         |post AS (SELECT doc_id, n_sh, unnest(sh) AS shingle FROM ss),
-         |keep AS (SELECT shingle FROM post GROUP BY shingle HAVING count(*) <= 1000),
-         |fp AS (SELECT p.doc_id, p.n_sh, p.shingle FROM post p JOIN keep k ON p.shingle = k.shingle),
-         |pairs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |  a.n_sh AS na, b.n_sh AS nb, count(*) AS shared
-         |FROM fp a JOIN fp b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-         |GROUP BY 1, 2, 3, 4),
+         |${cappedPairCtes("fp", "pairs")},
          |j AS (SELECT id_a, id_b,
          |round(CAST(shared AS DOUBLE)/(na+nb-shared), 4) AS jaccard
          |FROM pairs WHERE round(CAST(shared AS DOUBLE)/(na+nb-shared), 4) >= 0.2),
@@ -2528,55 +2796,23 @@ object Oracles {
         |SELECT cohort, user_id FROM u ORDER BY cohort, user_id""".stripMargin,
 
     "q54_embed_neardup" ->
-      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-        |cent AS (SELECT vec_id AS cent_id, e AS ce FROM v WHERE vec_id % 100 = 0),
-        |assigned AS (SELECT vec_id, e, cent_id FROM (
-        |SELECT v.vec_id, v.e, c.cent_id,
-        |row_number() OVER (PARTITION BY v.vec_id ORDER BY
-        |  round(list_dot_product(v.e, c.ce)
-        |   /(sqrt(list_dot_product(v.e, v.e))*sqrt(list_dot_product(c.ce, c.ce))), 6)
-        |  DESC, c.cent_id) AS crank
-        |FROM v CROSS JOIN cent c) WHERE crank <= 2),
-        |pairs AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b,
-        |  round(list_dot_product(a.e, b.e)
-        |   /(sqrt(list_dot_product(a.e, a.e))*sqrt(list_dot_product(b.e, b.e))), 4) AS sim
-        |FROM assigned a JOIN assigned b
-        |  ON a.cent_id = b.cent_id AND a.vec_id < b.vec_id)
-        |SELECT id_a, id_b, sim FROM pairs WHERE sim >= 0.35
-        |ORDER BY id_a, id_b""".stripMargin,
+      s"""WITH ${embedAssignCtes("")},
+         |pairs AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b,
+         |  round(list_dot_product(a.e, b.e)
+         |   /(sqrt(list_dot_product(a.e, a.e))*sqrt(list_dot_product(b.e, b.e))), 4) AS sim
+         |FROM assigned a JOIN assigned b
+         |  ON a.cent_id = b.cent_id AND a.vec_id < b.vec_id)
+         |SELECT id_a, id_b, sim FROM pairs WHERE sim >= 0.35
+         |ORDER BY id_a, id_b""".stripMargin,
 
     // Replays BOTH Lloyd iterations of the deterministic k-means fit:
     // init = 4 lowest-id vectors; assignment = 6-dp-rounded cosine
     // argmax with centroid-id tie-break; mean = fixed-point long sum
     // (order-independent in any engine). 64 = fixture embedding dim.
     "q55_kmeans_fit" ->
-      """WITH v AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
-        |c0 AS (SELECT id AS cent_id, vv AS cv FROM v ORDER BY id LIMIT 4),
-        |a1 AS (SELECT id, vv, cent_id FROM (
-        |  SELECT v.id, v.vv, c.cent_id,
-        |  row_number() OVER (PARTITION BY v.id ORDER BY
-        |    round(list_dot_product(v.vv, c.cv)
-        |     /(sqrt(list_dot_product(v.vv, v.vv))*sqrt(list_dot_product(c.cv, c.cv))), 6)
-        |    DESC, c.cent_id) AS rk
-        |  FROM v CROSS JOIN c0 c) WHERE rk = 1),
-        |m1 AS (SELECT cent_id, CAST(p.pos AS INT) AS pos,
-        |  CAST(sum(CAST(round(vv[CAST(p.pos AS INT)+1]*1e6) AS BIGINT)) AS DOUBLE)/1e6/count(*) AS m
-        |  FROM a1 CROSS JOIN (SELECT unnest(range(64)) AS pos) p
-        |  GROUP BY cent_id, p.pos),
-        |c1 AS (SELECT cent_id, list(m ORDER BY pos) AS cv FROM m1 GROUP BY cent_id),
-        |a2 AS (SELECT id, vv, cent_id FROM (
-        |  SELECT v.id, v.vv, c.cent_id,
-        |  row_number() OVER (PARTITION BY v.id ORDER BY
-        |    round(list_dot_product(v.vv, c.cv)
-        |     /(sqrt(list_dot_product(v.vv, v.vv))*sqrt(list_dot_product(c.cv, c.cv))), 6)
-        |    DESC, c.cent_id) AS rk
-        |  FROM v CROSS JOIN c1 c) WHERE rk = 1),
-        |m2 AS (SELECT cent_id, CAST(p.pos AS INT) AS pos,
-        |  CAST(sum(CAST(round(vv[CAST(p.pos AS INT)+1]*1e6) AS BIGINT)) AS DOUBLE)/1e6/count(*) AS m
-        |  FROM a2 CROSS JOIN (SELECT unnest(range(64)) AS pos) p
-        |  GROUP BY cent_id, p.pos)
-        |SELECT cent_id, pos, round(m, 6) AS m FROM m2
-        |ORDER BY cent_id, pos""".stripMargin,
+      s"""$KMEANS_FIT2_CTES
+         |SELECT cent_id, pos, round(m, 6) AS m FROM m2
+         |ORDER BY cent_id, pos""".stripMargin,
 
     // q195: nearest-rank bands; the index ⌈p·n/100⌉ is pure integer;
     // the value at a rank is order-independent under ties.
@@ -2598,51 +2834,27 @@ object Oracles {
     // q196: q55's fixed-point fit chain extended one assignment pass
     // (c2 from m2), then the label-purity rollup.
     "q196_cluster_purity" ->
-      """WITH v AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
-        |c0 AS (SELECT id AS cent_id, vv AS cv FROM v ORDER BY id LIMIT 4),
-        |a1 AS (SELECT id, vv, cent_id FROM (
-        |  SELECT v.id, v.vv, c.cent_id,
-        |  row_number() OVER (PARTITION BY v.id ORDER BY
-        |    round(list_dot_product(v.vv, c.cv)
-        |     /(sqrt(list_dot_product(v.vv, v.vv))*sqrt(list_dot_product(c.cv, c.cv))), 6)
-        |    DESC, c.cent_id) AS rk
-        |  FROM v CROSS JOIN c0 c) WHERE rk = 1),
-        |m1 AS (SELECT cent_id, CAST(p.pos AS INT) AS pos,
-        |  CAST(sum(CAST(round(vv[CAST(p.pos AS INT)+1]*1e6) AS BIGINT)) AS DOUBLE)/1e6/count(*) AS m
-        |  FROM a1 CROSS JOIN (SELECT unnest(range(64)) AS pos) p
-        |  GROUP BY cent_id, p.pos),
-        |c1 AS (SELECT cent_id, list(m ORDER BY pos) AS cv FROM m1 GROUP BY cent_id),
-        |a2 AS (SELECT id, vv, cent_id FROM (
-        |  SELECT v.id, v.vv, c.cent_id,
-        |  row_number() OVER (PARTITION BY v.id ORDER BY
-        |    round(list_dot_product(v.vv, c.cv)
-        |     /(sqrt(list_dot_product(v.vv, v.vv))*sqrt(list_dot_product(c.cv, c.cv))), 6)
-        |    DESC, c.cent_id) AS rk
-        |  FROM v CROSS JOIN c1 c) WHERE rk = 1),
-        |m2 AS (SELECT cent_id, CAST(p.pos AS INT) AS pos,
-        |  CAST(sum(CAST(round(vv[CAST(p.pos AS INT)+1]*1e6) AS BIGINT)) AS DOUBLE)/1e6/count(*) AS m
-        |  FROM a2 CROSS JOIN (SELECT unnest(range(64)) AS pos) p
-        |  GROUP BY cent_id, p.pos),
-        |c2 AS (SELECT cent_id, list(m ORDER BY pos) AS cv FROM m2 GROUP BY cent_id),
-        |a3 AS (SELECT id, cent_id FROM (
-        |  SELECT v.id, c.cent_id,
-        |  row_number() OVER (PARTITION BY v.id ORDER BY
-        |    round(list_dot_product(v.vv, c.cv)
-        |     /(sqrt(list_dot_product(v.vv, v.vv))*sqrt(list_dot_product(c.cv, c.cv))), 6)
-        |    DESC, c.cent_id) AS rk
-        |  FROM v CROSS JOIN c2 c) WHERE rk = 1),
-        |bc AS (SELECT a3.cent_id, e.label,
-        |  CAST(count(*) AS BIGINT) AS c
-        |  FROM a3 JOIN embeddings e ON e.vec_id = a3.id GROUP BY 1, 2),
-        |sz AS (SELECT cent_id, CAST(sum(c) AS BIGINT) AS n_members
-        |  FROM bc GROUP BY 1)
-        |SELECT t.cent_id, sz.n_members, t.label AS top_label,
-        |t.c AS top_n,
-        |CAST(t.c * 10000 // sz.n_members AS BIGINT) AS purity_bp
-        |FROM (SELECT *, row_number() OVER (PARTITION BY cent_id
-        |  ORDER BY c DESC, label) AS rn FROM bc) t
-        |JOIN sz USING (cent_id)
-        |WHERE t.rn = 1 ORDER BY t.cent_id""".stripMargin,
+      s"""$KMEANS_FIT2_CTES,
+         |c2 AS (SELECT cent_id, list(m ORDER BY pos) AS cv FROM m2 GROUP BY cent_id),
+         |a3 AS (SELECT id, cent_id FROM (
+         |  SELECT v.id, c.cent_id,
+         |  row_number() OVER (PARTITION BY v.id ORDER BY
+         |    round(list_dot_product(v.vv, c.cv)
+         |     /(sqrt(list_dot_product(v.vv, v.vv))*sqrt(list_dot_product(c.cv, c.cv))), 6)
+         |    DESC, c.cent_id) AS rk
+         |  FROM v CROSS JOIN c2 c) WHERE rk = 1),
+         |bc AS (SELECT a3.cent_id, e.label,
+         |  CAST(count(*) AS BIGINT) AS c
+         |  FROM a3 JOIN embeddings e ON e.vec_id = a3.id GROUP BY 1, 2),
+         |sz AS (SELECT cent_id, CAST(sum(c) AS BIGINT) AS n_members
+         |  FROM bc GROUP BY 1)
+         |SELECT t.cent_id, sz.n_members, t.label AS top_label,
+         |t.c AS top_n,
+         |CAST(t.c * 10000 // sz.n_members AS BIGINT) AS purity_bp
+         |FROM (SELECT *, row_number() OVER (PARTITION BY cent_id
+         |  ORDER BY c DESC, label) AS rn FROM bc) t
+         |JOIN sz USING (cent_id)
+         |WHERE t.rn = 1 ORDER BY t.cent_id""".stripMargin,
 
     // q197: exact integer cross-ratio index; DuckDB dayofweek is
     // 0-based Sunday, Spark's is 1-based — aligned with +1.
@@ -2666,25 +2878,22 @@ object Oracles {
     // q198: every sum exact; ONE rounded double division (numerator
     // is G·n·S-sized, within long range).
     "q198_gini_concentration" ->
-      """WITH pc AS (SELECT o_custkey,
-        |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-        |    AS BIGINT) AS x
-        |  FROM orders GROUP BY 1),
-        |sg AS (SELECT pc.o_custkey, pc.x,
-        |  c.c_mktsegment AS segment FROM pc
-        |  JOIN customer c ON c.c_custkey = pc.o_custkey),
-        |rk AS (SELECT segment, x,
-        |  CAST(row_number() OVER (PARTITION BY segment
-        |    ORDER BY x, o_custkey) AS BIGINT) AS i FROM sg),
-        |ag AS (SELECT segment, CAST(count(*) AS BIGINT) AS n_customers,
-        |  CAST(sum(x) AS BIGINT) AS s,
-        |  sum(i * x) AS six FROM rk GROUP BY 1)
-        |SELECT segment, n_customers,
-        |CAST(s AS DOUBLE) / 100.0 AS revenue,
-        |CAST(round(1e6 * (2 * six
-        |  - (n_customers + 1) * CAST(s AS HUGEINT))
-        |  / (CAST(n_customers AS DOUBLE) * s)) AS BIGINT) AS gini_1e6
-        |FROM ag ORDER BY segment""".stripMargin,
+      s"""WITH $CUSTOMER_SPEND_CTE,
+         |sg AS (SELECT pc.o_custkey, pc.x,
+         |  c.c_mktsegment AS segment FROM pc
+         |  JOIN customer c ON c.c_custkey = pc.o_custkey),
+         |rk AS (SELECT segment, x,
+         |  CAST(row_number() OVER (PARTITION BY segment
+         |    ORDER BY x, o_custkey) AS BIGINT) AS i FROM sg),
+         |ag AS (SELECT segment, CAST(count(*) AS BIGINT) AS n_customers,
+         |  CAST(sum(x) AS BIGINT) AS s,
+         |  sum(i * x) AS six FROM rk GROUP BY 1)
+         |SELECT segment, n_customers,
+         |CAST(s AS DOUBLE) / 100.0 AS revenue,
+         |CAST(round(1e6 * (2 * six
+         |  - (n_customers + 1) * CAST(s AS HUGEINT))
+         |  / (CAST(n_customers AS DOUBLE) * s)) AS BIGINT) AS gini_1e6
+         |FROM ag ORDER BY segment""".stripMargin,
 
     // q199: one wide moment aggregation; each r is one rounded
     // double expression with casts BEFORE the large products
@@ -2748,21 +2957,7 @@ object Oracles {
          |  WHERE p.doc_id % 50 <> 0)),
          |ntr AS (SELECT CAST(count(*) AS BIGINT) AS n_train
          |  FROM documents WHERE doc_id % 50 <> 0),
-         |sig AS (SELECT doc_id, sh, n_sh,
-         |  list_transform(range(0, 8), s -> list_aggregate(
-         |    list_transform(sh, x -> md5(CAST(s AS VARCHAR) || '|' || x)), 'min')) AS sig
-         |FROM ss),
-         |banded AS (SELECT s.doc_id, t.b AS band,
-         |  md5(array_to_string(s.sig[t.b*2+1:t.b*2+2], '#')) AS bucket
-         |FROM sig s CROSS JOIN (SELECT unnest(range(4)) AS b) t),
-         |lc AS (SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
-         |FROM banded l JOIN banded r ON l.band = r.band
-         |  AND l.bucket = r.bucket AND l.doc_id < r.doc_id),
-         |lp AS (SELECT c.id_a, c.id_b FROM lc c
-         |  JOIN ss a ON c.id_a = a.doc_id JOIN ss b ON c.id_b = b.doc_id
-         |  WHERE round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-         |    / (a.n_sh + b.n_sh - len(list_intersect(a.sh, b.sh))), 4)
-         |    >= 0.2),
+         |${lshPairCtes("")},
          |inv AS (SELECT CAST(count(*) AS BIGINT) AS n_inv FROM (
          |  SELECT DISTINCT u FROM (SELECT unnest([id_a, id_b]) AS u
          |    FROM lp))),
@@ -2848,32 +3043,29 @@ object Oracles {
     // q203: deciles by integer cross-multiplication; shares from
     // running integer sums.
     "q203_lorenz_deciles" ->
-      """WITH pc AS (SELECT o_custkey,
-        |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-        |    AS BIGINT) AS x
-        |  FROM orders GROUP BY 1),
-        |sg AS (SELECT pc.o_custkey, pc.x, c.c_mktsegment AS segment
-        |  FROM pc JOIN customer c ON c.c_custkey = pc.o_custkey),
-        |rk AS (SELECT segment, x,
-        |  CAST(row_number() OVER (PARTITION BY segment
-        |    ORDER BY x, o_custkey) AS BIGINT) AS i,
-        |  CAST(count(*) OVER (PARTITION BY segment) AS BIGINT) AS n,
-        |  CAST(sum(x) OVER (PARTITION BY segment) AS BIGINT) AS s
-        |  FROM sg),
-        |dc AS (SELECT segment, (10 * i + n - 1) // n AS decile,
-        |  x, s FROM rk),
-        |ag AS (SELECT segment, decile,
-        |  CAST(count(*) AS BIGINT) AS n_customers,
-        |  CAST(sum(x) AS BIGINT) AS dx, CAST(max(s) AS BIGINT) AS s
-        |  FROM dc GROUP BY 1, 2),
-        |cm AS (SELECT *, CAST(sum(dx) OVER (PARTITION BY segment
-        |  ORDER BY decile ROWS UNBOUNDED PRECEDING) AS BIGINT)
-        |  AS cum_x FROM ag)
-        |SELECT segment, CAST(decile AS BIGINT) AS decile, n_customers,
-        |CAST(CAST(dx AS HUGEINT) * 10000 // s AS BIGINT) AS share_bp,
-        |CAST(CAST(cum_x AS HUGEINT) * 10000 // s AS BIGINT)
-        |  AS cum_share_bp
-        |FROM cm ORDER BY segment, decile""".stripMargin,
+      s"""WITH $CUSTOMER_SPEND_CTE,
+         |sg AS (SELECT pc.o_custkey, pc.x, c.c_mktsegment AS segment
+         |  FROM pc JOIN customer c ON c.c_custkey = pc.o_custkey),
+         |rk AS (SELECT segment, x,
+         |  CAST(row_number() OVER (PARTITION BY segment
+         |    ORDER BY x, o_custkey) AS BIGINT) AS i,
+         |  CAST(count(*) OVER (PARTITION BY segment) AS BIGINT) AS n,
+         |  CAST(sum(x) OVER (PARTITION BY segment) AS BIGINT) AS s
+         |  FROM sg),
+         |dc AS (SELECT segment, (10 * i + n - 1) // n AS decile,
+         |  x, s FROM rk),
+         |ag AS (SELECT segment, decile,
+         |  CAST(count(*) AS BIGINT) AS n_customers,
+         |  CAST(sum(x) AS BIGINT) AS dx, CAST(max(s) AS BIGINT) AS s
+         |  FROM dc GROUP BY 1, 2),
+         |cm AS (SELECT *, CAST(sum(dx) OVER (PARTITION BY segment
+         |  ORDER BY decile ROWS UNBOUNDED PRECEDING) AS BIGINT)
+         |  AS cum_x FROM ag)
+         |SELECT segment, CAST(decile AS BIGINT) AS decile, n_customers,
+         |CAST(CAST(dx AS HUGEINT) * 10000 // s AS BIGINT) AS share_bp,
+         |CAST(CAST(cum_x AS HUGEINT) * 10000 // s AS BIGINT)
+         |  AS cum_share_bp
+         |FROM cm ORDER BY segment, decile""".stripMargin,
 
     // q204: VMR exact in integers; zeros handled in closed form.
     // sc2 stays HUGEINT (no BIGINT cast) mirroring the Spark side's
@@ -2900,30 +3092,24 @@ object Oracles {
 
     // q205: q31's sessionization; nearest-rank dwell bands per type.
     "q205_dwell_bands" ->
-      """WITH g AS (SELECT user_id, ts, event_id, event_type,
-        |CASE WHEN lag(ts) OVER w IS NULL
-        |  OR date_diff('second', lag(ts) OVER w, ts) > 1800
-        |  THEN 1 ELSE 0 END AS new_session
-        |FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |s AS (SELECT user_id, ts, event_id, event_type,
-        |sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |  ROWS UNBOUNDED PRECEDING) AS sid FROM g),
-        |dw AS (SELECT event_type,
-        |  CAST(floor(epoch(lead(ts, 1) OVER sw)) AS BIGINT)
-        |    - CAST(floor(epoch(ts)) AS BIGINT) AS v,
-        |  lead(ts, 1) OVER sw AS nxt
-        |FROM s WINDOW sw AS (PARTITION BY user_id, sid
-        |  ORDER BY ts, event_id)),
-        |d2 AS (SELECT event_type, v FROM dw WHERE nxt IS NOT NULL),
-        |r AS (SELECT event_type, v,
-        |  row_number() OVER (PARTITION BY event_type ORDER BY v) AS rk,
-        |  count(*) OVER (PARTITION BY event_type) AS n FROM d2)
-        |SELECT event_type, CAST(max(n) AS BIGINT) AS n_dwells,
-        |CAST(max(CASE WHEN rk = (50 * n + 99) // 100 THEN v END)
-        |  AS BIGINT) AS p50_sec,
-        |CAST(max(CASE WHEN rk = (90 * n + 99) // 100 THEN v END)
-        |  AS BIGINT) AS p90_sec
-        |FROM r GROUP BY 1 ORDER BY event_type""".stripMargin,
+      s"""WITH ${sessionCtes("user_id, ts, event_id, event_type,",
+           "user_id, ts, event_id, event_type,")},
+         |dw AS (SELECT event_type,
+         |  CAST(floor(epoch(lead(ts, 1) OVER sw)) AS BIGINT)
+         |    - CAST(floor(epoch(ts)) AS BIGINT) AS v,
+         |  lead(ts, 1) OVER sw AS nxt
+         |FROM s WINDOW sw AS (PARTITION BY user_id, sid
+         |  ORDER BY ts, event_id)),
+         |d2 AS (SELECT event_type, v FROM dw WHERE nxt IS NOT NULL),
+         |r AS (SELECT event_type, v,
+         |  row_number() OVER (PARTITION BY event_type ORDER BY v) AS rk,
+         |  count(*) OVER (PARTITION BY event_type) AS n FROM d2)
+         |SELECT event_type, CAST(max(n) AS BIGINT) AS n_dwells,
+         |CAST(max(CASE WHEN rk = (50 * n + 99) // 100 THEN v END)
+         |  AS BIGINT) AS p50_sec,
+         |CAST(max(CASE WHEN rk = (90 * n + 99) // 100 THEN v END)
+         |  AS BIGINT) AS p90_sec
+         |FROM r GROUP BY 1 ORDER BY event_type""".stripMargin,
 
     // q206: the oracle is the literal all-pairs edit-distance join
     // over the (vocabulary-bounded) frequent-term frame — a green row
@@ -2942,33 +3128,22 @@ object Oracles {
     // q207: sweep-line peak concurrency; the oracle's single global
     // running sum must equal the engine's two-phase prefix sum.
     "q207_peak_concurrency" ->
-      """WITH g AS (SELECT user_id, ts, event_id,
-        |CASE WHEN lag(ts) OVER w IS NULL
-        |  OR date_diff('second', lag(ts) OVER w, ts) > 1800
-        |  THEN 1 ELSE 0 END AS new_session
-        |FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |s AS (SELECT user_id, ts,
-        |sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |  ROWS UNBOUNDED PRECEDING) AS sid FROM g),
-        |sess AS (SELECT user_id, sid,
-        |  CAST(min(floor(epoch(ts))) AS BIGINT) AS st,
-        |  CAST(max(floor(epoch(ts))) AS BIGINT) AS en
-        |  FROM s GROUP BY 1, 2),
-        |d AS (SELECT t, CAST(sum(delta) AS BIGINT) AS net FROM (
-        |  SELECT st AS t, 1 AS delta FROM sess
-        |  UNION ALL SELECT en + 1, -1 FROM sess) GROUP BY t),
-        |r AS (SELECT t, t // 86400 AS dday,
-        |  sum(net) OVER (ORDER BY t ROWS UNBOUNDED PRECEDING) AS conc
-        |  FROM d),
-        |p AS (SELECT dday, t, conc,
-        |  row_number() OVER (PARTITION BY dday ORDER BY conc DESC, t)
-        |    AS rn FROM r)
-        |SELECT strftime(make_timestamp(dday * 86400 * 1000000),
-        |  '%Y-%m-%d') AS day,
-        |CAST(conc AS BIGINT) AS peak_concurrency,
-        |strftime(make_timestamp(t * 1000000), '%Y-%m-%d %H:%M:%S')
-        |  AS peak_at
-        |FROM p WHERE rn = 1 ORDER BY day""".stripMargin,
+      s"""WITH $SESSION_SPAN_CTES,
+         |d AS (SELECT t, CAST(sum(delta) AS BIGINT) AS net FROM (
+         |  SELECT st AS t, 1 AS delta FROM sess
+         |  UNION ALL SELECT en + 1, -1 FROM sess) GROUP BY t),
+         |r AS (SELECT t, t // 86400 AS dday,
+         |  sum(net) OVER (ORDER BY t ROWS UNBOUNDED PRECEDING) AS conc
+         |  FROM d),
+         |p AS (SELECT dday, t, conc,
+         |  row_number() OVER (PARTITION BY dday ORDER BY conc DESC, t)
+         |    AS rn FROM r)
+         |SELECT strftime(make_timestamp(dday * 86400 * 1000000),
+         |  '%Y-%m-%d') AS day,
+         |CAST(conc AS BIGINT) AS peak_concurrency,
+         |strftime(make_timestamp(t * 1000000), '%Y-%m-%d %H:%M:%S')
+         |  AS peak_at
+         |FROM p WHERE rn = 1 ORDER BY day""".stripMargin,
 
     // q208: keyed full-outer snapshot diff on md5 content digests.
     "q208_snapshot_diff" ->
@@ -2992,36 +3167,25 @@ object Oracles {
     // a green row proves the engine's bin equi-join decomposition
     // is exactly the overlap semantics.
     "q209_incident_impact" ->
-      """WITH eb AS (SELECT CAST(floor(epoch(ts)) AS BIGINT) // 600
-        |    AS bin, CAST(count(*) AS BIGINT) AS n_errors
-        |  FROM events WHERE event_type = 'error' GROUP BY 1),
-        |tt AS (SELECT max(CASE WHEN rk = (95 * n + 99) // 100
-        |    THEN greatest(n_errors, 2) END) AS t FROM (
-        |  SELECT n_errors, bin,
-        |    row_number() OVER (ORDER BY n_errors, bin) AS rk,
-        |    count(*) OVER () AS n FROM eb)),
-        |inc AS (SELECT bin, n_errors FROM eb CROSS JOIN tt
-        |  WHERE n_errors >= t),
-        |g AS (SELECT user_id, ts, event_id,
-        |CASE WHEN lag(ts) OVER w IS NULL
-        |  OR date_diff('second', lag(ts) OVER w, ts) > 1800
-        |  THEN 1 ELSE 0 END AS new_session
-        |FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |s AS (SELECT user_id, ts,
-        |sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |  ROWS UNBOUNDED PRECEDING) AS sid FROM g),
-        |sess AS (SELECT user_id, sid,
-        |  CAST(min(floor(epoch(ts))) AS BIGINT) AS st,
-        |  CAST(max(floor(epoch(ts))) AS BIGINT) AS en
-        |  FROM s GROUP BY 1, 2),
-        |j AS (SELECT i.bin, i.n_errors, se.user_id FROM inc i
-        |  JOIN sess se ON se.st < (i.bin + 1) * 600
-        |    AND se.en >= i.bin * 600)
-        |SELECT strftime(make_timestamp(bin * 600 * 1000000),
-        |  '%Y-%m-%d %H:%M:%S') AS incident_start, n_errors,
-        |CAST(count(*) AS BIGINT) AS n_sessions,
-        |CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
-        |FROM j GROUP BY 1, 2 ORDER BY incident_start""".stripMargin,
+      s"""WITH eb AS (SELECT CAST(floor(epoch(ts)) AS BIGINT) // 600
+         |    AS bin, CAST(count(*) AS BIGINT) AS n_errors
+         |  FROM events WHERE event_type = 'error' GROUP BY 1),
+         |tt AS (SELECT max(CASE WHEN rk = (95 * n + 99) // 100
+         |    THEN greatest(n_errors, 2) END) AS t FROM (
+         |  SELECT n_errors, bin,
+         |    row_number() OVER (ORDER BY n_errors, bin) AS rk,
+         |    count(*) OVER () AS n FROM eb)),
+         |inc AS (SELECT bin, n_errors FROM eb CROSS JOIN tt
+         |  WHERE n_errors >= t),
+         |$SESSION_SPAN_CTES,
+         |j AS (SELECT i.bin, i.n_errors, se.user_id FROM inc i
+         |  JOIN sess se ON se.st < (i.bin + 1) * 600
+         |    AND se.en >= i.bin * 600)
+         |SELECT strftime(make_timestamp(bin * 600 * 1000000),
+         |  '%Y-%m-%d %H:%M:%S') AS incident_start, n_errors,
+         |CAST(count(*) AS BIGINT) AS n_sessions,
+         |CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
+         |FROM j GROUP BY 1, 2 ORDER BY incident_start""".stripMargin,
 
     // q210: exact weighted nearest-rank in integers over the q95
     // quality formula; ONE source-partitioned sort serves both cuts.
@@ -3081,32 +3245,7 @@ object Oracles {
     // vec_id 1..5), fused on the 1e12 integer reciprocal grid — the
     // rrf sum is BIGINT arithmetic in both engines.
     "q212_hybrid_fusion" ->
-      s"""WITH toks AS (SELECT doc_id, unnest($TOKS) AS term FROM documents),
-         |post AS (SELECT term, doc_id, count(*) AS tf
-         |  FROM toks GROUP BY 1, 2),
-         |dft AS (SELECT term, count(*) AS df FROM post GROUP BY 1),
-         |lens AS (SELECT doc_id, count(*) AS len FROM toks GROUP BY 1),
-         |stats AS (SELECT count(*) AS n_docs,
-         |  CAST(sum(len) AS BIGINT) AS total_len FROM lens),
-         |qs AS (SELECT * FROM (VALUES (1, 'hash join'),
-         |  (2, 'window agg sort'), (3, 'spark stream batch'),
-         |  (4, 'vector query'), (5, 'slow scan filter'))
-         |  AS t(query_id, qtext)),
-         |qt AS (SELECT query_id, unnest(list_filter(
-         |  string_split_regex(lower(trim(qtext)), '\\s+'),
-         |  x -> length(x) > 0)) AS term FROM qs),
-         |sc AS (SELECT q.query_id, p.doc_id,
-         |  ln(1.0e0 + (s.n_docs - d.df + 0.5e0) / (d.df + 0.5e0)) AS idf,
-         |  p.tf * 2.2e0 / (p.tf + 1.2e0 * (0.25e0
-         |    + 0.75e0 * l.len * s.n_docs / s.total_len)) AS sat
-         |  FROM post p JOIN qt q ON q.term = p.term
-         |  JOIN dft d ON d.term = p.term
-         |  JOIN lens l ON l.doc_id = p.doc_id
-         |  CROSS JOIN stats s),
-         |agg AS (SELECT query_id, doc_id,
-         |  CAST(sum(CAST(round(idf * sat * 1000000.0e0) AS BIGINT))
-         |    AS BIGINT) AS score_fp
-         |  FROM sc GROUP BY 1, 2),
+      s"""$BM25_CTES,
          |lex AS (SELECT CAST(query_id AS BIGINT) AS query_id, doc_id,
          |  lex_rank FROM (SELECT query_id, doc_id, row_number() OVER (
          |    PARTITION BY query_id ORDER BY score_fp DESC, doc_id)
@@ -3163,41 +3302,38 @@ object Oracles {
     // division of exact longs (or a min/max passthrough), so the
     // doubles hash-match
     "q215_constraint_suite" ->
-      """WITH s AS (SELECT source,
-        |  CAST(count(text) AS BIGINT) AS c0n, CAST(count(*) AS BIGINT) AS c0d,
-        |  CAST(count(DISTINCT doc_id) AS BIGINT) AS c1n,
-        |  CAST(count(doc_id) AS BIGINT) AS c1d,
-        |  CAST(min(n_chars) AS DOUBLE) AS c2m,
-        |  CAST(max(n_chars) AS DOUBLE) AS c3m,
-        |  CAST(sum(CASE WHEN regexp_matches(lang, '^(en|de|fr|es)$')
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS c4n,
-        |  CAST(count(*) AS BIGINT) AS c4d,
-        |  CAST(sum(CASE WHEN lang IN ('en','de','fr','es','zh')
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS c5n,
-        |  CAST(count(*) AS BIGINT) AS c5d
-        |  FROM documents GROUP BY source)
-        |SELECT source, constraint_type, column_name, metric, threshold,
-        |  CASE WHEN op = '>=' THEN metric >= threshold
-        |    ELSE metric <= threshold END AS passed
-        |FROM (
-        |  SELECT source, 'completeness' AS constraint_type,
-        |    'text' AS column_name,
-        |    CAST(c0n AS DOUBLE)/CAST(c0d AS DOUBLE) AS metric,
-        |    CAST(0.99 AS DOUBLE) AS threshold, '>=' AS op FROM s
-        |  UNION ALL SELECT source, 'unique_ratio', 'doc_id',
-        |    CAST(c1n AS DOUBLE)/CAST(c1d AS DOUBLE),
-        |    CAST(1.0 AS DOUBLE), '>=' FROM s
-        |  UNION ALL SELECT source, 'min_bound', 'n_chars', c2m,
-        |    CAST(40.0 AS DOUBLE), '>=' FROM s
-        |  UNION ALL SELECT source, 'max_bound', 'n_chars', c3m,
-        |    CAST(500.0 AS DOUBLE), '<=' FROM s
-        |  UNION ALL SELECT source, 'match_ratio', 'lang',
-        |    CAST(c4n AS DOUBLE)/CAST(c4d AS DOUBLE),
-        |    CAST(0.9 AS DOUBLE), '>=' FROM s
-        |  UNION ALL SELECT source, 'in_set_ratio', 'lang',
-        |    CAST(c5n AS DOUBLE)/CAST(c5d AS DOUBLE),
-        |    CAST(1.0 AS DOUBLE), '>=' FROM s)
-        |ORDER BY source, constraint_type, column_name""".stripMargin,
+      s"""WITH s AS (SELECT source,
+         |  CAST(count(text) AS BIGINT) AS c0n, CAST(count(*) AS BIGINT) AS c0d,
+         |  CAST(count(DISTINCT doc_id) AS BIGINT) AS c1n,
+         |  CAST(count(doc_id) AS BIGINT) AS c1d,
+         |  CAST(min(n_chars) AS DOUBLE) AS c2m,
+         |  CAST(max(n_chars) AS DOUBLE) AS c3m,
+         |  CAST(sum(CASE WHEN regexp_matches(lang, '^(en|de|fr|es)$$')
+         |    THEN 1 ELSE 0 END) AS BIGINT) AS c4n,
+         |  CAST(count(*) AS BIGINT) AS c4d,
+         |  CAST(sum(CASE WHEN lang IN ('en','de','fr','es','zh')
+         |    THEN 1 ELSE 0 END) AS BIGINT) AS c5n,
+         |  CAST(count(*) AS BIGINT) AS c5d
+         |  FROM documents GROUP BY source)
+         |${verdictHead("source")}
+         |  SELECT source, 'completeness' AS constraint_type,
+         |    'text' AS column_name,
+         |    CAST(c0n AS DOUBLE)/CAST(c0d AS DOUBLE) AS metric,
+         |    CAST(0.99 AS DOUBLE) AS threshold, '>=' AS op FROM s
+         |  UNION ALL SELECT source, 'unique_ratio', 'doc_id',
+         |    CAST(c1n AS DOUBLE)/CAST(c1d AS DOUBLE),
+         |    CAST(1.0 AS DOUBLE), '>=' FROM s
+         |  UNION ALL SELECT source, 'min_bound', 'n_chars', c2m,
+         |    CAST(40.0 AS DOUBLE), '>=' FROM s
+         |  UNION ALL SELECT source, 'max_bound', 'n_chars', c3m,
+         |    CAST(500.0 AS DOUBLE), '<=' FROM s
+         |  UNION ALL SELECT source, 'match_ratio', 'lang',
+         |    CAST(c4n AS DOUBLE)/CAST(c4d AS DOUBLE),
+         |    CAST(0.9 AS DOUBLE), '>=' FROM s
+         |  UNION ALL SELECT source, 'in_set_ratio', 'lang',
+         |    CAST(c5n AS DOUBLE)/CAST(c5d AS DOUBLE),
+         |    CAST(1.0 AS DOUBLE), '>=' FROM s)
+         |ORDER BY source, constraint_type, column_name""".stripMargin,
 
     // q216: equivalence classes on the quasi-identifier pair, then
     // the class-size histogram with k/l exposure
@@ -3247,50 +3383,46 @@ object Oracles {
     // half; thresholds are single divisions of exact longs on both
     // engines, so even the derived doubles hash-match
     "q219_suite_drift" ->
-      """WITH v1 AS (SELECT * FROM documents WHERE doc_id % 2 = 0),
-        |v2 AS (SELECT * FROM documents WHERE doc_id % 2 = 1),
-        |b AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |  CAST(count(text) AS BIGINT) AS c_text,
-        |  CAST(count(DISTINCT doc_id) AS BIGINT) AS ud,
-        |  CAST(count(doc_id) AS BIGINT) AS un,
-        |  CAST(min(n_chars) AS DOUBLE) AS lo,
-        |  CAST(max(n_chars) AS DOUBLE) AS hi FROM v1),
-        |top3 AS (SELECT lang, CAST(count(*) AS BIGINT) AS cnt FROM v1
-        |  WHERE lang IS NOT NULL GROUP BY lang
-        |  ORDER BY cnt DESC, lang ASC LIMIT 3),
-        |bs AS (SELECT CAST(sum(cnt) AS BIGINT) AS in_mass FROM top3),
-        |s AS (SELECT source,
-        |  CAST(count(text) AS BIGINT) AS c0n,
-        |  CAST(count(*) AS BIGINT) AS c0d,
-        |  CAST(count(DISTINCT doc_id) AS BIGINT) AS c1n,
-        |  CAST(count(doc_id) AS BIGINT) AS c1d,
-        |  CAST(min(n_chars) AS DOUBLE) AS mn,
-        |  CAST(max(n_chars) AS DOUBLE) AS mx,
-        |  CAST(sum(CASE WHEN lang IN (SELECT lang FROM top3)
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS c4n,
-        |  CAST(count(*) AS BIGINT) AS c4d
-        |  FROM v2 GROUP BY source)
-        |SELECT source, constraint_type, column_name, metric, threshold,
-        |  CASE WHEN op = '>=' THEN metric >= threshold
-        |    ELSE metric <= threshold END AS passed
-        |FROM (
-        |  SELECT s.source, 'completeness' AS constraint_type,
-        |    'text' AS column_name,
-        |    CAST(c0n AS DOUBLE)/CAST(c0d AS DOUBLE) AS metric,
-        |    CAST(b.c_text AS DOUBLE)/CAST(b.n AS DOUBLE) AS threshold,
-        |    '>=' AS op FROM s, b
-        |  UNION ALL SELECT s.source, 'unique_ratio', 'doc_id',
-        |    CAST(c1n AS DOUBLE)/CAST(c1d AS DOUBLE),
-        |    CAST(b.ud AS DOUBLE)/CAST(b.un AS DOUBLE), '>=' FROM s, b
-        |  UNION ALL SELECT s.source, 'min_bound', 'n_chars', mn,
-        |    b.lo, '>=' FROM s, b
-        |  UNION ALL SELECT s.source, 'max_bound', 'n_chars', mx,
-        |    b.hi, '<=' FROM s, b
-        |  UNION ALL SELECT s.source, 'in_set_ratio', 'lang',
-        |    CAST(c4n AS DOUBLE)/CAST(c4d AS DOUBLE),
-        |    CAST(bs.in_mass AS DOUBLE)/CAST(b.n AS DOUBLE), '>='
-        |    FROM s, b, bs)
-        |ORDER BY source, constraint_type, column_name""".stripMargin,
+      s"""WITH $DOC_HALVES,
+         |b AS (SELECT CAST(count(*) AS BIGINT) AS n,
+         |  CAST(count(text) AS BIGINT) AS c_text,
+         |  CAST(count(DISTINCT doc_id) AS BIGINT) AS ud,
+         |  CAST(count(doc_id) AS BIGINT) AS un,
+         |  CAST(min(n_chars) AS DOUBLE) AS lo,
+         |  CAST(max(n_chars) AS DOUBLE) AS hi FROM v1),
+         |top3 AS (SELECT lang, CAST(count(*) AS BIGINT) AS cnt FROM v1
+         |  WHERE lang IS NOT NULL GROUP BY lang
+         |  ORDER BY cnt DESC, lang ASC LIMIT 3),
+         |bs AS (SELECT CAST(sum(cnt) AS BIGINT) AS in_mass FROM top3),
+         |s AS (SELECT source,
+         |  CAST(count(text) AS BIGINT) AS c0n,
+         |  CAST(count(*) AS BIGINT) AS c0d,
+         |  CAST(count(DISTINCT doc_id) AS BIGINT) AS c1n,
+         |  CAST(count(doc_id) AS BIGINT) AS c1d,
+         |  CAST(min(n_chars) AS DOUBLE) AS mn,
+         |  CAST(max(n_chars) AS DOUBLE) AS mx,
+         |  CAST(sum(CASE WHEN lang IN (SELECT lang FROM top3)
+         |    THEN 1 ELSE 0 END) AS BIGINT) AS c4n,
+         |  CAST(count(*) AS BIGINT) AS c4d
+         |  FROM v2 GROUP BY source)
+         |${verdictHead("source")}
+         |  SELECT s.source, 'completeness' AS constraint_type,
+         |    'text' AS column_name,
+         |    CAST(c0n AS DOUBLE)/CAST(c0d AS DOUBLE) AS metric,
+         |    CAST(b.c_text AS DOUBLE)/CAST(b.n AS DOUBLE) AS threshold,
+         |    '>=' AS op FROM s, b
+         |  UNION ALL SELECT s.source, 'unique_ratio', 'doc_id',
+         |    CAST(c1n AS DOUBLE)/CAST(c1d AS DOUBLE),
+         |    CAST(b.ud AS DOUBLE)/CAST(b.un AS DOUBLE), '>=' FROM s, b
+         |  UNION ALL SELECT s.source, 'min_bound', 'n_chars', mn,
+         |    b.lo, '>=' FROM s, b
+         |  UNION ALL SELECT s.source, 'max_bound', 'n_chars', mx,
+         |    b.hi, '<=' FROM s, b
+         |  UNION ALL SELECT s.source, 'in_set_ratio', 'lang',
+         |    CAST(c4n AS DOUBLE)/CAST(c4d AS DOUBLE),
+         |    CAST(bs.in_mass AS DOUBLE)/CAST(b.n AS DOUBLE), '>='
+         |    FROM s, b, bs)
+         |ORDER BY source, constraint_type, column_name""".stripMargin,
 
     // q217: suppress classes below k, report BOTH sides per segment
     // (totals left-joined with the survivor rollup, integer cents)
@@ -3325,78 +3457,35 @@ object Oracles {
     // branch; the hash match vs Spark's two-batch register-max merge
     // proves merge ≡ rebuild inside the constraint framework
     "q220_approx_unique_monitor" ->
-      """WITH h1 AS (SELECT source,
-        |  md5('hll|' || CAST(doc_id AS VARCHAR)) AS h
-        |  FROM documents WHERE doc_id IS NOT NULL),
-        |x1 AS (SELECT source,
-        |  (strpos('0123456789abcdef', h[1]) - 1) * 16
-        |    + strpos('0123456789abcdef', h[2]) - 1 AS bucket,
-        |  substring(h, 3, 12) AS h12 FROM h1),
-        |z1 AS (SELECT source, bucket, h12,
-        |  length(regexp_extract(h12, '^(0*)', 1)) AS zc FROM x1),
-        |r1 AS (SELECT source, bucket,
-        |  CASE WHEN zc = 12 THEN 49 ELSE zc * 4
-        |    + CASE substring(h12, zc + 1, 1) WHEN '1' THEN 3
-        |      WHEN '2' THEN 2 WHEN '3' THEN 2 WHEN '4' THEN 1
-        |      WHEN '5' THEN 1 WHEN '6' THEN 1 WHEN '7' THEN 1
-        |      ELSE 0 END + 1 END AS r FROM z1),
-        |g1 AS (SELECT source, bucket, max(r) AS r FROM r1 GROUP BY 1, 2),
-        |s1 AS (SELECT source,
-        |  CAST(sum(1::BIGINT << (49 - r)) AS BIGINT) AS s_used,
-        |  count(*) AS n_buckets FROM g1 GROUP BY 1),
-        |e1 AS (SELECT source, 256 - n_buckets AS v,
-        |  0.7213e0/(1.0e0+1.079e0/256.0e0)*65536.0e0*562949953421312.0e0
-        |    / (s_used + (256 - n_buckets) * 562949953421312::BIGINT)
-        |    AS raw FROM s1),
-        |m1 AS (SELECT source, round(CASE WHEN v > 0 AND raw <= 640.0e0
-        |  THEN 256.0e0 * ln(256.0e0 / v) ELSE raw END, 2) AS est
-        |  FROM e1),
-        |h2 AS (SELECT source, md5('hll|' || lang) AS h
-        |  FROM documents WHERE lang IS NOT NULL),
-        |x2 AS (SELECT source,
-        |  (strpos('0123456789abcdef', h[1]) - 1) * 16
-        |    + strpos('0123456789abcdef', h[2]) - 1 AS bucket,
-        |  substring(h, 3, 12) AS h12 FROM h2),
-        |z2 AS (SELECT source, bucket, h12,
-        |  length(regexp_extract(h12, '^(0*)', 1)) AS zc FROM x2),
-        |r2 AS (SELECT source, bucket,
-        |  CASE WHEN zc = 12 THEN 49 ELSE zc * 4
-        |    + CASE substring(h12, zc + 1, 1) WHEN '1' THEN 3
-        |      WHEN '2' THEN 2 WHEN '3' THEN 2 WHEN '4' THEN 1
-        |      WHEN '5' THEN 1 WHEN '6' THEN 1 WHEN '7' THEN 1
-        |      ELSE 0 END + 1 END AS r FROM z2),
-        |g2 AS (SELECT source, bucket, max(r) AS r FROM r2 GROUP BY 1, 2),
-        |s2 AS (SELECT source,
-        |  CAST(sum(1::BIGINT << (49 - r)) AS BIGINT) AS s_used,
-        |  count(*) AS n_buckets FROM g2 GROUP BY 1),
-        |e2 AS (SELECT source, 256 - n_buckets AS v,
-        |  0.7213e0/(1.0e0+1.079e0/256.0e0)*65536.0e0*562949953421312.0e0
-        |    / (s_used + (256 - n_buckets) * 562949953421312::BIGINT)
-        |    AS raw FROM s2),
-        |m2 AS (SELECT source, round(CASE WHEN v > 0 AND raw <= 640.0e0
-        |  THEN 256.0e0 * ln(256.0e0 / v) ELSE raw END, 2) AS est
-        |  FROM e2),
-        |dens AS (SELECT source, CAST(count(doc_id) AS BIGINT) AS den1,
-        |  CAST(count(lang) AS BIGINT) AS den2,
-        |  CAST(count(text) AS BIGINT) AS c_text,
-        |  CAST(count(*) AS BIGINT) AS n FROM documents GROUP BY 1)
-        |SELECT source, constraint_type, column_name, metric, threshold,
-        |  CASE WHEN op = '>=' THEN metric >= threshold
-        |    ELSE metric <= threshold END AS passed
-        |FROM (
-        |  SELECT d.source, 'approx_unique_ratio' AS constraint_type,
-        |    'doc_id' AS column_name,
-        |    round(m1.est / CAST(d.den1 AS DOUBLE), 6) AS metric,
-        |    CAST(0.8 AS DOUBLE) AS threshold, '>=' AS op
-        |  FROM dens d JOIN m1 ON d.source = m1.source
-        |  UNION ALL SELECT d.source, 'approx_unique_ratio', 'lang',
-        |    round(m2.est / CAST(d.den2 AS DOUBLE), 6),
-        |    CAST(0.5 AS DOUBLE), '>='
-        |  FROM dens d JOIN m2 ON d.source = m2.source
-        |  UNION ALL SELECT source, 'completeness', 'text',
-        |    CAST(c_text AS DOUBLE)/CAST(n AS DOUBLE),
-        |    CAST(0.9 AS DOUBLE), '>=' FROM dens)
-        |ORDER BY source, column_name""".stripMargin,
+      s"""WITH h1 AS (SELECT source,
+         |  md5('hll|' || CAST(doc_id AS VARCHAR)) AS h
+         |  FROM documents WHERE doc_id IS NOT NULL),
+         |${hllRankCtes("source", "h1", "x1", "z1", "r1")},
+         |g1 AS (SELECT source, bucket, max(r) AS r FROM r1 GROUP BY 1, 2),
+         |${hllEstimateCtes(1)},
+         |h2 AS (SELECT source, md5('hll|' || lang) AS h
+         |  FROM documents WHERE lang IS NOT NULL),
+         |${hllRankCtes("source", "h2", "x2", "z2", "r2")},
+         |g2 AS (SELECT source, bucket, max(r) AS r FROM r2 GROUP BY 1, 2),
+         |${hllEstimateCtes(2)},
+         |dens AS (SELECT source, CAST(count(doc_id) AS BIGINT) AS den1,
+         |  CAST(count(lang) AS BIGINT) AS den2,
+         |  CAST(count(text) AS BIGINT) AS c_text,
+         |  CAST(count(*) AS BIGINT) AS n FROM documents GROUP BY 1)
+         |${verdictHead("source")}
+         |  SELECT d.source, 'approx_unique_ratio' AS constraint_type,
+         |    'doc_id' AS column_name,
+         |    round(m1.est / CAST(d.den1 AS DOUBLE), 6) AS metric,
+         |    CAST(0.8 AS DOUBLE) AS threshold, '>=' AS op
+         |  FROM dens d JOIN m1 ON d.source = m1.source
+         |  UNION ALL SELECT d.source, 'approx_unique_ratio', 'lang',
+         |    round(m2.est / CAST(d.den2 AS DOUBLE), 6),
+         |    CAST(0.5 AS DOUBLE), '>='
+         |  FROM dens d JOIN m2 ON d.source = m2.source
+         |  UNION ALL SELECT source, 'completeness', 'text',
+         |    CAST(c_text AS DOUBLE)/CAST(n AS DOUBLE),
+         |    CAST(0.9 AS DOUBLE), '>=' FROM dens)
+         |ORDER BY source, column_name""".stripMargin,
 
     // q221: the generalization schedule replayed — one class-stat CTE
     // per round-robin step (nation→region→*, band1000→band5000→*),
@@ -3461,170 +3550,108 @@ object Oracles {
     // (per-term round to 1e-6, integer sum), baseline-derived
     // completeness/set thresholds (the q219 pattern)
     "q222_distribution_drift" ->
-      """WITH v1 AS (SELECT * FROM documents WHERE doc_id % 2 = 0),
-        |v2 AS (SELECT * FROM documents WHERE doc_id % 2 = 1),
-        |v2d AS (SELECT source, text, lang, n_chars // 3 AS n_chars
-        |  FROM v2),
-        |b AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |  CAST(count(text) AS BIGINT) AS c_text,
-        |  CAST(count(n_chars) AS BIGINT) AS nv FROM v1),
-        |top5 AS (SELECT lang, CAST(count(*) AS BIGINT) AS cnt FROM v1
-        |  WHERE lang IS NOT NULL GROUP BY lang
-        |  ORDER BY cnt DESC, lang ASC LIMIT 5),
-        |bs AS (SELECT CAST(sum(cnt) AS BIGINT) AS in_mass FROM top5),
-        |cnts AS (SELECT CAST(n_chars AS DOUBLE) AS v,
-        |  CAST(count(*) AS BIGINT) AS cnt FROM v1
-        |  WHERE n_chars IS NOT NULL GROUP BY 1),
-        |cum AS (SELECT v, cnt,
-        |  sum(cnt) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum
-        |  FROM cnts),
-        |rk AS (SELECT i, (i * nv + 7) // 8 AS r
-        |  FROM (SELECT unnest([1, 2, 3, 4, 5, 6, 7]) AS i), b),
-        |edges AS (SELECT i, min(v) AS e FROM rk JOIN cum
-        |  ON rk.r > cum.cum - cum.cnt AND rk.r <= cum.cum GROUP BY i),
-        |spine AS (SELECT unnest(range(8)) AS bin),
-        |base8 AS (SELECT spine.bin,
-        |  CAST(coalesce(x.cb, 0) AS BIGINT) AS cb FROM spine
-        |  LEFT JOIN (SELECT (SELECT count(*) FROM edges
-        |      WHERE CAST(t.n_chars AS DOUBLE) >= e) AS bin,
-        |      CAST(count(*) AS BIGINT) AS cb
-        |    FROM v1 t WHERE n_chars IS NOT NULL GROUP BY 1) x
-        |  ON spine.bin = x.bin),
-        |cur2 AS (SELECT spine.bin,
-        |  CAST(coalesce(x.ca, 0) AS BIGINT) AS ca FROM spine
-        |  LEFT JOIN (SELECT (SELECT count(*) FROM edges
-        |      WHERE CAST(t.n_chars AS DOUBLE) >= e) AS bin,
-        |      CAST(count(*) AS BIGINT) AS ca
-        |    FROM v2 t WHERE n_chars IS NOT NULL GROUP BY 1) x
-        |  ON spine.bin = x.bin),
-        |cur3 AS (SELECT spine.bin,
-        |  CAST(coalesce(x.ca, 0) AS BIGINT) AS ca FROM spine
-        |  LEFT JOIN (SELECT (SELECT count(*) FROM edges
-        |      WHERE CAST(t.n_chars AS DOUBLE) >= e) AS bin,
-        |      CAST(count(*) AS BIGINT) AS ca
-        |    FROM v2d t WHERE n_chars IS NOT NULL GROUP BY 1) x
-        |  ON spine.bin = x.bin),
-        |s2 AS (SELECT CAST(count(n_chars) AS BIGINT) AS na,
-        |  CAST(count(text) AS BIGINT) AS ct,
-        |  CAST(count(*) AS BIGINT) AS nn,
-        |  CAST(sum(CASE WHEN lang IN (SELECT lang FROM top5)
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS iset FROM v2),
-        |s3 AS (SELECT CAST(count(n_chars) AS BIGINT) AS na,
-        |  CAST(count(text) AS BIGINT) AS ct,
-        |  CAST(count(*) AS BIGINT) AS nn,
-        |  CAST(sum(CASE WHEN lang IN (SELECT lang FROM top5)
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS iset FROM v2d),
-        |psi2 AS (SELECT CAST(sum(CAST(round(1e6 *
-        |  ((ca + 1) / (na + 8) - (cb + 1) / (nv + 8))
-        |  * ln(((ca + 1) * CAST(nv + 8 AS DOUBLE))
-        |    / ((cb + 1) * CAST(na + 8 AS DOUBLE))))
-        |  AS BIGINT)) AS DOUBLE) AS psi
-        |  FROM cur2 JOIN base8 USING (bin), s2, b),
-        |psi3 AS (SELECT CAST(sum(CAST(round(1e6 *
-        |  ((ca + 1) / (na + 8) - (cb + 1) / (nv + 8))
-        |  * ln(((ca + 1) * CAST(nv + 8 AS DOUBLE))
-        |    / ((cb + 1) * CAST(na + 8 AS DOUBLE))))
-        |  AS BIGINT)) AS DOUBLE) AS psi
-        |  FROM cur3 JOIN base8 USING (bin), s3, b)
-        |SELECT version, constraint_type, column_name, metric, threshold,
-        |  CASE WHEN op = '>=' THEN metric >= threshold
-        |    ELSE metric <= threshold END AS passed
-        |FROM (
-        |  SELECT 'v2' AS version, 'completeness' AS constraint_type,
-        |    'text' AS column_name,
-        |    CAST(s2.ct AS DOUBLE)/CAST(s2.nn AS DOUBLE) AS metric,
-        |    CAST(b.c_text AS DOUBLE)/CAST(b.n AS DOUBLE) AS threshold,
-        |    '>=' AS op FROM s2, b
-        |  UNION ALL SELECT 'v2', 'in_set_ratio', 'lang',
-        |    CAST(s2.iset AS DOUBLE)/CAST(s2.nn AS DOUBLE),
-        |    CAST(bs.in_mass AS DOUBLE)/CAST(b.n AS DOUBLE), '>='
-        |    FROM s2, b, bs
-        |  UNION ALL SELECT 'v2', 'histogram_drift', 'n_chars',
-        |    psi, CAST(100000.0 AS DOUBLE), '<=' FROM psi2
-        |  UNION ALL SELECT 'v2_drifted', 'completeness', 'text',
-        |    CAST(s3.ct AS DOUBLE)/CAST(s3.nn AS DOUBLE),
-        |    CAST(b.c_text AS DOUBLE)/CAST(b.n AS DOUBLE), '>='
-        |    FROM s3, b
-        |  UNION ALL SELECT 'v2_drifted', 'in_set_ratio', 'lang',
-        |    CAST(s3.iset AS DOUBLE)/CAST(s3.nn AS DOUBLE),
-        |    CAST(bs.in_mass AS DOUBLE)/CAST(b.n AS DOUBLE), '>='
-        |    FROM s3, b, bs
-        |  UNION ALL SELECT 'v2_drifted', 'histogram_drift', 'n_chars',
-        |    psi, CAST(100000.0 AS DOUBLE), '<=' FROM psi3)
-        |ORDER BY version, constraint_type, column_name""".stripMargin,
+      s"""WITH $DRIFT_CTES,
+         |b AS (SELECT CAST(count(*) AS BIGINT) AS n,
+         |  CAST(count(text) AS BIGINT) AS c_text,
+         |  CAST(count(n_chars) AS BIGINT) AS nv FROM v1),
+         |top5 AS (SELECT lang, CAST(count(*) AS BIGINT) AS cnt FROM v1
+         |  WHERE lang IS NOT NULL GROUP BY lang
+         |  ORDER BY cnt DESC, lang ASC LIMIT 5),
+         |bs AS (SELECT CAST(sum(cnt) AS BIGINT) AS in_mass FROM top5),
+         |$HIST_EDGE_CTES,
+         |${binCountCte("base8", "cb", "v1")},
+         |${binCountCte("cur2", "ca", "v2")},
+         |${binCountCte("cur3", "ca", "v2d")},
+         |s2 AS (SELECT CAST(count(n_chars) AS BIGINT) AS na,
+         |  CAST(count(text) AS BIGINT) AS ct,
+         |  CAST(count(*) AS BIGINT) AS nn,
+         |  CAST(sum(CASE WHEN lang IN (SELECT lang FROM top5)
+         |    THEN 1 ELSE 0 END) AS BIGINT) AS iset FROM v2),
+         |s3 AS (SELECT CAST(count(n_chars) AS BIGINT) AS na,
+         |  CAST(count(text) AS BIGINT) AS ct,
+         |  CAST(count(*) AS BIGINT) AS nn,
+         |  CAST(sum(CASE WHEN lang IN (SELECT lang FROM top5)
+         |    THEN 1 ELSE 0 END) AS BIGINT) AS iset FROM v2d),
+         |psi2 AS (SELECT CAST(sum(CAST(round(1e6 *
+         |  ((ca + 1) / (na + 8) - (cb + 1) / (nv + 8))
+         |  * ln(((ca + 1) * CAST(nv + 8 AS DOUBLE))
+         |    / ((cb + 1) * CAST(na + 8 AS DOUBLE))))
+         |  AS BIGINT)) AS DOUBLE) AS psi
+         |  FROM cur2 JOIN base8 USING (bin), s2, b),
+         |psi3 AS (SELECT CAST(sum(CAST(round(1e6 *
+         |  ((ca + 1) / (na + 8) - (cb + 1) / (nv + 8))
+         |  * ln(((ca + 1) * CAST(nv + 8 AS DOUBLE))
+         |    / ((cb + 1) * CAST(na + 8 AS DOUBLE))))
+         |  AS BIGINT)) AS DOUBLE) AS psi
+         |  FROM cur3 JOIN base8 USING (bin), s3, b)
+         |${verdictHead("version")}
+         |  SELECT 'v2' AS version, 'completeness' AS constraint_type,
+         |    'text' AS column_name,
+         |    CAST(s2.ct AS DOUBLE)/CAST(s2.nn AS DOUBLE) AS metric,
+         |    CAST(b.c_text AS DOUBLE)/CAST(b.n AS DOUBLE) AS threshold,
+         |    '>=' AS op FROM s2, b
+         |  UNION ALL SELECT 'v2', 'in_set_ratio', 'lang',
+         |    CAST(s2.iset AS DOUBLE)/CAST(s2.nn AS DOUBLE),
+         |    CAST(bs.in_mass AS DOUBLE)/CAST(b.n AS DOUBLE), '>='
+         |    FROM s2, b, bs
+         |  UNION ALL SELECT 'v2', 'histogram_drift', 'n_chars',
+         |    psi, CAST(100000.0 AS DOUBLE), '<=' FROM psi2
+         |  UNION ALL SELECT 'v2_drifted', 'completeness', 'text',
+         |    CAST(s3.ct AS DOUBLE)/CAST(s3.nn AS DOUBLE),
+         |    CAST(b.c_text AS DOUBLE)/CAST(b.n AS DOUBLE), '>='
+         |    FROM s3, b
+         |  UNION ALL SELECT 'v2_drifted', 'in_set_ratio', 'lang',
+         |    CAST(s3.iset AS DOUBLE)/CAST(s3.nn AS DOUBLE),
+         |    CAST(bs.in_mass AS DOUBLE)/CAST(b.n AS DOUBLE), '>='
+         |    FROM s3, b, bs
+         |  UNION ALL SELECT 'v2_drifted', 'histogram_drift', 'n_chars',
+         |    psi, CAST(100000.0 AS DOUBLE), '<=' FROM psi3)
+         |ORDER BY version, constraint_type, column_name""".stripMargin,
 
     // q223: the quantile-bound constraint replayed — the q222 edge
     // derivation, per-version binning, exact-integer median rank
     // ((n·5000+9999)//10000), metric = the containing bin's upper
     // edge (a literal edge value), threshold = the baseline p25 edge
     "q223_quantile_bound" ->
-      """WITH v1 AS (SELECT * FROM documents WHERE doc_id % 2 = 0),
-        |v2 AS (SELECT * FROM documents WHERE doc_id % 2 = 1),
-        |v2d AS (SELECT source, text, lang, n_chars // 3 AS n_chars
-        |  FROM v2),
-        |b AS (SELECT CAST(count(n_chars) AS BIGINT) AS nv FROM v1),
-        |cnts AS (SELECT CAST(n_chars AS DOUBLE) AS v,
-        |  CAST(count(*) AS BIGINT) AS cnt FROM v1
-        |  WHERE n_chars IS NOT NULL GROUP BY 1),
-        |cum AS (SELECT v, cnt,
-        |  sum(cnt) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum
-        |  FROM cnts),
-        |rk AS (SELECT i, (i * nv + 7) // 8 AS r
-        |  FROM (SELECT unnest([1, 2, 3, 4, 5, 6, 7]) AS i), b),
-        |edges AS (SELECT i, min(v) AS e FROM rk JOIN cum
-        |  ON rk.r > cum.cum - cum.cnt AND rk.r <= cum.cum GROUP BY i),
-        |spine AS (SELECT unnest(range(8)) AS bin),
-        |c2 AS (SELECT spine.bin,
-        |  CAST(coalesce(x.ca, 0) AS BIGINT) AS ca FROM spine
-        |  LEFT JOIN (SELECT (SELECT count(*) FROM edges
-        |      WHERE CAST(t.n_chars AS DOUBLE) >= e) AS bin,
-        |      CAST(count(*) AS BIGINT) AS ca
-        |    FROM v2 t WHERE n_chars IS NOT NULL GROUP BY 1) x
-        |  ON spine.bin = x.bin),
-        |c3 AS (SELECT spine.bin,
-        |  CAST(coalesce(x.ca, 0) AS BIGINT) AS ca FROM spine
-        |  LEFT JOIN (SELECT (SELECT count(*) FROM edges
-        |      WHERE CAST(t.n_chars AS DOUBLE) >= e) AS bin,
-        |      CAST(count(*) AS BIGINT) AS ca
-        |    FROM v2d t WHERE n_chars IS NOT NULL GROUP BY 1) x
-        |  ON spine.bin = x.bin),
-        |cm2 AS (SELECT bin, sum(ca) OVER (ORDER BY bin
-        |  ROWS UNBOUNDED PRECEDING) AS cs FROM c2),
-        |cm3 AS (SELECT bin, sum(ca) OVER (ORDER BY bin
-        |  ROWS UNBOUNDED PRECEDING) AS cs FROM c3),
-        |s2 AS (SELECT CAST(count(n_chars) AS BIGINT) AS na,
-        |  CAST(count(text) AS BIGINT) AS ct,
-        |  CAST(count(*) AS BIGINT) AS nn FROM v2),
-        |s3 AS (SELECT CAST(count(n_chars) AS BIGINT) AS na,
-        |  CAST(count(text) AS BIGINT) AS ct,
-        |  CAST(count(*) AS BIGINT) AS nn FROM v2d),
-        |i2 AS (SELECT CAST(count(*) AS INT) AS idx FROM cm2, s2
-        |  WHERE cs < (na * 5000 + 9999) // 10000),
-        |i3 AS (SELECT CAST(count(*) AS INT) AS idx FROM cm3, s3
-        |  WHERE cs < (na * 5000 + 9999) // 10000),
-        |m2 AS (SELECT CASE WHEN idx <= 6
-        |  THEN (SELECT e FROM edges WHERE i = idx + 1)
-        |  ELSE CAST('Infinity' AS DOUBLE) END AS metric FROM i2),
-        |m3 AS (SELECT CASE WHEN idx <= 6
-        |  THEN (SELECT e FROM edges WHERE i = idx + 1)
-        |  ELSE CAST('Infinity' AS DOUBLE) END AS metric FROM i3),
-        |th AS (SELECT e AS thr FROM edges WHERE i = 2)
-        |SELECT version, constraint_type, column_name, metric, threshold,
-        |  CASE WHEN op = '>=' THEN metric >= threshold
-        |    ELSE metric <= threshold END AS passed
-        |FROM (
-        |  SELECT 'v2' AS version, 'completeness' AS constraint_type,
-        |    'text' AS column_name,
-        |    CAST(s2.ct AS DOUBLE)/CAST(s2.nn AS DOUBLE) AS metric,
-        |    CAST(0.9 AS DOUBLE) AS threshold, '>=' AS op FROM s2
-        |  UNION ALL SELECT 'v2', 'quantile_bound', 'n_chars',
-        |    m2.metric, th.thr, '>=' FROM m2, th
-        |  UNION ALL SELECT 'v2_drifted', 'completeness', 'text',
-        |    CAST(s3.ct AS DOUBLE)/CAST(s3.nn AS DOUBLE),
-        |    CAST(0.9 AS DOUBLE), '>=' FROM s3
-        |  UNION ALL SELECT 'v2_drifted', 'quantile_bound', 'n_chars',
-        |    m3.metric, th.thr, '>=' FROM m3, th)
-        |ORDER BY version, constraint_type, column_name""".stripMargin,
+      s"""WITH $DRIFT_CTES,
+         |b AS (SELECT CAST(count(n_chars) AS BIGINT) AS nv FROM v1),
+         |$HIST_EDGE_CTES,
+         |${binCountCte("c2", "ca", "v2")},
+         |${binCountCte("c3", "ca", "v2d")},
+         |cm2 AS (SELECT bin, sum(ca) OVER (ORDER BY bin
+         |  ROWS UNBOUNDED PRECEDING) AS cs FROM c2),
+         |cm3 AS (SELECT bin, sum(ca) OVER (ORDER BY bin
+         |  ROWS UNBOUNDED PRECEDING) AS cs FROM c3),
+         |s2 AS (SELECT CAST(count(n_chars) AS BIGINT) AS na,
+         |  CAST(count(text) AS BIGINT) AS ct,
+         |  CAST(count(*) AS BIGINT) AS nn FROM v2),
+         |s3 AS (SELECT CAST(count(n_chars) AS BIGINT) AS na,
+         |  CAST(count(text) AS BIGINT) AS ct,
+         |  CAST(count(*) AS BIGINT) AS nn FROM v2d),
+         |i2 AS (SELECT CAST(count(*) AS INT) AS idx FROM cm2, s2
+         |  WHERE cs < (na * 5000 + 9999) // 10000),
+         |i3 AS (SELECT CAST(count(*) AS INT) AS idx FROM cm3, s3
+         |  WHERE cs < (na * 5000 + 9999) // 10000),
+         |m2 AS (SELECT CASE WHEN idx <= 6
+         |  THEN (SELECT e FROM edges WHERE i = idx + 1)
+         |  ELSE CAST('Infinity' AS DOUBLE) END AS metric FROM i2),
+         |m3 AS (SELECT CASE WHEN idx <= 6
+         |  THEN (SELECT e FROM edges WHERE i = idx + 1)
+         |  ELSE CAST('Infinity' AS DOUBLE) END AS metric FROM i3),
+         |th AS (SELECT e AS thr FROM edges WHERE i = 2)
+         |${verdictHead("version")}
+         |  SELECT 'v2' AS version, 'completeness' AS constraint_type,
+         |    'text' AS column_name,
+         |    CAST(s2.ct AS DOUBLE)/CAST(s2.nn AS DOUBLE) AS metric,
+         |    CAST(0.9 AS DOUBLE) AS threshold, '>=' AS op FROM s2
+         |  UNION ALL SELECT 'v2', 'quantile_bound', 'n_chars',
+         |    m2.metric, th.thr, '>=' FROM m2, th
+         |  UNION ALL SELECT 'v2_drifted', 'completeness', 'text',
+         |    CAST(s3.ct AS DOUBLE)/CAST(s3.nn AS DOUBLE),
+         |    CAST(0.9 AS DOUBLE), '>=' FROM s3
+         |  UNION ALL SELECT 'v2_drifted', 'quantile_bound', 'n_chars',
+         |    m3.metric, th.thr, '>=' FROM m3, th)
+         |ORDER BY version, constraint_type, column_name""".stripMargin,
 
     // q224: the SQL-surface large-large banded rewrite — identical
     // replay contract to q131, at the geometry the strategy DERIVES
@@ -3632,43 +3659,7 @@ object Oracles {
     // 4 bits) instead of q131's explicit 8×8: integer Rademacher
     // signature, band b = bits [b*4+1, 4], candidates = band-bucket
     // collisions, exact raw-cosine gate
-    "q224_simjoin_sql_large" ->
-      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-        |  FROM embeddings),
-        |qv AS (SELECT vec_id, e,
-        |  list_transform(e, x -> CAST(round(x*1e6) AS BIGINT)) AS q FROM v),
-        |sgn AS (SELECT bit, dim,
-        |  CASE WHEN ((xor(x4, x4 >> 15) >> 16) & 1) = 1
-        |    THEN 1 ELSE -1 END AS s
-        |FROM (SELECT bit, dim,
-        |    (xor(x2, x2 >> 4) * 668265261) % 4294967296 AS x4
-        |  FROM (SELECT bit, dim,
-        |      (xor(xor(s0, 61), s0 >> 16) * 9) % 4294967296 AS x2
-        |    FROM (SELECT b.i AS bit, d.d AS dim, b.i*1000003 + d.d AS s0
-        |      FROM (SELECT unnest(range(64)) AS i) b
-        |      CROSS JOIN (SELECT unnest(range(64)) AS d) d)))),
-        |bit AS (SELECT vec_id, g.bit AS bit,
-        |  CASE WHEN sum(g.s * q[CAST(g.dim+1 AS INT)]) > 0
-        |  THEN '1' ELSE '0' END AS bv
-        |FROM qv CROSS JOIN sgn g
-        |GROUP BY vec_id, g.bit),
-        |sig AS (SELECT vec_id, string_agg(bv, '' ORDER BY bit) AS bits
-        |FROM bit GROUP BY vec_id),
-        |banded AS (SELECT vec_id, b.b AS band,
-        |  substring(bits, CAST(b.b*4+1 AS INT), 4) AS bucket
-        |FROM sig CROSS JOIN (SELECT unnest(range(16)) AS b) b),
-        |cand AS (SELECT DISTINCT l.vec_id AS id_a, r.vec_id AS id_b
-        |FROM banded l JOIN banded r
-        |  ON l.band = r.band AND l.bucket = r.bucket
-        |  AND l.vec_id < r.vec_id),
-        |s AS (SELECT c.id_a, c.id_b,
-        |  list_dot_product(a.e, b.e)
-        |   /(sqrt(list_dot_product(a.e, a.e))*sqrt(list_dot_product(b.e, b.e)))
-        |  AS sim
-        |FROM cand c JOIN v a ON a.vec_id = c.id_a
-        |  JOIN v b ON b.vec_id = c.id_b)
-        |SELECT id_a, id_b, round(sim, 4) AS sim FROM s
-        |WHERE sim >= 0.35 ORDER BY id_a, id_b""".stripMargin,
+    "q224_simjoin_sql_large" -> bandedSimjoinSql(64, 4, 16, "0.35"),
 
     // q225: q224's replay at the WIDE derived geometry — the
     // signatureBits=256 session budget makes deriveWide(0.4) pick
@@ -3676,43 +3667,7 @@ object Oracles {
     // threshold), so the only changes vs q224 are the bit count, the
     // band substring width/count, and the 0.4 gate. Same integer
     // Rademacher hyperplane mix (bit indices just run past 64).
-    "q225_simjoin_wide_band" ->
-      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-        |  FROM embeddings),
-        |qv AS (SELECT vec_id, e,
-        |  list_transform(e, x -> CAST(round(x*1e6) AS BIGINT)) AS q FROM v),
-        |sgn AS (SELECT bit, dim,
-        |  CASE WHEN ((xor(x4, x4 >> 15) >> 16) & 1) = 1
-        |    THEN 1 ELSE -1 END AS s
-        |FROM (SELECT bit, dim,
-        |    (xor(x2, x2 >> 4) * 668265261) % 4294967296 AS x4
-        |  FROM (SELECT bit, dim,
-        |      (xor(xor(s0, 61), s0 >> 16) * 9) % 4294967296 AS x2
-        |    FROM (SELECT b.i AS bit, d.d AS dim, b.i*1000003 + d.d AS s0
-        |      FROM (SELECT unnest(range(216)) AS i) b
-        |      CROSS JOIN (SELECT unnest(range(64)) AS d) d)))),
-        |bit AS (SELECT vec_id, g.bit AS bit,
-        |  CASE WHEN sum(g.s * q[CAST(g.dim+1 AS INT)]) > 0
-        |  THEN '1' ELSE '0' END AS bv
-        |FROM qv CROSS JOIN sgn g
-        |GROUP BY vec_id, g.bit),
-        |sig AS (SELECT vec_id, string_agg(bv, '' ORDER BY bit) AS bits
-        |FROM bit GROUP BY vec_id),
-        |banded AS (SELECT vec_id, b.b AS band,
-        |  substring(bits, CAST(b.b*6+1 AS INT), 6) AS bucket
-        |FROM sig CROSS JOIN (SELECT unnest(range(36)) AS b) b),
-        |cand AS (SELECT DISTINCT l.vec_id AS id_a, r.vec_id AS id_b
-        |FROM banded l JOIN banded r
-        |  ON l.band = r.band AND l.bucket = r.bucket
-        |  AND l.vec_id < r.vec_id),
-        |s AS (SELECT c.id_a, c.id_b,
-        |  list_dot_product(a.e, b.e)
-        |   /(sqrt(list_dot_product(a.e, a.e))*sqrt(list_dot_product(b.e, b.e)))
-        |  AS sim
-        |FROM cand c JOIN v a ON a.vec_id = c.id_a
-        |  JOIN v b ON b.vec_id = c.id_b)
-        |SELECT id_a, id_b, round(sim, 4) AS sim FROM s
-        |WHERE sim >= 0.4 ORDER BY id_a, id_b""".stripMargin,
+    "q225_simjoin_wide_band" -> bandedSimjoinSql(216, 6, 36, "0.4"),
 
     "q56_winnow_shared" ->
       s"""$WINNOW_CTES
@@ -3794,45 +3749,25 @@ object Oracles {
     // fixed-point mean as q55) and then the q41-shaped IVF probe of
     // the FULL corpus against the fitted centroids.
     "q63_sampled_fit" ->
-      """WITH v AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
-        |s AS (SELECT id, vv FROM v
-        |  WHERE substr(md5('fit-seed|' || CAST(id AS VARCHAR)), 1, 1) < '4'),
-        |c0 AS (SELECT id AS cent_id, vv AS cv FROM s ORDER BY id LIMIT 4),
-        |a1 AS (SELECT id, vv, cent_id FROM (
-        |  SELECT s.id, s.vv, c.cent_id,
-        |  row_number() OVER (PARTITION BY s.id ORDER BY
-        |    round(list_dot_product(s.vv, c.cv)
-        |     /(sqrt(list_dot_product(s.vv, s.vv))*sqrt(list_dot_product(c.cv, c.cv))), 6)
-        |    DESC, c.cent_id) AS rk
-        |  FROM s CROSS JOIN c0 c) WHERE rk = 1),
-        |m1 AS (SELECT cent_id, CAST(p.pos AS INT) AS pos,
-        |  CAST(sum(CAST(round(vv[CAST(p.pos AS INT)+1]*1e6) AS BIGINT)) AS DOUBLE)/1e6/count(*) AS m
-        |  FROM a1 CROSS JOIN (SELECT unnest(range(64)) AS pos) p
-        |  GROUP BY cent_id, p.pos),
-        |c1 AS (SELECT cent_id, list(m ORDER BY pos) AS cv FROM m1 GROUP BY cent_id),
-        |assigned AS (SELECT id AS neighbor_id, vv AS cvv, cent_id FROM (
-        |  SELECT v.id, v.vv, c.cent_id,
-        |  row_number() OVER (PARTITION BY v.id ORDER BY
-        |    round(list_dot_product(v.vv, c.cv)
-        |     /(sqrt(list_dot_product(v.vv, v.vv))*sqrt(list_dot_product(c.cv, c.cv))), 6)
-        |    DESC, c.cent_id) AS crank
-        |  FROM v CROSS JOIN c1 c) WHERE crank = 1),
-        |probed AS (SELECT id AS query_id, vv AS qv, cent_id FROM (
-        |  SELECT v.id, v.vv, c.cent_id,
-        |  row_number() OVER (PARTITION BY v.id ORDER BY
-        |    round(list_dot_product(v.vv, c.cv)
-        |     /(sqrt(list_dot_product(v.vv, v.vv))*sqrt(list_dot_product(c.cv, c.cv))), 6)
-        |    DESC, c.cent_id) AS crank
-        |  FROM v CROSS JOIN c1 c WHERE v.id < 8) WHERE crank <= 2),
-        |sc AS (SELECT DISTINCT p.query_id, a.neighbor_id,
-        |  round(list_dot_product(p.qv, a.cvv)
-        |   /(sqrt(list_dot_product(p.qv, p.qv))*sqrt(list_dot_product(a.cvv, a.cvv))), 4) AS sim
-        |FROM probed p JOIN assigned a ON p.cent_id = a.cent_id
-        |WHERE p.query_id <> a.neighbor_id)
-        |SELECT query_id, "rank", neighbor_id, sim FROM (
-        |SELECT query_id, neighbor_id, sim,
-        |row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS "rank"
-        |FROM sc) WHERE "rank" <= 5 ORDER BY query_id, "rank"""".stripMargin,
+      s"""WITH v AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
+         |s AS (SELECT id, vv FROM v
+         |  WHERE substr(md5('fit-seed|' || CAST(id AS VARCHAR)), 1, 1) < '4'),
+         |c0 AS (SELECT id AS cent_id, vv AS cv FROM s ORDER BY id LIMIT 4),
+         |${kmAssignCte("a1", "id, vv, cent_id", "c0", s = "s")},
+         |${kmMeanCtes(1, "a1")},
+         |${kmAssignCte("assigned", "id AS neighbor_id, vv AS cvv, cent_id", "c1",
+             rank = "crank = 1")},
+         |${kmAssignCte("probed", "id AS query_id, vv AS qv, cent_id", "c1",
+             rank = "crank <= 2", where = " WHERE v.id < 8")},
+         |sc AS (SELECT DISTINCT p.query_id, a.neighbor_id,
+         |  round(list_dot_product(p.qv, a.cvv)
+         |   /(sqrt(list_dot_product(p.qv, p.qv))*sqrt(list_dot_product(a.cvv, a.cvv))), 4) AS sim
+         |FROM probed p JOIN assigned a ON p.cent_id = a.cent_id
+         |WHERE p.query_id <> a.neighbor_id)
+         |SELECT query_id, "rank", neighbor_id, sim FROM (
+         |SELECT query_id, neighbor_id, sim,
+         |row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS "rank"
+         |FROM sc) WHERE "rank" <= 5 ORDER BY query_id, "rank"""".stripMargin,
 
     "q64_shard_assign" ->
       s"""WITH d AS (SELECT doc_id, CAST(len($TOKS) AS BIGINT) AS ws FROM documents),
@@ -3907,13 +3842,7 @@ object Oracles {
 
     "q70_overlap_pairs" ->
       s"""${SHINGLE_CTES},
-         |post AS (SELECT doc_id, n_sh, unnest(sh) AS shingle FROM ss),
-         |keep AS (SELECT shingle FROM post GROUP BY shingle HAVING count(*) <= 1000),
-         |fp AS (SELECT p.doc_id, p.n_sh, p.shingle FROM post p JOIN keep k ON p.shingle = k.shingle),
-         |pairs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |  a.n_sh AS na, b.n_sh AS nb, count(*) AS shared
-         |FROM fp a JOIN fp b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-         |GROUP BY 1, 2, 3, 4)
+         |${cappedPairCtes("fp", "pairs")}
          |SELECT id_a, id_b, na, nb, shared, make_overlap AS overlap FROM (
          |SELECT id_a, id_b, CAST(na AS INT) AS na, CAST(nb AS INT) AS nb,
          |CAST(shared AS BIGINT) AS shared,
@@ -3923,26 +3852,7 @@ object Oracles {
     // q22's pair mining, then connected components as a recursive
     // transitive closure (min reachable id per node == the fixpoint
     // label Spark's min-label propagation converges to).
-    "q71_dedup_clusters" ->
-      s"""${SHINGLE_CTES.replaceFirst("WITH ", "WITH RECURSIVE ")},
-         |post AS (SELECT doc_id, n_sh, unnest(sh) AS shingle FROM ss),
-         |keep AS (SELECT shingle FROM post GROUP BY shingle HAVING count(*) <= 1000),
-         |fpp AS (SELECT p.doc_id, p.n_sh, p.shingle FROM post p JOIN keep k ON p.shingle = k.shingle),
-         |pairs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |  a.n_sh AS na, b.n_sh AS nb, count(*) AS shared
-         |FROM fpp a JOIN fpp b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-         |GROUP BY 1, 2, 3, 4),
-         |jp AS (SELECT id_a, id_b FROM pairs
-         |  WHERE round(CAST(shared AS DOUBLE)/(na+nb-shared), 4) >= 0.2),
-         |edges AS (SELECT id_a AS src, id_b AS dst FROM jp
-         |  UNION ALL SELECT id_b, id_a FROM jp),
-         |reach(id, r) AS (
-         |  SELECT DISTINCT src, src FROM edges
-         |  UNION
-         |  SELECT e.src, reach.r FROM reach JOIN edges e ON e.dst = reach.id),
-         |lab AS (SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id)
-         |SELECT cluster_id, count(*) AS n_members, max(doc_id) AS max_member
-         |FROM lab GROUP BY cluster_id ORDER BY cluster_id""".stripMargin,
+    "q71_dedup_clusters" -> TEXT_CLUSTERS_SQL,
 
     "q72_incremental_ingest" ->
       s"""WITH inc AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 = 7),
@@ -3998,12 +3908,7 @@ object Oracles {
 
     // identical to q26 — the Spark side differs (custom physical
     // operator vs union-and-carry), the semantics must not
-    "q74_asof_exec" ->
-      """SELECT p.event_id, p.user_id, s.event_id AS asof_event_id
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'signup') s
-        |ON p.user_id = s.user_id AND p.ts >= s.ts
-        |ORDER BY p.event_id""".stripMargin,
+    "q74_asof_exec" -> ASOF_SQL,
 
     "q75_scd2_join" ->
       s"""WITH iv AS (SELECT event_id AS interval_id, user_id,
@@ -4020,12 +3925,7 @@ object Oracles {
          |GROUP BY interval_id ORDER BY interval_id""".stripMargin,
 
     // identical to q26/q74 — broadcast-regime implementation
-    "q76_asof_broadcast" ->
-      """SELECT p.event_id, p.user_id, s.event_id AS asof_event_id
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'signup') s
-        |ON p.user_id = s.user_id AND p.ts >= s.ts
-        |ORDER BY p.event_id""".stripMargin,
+    "q76_asof_broadcast" -> ASOF_SQL,
 
     "q77_window_family" ->
       """SELECT user_id, event_id, value,
@@ -4082,29 +3982,10 @@ object Oracles {
 
     // q54's pair mining + recursive-CTE closure (same pattern as q71)
     "q81_embed_clusters" ->
-      """WITH RECURSIVE v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-        |cent AS (SELECT vec_id AS cent_id, e AS ce FROM v WHERE vec_id % 100 = 0),
-        |assigned AS (SELECT vec_id, e, cent_id FROM (
-        |SELECT v.vec_id, v.e, c.cent_id,
-        |row_number() OVER (PARTITION BY v.vec_id ORDER BY
-        |  round(list_dot_product(v.e, c.ce)
-        |   /(sqrt(list_dot_product(v.e, v.e))*sqrt(list_dot_product(c.ce, c.ce))), 6)
-        |  DESC, c.cent_id) AS crank
-        |FROM v CROSS JOIN cent c) WHERE crank <= 2),
-        |pairs AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-        |FROM assigned a JOIN assigned b
-        |  ON a.cent_id = b.cent_id AND a.vec_id < b.vec_id
-        |WHERE round(list_dot_product(a.e, b.e)
-        |   /(sqrt(list_dot_product(a.e, a.e))*sqrt(list_dot_product(b.e, b.e))), 4) >= 0.35),
-        |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-        |  UNION ALL SELECT id_b, id_a FROM pairs),
-        |reach(id, r) AS (
-        |  SELECT DISTINCT src, src FROM edges
-        |  UNION
-        |  SELECT e.src, reach.r FROM reach JOIN edges e ON e.dst = reach.id),
-        |lab AS (SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id)
-        |SELECT cluster_id, count(*) AS n_members, max(doc_id) AS max_member
-        |FROM lab GROUP BY cluster_id ORDER BY cluster_id""".stripMargin,
+      s"""WITH RECURSIVE ${embedGraphCtes("pairs", "0.35")},
+         |${edgesCte("edges", "pairs")},
+         |$CLOSURE_CTES
+         |$CLUSTER_SIZES""".stripMargin,
 
     "q82_iqr_outliers" ->
       """WITH f AS (SELECT event_type,
@@ -4153,30 +4034,7 @@ object Oracles {
         |SELECT funnel_stage, count(*) AS n_sessions
         |FROM st GROUP BY funnel_stage ORDER BY funnel_stage""".stripMargin,
 
-    "q85_survivor_merge" ->
-      s"""${SHINGLE_CTES.replaceFirst("WITH ", "WITH RECURSIVE ")},
-         |post AS (SELECT doc_id, n_sh, unnest(sh) AS shingle FROM ss),
-         |keep AS (SELECT shingle FROM post GROUP BY shingle HAVING count(*) <= 1000),
-         |fpp AS (SELECT p.doc_id, p.n_sh, p.shingle FROM post p JOIN keep k ON p.shingle = k.shingle),
-         |prs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |  a.n_sh AS na, b.n_sh AS nb, count(*) AS shared
-         |FROM fpp a JOIN fpp b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-         |GROUP BY 1, 2, 3, 4),
-         |jp AS (SELECT id_a, id_b FROM prs
-         |  WHERE round(CAST(shared AS DOUBLE)/(na+nb-shared), 4) >= 0.2),
-         |edges AS (SELECT id_a AS src, id_b AS dst FROM jp
-         |  UNION ALL SELECT id_b, id_a FROM jp),
-         |reach(id, r) AS (
-         |  SELECT DISTINCT src, src FROM edges
-         |  UNION
-         |  SELECT e.src, reach.r FROM reach JOIN edges e ON e.dst = reach.id),
-         |lab AS (SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id)
-         |SELECT lab.cluster_id, count(*) AS n_members,
-         |CAST(max(length(documents.text)) AS BIGINT) AS best_text_len,
-         |array_to_string(list_sort(list(DISTINCT documents.source)), ',')
-         |  AS merged_sources
-         |FROM lab JOIN documents ON lab.doc_id = documents.doc_id
-         |GROUP BY lab.cluster_id ORDER BY lab.cluster_id""".stripMargin,
+    "q85_survivor_merge" -> SURVIVOR_SQL,
 
     "q86_star_join" ->
       s"""SELECT n_name, count(*) AS n_lines,
@@ -4206,18 +4064,10 @@ object Oracles {
     "q88_lang_confusion" ->
       s"""WITH d AS (SELECT lang, $TOKS AS toks FROM documents),
          |m AS (SELECT lang,
-         |len(list_filter(toks, x -> list_contains(['the','a','fast','slow'], x))) AS s_en,
-         |len(list_filter(toks, x -> list_contains(['key','order','table'], x))) AS s_es,
-         |len(list_filter(toks, x -> list_contains(['scan','merge','part'], x))) AS s_de,
-         |len(list_filter(toks, x -> list_contains(['window','small','hash'], x))) AS s_fr,
-         |len(list_filter(toks, x -> list_contains(['join','batch','stream'], x))) AS s_zh
+         |$LANG_SCORES
          |FROM d),
          |q AS (SELECT lang,
-         |CASE WHEN greatest(s_en,s_es,s_de,s_fr,s_zh)=0 THEN 'unknown'
-         | WHEN s_en>=s_es AND s_en>=s_de AND s_en>=s_fr AND s_en>=s_zh THEN 'en'
-         | WHEN s_es>=s_de AND s_es>=s_fr AND s_es>=s_zh THEN 'es'
-         | WHEN s_de>=s_fr AND s_de>=s_zh THEN 'de'
-         | WHEN s_fr>=s_zh THEN 'fr' ELSE 'zh' END AS guess
+         |$LANG_GUESS
          |FROM m),
          |c AS (SELECT lang, guess, count(*) AS n FROM q GROUP BY 1, 2)
          |SELECT lang, guess, n,
@@ -4265,103 +4115,19 @@ object Oracles {
 
     // composes the verified q21 (exact), q22+q71 (near-dup clusters),
     // and q19-quality rules with drop precedence
-    "q91_clean_export" ->
-      s"""${SHINGLE_CTES.replaceFirst("WITH ", "WITH RECURSIVE ")},
-         |post AS (SELECT doc_id, n_sh, unnest(sh) AS shingle FROM ss),
-         |keep AS (SELECT shingle FROM post GROUP BY shingle HAVING count(*) <= 1000),
-         |fpp AS (SELECT p.doc_id, p.n_sh, p.shingle FROM post p JOIN keep k ON p.shingle = k.shingle),
-         |prs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |  a.n_sh AS na, b.n_sh AS nb, count(*) AS shared
-         |FROM fpp a JOIN fpp b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-         |GROUP BY 1, 2, 3, 4),
-         |jp AS (SELECT id_a, id_b FROM prs
-         |  WHERE round(CAST(shared AS DOUBLE)/(na+nb-shared), 4) >= 0.2),
-         |edges AS (SELECT id_a AS src, id_b AS dst FROM jp
-         |  UNION ALL SELECT id_b, id_a FROM jp),
-         |reach(id, r) AS (
-         |  SELECT DISTINCT src, src FROM edges
-         |  UNION
-         |  SELECT e.src, reach.r FROM reach JOIN edges e ON e.dst = reach.id),
-         |lab AS (SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id),
-         |bse AS (SELECT doc_id, source,
-         |  md5(array_to_string($TOKS, ' ')) AS fp,
-         |  round((CASE WHEN len($TOKS)=0 THEN 0.0
-         |    ELSE CAST(len(list_distinct($TOKS)) AS DOUBLE)/len($TOKS) END)*0.5
-         |   + (1.0-(CASE WHEN len($TOKS)=0 THEN 0.0
-         |    ELSE CAST(len(list_filter($TOKS, x -> list_contains(['the','a'], x))) AS DOUBLE)/len($TOKS) END))*0.3
-         |   + least(CAST(len($TOKS) AS DOUBLE)/100.0, 1.0)*0.2, 4) AS q
-         |FROM documents),
-         |kf AS (SELECT fp, min(doc_id) AS keep_id FROM bse GROUP BY fp),
-         |dec AS (SELECT b.source,
-         |  CASE WHEN b.doc_id <> kf.keep_id THEN 'drop_exact_dup'
-         |       WHEN lab.cluster_id IS NOT NULL
-         |         AND lab.cluster_id <> b.doc_id THEN 'drop_near_dup'
-         |       WHEN b.q < 0.62 THEN 'drop_low_quality'
-         |       ELSE 'keep' END AS decision
-         |FROM bse b JOIN kf ON b.fp = kf.fp
-         |LEFT JOIN lab ON b.doc_id = lab.doc_id)
-         |SELECT source, decision, count(*) AS n
-         |FROM dec GROUP BY source, decision ORDER BY source, decision""".stripMargin,
+    "q91_clean_export" -> CLEAN_EXPORT_SQL,
 
     // q92 runs a DIFFERENT distributed algorithm (large-star/small-star
     // contraction) against the SAME ground truth: the oracle is q71's
     // transitive-closure clustering verbatim
-    "q92_star_clusters" ->
-      s"""${SHINGLE_CTES.replaceFirst("WITH ", "WITH RECURSIVE ")},
-         |post AS (SELECT doc_id, n_sh, unnest(sh) AS shingle FROM ss),
-         |keep AS (SELECT shingle FROM post GROUP BY shingle HAVING count(*) <= 1000),
-         |fpp AS (SELECT p.doc_id, p.n_sh, p.shingle FROM post p JOIN keep k ON p.shingle = k.shingle),
-         |pairs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |  a.n_sh AS na, b.n_sh AS nb, count(*) AS shared
-         |FROM fpp a JOIN fpp b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-         |GROUP BY 1, 2, 3, 4),
-         |jp AS (SELECT id_a, id_b FROM pairs
-         |  WHERE round(CAST(shared AS DOUBLE)/(na+nb-shared), 4) >= 0.2),
-         |edges AS (SELECT id_a AS src, id_b AS dst FROM jp
-         |  UNION ALL SELECT id_b, id_a FROM jp),
-         |reach(id, r) AS (
-         |  SELECT DISTINCT src, src FROM edges
-         |  UNION
-         |  SELECT e.src, reach.r FROM reach JOIN edges e ON e.dst = reach.id),
-         |lab AS (SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id)
-         |SELECT cluster_id, count(*) AS n_members, max(doc_id) AS max_member
-         |FROM lab GROUP BY cluster_id ORDER BY cluster_id""".stripMargin,
+    "q92_star_clusters" -> TEXT_CLUSTERS_SQL,
 
-    // q93: PageRank replayed move-for-move in integer arithmetic —
-    // `//` (DuckDB floor div) == Spark `div` on the non-negative
-    // values used here; CAST sums to BIGINT (DuckDB sum -> HUGEINT)
+    // q93: q22's pairs, their symmetric edges, the integer PageRank
     "q93_pagerank" ->
       s"""${SHINGLE_CTES},
-         |post AS (SELECT doc_id, n_sh, unnest(sh) AS shingle FROM ss),
-         |keep AS (SELECT shingle FROM post GROUP BY shingle HAVING count(*) <= 1000),
-         |fpp AS (SELECT p.doc_id, p.n_sh, p.shingle FROM post p JOIN keep k ON p.shingle = k.shingle),
-         |prs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |  a.n_sh AS na, b.n_sh AS nb, count(*) AS shared
-         |FROM fpp a JOIN fpp b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-         |GROUP BY 1, 2, 3, 4),
-         |jp AS (SELECT id_a, id_b FROM prs
-         |  WHERE round(CAST(shared AS DOUBLE)/(na+nb-shared), 4) >= 0.2),
-         |edges AS (SELECT id_a AS src, id_b AS dst FROM jp
-         |  UNION ALL SELECT id_b, id_a FROM jp),
-         |deg AS (SELECT src, count(*) AS d FROM edges GROUP BY src),
-         |nn AS (SELECT count(*) AS n, 1000000000000 // count(*) AS base,
-         |  (15 * (1000000000000 // count(*))) // 100 AS tele FROM deg),
-         |r0 AS (SELECT src AS id, base AS r FROM deg, nn),
-         |c1 AS (SELECT e.dst AS id, CAST(sum(r.r // dg.d) AS BIGINT) AS s
-         |  FROM edges e JOIN deg dg ON e.src = dg.src JOIN r0 r ON r.id = e.src GROUP BY e.dst),
-         |r1 AS (SELECT d.src AS id, CAST(tele + (85 * coalesce(c.s, 0)) // 100 AS BIGINT) AS r
-         |  FROM deg d CROSS JOIN nn LEFT JOIN c1 c ON c.id = d.src),
-         |c2 AS (SELECT e.dst AS id, CAST(sum(r.r // dg.d) AS BIGINT) AS s
-         |  FROM edges e JOIN deg dg ON e.src = dg.src JOIN r1 r ON r.id = e.src GROUP BY e.dst),
-         |r2 AS (SELECT d.src AS id, CAST(tele + (85 * coalesce(c.s, 0)) // 100 AS BIGINT) AS r
-         |  FROM deg d CROSS JOIN nn LEFT JOIN c2 c ON c.id = d.src),
-         |c3 AS (SELECT e.dst AS id, CAST(sum(r.r // dg.d) AS BIGINT) AS s
-         |  FROM edges e JOIN deg dg ON e.src = dg.src JOIN r2 r ON r.id = e.src GROUP BY e.dst),
-         |r3 AS (SELECT d.src AS id, CAST(tele + (85 * coalesce(c.s, 0)) // 100 AS BIGINT) AS r
-         |  FROM deg d CROSS JOIN nn LEFT JOIN c3 c ON c.id = d.src)
-         |SELECT r3.id AS doc_id, d.d AS out_deg, r3.r AS rank_fp
-         |FROM r3 JOIN deg d ON d.src = r3.id
-         |ORDER BY rank_fp DESC, doc_id""".stripMargin,
+         |${cappedPairCtes("fpp", "prs")},
+         |${jaccardEdgeCtes("prs")},
+         |$PAGERANK_SQL""".stripMargin,
 
     // q94: chunk starts are range(0, n, 48) — DuckDB range excludes n,
     // Spark sequence(0, n-1, 48) includes values <= n-1: same set
@@ -4379,14 +4145,7 @@ object Oracles {
     // threshold's zero-padded lowercase hex — pure string compare,
     // identical in both engines
     "q95_weighted_sample" ->
-      s"""WITH d AS (SELECT doc_id, source, $TOKS AS toks FROM documents),
-         |m AS (SELECT doc_id, source, len(toks) AS n,
-         |  CAST(len(list_filter(toks, x -> list_contains(['the','a'], x))) AS DOUBLE) AS stop_hits,
-         |  CAST(len(list_distinct(toks)) AS DOUBLE) AS uniq_cnt FROM d),
-         |q AS (SELECT doc_id, source, n AS ws,
-         |  round((CASE WHEN n=0 THEN 0.0 ELSE uniq_cnt/n END)*0.5
-         |   + (1.0-(CASE WHEN n=0 THEN 0.0 ELSE stop_hits/n END))*0.3
-         |   + least(CAST(n AS DOUBLE)/100.0, 1.0)*0.2, 4) AS q FROM m),
+      s"""$SOURCE_QUALITY_CTES,
          |s AS (SELECT source, q, ws,
          |  substring(md5('wsample|' || CAST(doc_id AS VARCHAR)), 1, 5)
          |    < lpad(lower(to_hex(CAST(round(q*300000) AS BIGINT))), 5, '0') AS sampled
@@ -4400,14 +4159,7 @@ object Oracles {
     // q96: the 50% cutoff is integer arithmetic (2*(cum-own) < total)
     // over window sums of exact token counts
     "q96_topp_select" ->
-      s"""WITH d AS (SELECT doc_id, source, $TOKS AS toks FROM documents),
-         |m AS (SELECT doc_id, source, len(toks) AS n,
-         |  CAST(len(list_filter(toks, x -> list_contains(['the','a'], x))) AS DOUBLE) AS stop_hits,
-         |  CAST(len(list_distinct(toks)) AS DOUBLE) AS uniq_cnt FROM d),
-         |q AS (SELECT doc_id, source, n AS ws,
-         |  round((CASE WHEN n=0 THEN 0.0 ELSE uniq_cnt/n END)*0.5
-         |   + (1.0-(CASE WHEN n=0 THEN 0.0 ELSE stop_hits/n END))*0.3
-         |   + least(CAST(n AS DOUBLE)/100.0, 1.0)*0.2, 4) AS q FROM m),
+      s"""$SOURCE_QUALITY_CTES,
          |w AS (SELECT source, ws,
          |  sum(ws) OVER (PARTITION BY source ORDER BY q DESC, doc_id
          |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
@@ -4501,27 +4253,12 @@ object Oracles {
     // canonical a<b orientation makes the wedge+closure join count
     // each triangle exactly once
     "q102_triangles" ->
-      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-        |cent AS (SELECT vec_id AS cent_id, e AS ce FROM v WHERE vec_id % 100 = 0),
-        |assigned AS (SELECT vec_id, e, cent_id FROM (
-        |SELECT v.vec_id, v.e, c.cent_id,
-        |row_number() OVER (PARTITION BY v.vec_id ORDER BY
-        |  round(list_dot_product(v.e, c.ce)
-        |   /(sqrt(list_dot_product(v.e, v.e))*sqrt(list_dot_product(c.ce, c.ce))), 6)
-        |  DESC, c.cent_id) AS crank
-        |FROM v CROSS JOIN cent c) WHERE crank <= 2),
-        |jp AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-        |FROM assigned a JOIN assigned b
-        |  ON a.cent_id = b.cent_id AND a.vec_id < b.vec_id
-        |WHERE round(list_dot_product(a.e, b.e)
-        |   /(sqrt(list_dot_product(a.e, a.e))*sqrt(list_dot_product(b.e, b.e))), 4) >= 0.30),
-        |tri AS (SELECT e1.id_a AS a, e1.id_b AS b, e2.id_b AS c
-        |  FROM jp e1 JOIN jp e2 ON e1.id_b = e2.id_a
-        |  JOIN jp e3 ON e3.id_a = e1.id_a AND e3.id_b = e2.id_b),
-        |nodes AS (SELECT unnest([a, b, c]) AS vec_id FROM tri)
-        |SELECT vec_id, count(*) AS n_triangles
-        |FROM nodes GROUP BY vec_id
-        |ORDER BY n_triangles DESC, vec_id""".stripMargin,
+      s"""WITH ${embedGraphCtes("jp", "0.30")},
+         |$TRIANGLES_CTE,
+         |nodes AS (SELECT unnest([a, b, c]) AS vec_id FROM tri)
+         |SELECT vec_id, count(*) AS n_triangles
+         |FROM nodes GROUP BY vec_id
+         |ORDER BY n_triangles DESC, vec_id""".stripMargin,
 
     // q103: snapshot B's edit salt (' v2') is appended BEFORE
     // tokenization, mirroring the Spark concat-then-fingerprint
@@ -4625,36 +4362,25 @@ object Oracles {
     // the alpha numerator is the SAME expression text as the Spark
     // side, so the raw double estimate is bit-identical
     "q107_portable_hll" ->
-      """WITH p AS (SELECT DISTINCT event_type, user_id FROM events),
-        |hh AS (SELECT event_type, user_id,
-        |  md5('hll|' || CAST(user_id AS VARCHAR)) AS h FROM p),
-        |hx AS (SELECT event_type,
-        |  (strpos('0123456789abcdef', h[1]) - 1) * 16
-        |    + strpos('0123456789abcdef', h[2]) - 1 AS bucket,
-        |  substring(h, 3, 12) AS h12 FROM hh),
-        |zz AS (SELECT event_type, bucket, h12,
-        |  length(regexp_extract(h12, '^(0*)', 1)) AS zc FROM hx),
-        |rk AS (SELECT event_type, bucket,
-        |  CASE WHEN zc = 12 THEN 49 ELSE zc * 4
-        |    + CASE substring(h12, zc + 1, 1) WHEN '1' THEN 3
-        |      WHEN '2' THEN 2 WHEN '3' THEN 2 WHEN '4' THEN 1
-        |      WHEN '5' THEN 1 WHEN '6' THEN 1 WHEN '7' THEN 1
-        |      ELSE 0 END + 1 END AS r FROM zz),
-        |regs AS (SELECT event_type, bucket, max(r) AS r
-        |  FROM rk GROUP BY 1, 2),
-        |sums AS (SELECT event_type,
-        |  CAST(sum(1::BIGINT << (49 - r)) AS BIGINT) AS s_used,
-        |  count(*) AS n_buckets FROM regs GROUP BY 1),
-        |ex AS (SELECT event_type, count(DISTINCT user_id) AS exact_users
-        |  FROM p GROUP BY 1),
-        |e AS (SELECT s.event_type, n_buckets, exact_users,
-        |  round(0.7213e0/(1.0e0+1.079e0/256.0e0)*65536.0e0*562949953421312.0e0
-        |    / (s_used + (256 - n_buckets) * 562949953421312::BIGINT), 2) AS est
-        |  FROM sums s JOIN ex USING (event_type))
-        |SELECT event_type, CAST(n_buckets AS BIGINT) AS n_buckets,
-        |  CAST(exact_users AS BIGINT) AS exact_users, est,
-        |  round((est - exact_users) / exact_users, 4) AS rel_err
-        |FROM e ORDER BY event_type""".stripMargin,
+      s"""WITH p AS (SELECT DISTINCT event_type, user_id FROM events),
+         |hh AS (SELECT event_type, user_id,
+         |  md5('hll|' || CAST(user_id AS VARCHAR)) AS h FROM p),
+         |${hllRankCtes("event_type", "hh", "hx", "zz", "rk")},
+         |regs AS (SELECT event_type, bucket, max(r) AS r
+         |  FROM rk GROUP BY 1, 2),
+         |sums AS (SELECT event_type,
+         |  CAST(sum(1::BIGINT << (49 - r)) AS BIGINT) AS s_used,
+         |  count(*) AS n_buckets FROM regs GROUP BY 1),
+         |ex AS (SELECT event_type, count(DISTINCT user_id) AS exact_users
+         |  FROM p GROUP BY 1),
+         |e AS (SELECT s.event_type, n_buckets, exact_users,
+         |  round(0.7213e0/(1.0e0+1.079e0/256.0e0)*65536.0e0*562949953421312.0e0
+         |    / (s_used + (256 - n_buckets) * 562949953421312::BIGINT), 2) AS est
+         |  FROM sums s JOIN ex USING (event_type))
+         |SELECT event_type, CAST(n_buckets AS BIGINT) AS n_buckets,
+         |  CAST(exact_users AS BIGINT) AS exact_users, est,
+         |  round((est - exact_users) / exact_users, 4) AS rel_err
+         |FROM e ORDER BY event_type""".stripMargin,
 
     // q108: 3-hex-char → int via nested strpos (0..4095), mod 1024
     "q108_portable_bloom" ->
@@ -4689,187 +4415,98 @@ object Oracles {
     // the pair table ONCE (graft.operators.PairTable) and derives every
     // stage from it, and each derivation hash-matches its closure.
 
-    "q109_pipeline_mine" ->
-      s"""${PAIR_CLOSURE_CTES}
-         |SELECT id_a, id_b, CAST(shared AS BIGINT) AS shared,
-         |round(CAST(shared AS DOUBLE)/(na+nb-shared), 4) AS jaccard
-         |FROM prs
-         |WHERE round(CAST(shared AS DOUBLE)/(na+nb-shared), 4) >= 0.2
-         |ORDER BY id_a, id_b""".stripMargin,
+    "q109_pipeline_mine" -> PIPELINE_MINE_SQL,
 
     "q110_pipeline_clusters" ->
       s"""${PAIR_CLOSURE_CTES},
-         |sz AS (SELECT cluster_id, count(*) AS n_members,
-         |  max(doc_id) AS max_member FROM lab GROUP BY cluster_id),
-         |pc AS (SELECT l.cluster_id, count(*) AS n_pairs
-         |  FROM jp p JOIN lab l ON p.id_a = l.doc_id GROUP BY 1)
-         |SELECT sz.cluster_id, sz.n_members, sz.max_member, pc.n_pairs
-         |FROM sz JOIN pc ON sz.cluster_id = pc.cluster_id
-         |ORDER BY sz.cluster_id""".stripMargin,
+         |${clusterEdgeRollup("jp")}""".stripMargin,
 
-    "q111_pipeline_survivors" ->
-      s"""${PAIR_CLOSURE_CTES}
-         |SELECT lab.cluster_id, count(*) AS n_members,
-         |CAST(max(length(documents.text)) AS BIGINT) AS best_text_len,
-         |array_to_string(list_sort(list(DISTINCT documents.source)), ',')
-         |  AS merged_sources
-         |FROM lab JOIN documents ON lab.doc_id = documents.doc_id
-         |GROUP BY lab.cluster_id ORDER BY lab.cluster_id""".stripMargin,
+    "q111_pipeline_survivors" -> SURVIVOR_SQL,
 
-    "q112_pipeline_export" ->
-      s"""${PAIR_CLOSURE_CTES},
-         |bse AS (SELECT doc_id, source,
-         |  md5(array_to_string($TOKS, ' ')) AS fp,
-         |  round((CASE WHEN len($TOKS)=0 THEN 0.0
-         |    ELSE CAST(len(list_distinct($TOKS)) AS DOUBLE)/len($TOKS) END)*0.5
-         |   + (1.0-(CASE WHEN len($TOKS)=0 THEN 0.0
-         |    ELSE CAST(len(list_filter($TOKS, x -> list_contains(['the','a'], x))) AS DOUBLE)/len($TOKS) END))*0.3
-         |   + least(CAST(len($TOKS) AS DOUBLE)/100.0, 1.0)*0.2, 4) AS q
-         |FROM documents),
-         |kf AS (SELECT fp, min(doc_id) AS keep_id FROM bse GROUP BY fp),
-         |dec AS (SELECT b.source,
-         |  CASE WHEN b.doc_id <> kf.keep_id THEN 'drop_exact_dup'
-         |       WHEN lab.cluster_id IS NOT NULL
-         |         AND lab.cluster_id <> b.doc_id THEN 'drop_near_dup'
-         |       WHEN b.q < 0.62 THEN 'drop_low_quality'
-         |       ELSE 'keep' END AS decision
-         |FROM bse b JOIN kf ON b.fp = kf.fp
-         |LEFT JOIN lab ON b.doc_id = lab.doc_id)
-         |SELECT source, decision, count(*) AS n
-         |FROM dec GROUP BY source, decision ORDER BY source, decision""".stripMargin,
+    "q112_pipeline_export" -> CLEAN_EXPORT_SQL,
 
     // q93's integer-arithmetic PageRank replay over the closure's edge
     // set (reach/lab go unused here — DuckDB inlines CTEs on use, so
     // the recursive closure costs nothing when unreferenced)
     "q113_pipeline_pagerank" ->
       s"""${PAIR_CLOSURE_CTES},
-         |deg AS (SELECT src, count(*) AS d FROM edges GROUP BY src),
-         |nn AS (SELECT count(*) AS n, 1000000000000 // count(*) AS base,
-         |  (15 * (1000000000000 // count(*))) // 100 AS tele FROM deg),
-         |r0 AS (SELECT src AS id, base AS r FROM deg, nn),
-         |c1 AS (SELECT e.dst AS id, CAST(sum(r.r // dg.d) AS BIGINT) AS s
-         |  FROM edges e JOIN deg dg ON e.src = dg.src JOIN r0 r ON r.id = e.src GROUP BY e.dst),
-         |r1 AS (SELECT d.src AS id, CAST(tele + (85 * coalesce(c.s, 0)) // 100 AS BIGINT) AS r
-         |  FROM deg d CROSS JOIN nn LEFT JOIN c1 c ON c.id = d.src),
-         |c2 AS (SELECT e.dst AS id, CAST(sum(r.r // dg.d) AS BIGINT) AS s
-         |  FROM edges e JOIN deg dg ON e.src = dg.src JOIN r1 r ON r.id = e.src GROUP BY e.dst),
-         |r2 AS (SELECT d.src AS id, CAST(tele + (85 * coalesce(c.s, 0)) // 100 AS BIGINT) AS r
-         |  FROM deg d CROSS JOIN nn LEFT JOIN c2 c ON c.id = d.src),
-         |c3 AS (SELECT e.dst AS id, CAST(sum(r.r // dg.d) AS BIGINT) AS s
-         |  FROM edges e JOIN deg dg ON e.src = dg.src JOIN r2 r ON r.id = e.src GROUP BY e.dst),
-         |r3 AS (SELECT d.src AS id, CAST(tele + (85 * coalesce(c.s, 0)) // 100 AS BIGINT) AS r
-         |  FROM deg d CROSS JOIN nn LEFT JOIN c3 c ON c.id = d.src)
-         |SELECT r3.id AS doc_id, d.d AS out_deg, r3.r AS rank_fp
-         |FROM r3 JOIN deg d ON d.src = r3.id
-         |ORDER BY rank_fp DESC, doc_id""".stripMargin,
+         |$PAGERANK_SQL""".stripMargin,
 
     // q114: the merged row here is a ONE-SHOT sketch over the union of
     // raw values, while the Spark side merges the two shard sketches by
     // register-wise max — the hash match proves merge ≡ rebuild.
     "q114_hll_merge" ->
-      """WITH p AS (
-        |  SELECT DISTINCT 'shard_' || CAST(event_id % 2 AS VARCHAR) AS part,
-        |    user_id FROM events
-        |  UNION ALL
-        |  SELECT DISTINCT 'merged' AS part, user_id FROM events),
-        |hh AS (SELECT part, user_id,
-        |  md5('hll|' || CAST(user_id AS VARCHAR)) AS h FROM p),
-        |hx AS (SELECT part,
-        |  (strpos('0123456789abcdef', h[1]) - 1) * 16
-        |    + strpos('0123456789abcdef', h[2]) - 1 AS bucket,
-        |  substring(h, 3, 12) AS h12 FROM hh),
-        |zz AS (SELECT part, bucket, h12,
-        |  length(regexp_extract(h12, '^(0*)', 1)) AS zc FROM hx),
-        |rk AS (SELECT part, bucket,
-        |  CASE WHEN zc = 12 THEN 49 ELSE zc * 4
-        |    + CASE substring(h12, zc + 1, 1) WHEN '1' THEN 3
-        |      WHEN '2' THEN 2 WHEN '3' THEN 2 WHEN '4' THEN 1
-        |      WHEN '5' THEN 1 WHEN '6' THEN 1 WHEN '7' THEN 1
-        |      ELSE 0 END + 1 END AS r FROM zz),
-        |regs AS (SELECT part, bucket, max(r) AS r FROM rk GROUP BY 1, 2),
-        |sums AS (SELECT part,
-        |  CAST(sum(1::BIGINT << (49 - r)) AS BIGINT) AS s_used,
-        |  count(*) AS n_buckets FROM regs GROUP BY 1),
-        |ex AS (SELECT part, count(DISTINCT user_id) AS exact_users
-        |  FROM p GROUP BY 1),
-        |e AS (SELECT s.part, n_buckets, exact_users,
-        |  round(0.7213e0/(1.0e0+1.079e0/256.0e0)*65536.0e0*562949953421312.0e0
-        |    / (s_used + (256 - n_buckets) * 562949953421312::BIGINT), 2) AS est
-        |  FROM sums s JOIN ex USING (part))
-        |SELECT part, CAST(n_buckets AS BIGINT) AS n_buckets,
-        |  CAST(exact_users AS BIGINT) AS exact_users, est,
-        |  round((est - exact_users) / exact_users, 4) AS rel_err
-        |FROM e ORDER BY part""".stripMargin,
+      s"""WITH p AS (
+         |  SELECT DISTINCT 'shard_' || CAST(event_id % 2 AS VARCHAR) AS part,
+         |    user_id FROM events
+         |  UNION ALL
+         |  SELECT DISTINCT 'merged' AS part, user_id FROM events),
+         |hh AS (SELECT part, user_id,
+         |  md5('hll|' || CAST(user_id AS VARCHAR)) AS h FROM p),
+         |${hllRankCtes("part", "hh", "hx", "zz", "rk")},
+         |regs AS (SELECT part, bucket, max(r) AS r FROM rk GROUP BY 1, 2),
+         |sums AS (SELECT part,
+         |  CAST(sum(1::BIGINT << (49 - r)) AS BIGINT) AS s_used,
+         |  count(*) AS n_buckets FROM regs GROUP BY 1),
+         |ex AS (SELECT part, count(DISTINCT user_id) AS exact_users
+         |  FROM p GROUP BY 1),
+         |e AS (SELECT s.part, n_buckets, exact_users,
+         |  round(0.7213e0/(1.0e0+1.079e0/256.0e0)*65536.0e0*562949953421312.0e0
+         |    / (s_used + (256 - n_buckets) * 562949953421312::BIGINT), 2) AS est
+         |  FROM sums s JOIN ex USING (part))
+         |SELECT part, CAST(n_buckets AS BIGINT) AS n_buckets,
+         |  CAST(exact_users AS BIGINT) AS exact_users, est,
+         |  round((est - exact_users) / exact_users, 4) AS rel_err
+         |FROM e ORDER BY part""".stripMargin,
 
     // q115: q41's IVF assignment/probe + q97's int8 quantization; the
     // gate score is an exact BIGINT dot product over quantized vectors,
     // the rerank is q41's double cosine over the top-20 gate survivors
     "q115_quantized_ann" ->
-      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-        |cent AS (SELECT vec_id AS cent_id, e AS ce FROM v WHERE vec_id % 250 = 0),
-        |assigned AS (SELECT vec_id AS neighbor_id, e AS cv, cent_id FROM (
-        |SELECT v.vec_id, v.e, c.cent_id,
-        |row_number() OVER (PARTITION BY v.vec_id ORDER BY
-        |  round(list_dot_product(v.e, c.ce)
-        |   /(sqrt(list_dot_product(v.e, v.e))*sqrt(list_dot_product(c.ce, c.ce))), 6)
-        |  DESC, c.cent_id) AS crank
-        |FROM v CROSS JOIN cent c) WHERE crank = 1),
-        |probed AS (SELECT vec_id AS query_id, e AS qv, cent_id FROM (
-        |SELECT v.vec_id, v.e, c.cent_id,
-        |row_number() OVER (PARTITION BY v.vec_id ORDER BY
-        |  round(list_dot_product(v.e, c.ce)
-        |   /(sqrt(list_dot_product(v.e, v.e))*sqrt(list_dot_product(c.ce, c.ce))), 6)
-        |  DESC, c.cent_id) AS crank
-        |FROM v CROSS JOIN cent c WHERE v.vec_id < 8) WHERE crank <= 2),
-        |aq AS (SELECT neighbor_id, cent_id,
-        |  CASE WHEN s = 0 THEN list_transform(cv, x -> 0::BIGINT)
-        |    ELSE list_transform(cv, x ->
-        |      CAST(least(greatest(round(x*127/s), -127), 127) AS BIGINT)) END AS cqv
-        |  FROM (SELECT neighbor_id, cent_id, cv,
-        |    list_max(list_transform(cv, x -> abs(x))) AS s FROM assigned)),
-        |aqn AS (SELECT neighbor_id, cent_id, cqv,
-        |  CAST(list_sum(list_transform(cqv, x -> x*x)) AS BIGINT) AS cqn FROM aq),
-        |pq AS (SELECT query_id, cent_id,
-        |  CASE WHEN s = 0 THEN list_transform(qv, x -> 0::BIGINT)
-        |    ELSE list_transform(qv, x ->
-        |      CAST(least(greatest(round(x*127/s), -127), 127) AS BIGINT)) END AS qqv
-        |  FROM (SELECT query_id, cent_id, qv,
-        |    list_max(list_transform(qv, x -> abs(x))) AS s FROM probed)),
-        |pqn AS (SELECT query_id, cent_id, qqv,
-        |  CAST(list_sum(list_transform(qqv, x -> x*x)) AS BIGINT) AS qqn FROM pq),
-        |cands AS (SELECT DISTINCT p.query_id, a.neighbor_id,
-        |  CASE WHEN p.qqn = 0 OR a.cqn = 0 THEN 0.0e0
-        |    ELSE round(
-        |      CAST(list_sum(list_transform(range(1, len(p.qqv)+1),
-        |        i -> p.qqv[i]*a.cqv[i])) AS BIGINT)
-        |      / sqrt(CAST(p.qqn AS DOUBLE) * a.cqn), 4) END AS sim_q
-        |  FROM pqn p JOIN aqn a ON p.cent_id = a.cent_id
-        |  WHERE p.query_id <> a.neighbor_id),
-        |gate AS (SELECT query_id, neighbor_id, sim_q FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY query_id
-        |    ORDER BY sim_q DESC, neighbor_id) AS qrank FROM cands)
-        |  WHERE qrank <= 20),
-        |rer AS (SELECT g.query_id, g.neighbor_id, g.sim_q,
-        |  round(list_dot_product(q.e, c.e)
-        |   /(sqrt(list_dot_product(q.e, q.e))*sqrt(list_dot_product(c.e, c.e))), 4) AS sim
-        |  FROM gate g JOIN v q ON q.vec_id = g.query_id
-        |  JOIN v c ON c.vec_id = g.neighbor_id)
-        |SELECT query_id, "rank", neighbor_id, sim, sim_q FROM (
-        |SELECT *, row_number() OVER (PARTITION BY query_id
-        |  ORDER BY sim DESC, neighbor_id) AS "rank" FROM rer)
-        |WHERE "rank" <= 5 ORDER BY query_id, "rank"""".stripMargin,
+      s"""$IVF_PROBE_CTES,
+         |aq AS (SELECT neighbor_id, cent_id,
+         |  CASE WHEN s = 0 THEN list_transform(cv, x -> 0::BIGINT)
+         |    ELSE list_transform(cv, x ->
+         |      CAST(least(greatest(round(x*127/s), -127), 127) AS BIGINT)) END AS cqv
+         |  FROM (SELECT neighbor_id, cent_id, cv,
+         |    list_max(list_transform(cv, x -> abs(x))) AS s FROM assigned)),
+         |aqn AS (SELECT neighbor_id, cent_id, cqv,
+         |  CAST(list_sum(list_transform(cqv, x -> x*x)) AS BIGINT) AS cqn FROM aq),
+         |pq AS (SELECT query_id, cent_id,
+         |  CASE WHEN s = 0 THEN list_transform(qv, x -> 0::BIGINT)
+         |    ELSE list_transform(qv, x ->
+         |      CAST(least(greatest(round(x*127/s), -127), 127) AS BIGINT)) END AS qqv
+         |  FROM (SELECT query_id, cent_id, qv,
+         |    list_max(list_transform(qv, x -> abs(x))) AS s FROM probed)),
+         |pqn AS (SELECT query_id, cent_id, qqv,
+         |  CAST(list_sum(list_transform(qqv, x -> x*x)) AS BIGINT) AS qqn FROM pq),
+         |cands AS (SELECT DISTINCT p.query_id, a.neighbor_id,
+         |  CASE WHEN p.qqn = 0 OR a.cqn = 0 THEN 0.0e0
+         |    ELSE round(
+         |      CAST(list_sum(list_transform(range(1, len(p.qqv)+1),
+         |        i -> p.qqv[i]*a.cqv[i])) AS BIGINT)
+         |      / sqrt(CAST(p.qqn AS DOUBLE) * a.cqn), 4) END AS sim_q
+         |  FROM pqn p JOIN aqn a ON p.cent_id = a.cent_id
+         |  WHERE p.query_id <> a.neighbor_id),
+         |gate AS (SELECT query_id, neighbor_id, sim_q FROM (
+         |  SELECT *, row_number() OVER (PARTITION BY query_id
+         |    ORDER BY sim_q DESC, neighbor_id) AS qrank FROM cands)
+         |  WHERE qrank <= 20),
+         |rer AS (SELECT g.query_id, g.neighbor_id, g.sim_q,
+         |  round(list_dot_product(q.e, c.e)
+         |   /(sqrt(list_dot_product(q.e, q.e))*sqrt(list_dot_product(c.e, c.e))), 4) AS sim
+         |  FROM gate g JOIN v q ON q.vec_id = g.query_id
+         |  JOIN v c ON c.vec_id = g.neighbor_id)
+         |SELECT query_id, "rank", neighbor_id, sim, sim_q FROM (
+         |SELECT *, row_number() OVER (PARTITION BY query_id
+         |  ORDER BY sim DESC, neighbor_id) AS "rank" FROM rer)
+         |WHERE "rank" <= 5 ORDER BY query_id, "rank"""".stripMargin,
 
     // q116's oracle is the FULL RE-MINE (q109's SQL verbatim): the
     // Spark side computes existing-pairs ∪ incoming-delta, and the
     // hash match proves the incremental maintenance algebra reproduces
     // the from-scratch mine
-    "q116_incremental_pairs" ->
-      s"""${PAIR_CLOSURE_CTES}
-         |SELECT id_a, id_b, CAST(shared AS BIGINT) AS shared,
-         |round(CAST(shared AS DOUBLE)/(na+nb-shared), 4) AS jaccard
-         |FROM prs
-         |WHERE round(CAST(shared AS DOUBLE)/(na+nb-shared), 4) >= 0.2
-         |ORDER BY id_a, id_b""".stripMargin,
+    "q116_incremental_pairs" -> PIPELINE_MINE_SQL,
 
     "q117_cluster_split" ->
       s"""${PAIR_CLOSURE_CTES},
@@ -4894,34 +4531,10 @@ object Oracles {
     // q118: q81's embedding pair closure + q110's per-cluster edge
     // count, over the materialized embedding pair table
     "q118_embed_pipeline" ->
-      """WITH RECURSIVE v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-        |cent AS (SELECT vec_id AS cent_id, e AS ce FROM v WHERE vec_id % 100 = 0),
-        |assigned AS (SELECT vec_id, e, cent_id FROM (
-        |SELECT v.vec_id, v.e, c.cent_id,
-        |row_number() OVER (PARTITION BY v.vec_id ORDER BY
-        |  round(list_dot_product(v.e, c.ce)
-        |   /(sqrt(list_dot_product(v.e, v.e))*sqrt(list_dot_product(c.ce, c.ce))), 6)
-        |  DESC, c.cent_id) AS crank
-        |FROM v CROSS JOIN cent c) WHERE crank <= 2),
-        |pairs AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-        |FROM assigned a JOIN assigned b
-        |  ON a.cent_id = b.cent_id AND a.vec_id < b.vec_id
-        |WHERE round(list_dot_product(a.e, b.e)
-        |   /(sqrt(list_dot_product(a.e, a.e))*sqrt(list_dot_product(b.e, b.e))), 4) >= 0.35),
-        |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-        |  UNION ALL SELECT id_b, id_a FROM pairs),
-        |reach(id, r) AS (
-        |  SELECT DISTINCT src, src FROM edges
-        |  UNION
-        |  SELECT e.src, reach.r FROM reach JOIN edges e ON e.dst = reach.id),
-        |lab AS (SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id),
-        |sz AS (SELECT cluster_id, count(*) AS n_members,
-        |  max(doc_id) AS max_member FROM lab GROUP BY cluster_id),
-        |pc AS (SELECT l.cluster_id, count(*) AS n_pairs
-        |  FROM pairs p JOIN lab l ON p.id_a = l.doc_id GROUP BY 1)
-        |SELECT sz.cluster_id, sz.n_members, sz.max_member, pc.n_pairs
-        |FROM sz JOIN pc ON sz.cluster_id = pc.cluster_id
-        |ORDER BY sz.cluster_id""".stripMargin,
+      s"""WITH RECURSIVE ${embedGraphCtes("pairs", "0.35")},
+         |${edgesCte("edges", "pairs")},
+         |$CLOSURE_CTES,
+         |${clusterEdgeRollup("pairs")}""".stripMargin,
 
     // q119: per-bigram p rounds to 6 dp → fixed-point micro-units →
     // integer-division per-doc mean; `//` (floor) == Spark `div`
@@ -5011,18 +4624,7 @@ object Oracles {
          |  8000, 9000]) AS threshold_bp),
          |e AS (SELECT t.threshold_bp, j.id_a, j.id_b
          |  FROM jb j JOIN th t ON j.bp >= t.threshold_bp),
-         |a1 AS (SELECT threshold_bp, count(*) AS n_pairs,
-         |  count(DISTINCT id_b) AS n_dropped FROM e GROUP BY 1),
-         |ex AS (SELECT threshold_bp, id_a AS did FROM e
-         |  UNION ALL SELECT threshold_bp, id_b FROM e),
-         |a2 AS (SELECT threshold_bp, count(DISTINCT did) AS n_docs_touched
-         |  FROM ex GROUP BY 1),
-         |tot AS (SELECT count(*) AS n_total FROM documents)
-         |SELECT a1.threshold_bp, a1.n_pairs, a2.n_docs_touched,
-         |a1.n_dropped,
-         |round(1.0e0 - CAST(a1.n_dropped AS DOUBLE)/n_total, 4) AS retention
-         |FROM a1 JOIN a2 USING (threshold_bp) CROSS JOIN tot
-         |ORDER BY threshold_bp""".stripMargin,
+         |${retentionSweep("documents")}""".stripMargin,
 
     "q124_training_order" ->
       """WITH s AS (SELECT doc_id, source,
@@ -5089,20 +4691,7 @@ object Oracles {
     // outer on the canonical (id_a, id_b) keys
     "q127_modality_agreement" ->
       s"""${PAIR_CLOSURE_CTES},
-         |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-         |cent AS (SELECT vec_id AS cent_id, e AS ce FROM v WHERE vec_id % 100 = 0),
-         |assigned AS (SELECT vec_id, e, cent_id FROM (
-         |SELECT v.vec_id, v.e, c.cent_id,
-         |row_number() OVER (PARTITION BY v.vec_id ORDER BY
-         |  round(list_dot_product(v.e, c.ce)
-         |   /(sqrt(list_dot_product(v.e, v.e))*sqrt(list_dot_product(c.ce, c.ce))), 6)
-         |  DESC, c.cent_id) AS crank
-         |FROM v CROSS JOIN cent c) WHERE crank <= 2),
-         |ep AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-         |FROM assigned a JOIN assigned b
-         |  ON a.cent_id = b.cent_id AND a.vec_id < b.vec_id
-         |WHERE round(list_dot_product(a.e, b.e)
-         |   /(sqrt(list_dot_product(a.e, a.e))*sqrt(list_dot_product(b.e, b.e))), 4) >= 0.35),
+         |${embedGraphCtes("ep", "0.35")},
          |ag AS (SELECT
          |  CAST(sum(CASE WHEN t.id_a IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
          |    AS n_text_pairs,
@@ -5169,48 +4758,8 @@ object Oracles {
         |SELECT query_id, neighbor_id, round(sim, 4) AS sim FROM s
         |WHERE sim >= 0.35 ORDER BY query_id, neighbor_id""".stripMargin,
 
-    // q131: banded-LSH regime — replay the integer Rademacher
-    // signature (bit i of vec = sign of sum_d sgn(i,d)*round(e[d]*1e6)
-    // with sgn from the Wang-hash avalanche mix, see
-    // SimilarityJoinKernels.hyperplaneSign), 8 bands x 8 bits,
-    // candidates = band-bucket collisions, exact raw-cosine gate
-    "q131_simjoin_banded" ->
-      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-        |  FROM embeddings),
-        |qv AS (SELECT vec_id, e,
-        |  list_transform(e, x -> CAST(round(x*1e6) AS BIGINT)) AS q FROM v),
-        |sgn AS (SELECT bit, dim,
-        |  CASE WHEN ((xor(x4, x4 >> 15) >> 16) & 1) = 1
-        |    THEN 1 ELSE -1 END AS s
-        |FROM (SELECT bit, dim,
-        |    (xor(x2, x2 >> 4) * 668265261) % 4294967296 AS x4
-        |  FROM (SELECT bit, dim,
-        |      (xor(xor(s0, 61), s0 >> 16) * 9) % 4294967296 AS x2
-        |    FROM (SELECT b.i AS bit, d.d AS dim, b.i*1000003 + d.d AS s0
-        |      FROM (SELECT unnest(range(64)) AS i) b
-        |      CROSS JOIN (SELECT unnest(range(64)) AS d) d)))),
-        |bit AS (SELECT vec_id, g.bit AS bit,
-        |  CASE WHEN sum(g.s * q[CAST(g.dim+1 AS INT)]) > 0
-        |  THEN '1' ELSE '0' END AS bv
-        |FROM qv CROSS JOIN sgn g
-        |GROUP BY vec_id, g.bit),
-        |sig AS (SELECT vec_id, string_agg(bv, '' ORDER BY bit) AS bits
-        |FROM bit GROUP BY vec_id),
-        |banded AS (SELECT vec_id, b.b AS band,
-        |  substring(bits, CAST(b.b*8+1 AS INT), 8) AS bucket
-        |FROM sig CROSS JOIN (SELECT unnest(range(8)) AS b) b),
-        |cand AS (SELECT DISTINCT l.vec_id AS id_a, r.vec_id AS id_b
-        |FROM banded l JOIN banded r
-        |  ON l.band = r.band AND l.bucket = r.bucket
-        |  AND l.vec_id < r.vec_id),
-        |s AS (SELECT c.id_a, c.id_b,
-        |  list_dot_product(a.e, b.e)
-        |   /(sqrt(list_dot_product(a.e, a.e))*sqrt(list_dot_product(b.e, b.e)))
-        |  AS sim
-        |FROM cand c JOIN v a ON a.vec_id = c.id_a
-        |  JOIN v b ON b.vec_id = c.id_b)
-        |SELECT id_a, id_b, round(sim, 4) AS sim FROM s
-        |WHERE sim >= 0.35 ORDER BY id_a, id_b""".stripMargin,
+    // q131: banded-LSH regime, 8 bands x 8 bits
+    "q131_simjoin_banded" -> bandedSimjoinSql(64, 8, 8, "0.35"),
 
     // q132: stream-stream LEFT OUTER interval join, replayed. Inner
     // matches are watermark-independent; a NULL row exists only for
@@ -5290,11 +4839,7 @@ object Oracles {
        |  SELECT f.id, f.vv, c.cent_id,
        |  row_number() OVER (PARTITION BY f.id ORDER BY ${semCos("f.vv", "c.cv", 6)} DESC, c.cent_id) AS rk
        |  FROM fitsrc f CROSS JOIN c0 c) WHERE rk = 1),
-       |m1 AS (SELECT cent_id, CAST(p.pos AS INT) AS pos,
-       |  CAST(sum(CAST(round(vv[CAST(p.pos AS INT)+1]*1e6) AS BIGINT)) AS DOUBLE)/1e6/count(*) AS m
-       |  FROM fa CROSS JOIN (SELECT unnest(range(64)) AS pos) p
-       |  GROUP BY cent_id, p.pos),
-       |c1 AS (SELECT cent_id, list(m ORDER BY pos) AS cv FROM m1 GROUP BY cent_id)""".stripMargin
+       |${kmMeanCtes(1, "fa")}""".stripMargin
 
   /** Nearest-c1-centroid assignment of the `srcFilter` slice of `sv`
     * as CTE `out` (6-dp score, centroid-id tie-break). */

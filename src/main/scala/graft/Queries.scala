@@ -70,7 +70,6 @@ object Queries {
 
   /** Integer-cents sum: deterministic under any partitioning. */
   private def centsSum(c: Column): Column = sum(round(c * 100).cast("long"))
-  private[graft] def centsSumPublic(c: Column): Column = centsSum(c)
   private def money(c: Column): Column = centsSum(c) / 100.0
   private def moneyAvg(c: Column): Column =
     round(centsSum(c) / 100.0 / count(lit(1)), 4)
@@ -78,6 +77,11 @@ object Queries {
   private def fmtTs(c: Column): Column =
     date_format(c, "yyyy-MM-dd HH:mm:ss")
   private def fmtDate(c: Column): Column = date_format(c, "yyyy-MM-dd")
+
+  /** The embeddings as the (id, vec) frame the vector operators take. */
+  private def vectors(spark: SparkSession, dir: String): DataFrame =
+    t(spark, dir).embeddings
+      .select(col("vec_id").as("id"), col("embedding").as("vec"))
 
   // ---------- relational core (lineitem / orders / dims) ----------
 
@@ -383,8 +387,7 @@ object Queries {
   /** Brute-force cosine top-5 for 8 query vectors (ANN baseline;
     * corpus streams, query side broadcast). */
   def q25AnnBruteForce(spark: SparkSession, dir: String): DataFrame = {
-    val emb = t(spark, dir).embeddings
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
+    val emb = vectors(spark, dir)
     val queries = emb.where(col("id") < 8)
     Similarity.bruteForceTopK(queries, emb, k = 5)
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("sim"))
@@ -393,13 +396,18 @@ object Queries {
 
   /** As-of join: each purchase picks up the user's most recent prior
     * signup (union-and-carry, one sort-shuffle — SURVEY §7.4). */
-  def q26AsofJoin(spark: SparkSession, dir: String): DataFrame = {
+  def q26AsofJoin(spark: SparkSession, dir: String): DataFrame =
+    purchaseAsofSignup(spark, dir, Analytics.asofJoin)
+
+  /** q26's as-of contract through `join`: each purchase takes the
+    * user's latest signup at or before it (q26/q74/q76). */
+  private def purchaseAsofSignup(spark: SparkSession, dir: String,
+      join: (DataFrame, DataFrame, String, String, String, Seq[String])
+        => DataFrame): DataFrame = {
     val ev = events(spark, dir)
-    val purchases = ev.where(col("event_type") === "purchase")
+    def typed(t: String) = ev.where(col("event_type") === t)
       .select(col("event_id"), col("user_id"), col("ts"))
-    val signups = ev.where(col("event_type") === "signup")
-      .select(col("event_id"), col("user_id"), col("ts"))
-    Analytics.asofJoin(purchases, signups, "user_id", "ts", "ts",
+    join(typed("purchase"), typed("signup"), "user_id", "ts", "ts",
         Seq("event_id"))
       .select(col("event_id"), col("user_id"), col("asof_event_id"))
       .orderBy(col("event_id"))
@@ -463,17 +471,8 @@ object Queries {
 
   /** Sessionization: 30-min inactivity gap starts a new session
     * (batch analog of session windows; lag + running sum). */
-  def q31Sessions(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val run = w.rowsBetween(Window.unboundedPreceding, 0)
-    val withSid = events(spark, dir)
-      .withColumn("prev_ts", lag(col("ts"), 1).over(w))
-      .withColumn("new_session",
-        when(col("prev_ts").isNull
-          || unix_timestamp(col("ts")) - unix_timestamp(col("prev_ts")) > 1800,
-          1).otherwise(0))
-      .withColumn("sid", sum(col("new_session")).over(run))
-    withSid
+  def q31Sessions(spark: SparkSession, dir: String): DataFrame =
+    sessionized(events(spark, dir))
       .groupBy(col("user_id"), col("sid"))
       .agg(count(lit(1)).as("sess_events"))
       .groupBy(col("user_id"))
@@ -482,7 +481,33 @@ object Queries {
         sum(col("sess_events")).as("n_events"),
         max(col("sess_events")).as("max_session_events"))
       .orderBy(col("user_id"))
+
+  /** q31's sessionization of `ev`: a gap over 1800 s to the user's
+    * previous event opens a session; adds `prev_ts`, `new_session` and
+    * the running session id `sid` (one user-ordered sort). q163, q183,
+    * q205, q207 and q209 build on it. */
+  private def sessionized(ev: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("user_id"))
+      .orderBy(col("ts"), col("event_id"))
+    ev.withColumn("prev_ts", lag(col("ts"), 1).over(w))
+      .withColumn("new_session",
+        when(col("prev_ts").isNull
+          || unix_timestamp(col("ts")) - unix_timestamp(col("prev_ts"))
+            > 1800, 1).otherwise(0))
+      .withColumn("sid", sum(col("new_session")).over(
+        w.rowsBetween(Window.unboundedPreceding, 0)))
   }
+
+  /** A session's events in order: the window of in-session leads. */
+  private val inSession = Window.partitionBy(col("user_id"), col("sid"))
+    .orderBy(col("ts"), col("event_id"))
+
+  /** Each session's [s, e] span in epoch seconds (q207/q209). */
+  private def sessionSpans(ev: DataFrame): DataFrame =
+    sessionized(ev)
+      .groupBy(col("user_id"), col("sid"))
+      .agg(min(unix_timestamp(col("ts"))).as("s"),
+        max(unix_timestamp(col("ts"))).as("e"))
 
   /** Range join (equi key + time-range residual): views in the hour
     * before each purchase. Hash-joins on user_id, range as residual —
@@ -609,7 +634,7 @@ object Queries {
     val daily = events(spark, dir)
       .where(col("event_type") === "purchase")
       .groupBy(fmtDate(col("ts")).as("day"))
-      .agg(centsSumPublic(col("value")).as("cents"), count(lit(1)).as("n"))
+      .agg(centsSum(col("value")).as("cents"), count(lit(1)).as("n"))
     val wAll = Window.orderBy(col("day"))
       .rowsBetween(Window.unboundedPreceding, 0)
     val w7 = Window.orderBy(col("day")).rowsBetween(-6, 0)
@@ -639,8 +664,7 @@ object Queries {
     * centroid buckets. Centroids here are a deterministic subset
     * (vec_id % 250 == 0); at scale they come from a sampled k-means. */
   def q41AnnIvf(spark: SparkSession, dir: String): DataFrame = {
-    val emb = t(spark, dir).embeddings
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
+    val emb = vectors(spark, dir)
     val centroids = emb.where(col("id") % 250 === 0)
     val queries = emb.where(col("id") < 8)
     Similarity.ivfTopK(queries, emb, centroids, k = 5, nprobe = 2)
@@ -994,13 +1018,44 @@ object Queries {
     * of q22's text pair mining): IVF-bucketed self-join, 2-probe
     * assignment. Centroids are the deterministic vec_id % 100 subset;
     * at scale they come from a sampled `Similarity.fitCentroids`. */
-  def q54EmbedNearDup(spark: SparkSession, dir: String): DataFrame = {
-    val emb = t(spark, dir).embeddings
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val centroids = emb.where(col("id") % 100 === 0)
-    Similarity.cosineNearDupPairs(emb, centroids,
-        threshold = 0.35, nprobe = 2)
-      .orderBy(col("id_a"), col("id_b"))
+  def q54EmbedNearDup(spark: SparkSession, dir: String): DataFrame =
+    embedGraphPairs(spark, dir, 0.35).orderBy(col("id_a"), col("id_b"))
+
+  /** q54's near-dup embedding graph: IVF-bucketed cosine self-join,
+    * 2-probe assignment, centroids the vec_id % 100 subset. q54/q81
+    * and [[graft.operators.PairTable.embedPairs]] mine it at 0.35,
+    * q102/q167/q171/q182 at 0.30 (via [[embedGraph]]). */
+  private[graft] def embedGraphPairs(spark: SparkSession, dir: String,
+      threshold: Double): DataFrame = {
+    val emb = vectors(spark, dir)
+    Similarity.cosineNearDupPairs(emb, emb.where(col("id") % 100 === 0),
+      threshold = threshold, nprobe = 2)
+  }
+
+  /** The 0.30 embedding graph's canonical (id_a < id_b) edge list,
+    * persisted: every graph query reads it more than once. */
+  private def embedGraph(spark: SparkSession, dir: String): DataFrame =
+    graft.operators.Caches.persistTracked(
+      embedGraphPairs(spark, dir, 0.30).select(col("id_a"), col("id_b")))
+
+  /** The symmetric (src, dst) edge list of canonical pairs. */
+  private def symmetricEdges(pairs: DataFrame): DataFrame =
+    pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
+
+  /** Triangles per node of a canonical pair set: one wedge join keyed
+    * on the shared node and one semi join to close each wedge, so each
+    * triangle counts once (q102/q167). */
+  private def triangleCounts(pairs: DataFrame): DataFrame = {
+    val wedges = pairs.join(
+      pairs.select(col("id_a").as("id_b"), col("id_b").as("id_c")),
+      Seq("id_b"))
+    wedges.join(pairs.select(col("id_a"), col("id_b").as("id_c")),
+        Seq("id_a", "id_c"), "left_semi")
+      .select(explode(array(col("id_a"), col("id_b"), col("id_c")))
+        .as("vec_id"))
+      .groupBy(col("vec_id"))
+      .agg(count(lit(1)).as("n_triangles"))
   }
 
   /** The deterministic k-means fit EXPOSED to the oracle: 2 Lloyd
@@ -1011,8 +1066,7 @@ object Queries {
     * is differential-checkable — the DuckDB oracle replays both
     * iterations in SQL. */
   def q55KmeansFit(spark: SparkSession, dir: String): DataFrame = {
-    val emb = t(spark, dir).embeddings
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
+    val emb = vectors(spark, dir)
     Similarity.fitCentroids(emb, k = 4, iters = 2)
       .select(col("cent_id"), posexplode(col("cent_v")))
       .select(col("cent_id"), col("pos"), round(col("col"), 6).as("m"))
@@ -1146,8 +1200,7 @@ object Queries {
     * [[Similarity.fitCentroids]]'s doc promises. Oracle replays the
     * sampled fit AND the probe in SQL. */
   def q63SampledFit(spark: SparkSession, dir: String): DataFrame = {
-    val emb = t(spark, dir).embeddings
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
+    val emb = vectors(spark, dir)
     val sample = emb.where(
       substring(md5(concat_ws("|", lit("fit-seed"), col("id"))), 1, 1) < "4")
     val cents = Similarity.fitCentroids(sample, k = 4, iters = 1)
@@ -1341,14 +1394,20 @@ object Queries {
     * the min doc id as survivor even when A~C was never an emitted
     * pair — the transitive step every dedup pipeline needs between
     * pair mining and row dropping. */
-  def q71DedupClusters(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = Dedup.jaccardPairs(t(spark, dir).documents,
-      "doc_id", "text", n = 3, threshold = 0.2)
-    Dedup.connectedComponents(pairs)
-      .groupBy(col("cluster_id"))
+  def q71DedupClusters(spark: SparkSession, dir: String): DataFrame =
+    clusterSizes(Dedup.connectedComponents(textPairs(t(spark, dir).documents)))
+
+  /** q22's near-dup pairs: word-3-gram jaccard >= 0.2, stop-shingle
+    * cap 1000 (q71/q85/q91/q92/q93). */
+  private def textPairs(docs: DataFrame): DataFrame =
+    Dedup.jaccardPairs(docs, "doc_id", "text", n = 3, threshold = 0.2)
+
+  /** Per-cluster member count and max member of CC labels
+    * (q71/q81/q92). */
+  private def clusterSizes(labels: DataFrame): DataFrame =
+    labels.groupBy(col("cluster_id"))
       .agg(count(lit(1)).as("n_members"), max(col("doc_id")).as("max_member"))
       .orderBy(col("cluster_id"))
-  }
 
   /** Incremental-ingest dedup: the `doc_id % 10 == 7` slice plays the
     * incoming batch, the rest the already-indexed corpus. Each incoming
@@ -1421,17 +1480,8 @@ object Queries {
     * ([[graft.plans.AsOfJoinExec]] via [[Analytics.asofJoinExec]]) —
     * same DuckDB ASOF oracle, so the custom LogicalPlan → Strategy →
     * SparkPlan path is hash-verified end-to-end, not just unit-tested. */
-  def q74AsofExec(spark: SparkSession, dir: String): DataFrame = {
-    val ev = events(spark, dir)
-    val purchases = ev.where(col("event_type") === "purchase")
-      .select(col("event_id"), col("user_id"), col("ts"))
-    val signups = ev.where(col("event_type") === "signup")
-      .select(col("event_id"), col("user_id"), col("ts"))
-    Analytics.asofJoinExec(purchases, signups, "user_id", "ts", "ts",
-        Seq("event_id"))
-      .select(col("event_id"), col("user_id"), col("asof_event_id"))
-      .orderBy(col("event_id"))
-  }
+  def q74AsofExec(spark: SparkSession, dir: String): DataFrame =
+    purchaseAsofSignup(spark, dir, Analytics.asofJoinExec)
 
   /** SCD2-style temporal-validity join: signup events become validity
     * intervals per user ([ts, next-signup ts) via lead()), purchases
@@ -1442,14 +1492,17 @@ object Queries {
     val ev = events(spark, dir)
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts"), col("event_id"))
+    // both sides project `ev`: the interval key is renamed so the join
+    // condition compares two attributes, not one with itself
     val intervals = ev.where(col("event_type") === "signup")
       .withColumn("valid_to", lead(col("ts"), 1).over(w))
-      .select(col("event_id").as("interval_id"), col("user_id"),
+      .select(col("event_id").as("interval_id"),
+        col("user_id").as("iv_user_id"),
         col("ts").as("valid_from"), col("valid_to"))
     val purchases = ev.where(col("event_type") === "purchase")
       .select(col("user_id"), col("ts"), col("value"))
     purchases.join(intervals,
-        purchases("user_id") === intervals("user_id") &&
+        col("user_id") === col("iv_user_id") &&
           col("ts") >= col("valid_from") &&
           (col("valid_to").isNull || col("ts") < col("valid_to")))
       .groupBy(col("interval_id"))
@@ -1463,17 +1516,8 @@ object Queries {
     * shuffle of the purchase stream at all. Third implementation of
     * the same oracle semantics (carry q26, merge exec q74), one per
     * scale regime. */
-  def q76AsofBroadcast(spark: SparkSession, dir: String): DataFrame = {
-    val ev = events(spark, dir)
-    val purchases = ev.where(col("event_type") === "purchase")
-      .select(col("event_id"), col("user_id"), col("ts"))
-    val signups = ev.where(col("event_type") === "signup")
-      .select(col("event_id"), col("user_id"), col("ts"))
-    Analytics.asofJoinBroadcast(purchases, signups, "user_id", "ts", "ts",
-        Seq("event_id"))
-      .select(col("event_id"), col("user_id"), col("asof_event_id"))
-      .orderBy(col("event_id"))
-  }
+  def q76AsofBroadcast(spark: SparkSession, dir: String): DataFrame =
+    purchaseAsofSignup(spark, dir, Analytics.asofJoinBroadcast)
 
   /** Completes the §2.8 window family: rank, dense_rank, percent_rank,
     * cume_dist (over value DESC — ties share ranks, so no tie-break
@@ -1574,17 +1618,9 @@ object Queries {
     * cosine neighborhoods), and star converges in fewer rounds than
     * min-label propagation there (measured ~25% faster at sf0.1 —
     * the closure oracle is algorithm-independent). */
-  def q81EmbedClusters(spark: SparkSession, dir: String): DataFrame = {
-    val emb = t(spark, dir).embeddings
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val centroids = emb.where(col("id") % 100 === 0)
-    val pairs = Similarity.cosineNearDupPairs(emb, centroids,
-      threshold = 0.35, nprobe = 2)
-    Dedup.connectedComponentsStar(pairs)
-      .groupBy(col("cluster_id"))
-      .agg(count(lit(1)).as("n_members"), max(col("doc_id")).as("max_member"))
-      .orderBy(col("cluster_id"))
-  }
+  def q81EmbedClusters(spark: SparkSession, dir: String): DataFrame =
+    clusterSizes(
+      Dedup.connectedComponentsStar(embedGraphPairs(spark, dir, 0.35)))
 
   /** Robust-stats outlier profile: per event type, exact quartiles,
     * IQR, and the count of rows outside the 1.5×IQR Tukey fences. Two
@@ -1669,9 +1705,14 @@ object Queries {
     * pipeline: mine → collapse → merge. */
   def q85SurvivorMerge(spark: SparkSession, dir: String): DataFrame = {
     val docs = t(spark, dir).documents
-    val pairs = Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.2)
-    Dedup.connectedComponents(pairs)
-      .join(docs, Seq("doc_id"))
+    survivors(Dedup.connectedComponents(textPairs(docs)), docs)
+  }
+
+  /** q85's golden record per cluster of `labels`: member count, the
+    * longest text length, the sorted distinct member sources
+    * (q85/q111). */
+  private def survivors(labels: DataFrame, docs: DataFrame): DataFrame =
+    labels.join(docs, Seq("doc_id"))
       .groupBy(col("cluster_id"))
       .agg(
         count(lit(1)).as("n_members"),
@@ -1679,7 +1720,6 @@ object Queries {
         array_join(array_sort(collect_set(col("source"))), ",")
           .as("merged_sources"))
       .orderBy(col("cluster_id"))
-  }
 
   /** TPC-H Q5-shaped star join — the 5-table relational depth marker:
     * region → nation → customer → orders → lineitem, revenue per
@@ -1810,12 +1850,18 @@ object Queries {
     * already-verified operator; this proves they COMPOSE. */
   def q91CleanExport(spark: SparkSession, dir: String): DataFrame = {
     val docs = t(spark, dir).documents
+    cleanExport(docs, textPairs(docs))
+  }
+
+  /** q91's decision per doc, counted per (source, decision): exact-dup
+    * non-survivors drop, then non-survivors of the CC clusters of
+    * `pairs`, then quality < 0.62; the rest keep (q91/q112). */
+  private def cleanExport(docs: DataFrame, pairs: DataFrame): DataFrame = {
     val base = docs.select(col("doc_id"), col("source"),
       fingerprint(col("text")).as("fp"),
       qualityScore(tokens(col("text"))).as("q"))
     val keepFp = base.groupBy(col("fp")).agg(min(col("doc_id")).as("keep_id"))
-    val clusters = Dedup.connectedComponents(
-      Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.2))
+    val clusters = Dedup.connectedComponents(pairs)
     base.join(keepFp, Seq("fp"))
       .join(clusters, Seq("doc_id"), "left")
       .select(col("source"),
@@ -1836,14 +1882,9 @@ object Queries {
     * min-label propagation. Same pairs, same output contract, same
     * oracle closure — a full-pipeline differential check that two
     * independently-derived distributed CC algorithms agree. */
-  def q92StarClusters(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = Dedup.jaccardPairs(t(spark, dir).documents,
-      "doc_id", "text", n = 3, threshold = 0.2)
-    Dedup.connectedComponentsStar(pairs)
-      .groupBy(col("cluster_id"))
-      .agg(count(lit(1)).as("n_members"), max(col("doc_id")).as("max_member"))
-      .orderBy(col("cluster_id"))
-  }
+  def q92StarClusters(spark: SparkSession, dir: String): DataFrame =
+    clusterSizes(
+      Dedup.connectedComponentsStar(textPairs(t(spark, dir).documents)))
 
   /** PageRank centrality over the near-dup similarity graph
     * ([[graft.operators.Graphs.pageRankFixed]]): q22's jaccard pairs,
@@ -1854,16 +1895,16 @@ object Queries {
     * min-id. Every shuffle is keyed on a node id; ranks are scaled
     * longs so the result is bit-identical under any partitioning and
     * replayable by an integer-division SQL oracle. */
-  def q93PageRank(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = graft.operators.Caches.persistTracked(
-      Dedup.jaccardPairs(t(spark, dir).documents,
-        "doc_id", "text", n = 3, threshold = 0.2))
-    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-    graft.operators.Graphs.pageRankFixed(edges, iters = 3)
+  def q93PageRank(spark: SparkSession, dir: String): DataFrame =
+    pageRank(graft.operators.Caches.persistTracked(
+      textPairs(t(spark, dir).documents)))
+
+  /** q93's 3-round fixed-point PageRank over the symmetric edges of
+    * `pairs` (q93/q113). */
+  private def pageRank(pairs: DataFrame): DataFrame =
+    graft.operators.Graphs.pageRankFixed(symmetricEdges(pairs), iters = 3)
       .select(col("id").as("doc_id"), col("out_deg"), col("rank_fp"))
       .orderBy(col("rank_fp").desc, col("doc_id"))
-  }
 
   // ---------- round-3 training-pipeline extensions ----------
 
@@ -2092,26 +2133,9 @@ object Queries {
     * canonical a<b orientation means each triangle is counted exactly
     * once; at 100 TB orient edges by degree instead (low→high) to
     * bound wedge fan-out on hub nodes. */
-  def q102Triangles(spark: SparkSession, dir: String): DataFrame = {
-    val emb = t(spark, dir).embeddings
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val centroids = emb.where(col("id") % 100 === 0)
-    val pairs = graft.operators.Caches.persistTracked(
-      Similarity.cosineNearDupPairs(emb, centroids,
-          threshold = 0.30, nprobe = 2)
-        .select(col("id_a"), col("id_b")))
-    val wedges = pairs.join(
-      pairs.select(col("id_a").as("id_b"), col("id_b").as("id_c")),
-      Seq("id_b"))
-    val tri = wedges.join(
-      pairs.select(col("id_a"), col("id_b").as("id_c")),
-      Seq("id_a", "id_c"), "left_semi")
-    tri.select(explode(array(col("id_a"), col("id_b"), col("id_c")))
-        .as("vec_id"))
-      .groupBy(col("vec_id"))
-      .agg(count(lit(1)).as("n_triangles"))
+  def q102Triangles(spark: SparkSession, dir: String): DataFrame =
+    triangleCounts(embedGraph(spark, dir))
       .orderBy(col("n_triangles").desc, col("vec_id"))
-  }
 
   /** Corpus snapshot diff — the data-versioning report run between
     * crawl snapshots: FULL OUTER join of two snapshot views on doc_id,
@@ -2387,56 +2411,25 @@ object Queries {
 
   /** Pipeline stage 2 — SURVIVORS from the shared table: q85's golden-
     * record merge without q85's re-mine. Same oracle closure. */
-  def q111PipelineSurvivors(spark: SparkSession, dir: String): DataFrame = {
-    val docs = t(spark, dir).documents
-    Dedup.connectedComponents(graft.operators.PairTable.pairs(spark, dir))
-      .join(docs, Seq("doc_id"))
-      .groupBy(col("cluster_id"))
-      .agg(
-        count(lit(1)).as("n_members"),
-        max(length(col("text"))).cast("long").as("best_text_len"),
-        array_join(array_sort(collect_set(col("source"))), ",")
-          .as("merged_sources"))
-      .orderBy(col("cluster_id"))
-  }
+  def q111PipelineSurvivors(spark: SparkSession, dir: String): DataFrame =
+    survivors(
+      Dedup.connectedComponents(graft.operators.PairTable.pairs(spark, dir)),
+      t(spark, dir).documents)
 
   /** Pipeline stage 3 — CLEAN EXPORT from the shared table: q91's
     * precedence-ordered keep/drop decisions with the near-dup clusters
     * derived from the materialized pairs instead of a fresh mine. */
-  def q112PipelineExport(spark: SparkSession, dir: String): DataFrame = {
-    val docs = t(spark, dir).documents
-    val base = docs.select(col("doc_id"), col("source"),
-      fingerprint(col("text")).as("fp"),
-      qualityScore(tokens(col("text"))).as("q"))
-    val keepFp = base.groupBy(col("fp")).agg(min(col("doc_id")).as("keep_id"))
-    val clusters = Dedup.connectedComponents(
+  def q112PipelineExport(spark: SparkSession, dir: String): DataFrame =
+    cleanExport(t(spark, dir).documents,
       graft.operators.PairTable.pairs(spark, dir))
-    base.join(keepFp, Seq("fp"))
-      .join(clusters, Seq("doc_id"), "left")
-      .select(col("source"),
-        when(col("doc_id") =!= col("keep_id"), "drop_exact_dup")
-          .when(col("cluster_id").isNotNull
-            && col("cluster_id") =!= col("doc_id"), "drop_near_dup")
-          .when(col("q") < 0.62, "drop_low_quality")
-          .otherwise("keep").as("decision"))
-      .groupBy(col("source"), col("decision"))
-      .agg(count(lit(1)).as("n"))
-      .orderBy(col("source"), col("decision"))
-  }
 
   /** Pipeline stage 4 — PAGERANK from the shared table: q93's
     * fixed-point centrality with the edge set read from the
     * materialized pairs (scanned twice for the symmetric mirror — no
     * persist needed, unlike q93 whose pair subtree would otherwise be
     * re-MINED per consumer). */
-  def q113PipelinePagerank(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = graft.operators.PairTable.pairs(spark, dir)
-    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-    graft.operators.Graphs.pageRankFixed(edges, iters = 3)
-      .select(col("id").as("doc_id"), col("out_deg"), col("rank_fp"))
-      .orderBy(col("rank_fp").desc, col("doc_id"))
-  }
+  def q113PipelinePagerank(spark: SparkSession, dir: String): DataFrame =
+    pageRank(graft.operators.PairTable.pairs(spark, dir))
 
   /** HLL sketch MERGE, hash-checked — the step q107 argues but never
     * executes. Events are split into two shards (event_id parity);
@@ -2496,8 +2489,7 @@ object Queries {
     * exact double cosine. Both the approximate gate score and the
     * final rerank are hash-checked. */
   def q115QuantizedAnn(spark: SparkSession, dir: String): DataFrame = {
-    val emb = t(spark, dir).embeddings
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
+    val emb = vectors(spark, dir)
     val centroids = emb.where(col("id") % 250 === 0)
     val queries = emb.where(col("id") < 8)
     Similarity.quantizedIvfTopK(queries, emb, centroids,
@@ -2721,10 +2713,18 @@ object Queries {
     * zero-marginal-cost pipeline consumer: 8 thresholds × pairs is a
     * few thousand rows at any corpus size, because it sweeps the
     * PAIRS, not the corpus. */
-  def q123RetentionSweep(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = graft.operators.PairTable.pairs(spark, dir)
-      .withColumn("bp", round(col("jaccard") * 10000).cast("int"))
-    val thresholds = array((2 to 9).map(k => lit(k * 1000)): _*)
+  def q123RetentionSweep(spark: SparkSession, dir: String): DataFrame =
+    retentionSweep(graft.operators.PairTable.pairs(spark, dir)
+        .withColumn("bp", round(col("jaccard") * 10000).cast("int")),
+      (2 to 9).map(_ * 1000), t(spark, dir).documents)
+
+  /** q123's sweep of a pair set with integer basis points `bp` over
+    * `thresholdsBp`: per threshold, pairs, docs touched, keep-lowest-id
+    * drops (id_a < id_b) and retention against `corpus`'s row count
+    * (q123/q145). */
+  private def retentionSweep(pairs: DataFrame, thresholdsBp: Seq[Int],
+      corpus: DataFrame): DataFrame = {
+    val thresholds = array(thresholdsBp.map(lit): _*)
     val e = graft.operators.Caches.persistTracked(
       pairs
         .select(explode(thresholds).as("threshold_bp"),
@@ -2738,7 +2738,7 @@ object Queries {
         explode(array(col("id_a"), col("id_b"))).as("did"))
       .groupBy(col("threshold_bp"))
       .agg(countDistinct(col("did")).as("n_docs_touched"))
-    val total = t(spark, dir).documents.agg(count(lit(1)).as("n_total"))
+    val total = corpus.agg(count(lit(1)).as("n_total"))
     a1.join(a2, Seq("threshold_bp"))
       .crossJoin(broadcast(total))
       .select(col("threshold_bp"), col("n_pairs"), col("n_docs_touched"),
@@ -3057,8 +3057,7 @@ object Queries {
     * EQUAL the in-memory compose, which is the lifecycle's whole
     * contract. */
   def q134IvfIndexProbe(spark: SparkSession, dir: String): DataFrame = {
-    val emb = t(spark, dir).embeddings
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
+    val emb = vectors(spark, dir)
     val centroids = emb.where(col("id") % 250 === 0)
     val queries = emb.where(col("id") < 8)
     val tmp = java.nio.file.Files.createTempDirectory("graft_q134_").toFile
@@ -3125,8 +3124,7 @@ object Queries {
     * a sample, exactly q63's shape) and the keep-policy is pair-local —
     * no connected components, no global structure. */
   def q137SemanticDedup(spark: SparkSession, dir: String): DataFrame = {
-    val emb = t(spark, dir).embeddings
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
+    val emb = vectors(spark, dir)
     val cents = Similarity.fitCentroids(emb, k = 6, iters = 1)
       .select(col("cent_id").as("id"), col("cent_v").as("vec"))
     Similarity.semanticDedupDrops(emb, cents, threshold = 0.35)
@@ -3142,8 +3140,7 @@ object Queries {
     * indistinguishable from a from-scratch build, the same contract
     * q116 pins for incremental pair-table maintenance. */
   def q138IvfIndexAppend(spark: SparkSession, dir: String): DataFrame = {
-    val emb = t(spark, dir).embeddings
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
+    val emb = vectors(spark, dir)
     val centroids = emb.where(col("id") % 250 === 0)
     val base = emb.where(pmod(col("id"), lit(10)) =!= 3)
     val incoming = emb.where(pmod(col("id"), lit(10)) === 3)
@@ -3170,8 +3167,7 @@ object Queries {
     * per contaminated doc: its nearest eval neighbor (rounded-sim
     * rank, id tie-break) and how many eval docs it matched. */
   def q139EmbedDecontaminate(spark: SparkSession, dir: String): DataFrame = {
-    val emb = t(spark, dir).embeddings
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
+    val emb = vectors(spark, dir)
     val evalSet = emb.where(pmod(col("id"), lit(97)) === 0)
       .select(col("id").as("eval_id"), col("vec").as("ev"))
     val corpus = emb.where(pmod(col("id"), lit(97)) =!= 0)
@@ -3300,8 +3296,7 @@ object Queries {
     * increment would invalidate stored assignments. */
   def q144SemanticDedupIncrement(spark: SparkSession, dir: String)
       : DataFrame = {
-    val emb = t(spark, dir).embeddings
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
+    val emb = vectors(spark, dir)
     val incoming = emb.where(pmod(col("id"), lit(10)) === 7)
     val existing = emb.where(pmod(col("id"), lit(10)) =!= 7)
     val cents = Similarity.fitCentroids(existing, k = 6, iters = 1)
@@ -3320,34 +3315,12 @@ object Queries {
     * keep-lowest-id drops, and corpus retention per threshold. */
   def q145SemanticRetentionSweep(spark: SparkSession, dir: String)
       : DataFrame = {
-    val emb = t(spark, dir).embeddings
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
+    val emb = vectors(spark, dir)
     val cents = Similarity.fitCentroids(emb, k = 6, iters = 1)
       .select(col("cent_id").as("id"), col("cent_v").as("vec"))
-    val pairs = Similarity.semanticPairs(emb, cents, threshold = 0.25)
-      .withColumn("bp", round(col("sim") * 10000).cast("int"))
-    val thresholds = array((5 to 12).map(k => lit(k * 500)): _*)
-    val e = graft.operators.Caches.persistTracked(
-      pairs
-        .select(explode(thresholds).as("threshold_bp"),
-          col("id_a"), col("id_b"), col("bp"))
-        .where(col("bp") >= col("threshold_bp")))
-    val a1 = e.groupBy(col("threshold_bp"))
-      .agg(count(lit(1)).as("n_pairs"),
-        countDistinct(col("id_b")).as("n_dropped"))
-    val a2 = e
-      .select(col("threshold_bp"),
-        explode(array(col("id_a"), col("id_b"))).as("did"))
-      .groupBy(col("threshold_bp"))
-      .agg(countDistinct(col("did")).as("n_docs_touched"))
-    val total = t(spark, dir).embeddings.agg(count(lit(1)).as("n_total"))
-    a1.join(a2, Seq("threshold_bp"))
-      .crossJoin(broadcast(total))
-      .select(col("threshold_bp"), col("n_pairs"), col("n_docs_touched"),
-        col("n_dropped"),
-        round(lit(1.0) - col("n_dropped").cast("double") / col("n_total"), 4)
-          .as("retention"))
-      .orderBy(col("threshold_bp"))
+    retentionSweep(Similarity.semanticPairs(emb, cents, threshold = 0.25)
+        .withColumn("bp", round(col("sim") * 10000).cast("int")),
+      (5 to 12).map(_ * 500), t(spark, dir).embeddings)
   }
 
   /** Incremental exact dedup — the ingest-time regime of q21
@@ -3382,8 +3355,7 @@ object Queries {
     * set than q137. */
   def q147SemanticDedupMultiprobe(spark: SparkSession, dir: String)
       : DataFrame = {
-    val emb = t(spark, dir).embeddings
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
+    val emb = vectors(spark, dir)
     val cents = Similarity.fitCentroids(emb, k = 6, iters = 1)
       .select(col("cent_id").as("id"), col("cent_v").as("vec"))
     Similarity.semanticDedupDropsMulti(emb, cents, threshold = 0.35,
@@ -3812,21 +3784,9 @@ object Queries {
     * rank, path "a>b>c", occurrence count, distinct sessions
     * containing it. */
   def q163SessionPaths(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val run = w.rowsBetween(Window.unboundedPreceding, 0)
-    val sid = events(spark, dir)
-      .withColumn("prev_ts", lag(col("ts"), 1).over(w))
-      .withColumn("new_session",
-        when(col("prev_ts").isNull
-          || unix_timestamp(col("ts")) - unix_timestamp(col("prev_ts"))
-            > 1800, 1).otherwise(0))
-      .withColumn("sid", sum(col("new_session")).over(run))
-    val sw = Window.partitionBy(col("user_id"), col("sid"))
-      .orderBy(col("ts"), col("event_id"))
-    val tri = sid
-      .withColumn("t2", lead(col("event_type"), 1).over(sw))
-      .withColumn("t3", lead(col("event_type"), 2).over(sw))
+    val tri = sessionized(events(spark, dir))
+      .withColumn("t2", lead(col("event_type"), 1).over(inSession))
+      .withColumn("t3", lead(col("event_type"), 2).over(inSession))
       .where(col("t2").isNotNull && col("t3").isNotNull)
       .select(concat_ws(">", col("event_type"), col("t2"), col("t3"))
           .as("path"),
@@ -3997,28 +3957,12 @@ object Queries {
     * from the q102 wedge-join; both are keyed shuffles over the
     * pair-table-sized frame, never the corpus. */
   def q167ClusteringCoeff(spark: SparkSession, dir: String): DataFrame = {
-    val emb = t(spark, dir).embeddings
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val centroids = emb.where(col("id") % 100 === 0)
-    val pairs = graft.operators.Caches.persistTracked(
-      Similarity.cosineNearDupPairs(emb, centroids,
-          threshold = 0.30, nprobe = 2)
-        .select(col("id_a"), col("id_b")))
+    val pairs = embedGraph(spark, dir)
     val deg = pairs.select(col("id_a").as("vec_id"))
       .unionAll(pairs.select(col("id_b").as("vec_id")))
       .groupBy(col("vec_id")).agg(count(lit(1)).as("deg"))
-    val wedges = pairs.join(
-      pairs.select(col("id_a").as("id_b"), col("id_b").as("id_c")),
-      Seq("id_b"))
-    val tri = wedges.join(
-      pairs.select(col("id_a"), col("id_b").as("id_c")),
-      Seq("id_a", "id_c"), "left_semi")
-    val tcount = tri
-      .select(explode(array(col("id_a"), col("id_b"), col("id_c")))
-        .as("vec_id"))
-      .groupBy(col("vec_id")).agg(count(lit(1)).as("n_triangles"))
     deg.where(col("deg") >= 2)
-      .join(tcount, Seq("vec_id"), "left")
+      .join(triangleCounts(pairs), Seq("vec_id"), "left")
       .select(col("vec_id"), col("deg"),
         coalesce(col("n_triangles"), lit(0L)).as("n_triangles"),
         // tri ≤ deg²/2 so the numerator is deg²·1e4-scale: a hub with
@@ -4204,20 +4148,11 @@ object Queries {
     * lineage-truncated), oracle-replayable round for round; the
     * true-fixpoint variant [[graft.operators.Graphs.kcore]] is
     * spec-verified equal on this graph. */
-  def q171KcoreBounded(spark: SparkSession, dir: String): DataFrame = {
-    val emb = t(spark, dir).embeddings
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val centroids = emb.where(col("id") % 100 === 0)
-    val pairs = graft.operators.Caches.persistTracked(
-      Similarity.cosineNearDupPairs(emb, centroids,
-          threshold = 0.30, nprobe = 2)
-        .select(col("id_a"), col("id_b")))
-    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .unionAll(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-    graft.operators.Graphs.kcoreBounded(edges, k = 3, rounds = 6)
+  def q171KcoreBounded(spark: SparkSession, dir: String): DataFrame =
+    graft.operators.Graphs.kcoreBounded(
+        symmetricEdges(embedGraph(spark, dir)), k = 3, rounds = 6)
       .select(col("id").as("vec_id"), col("core_deg"))
       .orderBy(col("vec_id"))
-  }
 
   /** Interval union (coverage) per user: each event opens an activity
     * interval of VARIABLE length (60 + event_id mod 3600 seconds), and
@@ -4664,16 +4599,8 @@ object Queries {
     * the q167/q171 shared cosine mine; output = top-50 communities
     * by size. */
   def q182LabelPropagation(spark: SparkSession, dir: String): DataFrame = {
-    val emb = t(spark, dir).embeddings
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val centroids = emb.where(col("id") % 100 === 0)
-    val pairs = graft.operators.Caches.persistTracked(
-      Similarity.cosineNearDupPairs(emb, centroids,
-          threshold = 0.30, nprobe = 2)
-        .select(col("id_a"), col("id_b")))
-    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .unionAll(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-    val labels = graft.operators.Graphs.labelPropagation(edges, rounds = 4)
+    val labels = graft.operators.Graphs.labelPropagation(
+      symmetricEdges(embedGraph(spark, dir)), rounds = 4)
     labels.groupBy(col("lbl").as("community"))
       .agg(count(lit(1)).as("n_nodes"))
       .withColumn("rank", row_number().over(
@@ -4695,26 +4622,15 @@ object Queries {
     * iteration frames are |event_types|²-sized and persisted once
     * so the 8 rounds never re-derive the sessionization. */
   def q183MarkovStationary(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val run = w.rowsBetween(Window.unboundedPreceding, 0)
-    val sid = events(spark, dir)
-      .withColumn("prev_ts", lag(col("ts"), 1).over(w))
-      .withColumn("new_session",
-        when(col("prev_ts").isNull
-          || unix_timestamp(col("ts")) - unix_timestamp(col("prev_ts"))
-            > 1800, 1).otherwise(0))
-      .withColumn("sid", sum(col("new_session")).over(run))
-    val sw = Window.partitionBy(col("user_id"), col("sid"))
-      .orderBy(col("ts"), col("event_id"))
     // persisted: both the row-totals and the matrix join consume it,
     // and without the cache each would re-run the corpus-scale
     // sessionization windows
-    val trans = graft.operators.Caches.persistTracked(sid
-      .withColumn("nxt", lead(col("event_type"), 1).over(sw))
-      .where(col("nxt").isNotNull)
-      .groupBy(col("event_type").as("a"), col("nxt").as("b"))
-      .agg(count(lit(1)).as("t_ab")))
+    val trans = graft.operators.Caches.persistTracked(
+      sessionized(events(spark, dir))
+        .withColumn("nxt", lead(col("event_type"), 1).over(inSession))
+        .where(col("nxt").isNotNull)
+        .groupBy(col("event_type").as("a"), col("nxt").as("b"))
+        .agg(count(lit(1)).as("t_ab")))
     val tot = trans.groupBy(col("a")).agg(sum(col("t_ab")).as("t_a"))
     val p = graft.operators.Caches.persistTracked(
       trans.join(tot, Seq("a"))
@@ -5313,13 +5229,7 @@ object Queries {
     * per-customer rollup; pairs naturally with q177's ABC classes
     * (share thresholds) by measuring the whole curve instead. */
   def q198GiniConcentration(spark: SparkSession, dir: String): DataFrame = {
-    val tt = t(spark, dir)
-    val perCust = tt.orders
-      .groupBy(col("o_custkey"))
-      .agg(centsSum(col("o_totalprice")).as("x"))
-      .join(tt.customer.select(col("c_custkey").as("o_custkey"),
-        col("c_mktsegment").as("segment")), Seq("o_custkey"))
-    val ranked = perCust.withColumn("i", row_number().over(
+    val ranked = customerSpend(spark, dir).withColumn("i", row_number().over(
       Window.partitionBy(col("segment"))
         .orderBy(col("x"), col("o_custkey"))))
     ranked.groupBy(col("segment"))
@@ -5342,6 +5252,17 @@ object Queries {
           " / (cast(n_customers as double) * s)) as bigint)")
           .as("gini_1e6"))
       .orderBy(col("segment"))
+  }
+
+  /** Per-customer spend in integer cents `x` with the customer's
+    * market `segment` (q198/q203). */
+  private def customerSpend(spark: SparkSession, dir: String): DataFrame = {
+    val tt = t(spark, dir)
+    tt.orders
+      .groupBy(col("o_custkey"))
+      .agg(centsSum(col("o_totalprice")).as("x"))
+      .join(tt.customer.select(col("c_custkey").as("o_custkey"),
+        col("c_mktsegment").as("segment")), Seq("o_custkey"))
   }
 
   /** Pearson correlation matrix of the fact table's numeric columns
@@ -5559,14 +5480,8 @@ object Queries {
     * count and cumulative revenue share in basis points (running
     * integer sums; the share denominator attaches per segment). */
   def q203LorenzDeciles(spark: SparkSession, dir: String): DataFrame = {
-    val tt = t(spark, dir)
-    val perCust = tt.orders
-      .groupBy(col("o_custkey"))
-      .agg(centsSum(col("o_totalprice")).as("x"))
-      .join(tt.customer.select(col("c_custkey").as("o_custkey"),
-        col("c_mktsegment").as("segment")), Seq("o_custkey"))
     val sw = Window.partitionBy(col("segment"))
-    val ranked = perCust
+    val ranked = customerSpend(spark, dir)
       .withColumn("i", row_number().over(
         sw.orderBy(col("x"), col("o_custkey"))))
       .withColumn("n", count(lit(1)).over(sw))
@@ -5639,21 +5554,9 @@ object Queries {
     * over the dwell frame. All integer seconds, q195's rank index —
     * no interpolation. */
   def q205DwellBands(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val run = w.rowsBetween(Window.unboundedPreceding, 0)
-    val sid = events(spark, dir)
-      .withColumn("prev_ts", lag(col("ts"), 1).over(w))
-      .withColumn("new_session",
-        when(col("prev_ts").isNull
-          || unix_timestamp(col("ts")) - unix_timestamp(col("prev_ts"))
-            > 1800, 1).otherwise(0))
-      .withColumn("sid", sum(col("new_session")).over(run))
-    val sw = Window.partitionBy(col("user_id"), col("sid"))
-      .orderBy(col("ts"), col("event_id"))
-    val dwell = sid
+    val dwell = sessionized(events(spark, dir))
       .withColumn("nxt_es",
-        lead(unix_timestamp(col("ts")), 1).over(sw))
+        lead(unix_timestamp(col("ts")), 1).over(inSession))
       .where(col("nxt_es").isNotNull)
       .select(col("event_type"),
         (col("nxt_es") - unix_timestamp(col("ts"))).as("v"))
@@ -5716,20 +5619,7 @@ object Queries {
     * with no tie rules: concurrency is a function of the second, not
     * of row order. */
   def q207PeakConcurrency(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val run = w.rowsBetween(Window.unboundedPreceding, 0)
-    val sess = events(spark, dir)
-      .withColumn("prev_ts", lag(col("ts"), 1).over(w))
-      .withColumn("new_session",
-        when(col("prev_ts").isNull
-          || unix_timestamp(col("ts")) - unix_timestamp(col("prev_ts"))
-            > 1800, 1).otherwise(0))
-      .withColumn("sid", sum(col("new_session")).over(run))
-      .groupBy(col("user_id"), col("sid"))
-      .agg(min(unix_timestamp(col("ts"))).as("s"),
-        max(unix_timestamp(col("ts"))).as("e"))
-    val perT = sess
+    val perT = sessionSpans(events(spark, dir))
       .select(explode(array(
         struct(col("s").as("t"), lit(1L).as("delta")),
         struct((col("e") + 1).as("t"), lit(-1L).as("delta")))).as("d"))
@@ -5821,20 +5711,7 @@ object Queries {
     val incidents = errBins.crossJoin(broadcast(thr))
       .where(col("n_errors") >= col("t"))
       .select(col("bin"), col("n_errors"))
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val sess = ev
-      .withColumn("prev_ts", lag(col("ts"), 1).over(w))
-      .withColumn("new_session",
-        when(col("prev_ts").isNull
-          || unix_timestamp(col("ts")) - unix_timestamp(col("prev_ts"))
-            > 1800, 1).otherwise(0))
-      .withColumn("sid", sum(col("new_session")).over(
-        w.rowsBetween(Window.unboundedPreceding, 0)))
-      .groupBy(col("user_id"), col("sid"))
-      .agg(min(unix_timestamp(col("ts"))).as("s"),
-        max(unix_timestamp(col("ts"))).as("e"))
-    val sessBins = sess.select(col("user_id"), col("sid"),
+    val sessBins = sessionSpans(ev).select(col("user_id"), col("sid"),
       explode(sequence(expr("s div 600"), expr("e div 600"))).as("bin"))
     sessBins.join(incidents, Seq("bin"))
       .groupBy(col("bin"), col("n_errors"))
@@ -5940,19 +5817,10 @@ object Queries {
     * At 100 TB each side's top-k is per-query-partitioned, so fusion
     * never sees corpus-sized input. */
   def q212HybridFusion(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import graft.operators.{Relevance, Similarity}
-    val (post, lens) = Relevance.bm25Postings(
-      t(spark, dir).documents, "doc_id", "text")
-    val qs = Seq(
-      (1L, "hash join"), (2L, "window agg sort"),
-      (3L, "spark stream batch"), (4L, "vector query"),
-      (5L, "slow scan filter")).toDF("query_id", "qtext")
-    val lex = Relevance.bm25TopK(post, lens, qs, k = 10)
+    val lex = q160Bm25Retrieval(spark, dir)
       .select(col("query_id"), col("doc_id"),
         col("rank").as("lex_rank"))
-    val emb = t(spark, dir).embeddings
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
+    val emb = vectors(spark, dir)
     val sem = Similarity.bruteForceTopK(
         emb.where(col("id").between(1, 5)), emb, k = 10)
       .select(col("query_id"), col("neighbor_id").as("doc_id"),
@@ -6131,9 +5999,7 @@ object Queries {
     * evaluation = q215's one-scan grouped suite on the next version. */
   def q219SuiteDrift(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators._
-    val docs = t(spark, dir).documents
-    val v1 = docs.where(col("doc_id") % 2 === 0)
-    val v2 = docs.where(col("doc_id") % 2 === 1)
+    val (v1, v2) = docHalves(spark, dir)
     val suite = Constraints.suggest(v1,
       completenessCols = Seq("text"),
       uniqueCols = Seq("doc_id"),
@@ -6232,13 +6098,26 @@ object Queries {
   def q222DistributionDrift(spark: SparkSession, dir: String)
       : DataFrame = {
     import graft.operators._
-    val docs = t(spark, dir).documents
-    val v1 = docs.where(col("doc_id") % 2 === 0)
-    val v2 = docs.where(col("doc_id") % 2 === 1)
-    val suite = Constraints.suggest(v1,
+    val (v1, v2) = docHalves(spark, dir)
+    driftReport(v2, Constraints.suggest(v1,
       completenessCols = Seq("text"),
       setCols = Seq(("lang", 5)),
-      histCols = Seq(("n_chars", 8)))
+      histCols = Seq(("n_chars", 8))))
+  }
+
+  /** The suite-drift versions: baseline (even doc_ids) and next (odd)
+    * (q219/q222/q223). */
+  private def docHalves(spark: SparkSession, dir: String)
+      : (DataFrame, DataFrame) = {
+    val docs = t(spark, dir).documents
+    (docs.where(col("doc_id") % 2 === 0), docs.where(col("doc_id") % 2 === 1))
+  }
+
+  /** `suite` run on the next version `v2` and on its n_chars-squashed
+    * copy (`div 3`), one report per `version` (q222/q223). */
+  private def driftReport(v2: DataFrame,
+      suite: Seq[graft.operators.Constraint]): DataFrame = {
+    import graft.operators.Constraints
     val drifted = v2.withColumn("n_chars", expr("n_chars div 3"))
     Constraints.run(v2, suite)
       .withColumn("version", lit("v2"))
@@ -6263,22 +6142,12 @@ object Queries {
     * stays silent on both. */
   def q223QuantileBound(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators._
-    val docs = t(spark, dir).documents
-    val v1 = docs.where(col("doc_id") % 2 === 0)
-    val v2 = docs.where(col("doc_id") % 2 === 1)
+    val (v1, v2) = docHalves(spark, dir)
     val edges = Constraints.suggest(v1, histCols = Seq(("n_chars", 8)))
       .collect { case h: HistogramDrift => h }.head.edges
-    val suite = Seq(
+    driftReport(v2, Seq(
       QuantileBound("n_chars", edges, 5000, edges(1), ">="),
-      Completeness("text", 0.9))
-    val drifted = v2.withColumn("n_chars", expr("n_chars div 3"))
-    Constraints.run(v2, suite)
-      .withColumn("version", lit("v2"))
-      .unionByName(Constraints.run(drifted, suite)
-        .withColumn("version", lit("v2_drifted")))
-      .select(col("version"), col("constraint_type"), col("column_name"),
-        col("metric"), col("threshold"), col("passed"))
-      .orderBy(col("version"), col("constraint_type"), col("column_name"))
+      Completeness("text", 0.9)))
   }
 
   /** The large-large cosine-threshold join from PURE SQL — the round-9
@@ -6297,20 +6166,28 @@ object Queries {
     * signatures), so the oracle replays banding + gate bit-for-bit at
     * 16×4 — same contract as q131, which pins the explicit-geometry
     * operator-API form of this plan at 8×8. */
-  def q224SimJoinSqlLargeLarge(spark: SparkSession, dir: String): DataFrame = {
+  def q224SimJoinSqlLargeLarge(spark: SparkSession, dir: String): DataFrame =
+    bandedCosineSql(spark, dir, "emb_q224", "0.35D")
+
+  /** The naive cosine self-join SQL over the embeddings (view `view`,
+    * gate `threshold`) on a derived session with broadcast off and the
+    * banded large-large rewrite opted in, plus `confs` (q224/q225). */
+  private def bandedCosineSql(spark: SparkSession, dir: String, view: String,
+      threshold: String, confs: (String, String)*): DataFrame = {
     val s = org.apache.spark.sql.graftbridge.PlanBridge.cloneSession(spark)
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     s.conf.set(graft.plans.SimilarityJoinRewrite.LargeLargeConf, "banded")
-    t(s, dir).embeddings.createOrReplaceTempView("emb_q224")
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    t(s, dir).embeddings.createOrReplaceTempView(view)
     s.sql(
-      """SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |  round(cosine_sim(CAST(a.embedding AS ARRAY<DOUBLE>),
-        |                   CAST(b.embedding AS ARRAY<DOUBLE>)), 4) AS sim
-        |FROM emb_q224 a JOIN emb_q224 b
-        |  ON cosine_sim(CAST(a.embedding AS ARRAY<DOUBLE>),
-        |                CAST(b.embedding AS ARRAY<DOUBLE>)) >= 0.35D
-        | AND a.vec_id < b.vec_id
-        |ORDER BY id_a, id_b""".stripMargin)
+      s"""SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+         |  round(cosine_sim(CAST(a.embedding AS ARRAY<DOUBLE>),
+         |                   CAST(b.embedding AS ARRAY<DOUBLE>)), 4) AS sim
+         |FROM $view a JOIN $view b
+         |  ON cosine_sim(CAST(a.embedding AS ARRAY<DOUBLE>),
+         |                CAST(b.embedding AS ARRAY<DOUBLE>)) >= $threshold
+         | AND a.vec_id < b.vec_id
+         |ORDER BY id_a, id_b""".stripMargin)
   }
 
   /** The wide-signature banded join — q224's SQL-surface plan under a
@@ -6330,22 +6207,9 @@ object Queries {
     * Same determinism contract as q131/q224: integer Rademacher
     * signatures, so the oracle replays the banding + exact gate
     * bit-for-bit. */
-  def q225SimJoinWideBand(spark: SparkSession, dir: String): DataFrame = {
-    val s = org.apache.spark.sql.graftbridge.PlanBridge.cloneSession(spark)
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    s.conf.set(graft.plans.SimilarityJoinRewrite.LargeLargeConf, "banded")
-    s.conf.set(graft.plans.SimilarityJoinStrategy.SignatureBitsConf, "256")
-    t(s, dir).embeddings.createOrReplaceTempView("emb_q225")
-    s.sql(
-      """SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |  round(cosine_sim(CAST(a.embedding AS ARRAY<DOUBLE>),
-        |                   CAST(b.embedding AS ARRAY<DOUBLE>)), 4) AS sim
-        |FROM emb_q225 a JOIN emb_q225 b
-        |  ON cosine_sim(CAST(a.embedding AS ARRAY<DOUBLE>),
-        |                CAST(b.embedding AS ARRAY<DOUBLE>)) >= 0.4D
-        | AND a.vec_id < b.vec_id
-        |ORDER BY id_a, id_b""".stripMargin)
-  }
+  def q225SimJoinWideBand(spark: SparkSession, dir: String): DataFrame =
+    bandedCosineSql(spark, dir, "emb_q225", "0.4D",
+      graft.plans.SimilarityJoinStrategy.SignatureBitsConf -> "256")
 
   // ---------- registry ----------
 

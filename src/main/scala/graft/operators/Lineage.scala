@@ -39,19 +39,12 @@ object Lineage {
 
   /** Truncate `df`'s lineage: reliable checkpoint when the session has
     * a checkpoint dir, local checkpoint otherwise. */
-  def truncate(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) {
-      val out = df.checkpoint()
-      org.apache.spark.sql.graftbridge.PlanBridge.checkpointFile(out)
-        .foreach { p =>
-          ckpts.add((p, df.sparkSession.sparkContext.hadoopConfiguration))
-        }
-      out
-    } else df.localCheckpoint()
+  def truncate(df: DataFrame): DataFrame = truncateCounted(df)._1
 
-  /** [[truncate]] fused with the convergence probe (round-12): one
-    * materializing job returns the truncated frame, its EXACT row
-    * count, and the number of rows whose `probeCol` boolean is true.
+  /** The one eager truncation, fused with the convergence probe
+    * (round-12): one materializing job returns the truncated frame,
+    * its EXACT row count, and the number of rows whose `probeCol`
+    * boolean is true.
     * The probe count is accumulator-based — valid ONLY as a zero-test
     * (retries / the reliable regime's second pass may overcount a
     * non-zero value, never fake a zero) — which is exactly what the

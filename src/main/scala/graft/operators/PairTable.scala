@@ -60,12 +60,7 @@ object PairTable {
     * dedup derivations decouple from the corpus the same way. */
   def embedPairs(spark: SparkSession, dir: String): DataFrame =
     materialized(spark, dir, "embed") { s =>
-      val emb = graft.Tables(s, dir).embeddings
-        .select(org.apache.spark.sql.functions.col("vec_id").as("id"),
-          org.apache.spark.sql.functions.col("embedding").as("vec"))
-      Similarity.cosineNearDupPairs(emb,
-        emb.where(org.apache.spark.sql.functions.col("id") % 100 === 0),
-        threshold = 0.35, nprobe = 2)
+      graft.Queries.embedGraphPairs(s, dir, 0.35)
     }
 
   /** Force a fresh mine+write even when a materialization exists —

@@ -29,20 +29,11 @@ import graft.plans.{SimilarityJoinPlan, SimJoinRegime}
   */
 object Similarity {
 
-  /** Sequential-fold dot product of two double arrays (HOF reference
-    * formulation; [[cosine]] uses the native kernel instead). */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
-
-  def l2norm(a: Column): Column =
-    sqrt(aggregate(transform(a, x => x * x), lit(0.0), (acc, v) => acc + v))
-
   /** Cosine similarity — native codegen'd expression
-    * ([[graft.expressions.CosineSim]]); arithmetic is the same
-    * sequential fold as `dot/(l2norm*l2norm)`, bit-identical results,
-    * but one compiled pass instead of interpreted HOF chains (the HOF
-    * form re-walks both arrays per element and dominated q54's
-    * pair-scoring cost). */
+    * ([[graft.expressions.CosineSim]]): the sequential-fold dot product
+    * over the product of the two sequential-fold L2 norms, in one
+    * compiled pass (the earlier higher-order-function form re-walked
+    * both arrays per element and dominated q54's pair-scoring cost). */
   def cosine(a: Column, b: Column): Column =
     graft.expressions.VectorExpressions.cosineSim(a, b)
 

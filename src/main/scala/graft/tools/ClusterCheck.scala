@@ -27,11 +27,19 @@ import graft.plans.SimJoinRegime
   *
   * The SEMANTICS of each operator are already oracle-checked against
   * DuckDB (CORRECTNESS gate); this tool's contract is narrower and
-  * complementary — distributed execution ≡ local reference — so the
-  * references deliberately reuse the engine's own scalar kernels
-  * (e.g. [[TextKernels.jaccardSim]]) driven by plain driver-side
-  * Scala loops: any divergence is then attributable to the
-  * distribution layer, not to semantic drift.
+  * complementary — distributed execution ≡ local reference. Every
+  * reference is a plain driver-side Scala loop over collected rows.
+  * Two rows drive the engine's own scalar kernels from those loops
+  * (`jaccard_rewrite`: [[TextKernels.jaccardSim]]; `zorder_key`:
+  * `ZOrderKernels.interleave16`), so a divergence there is
+  * attributable to the distribution layer, not to semantic drift. The
+  * others are independent of the engine's kernels: the cosine rows
+  * (`simjoin_exact`, `cosine_rewrite`, `simjoin_banded_stable`,
+  * `simjoin_wide_banded_stable`) and `lev_rewrite` use this tool's own
+  * `cosine`/`lev` loops, and the rest fold collected rows directly
+  * (sums, maxima, as-of picks, prefix sums, key sets, counts);
+  * `constraint_merge` also compares its merged state with the engine's
+  * one-shot batch run.
   *
   * Prints one JSON line per check (`{"tool":"clustercheck",...}`) and
   * a summary line; exits 1 if any check fails. BASELINE.md pins the

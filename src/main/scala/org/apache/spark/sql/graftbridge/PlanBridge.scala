@@ -54,16 +54,17 @@ object PlanBridge {
     * checkpoint-write second pass) can OVERcount, never UNDERcount a
     * non-zero value — callers must branch only on `== 0`, which is
     * exactly the convergence test. The row count is the action's
-    * return value and is exact. */
+    * return value and is exact. Without a probe column no accumulator
+    * is registered and the probe count is 0. */
   def truncateCounted(df: DataFrame, reliable: Boolean,
       probeCol: Option[String]): (DataFrame, Long, Long) = {
     val ds = df.asInstanceOf[classic.Dataset[Row]]
     val session = ds.sparkSession
-    val acc = session.sparkContext.longAccumulator("graft.fixpoint.probe")
-    val probeIdx = probeCol.map(ds.schema.fieldIndex)
+    val probe = probeCol.map(c => (ds.schema.fieldIndex(c),
+      session.sparkContext.longAccumulator("graft.fixpoint.probe")))
     val base = ds.queryExecution.toRdd
-    val internalRdd = probeIdx match {
-      case Some(i) =>
+    val internalRdd = probe match {
+      case Some((i, acc)) =>
         base.map { r =>
           val out = r.copy()
           if (!out.isNullAt(i) && out.getBoolean(i)) acc.add(1L)
@@ -76,7 +77,7 @@ object PlanBridge {
     val out = classic.Dataset.ofRows(session,
       org.apache.spark.sql.execution.LogicalRDD.fromDataset(
         internalRdd, ds, isStreaming = false).newInstance())
-    (out, total, acc.value)
+    (out, total, probe.fold(0L)(_._2.value))
   }
 
   /** Installs `ext`'s optimizer rules, planner strategies and
