@@ -356,18 +356,18 @@ object Queries {
 
   /** Exact dedup by md5 fingerprint of the normalized token stream. */
   def q21DedupExact(spark: SparkSession, dir: String): DataFrame =
-    Dedup.exact(t(spark, dir).documents, "doc_id", "text")
+    Dedup.exact(t(spark, dir).documents)
       .orderBy(col("fp"))
 
   /** N-gram Jaccard near-dup pairs via shingle inverted index. */
   def q22JaccardPairs(spark: SparkSession, dir: String): DataFrame =
-    Dedup.jaccardPairs(t(spark, dir).documents, "doc_id", "text",
+    Dedup.jaccardPairs(t(spark, dir).documents,
       n = 3, threshold = 0.2)
       .orderBy(col("id_a"), col("id_b"))
 
   /** MinHash + banded LSH candidate pairs, exact-Jaccard verified. */
   def q23MinhashLsh(spark: SparkSession, dir: String): DataFrame =
-    Dedup.minhashLshPairs(t(spark, dir).documents, "doc_id", "text",
+    Dedup.minhashLshPairs(t(spark, dir).documents,
       n = 3, bands = 4, rowsPerBand = 2, threshold = 0.2)
       .orderBy(col("id_a"), col("id_b"))
 
@@ -655,7 +655,7 @@ object Queries {
     * maxHamming < bands so the emitted pair set is COMPLETE at the
     * declared distance, not silently partial. */
   def q40Simhash(spark: SparkSession, dir: String): DataFrame =
-    Dedup.simhashPairs(t(spark, dir).documents, "doc_id", "text",
+    Dedup.simhashPairs(t(spark, dir).documents,
       maxHamming = 3)
       .orderBy(col("id_a"), col("id_b"))
 
@@ -757,8 +757,8 @@ object Queries {
     * BOTH modalities are high-confidence duplicates. Inner-joins the
     * (tiny) pair set against the embedding table twice. */
   def q47CrossModal(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = Dedup.jaccardPairs(t(spark, dir).documents, "doc_id",
-      "text", n = 3, threshold = 0.2)
+    val pairs =
+      Dedup.jaccardPairs(t(spark, dir).documents, n = 3, threshold = 0.2)
     val emb = t(spark, dir).embeddings
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
     pairs
@@ -1109,7 +1109,7 @@ object Queries {
   /** Fuzzy near-dup pairs: winnow-fingerprint blocking + Levenshtein
     * verification ([[Dedup.editDistancePairs]], the MOSS shape). */
   def q58EditDistancePairs(spark: SparkSession, dir: String): DataFrame =
-    Dedup.editDistancePairs(t(spark, dir).documents, "doc_id", "text")
+    Dedup.editDistancePairs(t(spark, dir).documents)
       .orderBy(col("id_a"), col("id_b"))
 
   /** Reproducible train/val/test split assignment: md5-keyed hash
@@ -1138,7 +1138,7 @@ object Queries {
     * Posting-list join benchmark×train (never all-pairs; the benchmark
     * side is small by construction, the train side streams). */
   def q60Contamination(spark: SparkSession, dir: String): DataFrame = {
-    val sets = Dedup.shingleSets(t(spark, dir).documents, "doc_id", "text", 3)
+    val sets = Dedup.shingleSets(t(spark, dir).documents, 3)
     val post = sets.select(col("doc_id"), explode(col("sh")).as("shingle"))
     val bench = post.where(col("doc_id") % 50 === 0)
       .select(col("doc_id").as("bench_id"), col("shingle"))
@@ -1384,7 +1384,7 @@ object Queries {
     * in long ones, which Jaccard dilutes. Same inverted-index +
     * stop-shingle machinery as q22. */
   def q70OverlapPairs(spark: SparkSession, dir: String): DataFrame =
-    Dedup.overlapPairs(t(spark, dir).documents, "doc_id", "text",
+    Dedup.overlapPairs(t(spark, dir).documents,
         n = 3, threshold = 0.5)
       .orderBy(col("id_a"), col("id_b"))
 
@@ -1400,7 +1400,7 @@ object Queries {
   /** q22's near-dup pairs: word-3-gram jaccard >= 0.2, stop-shingle
     * cap 1000 (q71/q85/q91/q92/q93). */
   private def textPairs(docs: DataFrame): DataFrame =
-    Dedup.jaccardPairs(docs, "doc_id", "text", n = 3, threshold = 0.2)
+    Dedup.jaccardPairs(docs, n = 3, threshold = 0.2)
 
   /** Per-cluster member count and max member of CC labels
     * (q71/q81/q92). */
@@ -1427,10 +1427,10 @@ object Queries {
       .join(corpus.select(fingerprint(col("text")).as("fp")).distinct(),
         Seq("fp"), "leftsemi")
       .select(col("doc_id"), lit(true).as("ex"))
-    val inPost = Dedup.shingleSets(incoming, "doc_id", "text", 3)
+    val inPost = Dedup.shingleSets(incoming, 3)
       .select(col("doc_id").as("in_id"), col("n_sh").as("na"),
         explode(col("sh")).as("shingle"))
-    val corpPost = Dedup.shingleSets(corpus, "doc_id", "text", 3)
+    val corpPost = Dedup.shingleSets(corpus, 3)
       .select(col("doc_id").as("corp_id"), col("n_sh").as("nb"),
         explode(col("sh")).as("shingle"))
     val keep = corpPost.groupBy(col("shingle"))
@@ -1748,36 +1748,28 @@ object Queries {
     * scalar subquery (above-average balance) and a correlated NOT
     * EXISTS (never ordered), decorrelated by Catalyst into the
     * aggregate + anti-join plan a hand-built DataFrame would produce.
-    * View names are scoped per invocation (temp views live in session
-    * catalog state — fixed names would race under two concurrent
-    * catalog runs in one session). */
+    * The temp views live on a DERIVED session
+    * (`PlanBridge.cloneSession`), so the caller's catalog is never
+    * written and concurrent runs cannot see each other's views. */
   def q87SqlSubqueries(spark: SparkSession, dir: String): DataFrame = {
-    val tt = t(spark, dir)
-    val run = q87Runs.incrementAndGet()
-    val (vc, vo) = (s"v_customer_$run", s"v_orders_$run")
-    tt.customer.createOrReplaceTempView(vc)
-    tt.orders.createOrReplaceTempView(vo)
-    val out = spark.sql(s"""
+    val s = org.apache.spark.sql.graftbridge.PlanBridge.cloneSession(spark)
+    val tt = t(s, dir)
+    tt.customer.createOrReplaceTempView("v_customer")
+    tt.orders.createOrReplaceTempView("v_orders")
+    s.sql("""
       SELECT c_mktsegment,
              COUNT(*) AS n_customers,
              CAST(SUM(CAST(ROUND(c_acctbal * 100) AS BIGINT)) AS DOUBLE) / 100.0
                AS total_balance
-      FROM $vc c
-      WHERE c_acctbal > (SELECT AVG(c_acctbal) FROM $vc
+      FROM v_customer c
+      WHERE c_acctbal > (SELECT AVG(c_acctbal) FROM v_customer
                          WHERE c_acctbal > 0.0)
-        AND NOT EXISTS (SELECT 1 FROM $vo o
+        AND NOT EXISTS (SELECT 1 FROM v_orders o
                         WHERE o.o_custkey = c.c_custkey
                           AND o.o_orderpriority = '1-URGENT')
       GROUP BY c_mktsegment
       ORDER BY c_mktsegment""")
-    // sql() analyzes eagerly (view plans are inlined), so the views can
-    // be dropped before the frame is ever executed — no catalog buildup
-    spark.catalog.dropTempView(vc)
-    spark.catalog.dropTempView(vo)
-    out
   }
-
-  private val q87Runs = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** Language-ID confusion matrix: labeled lang × [[langGuess]]
     * prediction with per-label share — the standard classifier-eval
@@ -1802,7 +1794,7 @@ object Queries {
     * corpus size. Output: per-source contamination rate. */
   def q89ExactContamination(spark: SparkSession, dir: String): DataFrame = {
     val docs = t(spark, dir).documents
-    val post = Dedup.shingleSets(docs, "doc_id", "text", 13)
+    val post = Dedup.shingleSets(docs, 13)
       .select(col("doc_id"), explode(col("sh")).as("g"))
     val benchGrams = post.where(col("doc_id") % 50 === 0)
       .select(col("g")).distinct()
@@ -2516,7 +2508,7 @@ object Queries {
     Dedup.incrementalJaccardPairs(
         d.where(pmod(col("doc_id"), lit(10)) =!= 7),
         d.where(pmod(col("doc_id"), lit(10)) === 7),
-        "doc_id", "text", n = 3, threshold = 0.2)
+        n = 3, threshold = 0.2)
       .orderBy(col("id_a"), col("id_b"))
   }
 
@@ -2656,7 +2648,7 @@ object Queries {
     * oracle). */
   def q121RepeatedSpans(spark: SparkSession, dir: String): DataFrame = {
     val post = graft.operators.Caches.persistTracked(
-      Dedup.shingleSets(t(spark, dir).documents, "doc_id", "text", 5)
+      Dedup.shingleSets(t(spark, dir).documents, 5)
         .select(col("doc_id"), col("n_sh"), explode(col("sh")).as("shingle"))
         .select(col("doc_id"), col("n_sh"),
           xxhash64(col("shingle")).as("sh_key")))
@@ -3038,9 +3030,9 @@ object Queries {
     val d = t(spark, dir).documents
     val corpus = d.where(pmod(col("doc_id"), lit(10)) =!= 7)
     val incoming = d.where(pmod(col("doc_id"), lit(10)) === 7)
-    val stored = Dedup.jaccardPairs(corpus, "doc_id", "text", n = 3,
+    val stored = Dedup.jaccardPairs(corpus, n = 3,
       threshold = 0.2, maxDf = 8)
-    Dedup.deltaCapJaccardPairs(stored, corpus, incoming, "doc_id", "text",
+    Dedup.deltaCapJaccardPairs(stored, corpus, incoming,
         n = 3, threshold = 0.2, maxDf = 8)
       .orderBy(col("id_a"), col("id_b"))
   }
@@ -3229,7 +3221,7 @@ object Queries {
     val back = spark.read.parquet(tmp.getAbsolutePath)
       .withColumn("shard_from_path",
         regexp_extract(input_file_name(), "shard=(\\d+)", 1).cast("long"))
-    val survivors = Dedup.exact(docs, "doc_id", "text")
+    val survivors = Dedup.exact(docs)
       .select(col("keep_id").as("doc_id"))
     back
       .join(survivors.withColumn("survives", lit(1L)), Seq("doc_id"), "left")
@@ -3339,8 +3331,8 @@ object Queries {
     val docs = t(spark, dir).documents
     val incoming = docs.where(pmod(col("doc_id"), lit(10)) === 5)
     val existing = docs.where(pmod(col("doc_id"), lit(10)) =!= 5)
-    val stored = Dedup.exact(existing, "doc_id", "text")
-    Dedup.incrementalExact(stored, incoming, "doc_id", "text",
+    val stored = Dedup.exact(existing)
+    Dedup.incrementalExact(stored, incoming,
         expectedStored = 100000L)
       .orderBy(col("fp"))
   }
@@ -3395,7 +3387,7 @@ object Queries {
     * distinct-set; spans come from doc-partitioned gaps-and-islands
     * windows. */
   def q149DupSpans(spark: SparkSession, dir: String): DataFrame =
-    Dedup.crossDocDupSpans(t(spark, dir).documents, "doc_id", "text",
+    Dedup.crossDocDupSpans(t(spark, dir).documents,
         k = 4)
       .orderBy(col("doc_id"))
 
@@ -3436,7 +3428,7 @@ object Queries {
     * use). Re-assembly state is bounded by document length — never
     * corpus-sized. */
   def q153DupSpanRemoval(spark: SparkSession, dir: String): DataFrame =
-    Dedup.removeDupSpans(t(spark, dir).documents, "doc_id", "text",
+    Dedup.removeDupSpans(t(spark, dir).documents,
         k = 4)
       .orderBy(col("doc_id"))
 
@@ -3451,7 +3443,7 @@ object Queries {
     val target = docs.where(col("source") === "src0")
     val raw = docs.where(col("source") =!= "src0")
     val scored = graft.operators.Relevance
-      .oddsVotes(target, raw, "doc_id", "text")
+      .oddsVotes(target, raw)
     scored.join(raw.select(col("doc_id"), col("source"), col("lang")),
         Seq("doc_id"))
       .withColumn("rk", row_number().over(
@@ -3556,7 +3548,7 @@ object Queries {
     val docs = t(spark, dir).documents
     val evalDocs = docs.where(col("doc_id") % 50 === 0)
     val train = docs.where(col("doc_id") % 50 =!= 0)
-    Dedup.removeContaminatedSpans(train, evalDocs, "doc_id", "text",
+    Dedup.removeContaminatedSpans(train, evalDocs,
         k = 5)
       .orderBy(col("doc_id"))
   }
@@ -3691,7 +3683,7 @@ object Queries {
     import spark.implicits._
     import graft.operators.Relevance
     val (post, lens) = Relevance.bm25Postings(
-      t(spark, dir).documents, "doc_id", "text")
+      t(spark, dir).documents)
     val qs = Seq(
       (1L, "hash join"), (2L, "window agg sort"),
       (3L, "spark stream batch"), (4L, "vector query"),
@@ -3870,7 +3862,7 @@ object Queries {
     // compacts internally; the audit needs `latest` too) costs two
     // windows over the small side, never a corpus pass
     val merged = graft.operators.Cdc.applyChangeset(base, log, "doc_id")
-    val latest = graft.operators.Cdc.compact(log, "doc_id", "seq", "op")
+    val latest = graft.operators.Cdc.compact(log, "doc_id")
     val cls = latest
       .join(base.select(col("doc_id"), col("source").as("b_source")),
         Seq("doc_id"), "left")
@@ -4547,8 +4539,7 @@ object Queries {
       events(spark, dir)
         .groupBy(col("user_id"),
           date_trunc("day", col("ts")).cast("date").as("day"))
-        .agg(count(lit(1)).as("n")),
-      k = 20)
+        .agg(count(lit(1)).as("n")))
 
   /** Linear multi-touch attribution (q32's last-touch single hop
     * generalized to credit EVERY touch): each purchase splits
@@ -4716,7 +4707,7 @@ object Queries {
     * uncapped all-pairs definition itself, so a green row proves
     * the filter drops nothing. */
   def q185PrefixPairs(spark: SparkSession, dir: String): DataFrame =
-    Dedup.prefixFilterPairs(t(spark, dir).documents, "doc_id", "text",
+    Dedup.prefixFilterPairs(t(spark, dir).documents,
       n = 3, thresholdBp = 6000)
       .orderBy(col("id_a"), col("id_b"))
 
@@ -4922,7 +4913,7 @@ object Queries {
     // counts distinct tokens; a collision would merge two, and the
     // oracle hash-compare would surface it)
     val posting = graft.operators.Caches.persistTracked(
-      Dedup.shingleSets(t(spark, dir).documents, "doc_id", "text", n = 3,
+      Dedup.shingleSets(t(spark, dir).documents, n = 3,
           spread = false)
         .select(col("doc_id"), explode(col("sh")).as("tok"))
         .select(col("doc_id"), xxhash64(col("tok")).as("tok")))
@@ -5034,15 +5025,15 @@ object Queries {
   def q192MiningRecall(spark: SparkSession, dir: String): DataFrame = {
     val d = t(spark, dir).documents
     val exact = graft.operators.Caches.persistTracked(
-      Dedup.prefixFilterPairs(d, "doc_id", "text", n = 3,
+      Dedup.prefixFilterPairs(d, n = 3,
         thresholdBp = 2000)
         .select(col("id_a"), col("id_b")))
     val lsh = graft.operators.Caches.persistTracked(
-      Dedup.minhashLshPairs(d, "doc_id", "text", n = 3, bands = 4,
+      Dedup.minhashLshPairs(d, n = 3, bands = 4,
         rowsPerBand = 2, threshold = 0.2)
         .select(col("id_a"), col("id_b")))
     val capped = graft.operators.Caches.persistTracked(
-      Dedup.jaccardPairs(d, "doc_id", "text", n = 3, threshold = 0.2,
+      Dedup.jaccardPairs(d, n = 3, threshold = 0.2,
         maxDf = 50L)
         .select(col("id_a"), col("id_b")))
     val nTruth = exact.agg(count(lit(1)).as("n_truth"))
@@ -5353,7 +5344,7 @@ object Queries {
       d.where(col("lang") === "en")
         .agg(count(lit(1)).as("n_en"))
         .crossJoin(broadcast(total)))
-    val post = Dedup.shingleSets(d, "doc_id", "text", 13)
+    val post = Dedup.shingleSets(d, 13)
       .select(col("doc_id"), explode(col("sh")).as("g"))
     val benchGrams = post.where(col("doc_id") % 50 === 0)
       .select(col("g")).distinct()
@@ -5365,7 +5356,7 @@ object Queries {
         .agg(count(lit(1)).as("n_contam"))
         .crossJoin(broadcast(d.where(col("doc_id") % 50 =!= 0)
           .agg(count(lit(1)).as("n_train")))))
-    val pairs = Dedup.minhashLshPairs(d, "doc_id", "text", n = 3,
+    val pairs = Dedup.minhashLshPairs(d, n = 3,
       bands = 4, rowsPerBand = 2, threshold = 0.2)
     val nearRow = row("near_dup_bp",
       expr("n_inv * 10000 div n_docs"), "<=", 2500L)(

@@ -285,8 +285,8 @@ object Analytics {
     * right-shift (no float powers; shifts cap at 62). The fold is
     * additive integer sums, so partial daily counts from any split
     * of the data (micro-batches, shards) re-aggregate to the
-    * identical result. Top-`k` by (score DESC, user_id). */
-  def decayedTrending(daily: DataFrame, k: Int = 20): DataFrame = {
+    * identical result. Top 20 by (score DESC, user_id). */
+  def decayedTrending(daily: DataFrame): DataFrame = {
     val maxDay = daily.agg(max(col("day")).as("d_max"))
     daily.crossJoin(broadcast(maxDay))
       .select(col("user_id"), col("n"),
@@ -298,7 +298,7 @@ object Analytics {
         sum(col("contrib")).as("score_1e6"))
       .withColumn("rank", row_number().over(
         Window.orderBy(col("score_1e6").desc, col("user_id"))))
-      .where(col("rank") <= k)
+      .where(col("rank") <= 20)
       .select(col("rank"), col("user_id"), col("n_events"),
         col("score_1e6"))
       .orderBy(col("rank"))

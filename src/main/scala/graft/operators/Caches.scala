@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.Dataset
+import org.apache.spark.storage.StorageLevel
 
 /** Lifecycle registry for operator-internal persisted frames.
   *
@@ -19,10 +20,16 @@ object Caches {
   private val frames =
     new java.util.concurrent.ConcurrentLinkedQueue[Dataset[_]]()
 
-  /** Persist `df` at MEMORY_AND_DISK and track it for later release. */
+  /** Persist `df` at MEMORY_AND_DISK and track it for later release.
+    * A frame whose plan is already cached (an operator called twice
+    * with the same input, or a frame the caller cached) comes back
+    * as is: no second persist, no second registration — so
+    * [[releaseAll]] never unpersists a frame the caller cached. */
   def persistTracked[T](df: Dataset[T]): Dataset[T] = {
-    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    frames.add(df)
+    if (df.storageLevel == StorageLevel.NONE) {
+      df.persist(StorageLevel.MEMORY_AND_DISK)
+      frames.add(df)
+    }
     df
   }
 

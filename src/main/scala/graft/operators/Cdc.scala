@@ -26,15 +26,14 @@ import org.apache.spark.sql.functions._
   */
 object Cdc {
 
-  /** Compact a CDC log to the latest operation per key: max `seqCol`
-    * wins; ties break on `opCol` descending (`U` > `I` > `D`) so a
+  /** Compact a CDC log to the latest operation per key: max `seq`
+    * wins; ties break on `op` descending (`U` > `I` > `D`) so a
     * same-sequence upsert beats its delete deterministically — callers
     * with a totally ordered log never hit the tie-break. One window
     * over the batch-sized log; nothing corpus-scale. */
-  def compact(log: DataFrame, key: String, seqCol: String,
-      opCol: String): DataFrame = {
+  def compact(log: DataFrame, key: String): DataFrame = {
     val w = Window.partitionBy(col(key))
-      .orderBy(col(seqCol).desc, col(opCol).desc)
+      .orderBy(col("seq").desc, col("op").desc)
     log.withColumn("__rn", row_number().over(w))
       .where(col("__rn") === 1)
       .drop("__rn")
@@ -42,19 +41,19 @@ object Cdc {
 
   /** Apply a CDC log to a base snapshot and return the post-merge
     * snapshot (same columns as `base`). The log must carry `key`,
-    * `seqCol`, `opCol`, and every base payload column (null payload on
+    * `seq`, `op`, and every base payload column (null payload on
     * `D` rows is fine — deletes never contribute an image). */
-  def applyChangeset(base: DataFrame, log: DataFrame, key: String,
-      seqCol: String = "seq", opCol: String = "op"): DataFrame = {
-    val latest = compact(log, key, seqCol, opCol)
+  def applyChangeset(base: DataFrame, log: DataFrame, key: String)
+      : DataFrame = {
+    val latest = compact(log, key)
     val untouched = base.join(latest.select(col(key)), Seq(key), "left_anti")
-    val upserts = latest.where(col(opCol) =!= "D")
+    val upserts = latest.where(col("op") =!= "D")
       .select(base.columns.map(col).toIndexedSeq: _*)
     untouched.unionByName(upserts)
   }
 
   /** Seq-aware apply for INCREMENTAL maintenance under out-of-order
-    * batch delivery: the state frame carries `seqCol`/`opCol` for
+    * batch delivery: the state frame carries `seq`/`op` for
     * every key it has ever seen — including `D` TOMBSTONES — so a
     * late-arriving batch with a lower sequence number can never
     * overwrite or resurrect a newer image. Returns the next state
@@ -66,20 +65,18 @@ object Cdc {
     * key set (both broadcastable); the re-compaction that resolves
     * state-vs-batch conflicts runs over batch-sized frames only. */
   def applyChangesetVersioned(state: DataFrame, log: DataFrame,
-      key: String, seqCol: String = "seq", opCol: String = "op")
-      : DataFrame = {
+      key: String): DataFrame = {
     val cols = state.columns.map(col).toIndexedSeq
-    val latest = compact(log, key, seqCol, opCol).select(cols: _*)
+    val latest = compact(log, key).select(cols: _*)
     val touched = latest.select(col(key))
     val untouched = state.join(touched, Seq(key), "left_anti")
     val contested = state.join(touched, Seq(key), "left_semi")
     untouched.unionByName(
-      compact(contested.unionByName(latest), key, seqCol, opCol))
+      compact(contested.unionByName(latest), key))
   }
 
   /** The live view of a versioned state frame: tombstones dropped,
     * bookkeeping columns removed. */
-  def snapshotOf(state: DataFrame, seqCol: String = "seq",
-      opCol: String = "op"): DataFrame =
-    state.where(col(opCol) =!= "D").drop(seqCol, opCol)
+  def snapshotOf(state: DataFrame): DataFrame =
+    state.where(col("op") =!= "D").drop("seq", "op")
 }

@@ -635,7 +635,8 @@ object Constraints {
   }
 
   /** The expectations/quarantine half: tag every row with the array
-    * of row-level constraints it VIOLATES (empty array = clean). A
+    * `violations` of row-level constraints it VIOLATES (empty array =
+    * clean). A
     * null predicate result counts as violated — a null lang neither
     * matches a regex nor belongs to a set. Aggregate-only constraints
     * (uniqueness, size) are skipped; a require rejects a suite with
@@ -644,8 +645,7 @@ object Constraints {
     * its reasons attached — the q78 JSON-quarantine pattern for
     * structured quality. One projection, all codegen'd predicates,
     * no second pass. */
-  def enforce(df: DataFrame, cs: Seq[Constraint],
-      violationsCol: String = "violations"): DataFrame = {
+  def enforce(df: DataFrame, cs: Seq[Constraint]): DataFrame = {
     val rowCs = cs.flatMap(c => c.rowPredicate.map(c.tag -> _))
     require(rowCs.nonEmpty,
       "no row-level constraints in suite (uniqueness/size are " +
@@ -654,7 +654,6 @@ object Constraints {
       when(!coalesce(pred, lit(false)), lit(tag))
         .otherwise(lit(null).cast("string"))
     }
-    df.withColumn(violationsCol,
-      filter(array(tags: _*), x => x.isNotNull))
+    df.withColumn("violations", filter(array(tags: _*), x => x.isNotNull))
   }
 }

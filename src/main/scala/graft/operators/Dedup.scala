@@ -24,19 +24,22 @@ import graft.functions.TextFunctions._
   * are reproducible bit-for-bit in any SQL engine — which is also what
   * the DuckDB oracle checks.
   *
+  * Every document operator reads the `documents` shape: `doc_id`
+  * (long) and `text`.
+  *
   * Internal persists are tracked in [[Caches]]; run-many-queries
   * drivers call `Caches.releaseAll()` between queries.
   */
 object Dedup {
 
-  /** Exact dedup over a text column: one row per distinct fingerprint,
+  /** Exact dedup over `text`: one row per distinct fingerprint,
     * keeping the smallest id (deterministic survivor). */
-  def exact(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+  def exact(docs: DataFrame): DataFrame =
     docs
-      .select(col(idCol), fingerprint(col(textCol)).as("fp"))
+      .select(col("doc_id"), fingerprint(col("text")).as("fp"))
       .groupBy(col("fp"))
       .agg(
-        min(col(idCol)).as("keep_id"),
+        min(col("doc_id")).as("keep_id"),
         count(lit(1)).as("n_copies"))
 
   /** Incremental exact dedup — the ingest-time regime of [[exact]]
@@ -53,11 +56,10 @@ object Dedup {
     * oracle-checked contract. Returns the updated (fp, keep_id,
     * n_copies) table. */
   def incrementalExact(stored: DataFrame, incoming: DataFrame,
-      idCol: String, textCol: String, expectedStored: Long): DataFrame = {
+      expectedStored: Long): DataFrame = {
     val inc = Caches.persistTracked(
       incoming
-        .select(col(idCol).as("inc_id"),
-          fingerprint(col(textCol)).as("fp"))
+        .select(col("doc_id").as("inc_id"), fingerprint(col("text")).as("fp"))
         .withColumn("maybe_stored",
           Bloom.mightContain(Bloom.bloomOf(stored, "fp", expectedStored),
             col("fp"))))
@@ -101,8 +103,8 @@ object Dedup {
     * posting-list materialization any inverted-index build does before
     * joining.
     */
-  def shingleSets(docs: DataFrame, idCol: String, textCol: String,
-      n: Int, spread: Boolean = true): DataFrame =
+  def shingleSets(docs: DataFrame, n: Int, spread: Boolean = true)
+      : DataFrame =
     Caches.persistTracked(
       // Spread.forFanout: a small corpus scans as ONE task (single
       // parquet file), serializing the whole shingling pass — spread
@@ -111,9 +113,9 @@ object Dedup {
       // opts out for LOOP consumers (greedy coverage, delta-cap
       // maintenance) where a wide cached posting multiplies per-round
       // stage fanout and measured slower than the narrow shape.
-      (if (spread) Spread.forFanout(docs, col(idCol)) else docs)
-        .select(col(idCol).as("doc_id"),
-          graft.expressions.TextExpressions.wordShingles(col(textCol), n)
+      (if (spread) Spread.forFanout(docs, col("doc_id")) else docs)
+        .select(col("doc_id"),
+          graft.expressions.TextExpressions.wordShingles(col("text"), n)
             .as("sh")))
       .withColumn("n_sh", size(col("sh")))
       .where(col("n_sh") > 0)
@@ -126,9 +128,9 @@ object Dedup {
     * document frequency above `maxDf` (stop-shingles), the standard
     * inverted-index trick — keeps the join output near-linear.
     */
-  def jaccardPairs(docs: DataFrame, idCol: String, textCol: String,
-      n: Int, threshold: Double, maxDf: Long = 1000L): DataFrame =
-    candidatePairCounts(docs, idCol, textCol, n, maxDf)
+  def jaccardPairs(docs: DataFrame, n: Int, threshold: Double,
+      maxDf: Long = 1000L): DataFrame =
+    candidatePairCounts(docs, n, maxDf)
       .withColumn("jaccard",
         round(col("shared").cast("double")
           / (col("na") + col("nb") - col("shared")), 4))
@@ -165,12 +167,12 @@ object Dedup {
     *
     * Emits (id_a, id_b, shared, jaccard) with jaccard ≥
     * thresholdBp/10⁴, a < b. */
-  def prefixFilterPairs(docs: DataFrame, idCol: String, textCol: String,
-      n: Int, thresholdBp: Int): DataFrame = {
+  def prefixFilterPairs(docs: DataFrame, n: Int, thresholdBp: Int)
+      : DataFrame = {
     require(thresholdBp > 0 && thresholdBp <= 10000,
       s"thresholdBp must be in (0,10000], got $thresholdBp")
     import org.apache.spark.sql.expressions.Window
-    val sets = shingleSets(docs, idCol, textCol, n)
+    val sets = shingleSets(docs, n)
     val posting = sets
       .select(col("doc_id"), col("n_sh"), explode(col("sh")).as("shingle"))
       .select(col("doc_id"), col("n_sh"),
@@ -249,10 +251,9 @@ object Dedup {
     * document embedded inside a longer one, which Jaccard dilutes
     * (a 10-shingle doc fully contained in a 200-shingle doc has
     * jaccard 0.05 but overlap 1.0). Same inverted-index candidate
-    * machinery and scale shape as [[jaccardPairs]]. */
-  def overlapPairs(docs: DataFrame, idCol: String, textCol: String,
-      n: Int, threshold: Double, maxDf: Long = 1000L): DataFrame =
-    candidatePairCounts(docs, idCol, textCol, n, maxDf)
+    * machinery, scale shape and stop-shingle cap as [[jaccardPairs]]. */
+  def overlapPairs(docs: DataFrame, n: Int, threshold: Double): DataFrame =
+    candidatePairCounts(docs, n, maxDf = 1000L)
       .withColumn("overlap",
         round(col("shared").cast("double")
           / least(col("na"), col("nb")), 4))
@@ -264,9 +265,9 @@ object Dedup {
     * least one shingle, with both set sizes and the exact intersection
     * count. Never materializes the O(n²) cross product; `maxDf` drops
     * stop-shingles so a hot shingle in f docs can't emit f² rows. */
-  private def candidatePairCounts(docs: DataFrame, idCol: String,
-      textCol: String, n: Int, maxDf: Long): DataFrame = {
-    val sets = shingleSets(docs, idCol, textCol, n)
+  private def candidatePairCounts(docs: DataFrame, n: Int, maxDf: Long)
+      : DataFrame = {
+    val sets = shingleSets(docs, n)
     // the shingle STRING never leaves the posting build: all joins and
     // df-counts key on its xxhash64 — a 16-byte fixed-width shuffle row
     // instead of a ~40-byte string row, which matters because this join
@@ -312,10 +313,9 @@ object Dedup {
     * [[jaccardPairs]] over the union (proven by q116's oracle, which
     * IS the full-re-mine SQL). */
   def incrementalJaccardPairs(corpus: DataFrame, incoming: DataFrame,
-      idCol: String, textCol: String, n: Int, threshold: Double,
-      maxDf: Long = 1000L): DataFrame = {
+      n: Int, threshold: Double, maxDf: Long = 1000L): DataFrame = {
     def post(side: DataFrame, inc: Boolean): DataFrame =
-      shingleSets(side, idCol, textCol, n)
+      shingleSets(side, n)
         .select(col("doc_id"), col("n_sh"),
           explode(col("sh")).as("shingle"), lit(inc).as("inc"))
         .select(col("doc_id"), col("n_sh"),
@@ -397,14 +397,14 @@ object Dedup {
     * the whole 100 TB corpus is touched only through the (tiny) stored
     * pair table and the per-doc shingle-size table. */
   def deltaCapJaccardPairs(storedPairs: DataFrame, corpus: DataFrame,
-      incoming: DataFrame, idCol: String, textCol: String, n: Int,
-      threshold: Double, maxDf: Long = 1000L): DataFrame = {
+      incoming: DataFrame, n: Int, threshold: Double,
+      maxDf: Long = 1000L): DataFrame = {
     // spread = false (round-11): the adjustment's many independent
     // consumer stages fan a wide cached posting into concurrent
     // 32-task stages whose scheduling cost measured above the narrow
     // shape's — the delta side stays narrow by design
     def post(side: DataFrame): DataFrame =
-      shingleSets(side, idCol, textCol, n, spread = false)
+      shingleSets(side, n, spread = false)
         .select(col("doc_id"), col("n_sh"), explode(col("sh")).as("shingle"))
         .select(col("doc_id"), col("n_sh"),
           xxhash64(col("shingle")).as("sh_key"))
@@ -492,7 +492,7 @@ object Dedup {
     * Scale shape: each iteration is one join + one keyed min — all
     * shuffles on the node id, no driver-side graph. Convergence needs
     * O(component diameter) rounds; near-dup clusters are shallow
-    * (diameter ≤ a handful), and `maxIters` bounds the worst case.
+    * (diameter ≤ a handful), and `maxIters` (20) bounds the worst case.
     * Each round's labels are materialized (tracked in [[Caches]]) to
     * cut the iterative lineage, the same discipline as
     * [[Similarity.fitCentroids]]. The fixpoint label (min id in the
@@ -502,12 +502,13 @@ object Dedup {
     * Input: pair frame with `id_a`/`id_b` columns (a < b). Output:
     * (doc_id, cluster_id) for every doc appearing in at least one
     * pair; singletons are implicitly their own cluster. */
-  def connectedComponents(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
+  def connectedComponents(pairs: DataFrame): DataFrame = {
     // a component of diameter d needs ~d rounds; if maxIters is hit
     // before the fixpoint, labels are a valid PARTIAL merge (every
     // label is some component member's id, clusters may be split) —
-    // raise maxIters for deep graphs, near-dup graphs are shallow
-    require(maxIters > 0, s"maxIters must be positive, got $maxIters")
+    // deep graphs take [[connectedComponentsStar]], near-dup graphs
+    // are shallow
+    val maxIters = 20
     // materialize the pair source ONCE before mirroring it — the edge
     // union references `pairs` twice, and an un-materialized upstream
     // (e.g. a whole LSH or cosine pair-mining pipeline) would run
@@ -648,7 +649,7 @@ object Dedup {
     graft.expressions.TextExpressions.minhashSig(sh, numHashes)
 
   /** SimHash near-dup pairs: 64-bit fingerprints (as bit strings),
-    * banded into `bands` exact-match buckets for candidates, then
+    * banded into 4 exact-match 16-bit buckets for candidates, then
     * verified by Hamming distance <= maxHamming. One shuffle per band
     * join; no O(n²) comparisons.
     *
@@ -661,17 +662,16 @@ object Dedup {
     * collisions — at 4 bands a bucket is 16 bits (65k values), still
     * selective; at 16 bands it is 4 bits and the band join degenerates
     * toward all-pairs. */
-  def simhashPairs(docs: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int, bands: Int = 4): DataFrame = {
-    require(64 % bands == 0, s"bands must divide 64, got $bands")
+  def simhashPairs(docs: DataFrame, maxHamming: Int): DataFrame = {
+    val bands = 4
     require(maxHamming < bands,
       s"banded LSH guarantees recall only for Hamming distance <= bands-1"
         + s" (pigeonhole); got maxHamming=$maxHamming with $bands bands")
     val bandBits = 64 / bands
-    val toks = graft.functions.TextFunctions.tokens(col(textCol))
-    val bits = Caches.persistTracked(Spread.forFanout(docs, col(idCol))
+    val toks = graft.functions.TextFunctions.tokens(col("text"))
+    val bits = Caches.persistTracked(Spread.forFanout(docs, col("doc_id"))
       .where(size(toks) > 0) // token-less docs have no fingerprint
-      .select(col(idCol).as("doc_id"),
+      .select(col("doc_id"),
         graft.expressions.TextExpressions.simhashBits(toks).as("bits")))
     // band b = bandBits-bit substring [b*bandBits+1, bandBits]
     val withBands = bits.select(col("doc_id"), col("bits"),
@@ -710,12 +710,11 @@ object Dedup {
     * threshold-bounded `levenshtein(l, r, k)` (O(len·k) banded DP) once
     * an absolute bound is acceptable.
     */
-  def editDistancePairs(docs: DataFrame, idCol: String, textCol: String,
-      w: Int = 8, t: Int = 4, maxDf: Long = 5L, minSharedFp: Long = 2L,
-      maxLevRatio: Double = 0.1): DataFrame = {
+  def editDistancePairs(docs: DataFrame, maxDf: Long = 5L): DataFrame = {
+    val (w, t, minSharedFp, maxLevRatio) = (8, 4, 2L, 0.1)
     val base = Caches.persistTracked(
-      Spread.forFanout(docs, col(idCol)).select(col(idCol).as("doc_id"),
-        col(textCol).as("txt"), length(col(textCol)).as("len")))
+      Spread.forFanout(docs, col("doc_id")).select(col("doc_id"),
+        col("text").as("txt"), length(col("text")).as("len")))
     val fps = base.select(col("doc_id"),
       explode(graft.expressions.TextExpressions
         .winnowFingerprints(col("txt"), w, t)).as("fp"))
@@ -753,30 +752,27 @@ object Dedup {
     * tiny verified candidate set. Carrying the arrays through the
     * candidate shuffles instead would cost
     * O(candidates × avg-shingle-set-bytes) — the arrays dominate. */
-  /** [[minhashLshPairs]] with S-curve-derived band geometry: the
-    * caller states intent — guarantee `targetRecall` for pairs at
-    * jaccard ≥ `simTarget` — and
+  /** [[minhashLshPairs]] with S-curve-derived band geometry: recall
+    * 0.9 is guaranteed for pairs at jaccard ≥ 0.7, and
     * [[graft.plans.BandGeometry.deriveMinhash]] picks the cheapest
     * (bands, rowsPerBand) that delivers it (q23's pinned 4×2 is the
-    * derived answer for the 0.7/0.9 defaults). `threshold` remains the
+    * derived answer). `threshold` remains the
     * verify-stage filter; recall at the threshold itself is
     * intentionally NOT the target (guaranteeing recall at a low
     * threshold forces near-single-hash bands whose buckets admit
     * everything — the candidate-generator contract guarantees recall
     * where near-dups live and lets it taper below). */
-  def minhashLshPairsAuto(docs: DataFrame, idCol: String, textCol: String,
-      n: Int, threshold: Double, simTarget: Double = 0.7,
-      targetRecall: Double = 0.9): DataFrame = {
+  def minhashLshPairsAuto(docs: DataFrame, n: Int, threshold: Double)
+      : DataFrame = {
     val (bands, rowsPerBand) =
-      graft.plans.BandGeometry.deriveMinhash(simTarget, targetRecall)
-    minhashLshPairs(docs, idCol, textCol, n, bands, rowsPerBand, threshold)
+      graft.plans.BandGeometry.deriveMinhash(0.7, 0.9)
+    minhashLshPairs(docs, n, bands, rowsPerBand, threshold)
   }
 
-  def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
-      n: Int, bands: Int, rowsPerBand: Int,
+  def minhashLshPairs(docs: DataFrame, n: Int, bands: Int, rowsPerBand: Int,
       threshold: Double): DataFrame = {
     val numHashes = bands * rowsPerBand
-    val sets = shingleSets(docs, idCol, textCol, n)
+    val sets = shingleSets(docs, n)
     // band value = md5 of the concatenated signature slice; persisted
     // because both sides of the self-join consume it (without
     // materialization the signature would compute once per join side)
@@ -867,10 +863,13 @@ object Dedup {
       .distinct()
   }
 
-  def crossDocDupSpans(docs: DataFrame, idCol: String, textCol: String,
-      k: Int): DataFrame = {
-    val base = Spread.forFanout(docs, col(idCol))
-      .select(col(idCol).as("doc_id"), tokens(col(textCol)).as("tk"))
+  /** (doc_id, tk): the token stream every span operator starts from. */
+  private def docTokens(docs: DataFrame): DataFrame =
+    Spread.forFanout(docs, col("doc_id"))
+      .select(col("doc_id"), tokens(col("text")).as("tk"))
+
+  def crossDocDupSpans(docs: DataFrame, k: Int): DataFrame = {
+    val base = docTokens(docs)
     val covered = dupCoveredPositions(base, k)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id")).orderBy(col("cpos"))
@@ -906,10 +905,8 @@ object Dedup {
     * inside a per-row array (array_sort over a collect_list) — state
     * is bounded by DOCUMENT length, never corpus-sized, and the sort
     * makes the aggregation deterministic under any partitioning. */
-  def removeDupSpans(docs: DataFrame, idCol: String, textCol: String,
-      k: Int): DataFrame = {
-    val base = Spread.forFanout(docs, col(idCol))
-      .select(col(idCol).as("doc_id"), tokens(col(textCol)).as("tk"))
+  def removeDupSpans(docs: DataFrame, k: Int): DataFrame = {
+    val base = docTokens(docs)
     removalAudit(base, dupCoveredPositions(base, k))
   }
 
@@ -923,14 +920,13 @@ object Dedup {
     * (16-byte keys); at 100 TB the eval side is benchmark-sized —
     * the join broadcasts it while the corpus streams. */
   def removeContaminatedSpans(train: DataFrame, evalDocs: DataFrame,
-      idCol: String, textCol: String, k: Int): DataFrame = {
-    val base = Spread.forFanout(train, col(idCol))
-      .select(col(idCol).as("doc_id"), tokens(col(textCol)).as("tk"))
+      k: Int): DataFrame = {
+    val base = docTokens(train)
     val grams = base
       .select(col("doc_id"), posexplode(shingles(col("tk"), k)))
       .select(col("doc_id"), col("pos"), xxhash64(col("col")).as("g"))
     val evalG = evalDocs
-      .select(explode(shingles(tokens(col(textCol)), k)).as("s"))
+      .select(explode(shingles(tokens(col("text")), k)).as("s"))
       .select(xxhash64(col("s")).as("g")).distinct()
     val covered = grams.join(evalG, Seq("g"))
       .select(col("doc_id"),

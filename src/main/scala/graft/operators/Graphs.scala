@@ -14,9 +14,10 @@ object Graphs {
 
   /** PageRank with fixed-point integer arithmetic.
     *
-    * Ranks are scaled longs (`scale` = 1.0 of total mass / N) and every
-    * step is integer math — `div` for the contribution split and the
-    * damping factor `dampingPct/100`. That buys two properties floats
+    * Ranks are scaled longs (`scale` = 10^12 = 1.0 of total mass, so a
+    * node starts at `scale / N`) and every step is integer math — `div`
+    * for the contribution split and the damping factor 85/100. That
+    * buys two properties floats
     * cannot give:
     *
     *  - determinism under ANY partitioning: integer sums are exact, so
@@ -40,11 +41,9 @@ object Graphs {
     * undirected pair sets before calling. Output: (id, out_deg,
     * rank_fp) where rank_fp is the scaled rank.
     */
-  def pageRankFixed(edges: DataFrame, iters: Int = 3, dampingPct: Int = 85,
-      scale: Long = 1000000000000L): DataFrame = {
+  def pageRankFixed(edges: DataFrame, iters: Int = 3): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    require(dampingPct >= 0 && dampingPct <= 100,
-      s"dampingPct must be in [0,100], got $dampingPct")
+    val (dampingPct, scale) = (85, 1000000000000L)
     val e = Caches.persistTracked(edges.select(col("src"), col("dst")))
     val deg = Caches.persistTracked(
       e.groupBy(col("src")).agg(count(lit(1)).as("out_deg")))
@@ -152,11 +151,12 @@ object Graphs {
 
   /** True k-core: peel until the node set is stable. The per-round
     * convergence check is one scalar count to the driver (the same
-    * summary-only contract as [[Dedup.connectedComponents]]); rounds
-    * are bounded by `maxRounds` as a runaway guard. Returns (id,
-    * core_deg) where every core_deg >= k. */
-  def kcore(edges: DataFrame, k: Int, maxRounds: Int = 100): DataFrame = {
+    * summary-only contract as [[Dedup.connectedComponents]]); 100
+    * rounds at most, as a runaway guard. Returns (id, core_deg) where
+    * every core_deg >= k. */
+  def kcore(edges: DataFrame, k: Int): DataFrame = {
     require(k >= 1)
+    val maxRounds = 100
     var e = Caches.persistTracked(edges.select(col("src"), col("dst")))
     var prev = e.count()
     var it = 0

@@ -50,8 +50,7 @@ object PairTable {
     * (id_a, id_b, shared, jaccard). */
   def pairs(spark: SparkSession, dir: String): DataFrame =
     materialized(spark, dir, "jaccard") { s =>
-      Dedup.jaccardPairs(graft.Tables(s, dir).documents,
-        "doc_id", "text", ShingleN, Threshold)
+      Dedup.jaccardPairs(graft.Tables(s, dir).documents, ShingleN, Threshold)
     }
 
   /** The materialized EMBEDDING pair table for `dir` (q81's mining:

@@ -33,10 +33,9 @@ object Relevance {
 
   /** Hashed-bigram bucket stream: (doc_id, b) one row per adjacent
     * token pair, b = first two hex chars of md5("f|" + bigram). */
-  private def bigramBuckets(docs: DataFrame, idCol: String,
-      textCol: String): DataFrame =
+  private def bigramBuckets(docs: DataFrame): DataFrame =
     docs
-      .select(col(idCol).as("doc_id"), tokens(col(textCol)).as("tk"))
+      .select(col("doc_id"), tokens(col("text")).as("tk"))
       .select(col("doc_id"), explode(shingles(col("tk"), 2)).as("bg"))
       .select(col("doc_id"),
         conv(substring(md5(concat_ws("|", lit("f"), col("bg"))), 1, 2),
@@ -45,10 +44,9 @@ object Relevance {
   /** Score every document in `raw` by target-likeness votes. Returns
     * (doc_id, score) — callers join back for payload columns and
     * rank. `target` and `raw` must be disjoint doc sets. */
-  def oddsVotes(target: DataFrame, raw: DataFrame, idCol: String,
-      textCol: String): DataFrame = {
-    val tb = bigramBuckets(target, idCol, textCol)
-    val rb = bigramBuckets(raw, idCol, textCol)
+  def oddsVotes(target: DataFrame, raw: DataFrame): DataFrame = {
+    val tb = bigramBuckets(target)
+    val rb = bigramBuckets(raw)
     val tcnt = tb.groupBy(col("b")).agg(count(lit(1)).as("tcnt"))
     val rcnt = rb.groupBy(col("b")).agg(count(lit(1)).as("rcnt"))
     // 256-row vote table; outer join covers buckets seen on one side
@@ -73,10 +71,9 @@ object Relevance {
     * rows), which is what makes the streaming ingest twin
     * ([[graft.streaming.SearchIngest]]) a plain per-batch fold with
     * no state store. */
-  def bm25Postings(docs: DataFrame, idCol: String, textCol: String)
-      : (DataFrame, DataFrame) = {
-    val toks = docs.select(col(idCol).as("doc_id"),
-      explode(tokens(col(textCol))).as("term"))
+  def bm25Postings(docs: DataFrame): (DataFrame, DataFrame) = {
+    val toks = docs.select(col("doc_id"),
+      explode(tokens(col("text"))).as("term"))
     val post = toks.groupBy(col("term"), col("doc_id"))
       .agg(count(lit(1)).as("tf"))
     val lens = toks.groupBy(col("doc_id")).agg(count(lit(1)).as("len"))

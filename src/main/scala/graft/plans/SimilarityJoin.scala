@@ -86,7 +86,7 @@ object BandGeometry {
     * hold, ≤ [[MaxSignatureBits]]), pick the WIDEST band `r ≤ 16`
     * whose MINIMAL band count `b = ⌈ln(1−recall)/ln(1−p^r)⌉` fits the
     * budget (`b·r ≤ budgetBits`), i.e. the most selective buckets
-    * that still hit the recall target — and, unlike [[derive]], no
+    * that still hit [[DefaultTargetRecall]] — and, unlike [[derive]], no
     * more bands than the target needs (derive fills all 64 bits, so
     * e.g. at 0.6 it ships 16 bands for recall 0.989 when 9 already
     * give 0.92; every extra band is a full extra shuffle replica and
@@ -101,12 +101,9 @@ object BandGeometry {
     * at corpus scale that trade is the whole game. For budgetBits=64
     * the geometry never does more work than [[derive]]'s (same or
     * fewer bands at the same width). */
-  def deriveWide(threshold: Double,
-      targetRecall: Double = DefaultTargetRecall,
-      budgetBits: Int = 256): (Int, Int) = {
+  def deriveWide(threshold: Double, budgetBits: Int = 256): (Int, Int) = {
     require(budgetBits >= 16 && budgetBits <= MaxSignatureBits,
       s"budgetBits in [16, $MaxSignatureBits]: $budgetBits")
-    require(targetRecall > 0 && targetRecall < 1)
     val p = bitProb(threshold)
     val candidates = for {
       r <- 16 to 1 by -1
@@ -114,7 +111,7 @@ object BandGeometry {
       // double-underflow guards, same traps as deriveMinhash: a pBand
       // so small that 1-pBand == 1.0 must not become a 1-band plan
       if pBand < 1.0 && (1.0 - pBand) < 1.0
-      bD = math.ceil(math.log(1.0 - targetRecall)
+      bD = math.ceil(math.log(1.0 - DefaultTargetRecall)
         / math.log(1.0 - pBand)).max(1.0)
       if bD * r <= budgetBits
     } yield (bD.toInt, r)

@@ -173,14 +173,10 @@ object Writers {
     * scan cost long before data volume does. Reads the directory,
     * plans `ceil(totalBytes / targetBytes)` output files from the
     * LISTED sizes (no data pass to decide the layout), and rewrites
-    * in one job. `sortCols` optionally re-clusters while compacting
-    * (range partition + within-file sort — compaction is the natural
-    * moment to restore clustering); empty keeps arrival order with a
-    * plain round-robin repartition. Returns the output file count. */
+    * in one job through a plain round-robin repartition (arrival order,
+    * no re-clustering). Returns the output file count. */
   def compactParquet(spark: org.apache.spark.sql.SparkSession,
-      inPath: String, outPath: String, targetBytes: Long,
-      sortCols: Seq[String] = Seq.empty): Int = {
-    import org.apache.spark.sql.functions.col
+      inPath: String, outPath: String, targetBytes: Long): Int = {
     val conf = spark.sparkContext.hadoopConfiguration
     val p = new org.apache.hadoop.fs.Path(inPath)
     val fs = p.getFileSystem(conf)
@@ -189,14 +185,8 @@ object Writers {
       .map(_.getLen).sum
     val nFiles = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes)
       .toInt
-    val df = spark.read.parquet(inPath)
-    val out =
-      if (sortCols.nonEmpty) {
-        val keys = sortCols.map(col)
-        df.repartitionByRange(nFiles, keys: _*)
-          .sortWithinPartitions(keys: _*)
-      } else df.repartition(nFiles)
-    out.write.mode("overwrite").parquet(outPath)
+    spark.read.parquet(inPath).repartition(nFiles)
+      .write.mode("overwrite").parquet(outPath)
     nFiles
   }
 }

@@ -26,7 +26,7 @@ import graft.operators.Cdc
   *    order and still converge to the same snapshot;
   *  - versions accumulate like any copy-on-write format; [[vacuum]]
   *    is the retention sweep (keep the newest N dirs, delete the
-  *    rest), and [[compactCurrent]] consolidates the current
+  *    rest), and [[compactCurrentDeferred]] consolidates the current
   *    version's files in place.
   *
   * Scale shape: each version write rewrites only what a 100 TB table
@@ -56,21 +56,19 @@ object CdcStream {
   }
 
   /** Initialize the table from a base snapshot (version -1): every
-    * base row enters the state with `seq = baseSeq` and op 'U'. */
-  def init(base: DataFrame, tablePath: String, seqCol: String = "seq",
-      opCol: String = "op", baseSeq: Long = 0L): Unit = {
+    * base row enters the state with `seq = 0` and op 'U'. */
+  def init(base: DataFrame, tablePath: String): Unit = {
     import org.apache.spark.sql.functions._
     Files.createDirectories(Paths.get(tablePath))
-    base.withColumn(seqCol, lit(baseSeq)).withColumn(opCol, lit("U"))
+    base.withColumn("seq", lit(0L)).withColumn("op", lit("U"))
       .write.mode("overwrite").parquet(s"$tablePath/v-1")
     writePointer(tablePath, -1L)
   }
 
   /** Wire a CDC log stream into the maintained table. The log must
-    * carry `key`, `seqCol`, `opCol` and the payload columns of the
+    * carry `key`, `seq`, `op` and the payload columns of the
     * initialized base. Start + await the returned writer. */
-  def maintain(log: DataFrame, tablePath: String, key: String,
-      seqCol: String = "seq", opCol: String = "op")
+  def maintain(log: DataFrame, tablePath: String, key: String)
       : DataStreamWriter[Row] = {
     val spark = log.sparkSession
     log.writeStream.outputMode("append").foreachBatch {
@@ -80,8 +78,7 @@ object CdcStream {
             s"CdcStream table $tablePath not initialized — call init()"))
         if (applied < id) {
           val prev = readVersionDir(spark, s"$tablePath/v$applied")
-          Cdc.applyChangesetVersioned(prev, batch.toDF(), key, seqCol,
-              opCol)
+          Cdc.applyChangesetVersioned(prev, batch.toDF(), key)
             .write.mode("overwrite").parquet(s"$tablePath/v$id")
           writePointer(tablePath, id)
         } // else: retry of an applied batch — skip (exactly-once)
@@ -90,7 +87,7 @@ object CdcStream {
   }
 
   /** Read one immutable version directory through a PINNED file
-    * listing: the same listing decides whether [[compactCurrent]]'s
+    * listing: the same listing decides whether a compaction's
     * write→commit double-visibility window is open (compacted copies
     * next to their originals) and feeds the scan, so the dedup that
     * absorbs the window runs ONLY while it is open — a version's rows
@@ -109,11 +106,10 @@ object CdcStream {
   /** The live merged snapshot as of the latest committed version.
     * Scans a pinned listing and dedups only inside the compaction
     * window — see [[readVersionDir]]. */
-  def readSnapshot(spark: SparkSession, tablePath: String,
-      seqCol: String = "seq", opCol: String = "op"): DataFrame = {
+  def readSnapshot(spark: SparkSession, tablePath: String): DataFrame = {
     val v = latestVersion(tablePath).getOrElse(
       throw new IllegalStateException(s"$tablePath not initialized"))
-    readSnapshotAt(spark, tablePath, v, seqCol, opCol)
+    readSnapshotAt(spark, tablePath, v)
   }
 
   /** Time-travel read: the merged snapshot AS OF a past committed
@@ -123,8 +119,7 @@ object CdcStream {
     * dir [[vacuum]] has not yet removed; reading above the pointer or
     * below the retention horizon throws. */
   def readSnapshotAt(spark: SparkSession, tablePath: String,
-      version: Long, seqCol: String = "seq", opCol: String = "op")
-      : DataFrame = {
+      version: Long): DataFrame = {
     val current = latestVersion(tablePath).getOrElse(
       throw new IllegalStateException(s"$tablePath not initialized"))
     require(version <= current,
@@ -133,7 +128,7 @@ object CdcStream {
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(dir),
       s"version $version vacuumed (retention horizon passed)")
-    Cdc.snapshotOf(readVersionDir(spark, dir.toString), seqCol, opCol)
+    Cdc.snapshotOf(readVersionDir(spark, dir.toString))
   }
 
   /** Retention sweep: delete version directories strictly below the
@@ -165,9 +160,13 @@ object CdcStream {
 
   /** Two-phase online compaction of the CURRENT version directory
     * (the [[graft.operators.Compaction]] pattern, proven on the
-    * vector index): every versioned merge write leaves one file per
-    * shuffle partition, so a long-running maintenance stream hands
-    * its readers dozens of small files per snapshot scan.
+    * vector index), write phase: every versioned merge write leaves
+    * one file per shuffle partition, so a long-running maintenance
+    * stream hands its readers dozens of small files per snapshot scan.
+    * This compacts the current version's files into 128 MiB targets
+    * next to the originals and returns the handle whose
+    * [[graft.operators.PendingCompaction.commit]] deletes the
+    * originals.
     *
     * Safety scope — read it before wiring this into a live table:
     *  - concurrent MAINTENANCE is always safe: a concurrent batch
@@ -180,32 +179,14 @@ object CdcStream {
     *  - the COMMIT phase deletes the original files, so a reader that
     *    listed the version dir before the commit and executes after it
     *    fails with FileNotFoundException (or silently drops those rows
-    *    under `spark.sql.files.ignoreMissingFiles=true`). This method
-    *    commits IMMEDIATELY — use it when no read can span the call.
-    *    With long-running concurrent readers, use
-    *    [[compactCurrentDeferred]] and commit after the deployment's
-    *    maximum read duration — the same horizon contract [[vacuum]]
-    *    documents.
-    *
-    * Returns the number of files replaced. */
-  def compactCurrent(spark: SparkSession, tablePath: String,
-      targetBytes: Long = 128L << 20): Int = {
-    val pending = compactCurrentDeferred(spark, tablePath, targetBytes)
-    pending.commit(spark)
-    pending.size
-  }
-
-  /** Write phase only: compact the current version's files next to
-    * the originals and return the handle whose
-    * [[graft.operators.PendingCompaction.commit]] deletes the
-    * originals. Hold the handle past the deployment's maximum read
-    * duration before committing — see [[compactCurrent]]. */
-  def compactCurrentDeferred(spark: SparkSession, tablePath: String,
-      targetBytes: Long = 128L << 20)
+    *    under `spark.sql.files.ignoreMissingFiles=true`). Hold the
+    *    handle past the deployment's maximum read duration before
+    *    committing — the same horizon contract [[vacuum]] documents. */
+  def compactCurrentDeferred(spark: SparkSession, tablePath: String)
       : graft.operators.PendingCompaction = {
     val v = latestVersion(tablePath).getOrElse(
       throw new IllegalStateException(s"$tablePath not initialized"))
     graft.operators.Compaction.compactWrite(spark, s"$tablePath/v$v",
-      partitionPrefix = None, targetBytes = targetBytes)
+      partitionPrefix = None, targetBytes = 128L << 20)
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
-import graft.operators.{Caches, Compaction, Dedup}
+import graft.operators.{Caches, Dedup, PairTable}
 
 /** Durable streaming maintenance of the BUCKETED near-dup pair table —
   * the on-disk twin of the in-memory foreachBatch maintenance
@@ -32,9 +32,9 @@ import graft.operators.{Caches, Compaction, Dedup}
   *     exactly-once pointer mechanics, shared).
   *
   * Version dirs inherit one file per shuffle partition per bucket —
-  * the fragmentation [[compactCurrent]] removes with the two-phase
-  * [[Compaction]] pattern, per-bucket (each `bucket=N` dir is an
-  * independent unit). [[read]] scans a pinned listing and dedups on
+  * the fragmentation the two-phase [[Compaction]] pattern removes
+  * per bucket (with `partitionPrefix = "bucket="` each `bucket=N` dir
+  * is an independent unit). [[read]] scans a pinned listing and dedups on
   * (id_a, id_b) only while that listing shows compaction's
   * write→commit window open — the window tolerance priced as a
   * transient cost, not a per-read shuffle.
@@ -60,12 +60,10 @@ object PairTableStream {
       .map(_.getPath.toString)
   }
 
-  /** Wire a (doc_id, text) document stream into the maintained table.
-    * Start + await the returned writer. */
-  def maintain(docs: DataFrame, tablePath: String,
-      n: Int = graft.operators.PairTable.ShingleN,
-      threshold: Double = graft.operators.PairTable.Threshold)
-      : DataStreamWriter[Row] = {
+  /** Wire a (doc_id, text) document stream into the maintained table,
+    * mined at [[PairTable]]'s shingle size and threshold. Start + await
+    * the returned writer. */
+  def maintain(docs: DataFrame, tablePath: String): DataStreamWriter[Row] = {
     val spark = docs.sparkSession
     docs.writeStream.outputMode("append").foreachBatch {
       (batch: Dataset[Row], id: Long) =>
@@ -75,17 +73,16 @@ object PairTableStream {
           b.write.mode("overwrite")
             .parquet(s"${docsDir(tablePath)}/batch=$id")
           val prior = priorBatchDirs(spark, tablePath, id)
+          val (n, threshold) = (PairTable.ShingleN, PairTable.Threshold)
           val pairs =
-            if (prior.isEmpty)
-              Dedup.jaccardPairs(b, "doc_id", "text", n, threshold)
+            if (prior.isEmpty) Dedup.jaccardPairs(b, n, threshold)
             else Dedup.incrementalJaccardPairs(
-              spark.read.parquet(prior: _*), b, "doc_id", "text", n,
-              threshold)
+              spark.read.parquet(prior: _*), b, n, threshold)
           // the version write stays WIDE (a corpus-scale pair set
           // cannot funnel through few tasks), keyed on id_a; wide ×
           // bucket-partitioned = one file per (task, bucket) pair —
-          // exactly the per-bucket fragmentation [[compactCurrent]]
-          // exists to remove
+          // exactly the per-bucket fragmentation compaction exists to
+          // remove
           val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
           pairs.withColumn("bucket", pmod(col("id_a"), lit(NBuckets)))
             .repartition(width, col("id_a"))
@@ -100,7 +97,7 @@ object PairTableStream {
 
   /** Read version files through a PINNED listing rooted at `dir` (so
     * the partition-column discovery keeps `bucket`), deduping on
-    * (id_a, id_b) ONLY while the listing shows [[compactCurrent]]'s
+    * (id_a, id_b) ONLY while the listing shows a compaction's
     * write→commit window open in some bucket unit — the mine emits
     * each pair once, so outside the window readers pay no dedup
     * shuffle for the compaction tolerance. */
@@ -147,33 +144,5 @@ object PairTableStream {
       .where(col("bucket") === b)
       .where(col("id_a") === idA)
       .select(col("id_a"), col("id_b"), col("shared"), col("jaccard"))
-  }
-
-  /** Two-phase per-bucket compaction of the current version — each
-    * `bucket=N` dir is an independent [[Compaction]] unit. Safety
-    * scope (the [[CdcStream.compactCurrent]] contract, shared):
-    * concurrent MAINTENANCE is always safe ([[maintain]] writes NEW
-    * version dirs); the WRITE phase is safe under concurrent reads
-    * ([[read]]/[[readForKey]] detect the window from their pinned
-    * listing and dedup it away); the immediate COMMIT here deletes
-    * originals, which breaks a reader that listed before the commit
-    * and executes after it — with long-running concurrent readers use
-    * [[compactCurrentDeferred]] and commit past the deployment's
-    * maximum read duration (the vacuum horizon contract). */
-  def compactCurrent(spark: SparkSession, tablePath: String,
-      targetBytes: Long = 128L << 20): Int = {
-    val pending = compactCurrentDeferred(spark, tablePath, targetBytes)
-    pending.commit(spark)
-    pending.size
-  }
-
-  /** Write phase only — see [[compactCurrent]] for when to commit. */
-  def compactCurrentDeferred(spark: SparkSession, tablePath: String,
-      targetBytes: Long = 128L << 20)
-      : graft.operators.PendingCompaction = {
-    val v = CdcStream.latestVersion(tablePath).getOrElse(
-      throw new IllegalStateException(s"$tablePath not initialized"))
-    Compaction.compactWrite(spark, s"$tablePath/v$v",
-      partitionPrefix = Some("bucket="), targetBytes = targetBytes)
   }
 }

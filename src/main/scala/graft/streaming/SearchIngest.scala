@@ -26,7 +26,7 @@ object SearchIngest {
 
   /** Idempotent per-batch fold — exposed so retries are testable. */
   def applyBatch(batch: DataFrame, indexDir: String, id: Long): Unit = {
-    val (post, lens) = Relevance.bm25Postings(batch, "doc_id", "text")
+    val (post, lens) = Relevance.bm25Postings(batch)
     post.write.mode("overwrite").parquet(s"$indexDir/postings/batch=$id")
     lens.write.mode("overwrite").parquet(s"$indexDir/lens/batch=$id")
   }

@@ -23,13 +23,14 @@ object StateStores {
   val RocksDbProvider: String =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** Switch subsequently-started queries to RocksDB state stores. */
-  def useRocksDb(spark: SparkSession, changelogCheckpointing: Boolean = true): Unit = {
+  /** Switch subsequently-started queries to RocksDB state stores, with
+    * changelog checkpointing on. */
+  def useRocksDb(spark: SparkSession): Unit = {
     spark.conf.set(
       "spark.sql.streaming.stateStore.providerClass", RocksDbProvider)
     spark.conf.set(
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-      changelogCheckpointing.toString)
+      "true")
   }
 
   /** Back to the default (HDFS-backed, heap) provider. */

@@ -48,9 +48,9 @@ object StreamOps {
     raw.select(from_json(col("value").cast("string"), schema).as("data"))
       .select("data.*")
 
-  /** S3: event-time promotion (string → TimestampType). */
-  def withEventTime(df: DataFrame, tsCol: String = "ts"): DataFrame =
-    df.withColumn(tsCol, to_timestamp(col(tsCol)))
+  /** S3: event-time promotion of `ts` (string → TimestampType). */
+  def withEventTime(df: DataFrame): DataFrame =
+    df.withColumn("ts", to_timestamp(col("ts")))
 
   val WatermarkDelay = "2 minutes"
 
@@ -59,8 +59,8 @@ object StreamOps {
     * redefining it downstream is disallowed (and was the reference's
     * luck: PySpark 3.5 tolerated re-watermarking the union because the
     * branches carried the same source watermark). No-op in batch. */
-  def watermarked(events: DataFrame, tsCol: String = "ts"): DataFrame =
-    events.withWatermark(tsCol, WatermarkDelay)
+  def watermarked(events: DataFrame): DataFrame =
+    events.withWatermark("ts", WatermarkDelay)
   // Operational note: Catalyst pushes filters whose predicates don't
   // reference the event-time column BELOW the watermark node, so the
   // watermark only advances on rows surviving those filters. A topology
@@ -68,16 +68,15 @@ object StreamOps {
   // to advance event time (verified in StreamingSpec's differential
   // test; same behavior as upstream Spark).
 
-  /** T8/SQ1: high-frequency detector — ≥ `threshold` events from one
-    * user inside a 60 s tumbling window. Stateful (windowed agg);
-    * expects a [[watermarked]] input. Output `ts` is the window end,
-    * which carries the propagated event-time watermark. */
-  def highFrequencyAlerts(events: DataFrame, threshold: Long = 3)
-      : DataFrame =
+  /** T8/SQ1: high-frequency detector — ≥ 3 events from one user
+    * inside a 60 s tumbling window. Stateful (windowed agg); expects a
+    * [[watermarked]] input. Output `ts` is the window end, which
+    * carries the propagated event-time watermark. */
+  def highFrequencyAlerts(events: DataFrame): DataFrame =
     events
       .groupBy(window(col("ts"), "60 seconds"), col("user_id"))
       .agg(count(lit(1)).as("event_count"))
-      .where(col("event_count") >= threshold)
+      .where(col("event_count") >= 3L)
       .select(
         // window_time (= window.end - 1µs) keeps the event-time /
         // watermark metadata so a downstream agg can chain (T9);
@@ -132,13 +131,12 @@ object StreamOps {
         col("alert_type"), col("n_alerts"), col("approx_users"))
 
   /** T4 extension: session windows — activity sessions close after
-    * `gap` of event-time inactivity per user (no fixed boundaries;
-    * state merges as events arrive). Append emission once the
-    * watermark passes the session end. */
-  def sessionMetrics(events: DataFrame, gap: String = "30 minutes")
-      : DataFrame =
+    * 30 minutes of event-time inactivity per user (no fixed
+    * boundaries; state merges as events arrive). Append emission once
+    * the watermark passes the session end. */
+  def sessionMetrics(events: DataFrame): DataFrame =
     events
-      .groupBy(session_window(col("ts"), gap), col("user_id"))
+      .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
       .agg(count(lit(1)).as("n_events"),
         approx_count_distinct(col("event_type")).as("approx_types"))
       .select(
@@ -149,13 +147,13 @@ object StreamOps {
   /** Per-micro-batch observability: named metrics evaluated inline on
     * the streaming plan (`Dataset.observe` — an accumulator pass, no
     * extra shuffle or scan) that surface in every
-    * `StreamingQueryProgress.observedMetrics(name)`. The monitoring
-    * contract a production topology needs: per-trigger row count,
+    * `StreamingQueryProgress.observedMetrics` under "graft_metrics".
+    * The monitoring contract a production topology needs: per-trigger
+    * row count,
     * value total, and max observed event time (watermark lag =
     * wall-clock − max_event_time). */
-  def observed(events: DataFrame, name: String = "graft_metrics")
-      : DataFrame =
-    events.observe(name,
+  def observed(events: DataFrame): DataFrame =
+    events.observe("graft_metrics",
       count(lit(1)).as("n_rows"),
       sum(col("value")).as("value_total"),
       max(col("ts")).as("max_event_time"))

@@ -17,7 +17,7 @@ object StreamingJobs {
 
   /** job1-analog (bot detection): stateful high-frequency detector ∪
     * stateless detectors → alert sink; chained re-aggregated metrics
-    * (T9) → metrics sink.
+    * (T9, [[StreamOps.chainedAlertMetrics]]) → metrics sink.
     *
     * Takes a source FACTORY: every started query instantiates its own
     * source plan — exactly how the reference topology behaves (each
@@ -26,15 +26,14 @@ object StreamingJobs {
   def startDetection(spark: SparkSession, events: () => DataFrame,
       outDir: String, trigger: String = "60 seconds")
       : Seq[StreamingQuery] = {
-    def alertsOf(src: DataFrame) = StreamOps.alertUnion(Seq(
-      StreamOps.highFrequencyAlerts(src),
-      StreamOps.highValueAlerts(src),
-      StreamOps.errorAlerts(src)))
-    val alerts = alertsOf(StreamOps.watermarked(events()))
+    val src = StreamOps.watermarked(events())
+    val alerts = StreamOps.alertUnion(Seq(
+        StreamOps.highFrequencyAlerts(src),
+        StreamOps.highValueAlerts(src),
+        StreamOps.errorAlerts(src)))
       .withColumn("ts",
         org.apache.spark.sql.functions.col("ts").cast("timestamp"))
-    val metrics = StreamOps.windowedMetrics(
-      alertsOf(StreamOps.watermarked(events())))
+    val metrics = StreamOps.chainedAlertMetrics(events())
     Seq(
       Sinks.parquetAppend(alerts,
         s"$outDir/alerts", s"$outDir/chk/alerts", trigger).start(),

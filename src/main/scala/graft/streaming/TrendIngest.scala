@@ -41,11 +41,10 @@ object TrendIngest {
         applyBatch(batch.toDF(), dir, id)
     }
 
-  /** Serve the current top-k through the maintained partials. */
-  def serveTopK(spark: SparkSession, dir: String, k: Int = 20): DataFrame =
+  /** Serve the current top 20 through the maintained partials. */
+  def serveTopK(spark: SparkSession, dir: String): DataFrame =
     graft.operators.Analytics.decayedTrending(
       spark.read.parquet(s"$dir/daily")
         .groupBy(col("user_id"), col("day"))
-        .agg(sum(col("n")).as("n")),
-      k)
+        .agg(sum(col("n")).as("n")))
 }

@@ -28,6 +28,7 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
 object TweetAlerts {
 
   val FriendsThreshold = 2000
+  val HighFrequencyThreshold = 3L
   val FollowersLowThreshold = 100
   val NewAccountDays = 30
   val DescriptionMinLength = 5
@@ -166,15 +167,15 @@ object TweetAlerts {
       .withColumn("timestamp", to_timestamp(col("timestamp")))
       .withColumn("user_created_dt", to_timestamp(col("user_created")))
 
-  /** SQ1: high-frequency posting detector — 60 s tumbling count per
+  /** SQ1: high-frequency posting detector — ≥ [[HighFrequencyThreshold]]
+    * tweets in a 60 s tumbling count per
     * (user_name, crypto_type) with the reference's alert shape
     * (job1_bots.py:144-184). The reference's `first()` carries are
     * replaced by deterministic `min()` (A6 rule); the output
     * `timestamp` is `window_time` (not the reference's bare
     * window.end) so the alert stream keeps its event-time metadata
     * and can chain into the SQ5 metrics agg (T9). */
-  def highFrequencyTweetAlerts(tweets: DataFrame,
-      threshold: Long = 3): DataFrame =
+  def highFrequencyTweetAlerts(tweets: DataFrame): DataFrame =
     tweets
       .groupBy(window(col("timestamp"), "60 seconds"),
         col("user_name"), col("crypto_type"))
@@ -184,7 +185,7 @@ object TweetAlerts {
         min(col("user_friends")).as("user_friends"),
         min(col("user_verified")).as("user_verified"),
         min(col("text")).as("text"))
-      .where(col("tweet_count") >= threshold)
+      .where(col("tweet_count") >= HighFrequencyThreshold)
       .withColumn("alert_type", lit("HIGH_FREQUENCY_POSTING"))
       .withColumn("alert_priority", lit("HIGH"))
       .withColumn("alert_reason", concat(

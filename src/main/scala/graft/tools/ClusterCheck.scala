@@ -1,5 +1,6 @@
 package graft.tools
 
+import org.apache.commons.lang3.exception.ExceptionUtils
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
@@ -51,8 +52,8 @@ import graft.plans.SimJoinRegime
   * Kryo's eager class registration (`Unable to create serializer …
   * java.nio.HeapByteBuffer`) as soon as a primitive-keyed shuffle
   * auto-picks Kryo, before any check's own code runs. The Worker adds
-  * the flags to executor JVMs itself. Set `GRAFT_CC_STACKS=1` for
-  * full stack traces on failures.
+  * the flags to executor JVMs itself. A check that throws reports
+  * its root cause on its JSON line and its stack on stderr.
   */
 object ClusterCheck {
 
@@ -64,12 +65,12 @@ object ClusterCheck {
       try body
       catch {
         case e: Throwable =>
-          if (sys.env.contains("GRAFT_CC_STACKS")) e.printStackTrace()
-          (false, s"threw ${e.getClass.getSimpleName}: ${e.getMessage}")
+          e.printStackTrace()
+          (false, s"threw ${ExceptionUtils.getRootCauseMessage(e)}")
       }
     val secs = (System.nanoTime() - t0) / 1e9
     if (!ok) failures += 1
-    println(f"""{"tool":"clustercheck","check":"$name","status":"${if (ok) "pass" else "FAIL"}","secs":$secs%.1f,"detail":"$detail"}""")
+    println(f"""{"tool":"clustercheck","check":"$name","status":"${if (ok) "pass" else "FAIL"}","secs":$secs%.1f,"detail":${graft.Verify.jsonString(detail)}}""")
   }
 
   private def cosine(a: Array[Double], b: Array[Double]): Double = {

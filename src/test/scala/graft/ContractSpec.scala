@@ -21,8 +21,8 @@ class ContractSpec extends AnyFunSuite {
   test("q87 concurrent catalog runs in one session do not race on " +
       "temp views") {
     // the round-3 verdict nit: unscoped createOrReplaceTempView names
-    // would let a second concurrent run swap tables mid-query. The fix
-    // scopes view names per run; this drives 4 simultaneous q87s
+    // would let a second concurrent run swap tables mid-query. q87
+    // keeps its views on a derived session; this drives 4 simultaneous q87s
     // through the SHARED session and requires identical results
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._

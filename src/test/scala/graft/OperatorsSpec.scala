@@ -28,7 +28,7 @@ class OperatorsSpec extends AnyFunSuite {
   ).toDF("doc_id", "text")
 
   test("exact dedup keeps min id and counts copies") {
-    val out = Dedup.exact(docs, "doc_id", "text")
+    val out = Dedup.exact(docs)
       .orderBy($"keep_id").collect()
     assert(out.length === 3)
     val byKeep = out.map(r => r.getLong(1) -> r.getLong(2)).toMap
@@ -38,7 +38,7 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("jaccard pairs finds exact and near dups, not unrelated docs") {
-    val pairs = Dedup.jaccardPairs(docs, "doc_id", "text", n = 3,
+    val pairs = Dedup.jaccardPairs(docs, n = 3,
       threshold = 0.2).collect()
     val ids = pairs.map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(ids.contains((1L, 2L)))
@@ -57,7 +57,7 @@ class OperatorsSpec extends AnyFunSuite {
         "kappa lambda mu nu xi omicron pi rho sigma tau"),         // superset
       (3L, "unrelated words entirely different from these others")
     ).toDF("doc_id", "text")
-    val out = Dedup.overlapPairs(contained, "doc_id", "text", n = 3,
+    val out = Dedup.overlapPairs(contained, n = 3,
       threshold = 0.5).collect()
     assert(out.length === 1)
     val r = out.head
@@ -65,7 +65,7 @@ class OperatorsSpec extends AnyFunSuite {
     assert(r.getDouble(5) === 1.0) // both doc-1 shingles inside doc-2
     // the same pair under jaccard: 2 shared / (2 + 17 - 2) ≈ 0.12 —
     // below any sensible threshold; containment is the right metric
-    val j = Dedup.jaccardPairs(contained, "doc_id", "text", 3, 0.2).collect()
+    val j = Dedup.jaccardPairs(contained, 3, 0.2).collect()
     assert(!j.exists(r => r.getLong(0) == 1L && r.getLong(1) == 2L))
   }
 
@@ -222,10 +222,10 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("minhashLshPairsAuto derives q23's geometry and matches the explicit call") {
     GraftTestSpark.withCaches {
-      val auto = Dedup.minhashLshPairsAuto(docs, "doc_id", "text",
+      val auto = Dedup.minhashLshPairsAuto(docs,
         n = 3, threshold = 0.2).orderBy($"id_a", $"id_b").collect().toSeq
       graft.operators.Caches.releaseAll()
-      val explicit = Dedup.minhashLshPairs(docs, "doc_id", "text",
+      val explicit = Dedup.minhashLshPairs(docs,
         n = 3, bands = 4, rowsPerBand = 2, threshold = 0.2)
         .orderBy($"id_a", $"id_b").collect().toSeq
       assert(auto === explicit) // (0.7, 0.9) derives exactly (4, 2)
@@ -234,9 +234,9 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("minhash-LSH pairs are a subset of exact jaccard pairs (no false positives after verify)") {
-    val exact = Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.2)
+    val exact = Dedup.jaccardPairs(docs, 3, 0.2)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val lsh = Dedup.minhashLshPairs(docs, "doc_id", "text", 3,
+    val lsh = Dedup.minhashLshPairs(docs, 3,
       bands = 4, rowsPerBand = 2, threshold = 0.2)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(lsh.subsetOf(exact))
@@ -245,7 +245,7 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("simhash: identical docs distance 0, near dups close, unrelated apart") {
     // maxHamming must respect the bands-1 pigeonhole recall bound
-    val pairs = Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 3)
+    val pairs = Dedup.simhashPairs(docs, maxHamming = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
     assert(pairs((1L, 2L)) === 0) // exact dup
     assert(pairs((1L, 5L)) === 0) // normalizes to same tokens
@@ -253,7 +253,7 @@ class OperatorsSpec extends AnyFunSuite {
     assert(!pairs.keySet.exists { case (a, b) => a == 4L || b == 4L })
     // over-bound maxHamming would silently under-report pairs → rejected
     intercept[IllegalArgumentException] {
-      Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 8)
+      Dedup.simhashPairs(docs, maxHamming = 8)
     }
   }
 
@@ -345,8 +345,7 @@ class OperatorsSpec extends AnyFunSuite {
       "engines shuffling partitioned columnar data across executors"
     val d = Seq((1L, base), (2L, mutated), (3L, other), (4L, base))
       .toDF("doc_id", "text")
-    val out = Dedup.editDistancePairs(d, "doc_id", "text",
-        maxDf = 4L, minSharedFp = 2L, maxLevRatio = 0.1)
+    val out = Dedup.editDistancePairs(d, maxDf = 4L)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(3)).toMap
     assert(out.contains((1L, 2L))) // near dup survives verification
     assert(out((1L, 4L)) === 0L)   // exact dup, lev 0
@@ -463,7 +462,7 @@ class OperatorsSpec extends AnyFunSuite {
     assert(rebuilt.inputFiles.head !== firstFile)
     // and the content is exactly the direct mine
     val direct = Dedup.jaccardPairs(
-        Tables(spark, dir).documents, "doc_id", "text",
+        Tables(spark, dir).documents,
         graft.operators.PairTable.ShingleN,
         graft.operators.PairTable.Threshold)
       .orderBy($"id_a", $"id_b").collect().toSeq
@@ -495,11 +494,11 @@ class OperatorsSpec extends AnyFunSuite {
     def norm(df: org.apache.spark.sql.DataFrame) =
       df.orderBy($"id_a", $"id_b").collect().toSeq
     val incremental = norm(Dedup.incrementalJaccardPairs(
-      corpus, incoming, "doc_id", "text", n = 3, threshold = 0.2,
+      corpus, incoming, n = 3, threshold = 0.2,
       maxDf = 2))
     graft.operators.Caches.releaseAll()
     val full = norm(Dedup.jaccardPairs(
-      corpus.unionByName(incoming), "doc_id", "text", n = 3,
+      corpus.unionByName(incoming), n = 3,
       threshold = 0.2, maxDf = 2))
     graft.operators.Caches.releaseAll()
     assert(incremental === full)
@@ -535,16 +534,16 @@ class OperatorsSpec extends AnyFunSuite {
     ).toDF("doc_id", "text")
     def norm(df: org.apache.spark.sql.DataFrame) =
       df.orderBy($"id_a", $"id_b").collect().toSeq
-    val stored = Dedup.jaccardPairs(corpus, "doc_id", "text", n = 3,
+    val stored = Dedup.jaccardPairs(corpus, n = 3,
       threshold = 0.2, maxDf = 2)
     // the stored table really contains the pair the delta must erase
     assert(stored.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       .contains((1L, 2L)))
     val delta = norm(Dedup.deltaCapJaccardPairs(stored, corpus, incoming,
-      "doc_id", "text", n = 3, threshold = 0.2, maxDf = 2))
+      n = 3, threshold = 0.2, maxDf = 2))
     graft.operators.Caches.releaseAll()
     val full = norm(Dedup.jaccardPairs(
-      corpus.unionByName(incoming), "doc_id", "text", n = 3,
+      corpus.unionByName(incoming), n = 3,
       threshold = 0.2, maxDf = 2))
     graft.operators.Caches.releaseAll()
     assert(delta === full)
@@ -642,10 +641,10 @@ class OperatorsSpec extends AnyFunSuite {
     val d = spark.read.parquet(s"$dir/documents.parquet")
     val incoming = d.where(pmod($"doc_id", lit(10)) === 5)
     val existing = d.where(pmod($"doc_id", lit(10)) =!= 5)
-    val stored = Dedup.exact(existing, "doc_id", "text")
-    val merged = Dedup.incrementalExact(stored, incoming, "doc_id", "text",
+    val stored = Dedup.exact(existing)
+    val merged = Dedup.incrementalExact(stored, incoming,
       expectedStored = 100000L)
-    val full = Dedup.exact(d, "doc_id", "text")
+    val full = Dedup.exact(d)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select($"fp", $"keep_id", $"n_copies")
         .as[(String, Long, Long)].collect().toSet
@@ -937,7 +936,7 @@ class OperatorsSpec extends AnyFunSuite {
       (3L, "rep1 rep2 rep3 rep4 mid rep1 rep2 rep3 rep4"),
       (4L, "nothing shared here at all with anyone")
     ).toDF("doc_id", "text")
-    val out = Dedup.crossDocDupSpans(d, "doc_id", "text", k = 4)
+    val out = Dedup.crossDocDupSpans(d, k = 4)
       .orderBy($"doc_id").collect()
     val byId = out.map(r => r.getLong(0) ->
       (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))).toMap
@@ -956,7 +955,7 @@ class OperatorsSpec extends AnyFunSuite {
       (2L, "a b c d zz1 zz2 zz3 zz4 zz5"),
       (3L, "qq e f g h i j ww")
     ).toDF("doc_id", "text")
-    val out = Dedup.crossDocDupSpans(d, "doc_id", "text", k = 4)
+    val out = Dedup.crossDocDupSpans(d, k = 4)
       .where($"doc_id" === 1L).collect()(0)
     assert(out.getLong(2) === 2L)   // two spans
     assert(out.getLong(3) === 10L)  // 4 + 6 covered
@@ -968,7 +967,7 @@ class OperatorsSpec extends AnyFunSuite {
       (1L, "keep1 one two three four keep2 keep3"),
       (2L, "one two three four other stuff here more")
     ).toDF("doc_id", "text")
-    val out = Dedup.removeDupSpans(d, "doc_id", "text", k = 4)
+    val out = Dedup.removeDupSpans(d, k = 4)
       .orderBy($"doc_id").collect()
     // doc 1: 'one two three four' removed → kept 'keep1 keep2 keep3'
     assert(out(0).getLong(2) === 3L)
@@ -978,7 +977,7 @@ class OperatorsSpec extends AnyFunSuite {
       .map("%02x".format(_)).mkString
     assert(out(0).getString(4) === expect1)
     // invariant vs the stats query: removed == covered_tokens
-    val stats = Dedup.crossDocDupSpans(d, "doc_id", "text", k = 4)
+    val stats = Dedup.crossDocDupSpans(d, k = 4)
       .orderBy($"doc_id").collect()
     out.zip(stats).foreach { case (r, s) =>
       assert(r.getLong(3) === s.getLong(3),
@@ -993,8 +992,7 @@ class OperatorsSpec extends AnyFunSuite {
       (1L, "pre alpha beta gamma delta epsilon post1 post2"),
       (2L, "totally clean document with no overlap at all")
     ).toDF("doc_id", "text")
-    val out = Dedup.removeContaminatedSpans(train, evalDocs,
-        "doc_id", "text", k = 5)
+    val out = Dedup.removeContaminatedSpans(train, evalDocs, k = 5)
       .orderBy($"doc_id").collect()
     // doc 1: the 5-gram window hits → 5 tokens cut, 3 kept
     assert(out(0).getLong(2) === 3L)
@@ -1078,13 +1076,13 @@ class OperatorsSpec extends AnyFunSuite {
       (2L, "stock market trade price stock market"), // raw-typical
       (3L, "trade price market stock price trade stock")
     ).toDF("doc_id", "text")
-    val scores = Relevance.oddsVotes(target, raw, "doc_id", "text")
+    val scores = Relevance.oddsVotes(target, raw)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(scores(1L) > scores(2L),
       s"target-like doc must outrank: $scores")
     assert(scores(1L) > scores(3L))
     // schema is (doc_id long, score long) — integer end to end
-    val sch = Relevance.oddsVotes(target, raw, "doc_id", "text").schema
+    val sch = Relevance.oddsVotes(target, raw).schema
     assert(sch("score").dataType.typeName === "long")
   }
   // ---- Cdc (lakehouse MERGE kernel) ----
@@ -1213,10 +1211,10 @@ class OperatorsSpec extends AnyFunSuite {
       df.select("id_a", "id_b", "shared").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val prefix = pairSet(
-      Dedup.prefixFilterPairs(docs, "doc_id", "text", n = 3,
+      Dedup.prefixFilterPairs(docs, n = 3,
         thresholdBp = 5000))
     val uncapped = pairSet(
-      Dedup.jaccardPairs(docs, "doc_id", "text", n = 3,
+      Dedup.jaccardPairs(docs, n = 3,
         threshold = 0.5, maxDf = 1000000000L))
     // exact equivalence to the uncapped all-pairs definition
     assert(prefix === uncapped)
@@ -1227,7 +1225,7 @@ class OperatorsSpec extends AnyFunSuite {
     // common shingles exceed the cap — the recall cliff prefix
     // filtering removes
     val capped = pairSet(
-      Dedup.jaccardPairs(docs, "doc_id", "text", n = 3,
+      Dedup.jaccardPairs(docs, n = 3,
         threshold = 0.5, maxDf = 3L))
     assert(capped === Set((10L, 11L, 2L)))
   }

@@ -24,14 +24,13 @@ class QueriesSmokeSpec extends AnyFunSuite {
     assert(noOracle.isEmpty, s"queries without oracle: $noOracle")
   }
 
-  /** `body`'s result and the WARN messages Spark's `Column` logger
-    * emitted meanwhile (the session logs at ERROR, so that logger's
-    * own config is raised to WARN while `body` runs). */
-  private def columnWarnings[A](body: => A): (A, Seq[String]) = {
-    val logger = LogManager.getLogger("org.apache.spark.sql.Column")
-      .asInstanceOf[CoreLogger]
+  /** `body`'s result and the WARN messages the logger `name` emitted
+    * meanwhile (the session logs at ERROR, so that logger's own config
+    * is raised to WARN while `body` runs). */
+  private def warnings[A](name: String)(body: => A): (A, Seq[String]) = {
+    val logger = LogManager.getLogger(name).asInstanceOf[CoreLogger]
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val appender = new AbstractAppender("column-warnings", null, null,
+    val appender = new AbstractAppender(s"$name-warnings", null, null,
         true, Property.EMPTY_ARRAY) {
       override def append(e: LogEvent): Unit =
         seen.add(e.getMessage.getFormattedMessage)
@@ -57,14 +56,31 @@ class QueriesSmokeSpec extends AnyFunSuite {
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"$name runs and returns rows at sf0.001") {
       val s = spark
-      val (df, warnings) = columnWarnings(fn(s, dir))
+      val (df, seen) = warnings("org.apache.spark.sql.Column")(fn(s, dir))
       // a join condition built from two sides of one lineage compares
       // an attribute with itself; Spark warns and the result is right
       // only through Dataset.join's self-join rewrite
-      assert(!warnings.exists(_.contains("trivially true equals predicate")),
-        warnings.mkString("\n"))
+      assert(!seen.exists(_.contains("trivially true equals predicate")),
+        seen.mkString("\n"))
       assert(df.count() > 0)
     }
+  }
+
+  test("q192 persists each shared plan once (no CacheManager re-cache " +
+      "warning)") {
+    // q192's three miners each build the same shingle sets; a second
+    // persist of an already cached plan makes CacheManager warn. The
+    // session starts before the capture: its logging setup would
+    // replace the capturing config.
+    val s = spark
+    graft.operators.Caches.releaseAll()
+    val (n, seen) =
+      warnings("org.apache.spark.sql.execution.CacheManager") {
+        SparkEntry.queries("q192_mining_recall")(s, dir).count()
+      }
+    graft.operators.Caches.releaseAll()
+    assert(n > 0)
+    assert(seen.isEmpty, seen.mkString("\n"))
   }
 
   test("q28: HLL++ approx distinct lands within its error bound of exact") {

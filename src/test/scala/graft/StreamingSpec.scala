@@ -950,9 +950,9 @@ class StreamingSpec extends AnyFunSuite {
         val corpus = Option(seen.get())
         val pairs = corpus match {
           case None => graft.operators.Dedup.jaccardPairs(
-            b, "doc_id", "text", 3, 0.2)
+            b, 3, 0.2)
           case Some(c) => graft.operators.Dedup.incrementalJaccardPairs(
-            c, b, "doc_id", "text", 3, 0.2)
+            c, b, 3, 0.2)
         }
         // materialize the updated table before state advances
         val out = pairs.collect()
@@ -968,7 +968,7 @@ class StreamingSpec extends AnyFunSuite {
     val got = maintained.get().orderBy($"id_a", $"id_b")
       .select($"id_a", $"id_b", $"shared", $"jaccard").collect().toSeq
     val full = graft.operators.Dedup.jaccardPairs(
-        docs, "doc_id", "text", 3, 0.2)
+        docs, 3, 0.2)
       .orderBy($"id_a", $"id_b").collect().toSeq
     graft.operators.Caches.releaseAll()
     assert(got.nonEmpty)
@@ -1409,7 +1409,7 @@ class StreamingSpec extends AnyFunSuite {
       graft.streaming.SearchIngest.postings(spark, idxDir),
       graft.streaming.SearchIngest.docLens(spark, idxDir))
     val (bp, bl) = graft.operators.Relevance.bm25Postings(
-      docs, "doc_id", "text")
+      docs)
     assert(served.nonEmpty && served === topk(bp, bl))
     // retry idempotence: re-applying an already-written batch id must
     // not double-append (the batch=<id> overwrite contract)
@@ -1696,7 +1696,7 @@ class StreamingSpec extends AnyFunSuite {
     def fullMine(sub: Seq[(Long, String)]): Set[(Long, Long, Long, Double)] =
       GraftTestSpark.withCaches {
         graft.operators.Dedup.jaccardPairs(sub.toDF("doc_id", "text"),
-            "doc_id", "text", graft.operators.PairTable.ShingleN,
+            graft.operators.PairTable.ShingleN,
             graft.operators.PairTable.Threshold)
           .select($"id_a", $"id_b", $"shared", $"jaccard")
           .as[(Long, Long, Long, Double)].collect().toSet
