@@ -1186,7 +1186,7 @@ object Oracles {
     // every chosen merge AND its weighted frequency must match, so the
     // oracle pins the whole training path, not just the final state.
     "q142_bpe_train" -> {
-      s"""WITH ${bpeCtes(8)}
+      s"""WITH $bpeCtes
          |SELECT step, merge_pair, pair_freq FROM (
          |${(1 to 8).map(i =>
               s"SELECT $i AS step, pair AS merge_pair, f AS pair_freq FROM b$i")
@@ -1198,7 +1198,7 @@ object Oracles {
     // per-word token counts onto the corpus token stream, per-lang
     // integer sums (the double division shares exact operands).
     "q143_bpe_token_stats" -> {
-      s"""WITH ${bpeCtes(8)},
+      s"""WITH $bpeCtes,
          |enc AS (SELECT word, len(string_split(seq, ' ')) AS nb FROM w8),
          |tok AS (SELECT lang, unnest($TOKS) AS word FROM documents)
          |SELECT lang, count(*) AS n_words,
@@ -4849,7 +4849,7 @@ object Oracles {
        |  row_number() OVER (PARTITION BY s.id ORDER BY ${semCos("s.vv", "c.cv", 6)} DESC, c.cent_id) AS rk
        |  FROM (SELECT * FROM sv WHERE $srcFilter) s CROSS JOIN c1 c) WHERE rk = 1)""".stripMargin
 
-  /** q142/q143 shared: the n-step BPE training trajectory as chained
+  /** q142/q143 shared: the 8-step BPE training trajectory as chained
     * CTEs. Step i counts adjacent symbol pairs of w(i-1) weighted by
     * word frequency (b_i = the arg-max with pair-string tie-break)
     * and rewrites the vocabulary with literal left-to-right
@@ -4857,7 +4857,8 @@ object Oracles {
     * Every chain CTE is MATERIALIZED: DuckDB inlines CTEs by default
     * and each w_i is referenced twice (by p_{i+1} and w_{i+1}), so an
     * inlined chain re-evaluates exponentially (2^n vocabulary scans). */
-  private def bpeCtes(n: Int): String = {
+  private def bpeCtes: String = {
+    val n = 8
     val sb = new StringBuilder
     sb.append("vocab AS MATERIALIZED (SELECT word, count(*) AS freq FROM (")
       .append(s"SELECT unnest($TOKS) AS word FROM documents) GROUP BY word),\n")

@@ -279,7 +279,7 @@ object Queries {
     val counts = events(spark, dir)
       .groupBy(col("event_type"), col("user_id"))
       .agg(count(lit(1)).as("cnt"))
-    Analytics.topKPerGroup(counts, Seq("event_type"), "cnt", "user_id", 5)
+    Analytics.topKPerGroup(counts, Seq("event_type"), "user_id", 5)
       .select(col("event_type"), col("rank"), col("user_id"), col("cnt"),
         col("pct_of_total"))
       .orderBy(col("event_type"), col("rank"))
@@ -367,8 +367,7 @@ object Queries {
 
   /** MinHash + banded LSH candidate pairs, exact-Jaccard verified. */
   def q23MinhashLsh(spark: SparkSession, dir: String): DataFrame =
-    Dedup.minhashLshPairs(t(spark, dir).documents,
-      n = 3, bands = 4, rowsPerBand = 2, threshold = 0.2)
+    Dedup.minhashLshPairs(t(spark, dir).documents)
       .orderBy(col("id_a"), col("id_b"))
 
   /** Per-source fingerprint / length profile. */
@@ -397,18 +396,16 @@ object Queries {
   /** As-of join: each purchase picks up the user's most recent prior
     * signup (union-and-carry, one sort-shuffle — SURVEY §7.4). */
   def q26AsofJoin(spark: SparkSession, dir: String): DataFrame =
-    purchaseAsofSignup(spark, dir, Analytics.asofJoin)
+    purchaseAsofSignup(spark, dir, Analytics.asofJoin(_, _, "ts", _))
 
   /** q26's as-of contract through `join`: each purchase takes the
     * user's latest signup at or before it (q26/q74/q76). */
   private def purchaseAsofSignup(spark: SparkSession, dir: String,
-      join: (DataFrame, DataFrame, String, String, String, Seq[String])
-        => DataFrame): DataFrame = {
+      join: (DataFrame, DataFrame, Seq[String]) => DataFrame): DataFrame = {
     val ev = events(spark, dir)
     def typed(t: String) = ev.where(col("event_type") === t)
       .select(col("event_id"), col("user_id"), col("ts"))
-    join(typed("purchase"), typed("signup"), "user_id", "ts", "ts",
-        Seq("event_id"))
+    join(typed("purchase"), typed("signup"), Seq("event_id"))
       .select(col("event_id"), col("user_id"), col("asof_event_id"))
       .orderBy(col("event_id"))
   }
@@ -577,7 +574,7 @@ object Queries {
       .select(col("source"), col("doc_id"),
         col("text").cast("binary").as("content"))
       .withColumn("frames",
-        Multimodal.frameFingerprints(col("content"), 64, 128))
+        Multimodal.frameFingerprints(col("content")))
       .select(col("source"), col("doc_id"),
         length(col("content")).as("n_bytes"), size(col("frames")).as("n_frames"),
         col("frames"))
@@ -728,8 +725,7 @@ object Queries {
   def q45StratifiedSample(spark: SparkSession, dir: String): DataFrame =
     graft.operators.Sampling.stratifiedTopK(
         t(spark, dir).documents.select(col("doc_id"), col("lang"),
-          col("source"), col("n_chars")),
-        "lang", "doc_id", k = 5, seed = "graft-r1")
+          col("source"), col("n_chars")))
       .select(col("lang"), col("sample_rank"), col("doc_id"),
         col("source"), col("n_chars"))
       .orderBy(col("lang"), col("sample_rank"))
@@ -1029,7 +1025,7 @@ object Queries {
       threshold: Double): DataFrame = {
     val emb = vectors(spark, dir)
     Similarity.cosineNearDupPairs(emb, emb.where(col("id") % 100 === 0),
-      threshold = threshold, nprobe = 2)
+      threshold = threshold)
   }
 
   /** The 0.30 embedding graph's canonical (id_a < id_b) edge list,
@@ -1384,8 +1380,7 @@ object Queries {
     * in long ones, which Jaccard dilutes. Same inverted-index +
     * stop-shingle machinery as q22. */
   def q70OverlapPairs(spark: SparkSession, dir: String): DataFrame =
-    Dedup.overlapPairs(t(spark, dir).documents,
-        n = 3, threshold = 0.5)
+    Dedup.overlapPairs(t(spark, dir).documents)
       .orderBy(col("id_a"), col("id_b"))
 
   /** Near-dup cluster collapse ([[Dedup.connectedComponents]]): q22's
@@ -1469,7 +1464,7 @@ object Queries {
   def q73SessionReplay(spark: SparkSession, dir: String): DataFrame =
     replayToParquet(spark, dir, "q73")(stream =>
       graft.streaming.StreamOps.sessionRollup(
-          graft.streaming.StreamOps.watermarked(stream), "10 minutes")
+          graft.streaming.StreamOps.watermarked(stream))
         .select(
           fmtTs(col("session_start")).as("session_start"),
           fmtTs(col("session_end")).as("session_end"),
@@ -1481,7 +1476,7 @@ object Queries {
     * same DuckDB ASOF oracle, so the custom LogicalPlan → Strategy →
     * SparkPlan path is hash-verified end-to-end, not just unit-tested. */
   def q74AsofExec(spark: SparkSession, dir: String): DataFrame =
-    purchaseAsofSignup(spark, dir, Analytics.asofJoinExec)
+    purchaseAsofSignup(spark, dir, Analytics.asofJoinExec(_, _, "ts", _))
 
   /** SCD2-style temporal-validity join: signup events become validity
     * intervals per user ([ts, next-signup ts) via lead()), purchases
@@ -2256,14 +2251,14 @@ object Queries {
       .orderBy(col("rk"))
   }
 
-  /** md5-derived HLL register ranks for each row of `df` (shared by
-    * q107/q114): bucket = first hash byte (m=256), r = leading-zero
-    * count of the next 48 bits + 1 (capped at 49 when the whole field
-    * is zero). All other columns pass through, so callers key the
-    * register max however they group. */
-  private def hllRanks(df: DataFrame, idCol: String): DataFrame =
+  /** md5-derived HLL register ranks of `user_id` for each row of `df`
+    * (shared by q107/q114/q188): bucket = first hash byte (m=256),
+    * r = leading-zero count of the next 48 bits + 1 (capped at 49 when
+    * the whole field is zero). All other columns pass through, so
+    * callers key the register max however they group. */
+  private def hllRanks(df: DataFrame): DataFrame =
     df
-      .withColumn("h", md5(concat_ws("|", lit("hll"), col(idCol))))
+      .withColumn("h", md5(concat_ws("|", lit("hll"), col("user_id"))))
       .withColumn("bucket",
         conv(substring(col("h"), 1, 2), 16, 10).cast("int"))
       .withColumn("h12", substring(col("h"), 3, 12))
@@ -2291,7 +2286,7 @@ object Queries {
     val pairs = graft.operators.Caches.persistTracked(
       events(spark, dir)
         .select(col("event_type"), col("user_id")).distinct())
-    val sums = hllRanks(pairs, "user_id")
+    val sums = hllRanks(pairs)
       .groupBy(col("event_type"), col("bucket"))
       .agg(max(col("r")).as("r"))
       .groupBy(col("event_type"))
@@ -2440,7 +2435,7 @@ object Queries {
           col("user_id"))
         .distinct())
     val shardRegs = graft.operators.Caches.persistTracked(
-      hllRanks(pairs, "user_id")
+      hllRanks(pairs)
         .groupBy(col("part"), col("bucket"))
         .agg(max(col("r")).as("r")))
     // THE MERGE: register-wise max across shard sketches
@@ -2484,8 +2479,7 @@ object Queries {
     val emb = vectors(spark, dir)
     val centroids = emb.where(col("id") % 250 === 0)
     val queries = emb.where(col("id") < 8)
-    Similarity.quantizedIvfTopK(queries, emb, centroids,
-        k = 5, nprobe = 2, rerankN = 20)
+    Similarity.quantizedIvfTopK(queries, emb, centroids)
       .select(col("query_id"), col("rank"), col("neighbor_id"),
         col("sim"), col("sim_q"))
       .orderBy(col("query_id"), col("rank"))
@@ -3032,8 +3026,7 @@ object Queries {
     val incoming = d.where(pmod(col("doc_id"), lit(10)) === 7)
     val stored = Dedup.jaccardPairs(corpus, n = 3,
       threshold = 0.2, maxDf = 8)
-    Dedup.deltaCapJaccardPairs(stored, corpus, incoming,
-        n = 3, threshold = 0.2, maxDf = 8)
+    Dedup.deltaCapJaccardPairs(stored, corpus, incoming, maxDf = 8)
       .orderBy(col("id_a"), col("id_b"))
   }
 
@@ -3078,7 +3071,7 @@ object Queries {
     val a = docs.select(col("doc_id").as("id_a"), col("text").as("text_a"))
     val b = docs.select(col("doc_id").as("id_b"), col("text").as("text_b"))
     val jac = graft.expressions.TextExpressions
-      .jaccardSim(col("text_a"), col("text_b"), 3)
+      .jaccardSim(col("text_a"), col("text_b"))
     a.join(b, jac >= lit(0.2) && col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"), round(jac, 4).as("jaccard"))
       .orderBy(col("id_a"), col("id_b"))
@@ -3098,7 +3091,7 @@ object Queries {
     val a = docs.select(col("doc_id").as("id_a"), col("text").as("text_a"))
     val b = docs.select(col("doc_id").as("id_b"), col("text").as("text_b"))
     val ov = graft.expressions.TextExpressions
-      .overlapSim(col("text_a"), col("text_b"), 3)
+      .overlapSim(col("text_a"), col("text_b"))
     a.join(b, ov >= lit(0.5) && col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"), round(ov, 4).as("overlap"))
       .orderBy(col("id_a"), col("id_b"))
@@ -3245,7 +3238,7 @@ object Queries {
   def q142BpeTrain(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val merges = graft.operators.Bpe.train(
-      graft.operators.Bpe.vocab(t(spark, dir).documents, "text"), 8)
+      graft.operators.Bpe.vocab(t(spark, dir).documents))
     merges.toDF("step", "merge_pair", "pair_freq").orderBy(col("step"))
   }
 
@@ -3259,9 +3252,9 @@ object Queries {
   def q143BpeTokenStats(spark: SparkSession, dir: String): DataFrame = {
     val docs = t(spark, dir).documents
     val v = graft.operators.Caches.persistTracked(
-      graft.operators.Bpe.vocab(docs, "text"))
-    val merges = graft.operators.Bpe.train(v, 8).map(_.pair)
-    val perWord = graft.operators.Bpe.applyMerges(v, "word", merges)
+      graft.operators.Bpe.vocab(docs))
+    val merges = graft.operators.Bpe.train(v).map(_.pair)
+    val perWord = graft.operators.Bpe.applyMerges(v, merges)
       .select(col("word"), col("n_bpe_tokens"))
     val stream = docs.select(col("lang"),
       explode(graft.functions.TextFunctions.tokens(col("text"))).as("word"))
@@ -3310,7 +3303,7 @@ object Queries {
     val emb = vectors(spark, dir)
     val cents = Similarity.fitCentroids(emb, k = 6, iters = 1)
       .select(col("cent_id").as("id"), col("cent_v").as("vec"))
-    retentionSweep(Similarity.semanticPairs(emb, cents, threshold = 0.25)
+    retentionSweep(Similarity.semanticPairs(emb, cents)
         .withColumn("bp", round(col("sim") * 10000).cast("int")),
       (5 to 12).map(_ * 500), t(spark, dir).embeddings)
   }
@@ -3332,8 +3325,7 @@ object Queries {
     val incoming = docs.where(pmod(col("doc_id"), lit(10)) === 5)
     val existing = docs.where(pmod(col("doc_id"), lit(10)) =!= 5)
     val stored = Dedup.exact(existing)
-    Dedup.incrementalExact(stored, incoming,
-        expectedStored = 100000L)
+    Dedup.incrementalExact(stored, incoming)
       .orderBy(col("fp"))
   }
 
@@ -3350,8 +3342,7 @@ object Queries {
     val emb = vectors(spark, dir)
     val cents = Similarity.fitCentroids(emb, k = 6, iters = 1)
       .select(col("cent_id").as("id"), col("cent_v").as("vec"))
-    Similarity.semanticDedupDropsMulti(emb, cents, threshold = 0.35,
-        nprobe = 2)
+    Similarity.semanticDedupDropsMulti(emb, cents)
       .orderBy(col("dropped_id"))
   }
 
@@ -3387,8 +3378,7 @@ object Queries {
     * distinct-set; spans come from doc-partitioned gaps-and-islands
     * windows. */
   def q149DupSpans(spark: SparkSession, dir: String): DataFrame =
-    Dedup.crossDocDupSpans(t(spark, dir).documents,
-        k = 4)
+    Dedup.crossDocDupSpans(t(spark, dir).documents)
       .orderBy(col("doc_id"))
 
   /** Signed random projection (Johnson–Lindenstrauss / Achlioptas)
@@ -3401,8 +3391,7 @@ object Queries {
     * rounded division at the end. */
   def q150RandomProjection(spark: SparkSession, dir: String): DataFrame = {
     val emb = t(spark, dir).embeddings
-    val proj = graft.operators.Projection
-      .project(emb, "embedding", d = 64, r = 8)
+    val proj = graft.operators.Projection.project(emb)
       .select(col("vec_id"), col("qv"), col("pv"))
     val a = proj.select(col("vec_id").as("id_a"), col("qv").as("qa"),
       col("pv").as("pa")).where(col("id_a") % 2 === 0)
@@ -3428,8 +3417,7 @@ object Queries {
     * use). Re-assembly state is bounded by document length — never
     * corpus-sized. */
   def q153DupSpanRemoval(spark: SparkSession, dir: String): DataFrame =
-    Dedup.removeDupSpans(t(spark, dir).documents,
-        k = 4)
+    Dedup.removeDupSpans(t(spark, dir).documents)
       .orderBy(col("doc_id"))
 
   /** Hashed-bigram odds-voting domain relevance
@@ -3548,8 +3536,7 @@ object Queries {
     val docs = t(spark, dir).documents
     val evalDocs = docs.where(col("doc_id") % 50 === 0)
     val train = docs.where(col("doc_id") % 50 =!= 0)
-    Dedup.removeContaminatedSpans(train, evalDocs,
-        k = 5)
+    Dedup.removeContaminatedSpans(train, evalDocs)
       .orderBy(col("doc_id"))
   }
 
@@ -3688,7 +3675,7 @@ object Queries {
       (1L, "hash join"), (2L, "window agg sort"),
       (3L, "spark stream batch"), (4L, "vector query"),
       (5L, "slow scan filter")).toDF("query_id", "qtext")
-    Relevance.bm25TopK(post, lens, qs, k = 10)
+    Relevance.bm25TopK(post, lens, qs)
   }
 
   /** Product-quantized ANN with ADC scoring
@@ -3705,13 +3692,11 @@ object Queries {
   def q161PqAdcTopK(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.ProductQuant
     val subs = graft.operators.Caches.persistTracked(
-      ProductQuant.subVectors(t(spark, dir).embeddings, "vec_id",
-        "embedding", m = 8, subDim = 8))
+      ProductQuant.subVectors(t(spark, dir).embeddings))
     val cb = graft.operators.Caches.persistTracked(
-      ProductQuant.fitCodebooks(subs, k = 16))
+      ProductQuant.fitCodebooks(subs))
     val codes = ProductQuant.assign(subs, cb)
-    ProductQuant.adcTopK(subs.where(col("vec_id") < 8), codes, cb,
-        k = 5)
+    ProductQuant.adcTopK(subs.where(col("vec_id") < 8), codes, cb)
       .select(col("query_id"), col("rank"), col("neighbor_id"),
         col("adc_d2"))
       .orderBy(col("query_id"), col("rank"))
@@ -3741,9 +3726,9 @@ object Queries {
       .where(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id")).distinct()
     val subs = graft.operators.Caches.persistTracked(
-      ProductQuant.subVectors(emb, "vec_id", "embedding", 8, 8))
+      ProductQuant.subVectors(emb))
     val cb = graft.operators.Caches.persistTracked(
-      ProductQuant.fitCodebooks(subs, 16))
+      ProductQuant.fitCodebooks(subs))
     val codes = ProductQuant.assign(subs, cb)
       .withColumnRenamed("vec_id", "neighbor_id")
       .withColumnRenamed("cent_id", "code")
@@ -4142,7 +4127,7 @@ object Queries {
     * spec-verified equal on this graph. */
   def q171KcoreBounded(spark: SparkSession, dir: String): DataFrame =
     graft.operators.Graphs.kcoreBounded(
-        symmetricEdges(embedGraph(spark, dir)), k = 3, rounds = 6)
+        symmetricEdges(embedGraph(spark, dir)), rounds = 6)
       .select(col("id").as("vec_id"), col("core_deg"))
       .orderBy(col("vec_id"))
 
@@ -4707,8 +4692,7 @@ object Queries {
     * uncapped all-pairs definition itself, so a green row proves
     * the filter drops nothing. */
   def q185PrefixPairs(spark: SparkSession, dir: String): DataFrame =
-    Dedup.prefixFilterPairs(t(spark, dir).documents,
-      n = 3, thresholdBp = 6000)
+    Dedup.prefixFilterPairs(t(spark, dir).documents, thresholdBp = 6000)
       .orderBy(col("id_a"), col("id_b"))
 
   /** Benford first-digit audit of order totals (the forensic
@@ -4791,7 +4775,7 @@ object Queries {
       events(spark, dir)
         .select(col("event_type"), col("user_id")).distinct())
     val regs = graft.operators.Caches.persistTracked(
-      hllRanks(pairs, "user_id")
+      hllRanks(pairs)
         .groupBy(col("event_type"), col("bucket"))
         .agg(max(col("r")).as("r")))
     val alpha =
@@ -5025,12 +5009,10 @@ object Queries {
   def q192MiningRecall(spark: SparkSession, dir: String): DataFrame = {
     val d = t(spark, dir).documents
     val exact = graft.operators.Caches.persistTracked(
-      Dedup.prefixFilterPairs(d, n = 3,
-        thresholdBp = 2000)
+      Dedup.prefixFilterPairs(d, thresholdBp = 2000)
         .select(col("id_a"), col("id_b")))
     val lsh = graft.operators.Caches.persistTracked(
-      Dedup.minhashLshPairs(d, n = 3, bands = 4,
-        rowsPerBand = 2, threshold = 0.2)
+      Dedup.minhashLshPairs(d)
         .select(col("id_a"), col("id_b")))
     val capped = graft.operators.Caches.persistTracked(
       Dedup.jaccardPairs(d, n = 3, threshold = 0.2,
@@ -5356,8 +5338,7 @@ object Queries {
         .agg(count(lit(1)).as("n_contam"))
         .crossJoin(broadcast(d.where(col("doc_id") % 50 =!= 0)
           .agg(count(lit(1)).as("n_train")))))
-    val pairs = Dedup.minhashLshPairs(d, n = 3,
-      bands = 4, rowsPerBand = 2, threshold = 0.2)
+    val pairs = Dedup.minhashLshPairs(d)
     val nearRow = row("near_dup_bp",
       expr("n_inv * 10000 div n_docs"), "<=", 2500L)(
       pairs.select(explode(array(col("id_a"), col("id_b")))

@@ -687,15 +687,16 @@ object TextExpressions {
   def tokenize(text: Column): Column =
     ColumnBridge.column(Tokenize(ColumnBridge.expression(text)))
 
-  /** Exact word-n-gram jaccard of two text columns (native). */
-  def jaccardSim(a: Column, b: Column, n: Int): Column =
+  /** Exact word-3-gram jaccard of two text columns (native). */
+  def jaccardSim(a: Column, b: Column): Column =
     ColumnBridge.column(JaccardSim(
-      ColumnBridge.expression(a), ColumnBridge.expression(b), n))
+      ColumnBridge.expression(a), ColumnBridge.expression(b), 3))
 
-  /** Overlap (containment) coefficient of two text columns (native). */
-  def overlapSim(a: Column, b: Column, n: Int): Column =
+  /** Overlap (containment) coefficient of two text columns over word
+    * 3-grams (native). */
+  def overlapSim(a: Column, b: Column): Column =
     ColumnBridge.column(OverlapSim(
-      ColumnBridge.expression(a), ColumnBridge.expression(b), n))
+      ColumnBridge.expression(a), ColumnBridge.expression(b), 3))
 
   /** Portable MinHash signature of a shingle-array column (native). */
   def minhashSig(shingles: Column, numHashes: Int): Column =

@@ -68,17 +68,17 @@ object ZOrderExpressions {
     ColumnBridge.column(ZOrderKey(
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
-  /** Min-max quantization onto the full 16-bit grid — REQUIRED before
+  /** Quantization of [0, max] onto the full 16-bit grid — REQUIRED before
     * interleaving dimensions of different ranges: Morton order is
     * dominated by whichever dimension occupies the higher bit
     * positions, so a raw 8-bit id interleaved with a raw 16-bit
     * amount degenerates to a single-column sort on the amount (the
     * id's bits all sit below the amount's). Scaling every dimension
-    * to [0, 65535] gives each equal weight in the curve. Bounds come
-    * from table stats (or one cheap agg); values outside clamp. */
-  def quant16(c: Column, min: Double, max: Double): Column = {
+    * to [0, 65535] gives each equal weight in the curve. The bound
+    * comes from table stats (or one cheap agg); values outside clamp. */
+  def quant16(c: Column, max: Double): Column = {
     import org.apache.spark.sql.functions.{floor, greatest, least, lit}
     least(lit(65535L), greatest(lit(0L),
-      floor((c - lit(min)) * 65535.0 / (max - min)).cast("long")))
+      floor(c * 65535.0 / max).cast("long")))
   }
 }

@@ -127,17 +127,17 @@ object Analytics {
       .cast("int")
   }
 
-  /** Per-group top-k with rank and percent-of-group-total.
-    * `metric` must be a column of the input; ties break on `tieBreak`
-    * for determinism (reference behavior is list-order, i.e. arbitrary).
+  /** Per-group top-k by the input's `cnt` column, with rank and
+    * percent-of-group-total. Ties break on `tieBreak` for determinism
+    * (reference behavior is list-order, i.e. arbitrary).
     */
-  def topKPerGroup(df: DataFrame, groupCols: Seq[String], metric: String,
+  def topKPerGroup(df: DataFrame, groupCols: Seq[String],
       tieBreak: String, k: Int): DataFrame = {
     val part = Window.partitionBy(groupCols.map(col): _*)
-    val rankW = part.orderBy(col(metric).desc, col(tieBreak))
+    val rankW = part.orderBy(col("cnt").desc, col(tieBreak))
     df.withColumn("rank", row_number().over(rankW))
       .withColumn("pct_of_total",
-        round(col(metric) * 100.0 / sum(col(metric)).over(part), 2))
+        round(col("cnt") * 100.0 / sum(col("cnt")).over(part), 2))
       .where(col("rank") <= k)
   }
 
@@ -146,21 +146,21 @@ object Analytics {
     * union-and-carry trick: one sort-shuffle on (key, time) instead of
     * an O(n·m) range join — the scalable shape for 100 TB event data.
     *
-    * left/right must share the key column name `key`; time columns are
-    * `leftTime`/`rightTime`. Output: all left columns + `asofCols`
-    * (from right) as `asof_<name>`, null when no prior right row.
+    * left/right share the key column `user_id`; time columns are the
+    * left's `ts` and the right's `rightTime`. Output: all left columns
+    * + `asofCols` (from right) as `asof_<name>`, null when no prior
+    * right row.
     */
-  def asofJoin(left: DataFrame, right: DataFrame, key: String,
-      leftTime: String, rightTime: String,
+  def asofJoin(left: DataFrame, right: DataFrame, rightTime: String,
       asofCols: Seq[String]): DataFrame = {
     val lCols = left.columns
     // side 0 = right (carrier), side 1 = left (receiver); at equal
     // timestamps the right row sorts first ⇒ inclusive (<=) semantics.
     val r = right.select(
-      col(key).as("_k"), col(rightTime).as("_t"), lit(0).as("_side"),
+      col("user_id").as("_k"), col(rightTime).as("_t"), lit(0).as("_side"),
       struct(asofCols.map(col): _*).as("_payload"))
     val l = left.select(
-      col(key).as("_k"), col(leftTime).as("_t"), lit(1).as("_side"),
+      col("user_id").as("_k"), col("ts").as("_t"), lit(1).as("_side"),
       lit(null).cast(r.schema("_payload").dataType).as("_payload"),
       struct(lCols.map(col): _*).as("_row"))
     val unioned = r.withColumn("_row", lit(null).cast(l.schema("_row").dataType))
@@ -187,8 +187,7 @@ object Analytics {
     * one co-partitioned sort-merge pass instead of union + window
     * carry. Runs [[graft.GraftExtensions.ensure]] so that a session
     * built without the extension can plan the node. */
-  def asofJoinExec(left: DataFrame, right: DataFrame, key: String,
-      leftTime: String, rightTime: String,
+  def asofJoinExec(left: DataFrame, right: DataFrame, rightTime: String,
       asofCols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.graftbridge.PlanBridge
     require(asofCols.nonEmpty, "asofCols must name at least one column")
@@ -198,7 +197,7 @@ object Analytics {
     // opaque to column pruning, so the projection must be below it);
     // payload columns get their output names before the join
     val rSel = right.select(
-      Seq(col(key).as("_rk"), col(rightTime).as("_rt")) ++
+      Seq(col("user_id").as("_rk"), col(rightTime).as("_rt")) ++
         asofCols.map(c => col(c).as(s"asof_$c")): _*)
     val lPlan = PlanBridge.analyzed(left)
     val rPlan = PlanBridge.analyzed(rSel)
@@ -206,8 +205,8 @@ object Analytics {
         n: String) = p.output.find(_.name == n).getOrElse(
       throw new IllegalArgumentException(s"missing column $n"))
     val plan = graft.plans.AsOfJoinPlan(lPlan, rPlan,
-      Seq(attr(lPlan, key)), Seq(attr(rPlan, "_rk")),
-      attr(lPlan, leftTime), attr(rPlan, "_rt"),
+      Seq(attr(lPlan, "user_id")), Seq(attr(rPlan, "_rk")),
+      attr(lPlan, "ts"), attr(rPlan, "_rt"),
       asofCols.map(c => attr(rPlan, s"asof_$c")))
     PlanBridge.ofRows(spark, plan).drop("_rk", "_rt")
   }
@@ -221,22 +220,22 @@ object Analytics {
     * regime when the right side fits in a broadcast, exactly like
     * choosing BroadcastHashJoin over SortMergeJoin. Same semantics as
     * [[asofJoin]]/[[asofJoinExec]]: inclusive <=, max payload at equal
-    * timestamps (sort_array puts it last), nulls when no prior row. */
-  def asofJoinBroadcast(left: DataFrame, right: DataFrame, key: String,
-      leftTime: String, rightTime: String,
+    * timestamps (sort_array puts it last), nulls when no prior row.
+    * Both sides carry their time in `ts`. */
+  def asofJoinBroadcast(left: DataFrame, right: DataFrame,
       asofCols: Seq[String]): DataFrame = {
     require(asofCols.nonEmpty, "asofCols must name at least one column")
     require(!left.columns.contains("_arr"),
       "left side must not carry a column named _arr (internal)")
-    val dim = right.groupBy(col(key))
+    val dim = right.groupBy(col("user_id"))
       .agg(sort_array(collect_list(struct(
-        col(rightTime).as("_t") +: asofCols.map(col): _*))).as("_arr"))
+        col("ts").as("_t") +: asofCols.map(col): _*))).as("_arr"))
     val lCols = left.columns.map(col)
     // ANSI-safe: element_at(-1) throws on an empty array, so gate on
     // size (null _arr from a left-join miss yields null size → null)
-    val priors = filter(col("_arr"), x => x.getField("_t") <= col(leftTime))
+    val priors = filter(col("_arr"), x => x.getField("_t") <= col("ts"))
     val hit = when(size(priors) > 0, element_at(priors, -1))
-    left.join(broadcast(dim), Seq(key), "left")
+    left.join(broadcast(dim), Seq("user_id"), "left")
       .select(lCols ++
         asofCols.map(c => hit.getField(c).as(s"asof_$c")): _*)
   }

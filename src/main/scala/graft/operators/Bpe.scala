@@ -27,10 +27,10 @@ object Bpe {
 
   final case class Merge(step: Int, pair: String, freq: Long)
 
-  /** (word, freq) vocabulary of a text column. */
-  def vocab(docs: DataFrame, textCol: String): DataFrame =
+  /** (word, freq) vocabulary of the documents' `text`. */
+  def vocab(docs: DataFrame): DataFrame =
     docs
-      .select(explode(TextFunctions.tokens(col(textCol))).as("word"))
+      .select(explode(TextFunctions.tokens(col("text"))).as("word"))
       .groupBy(col("word"))
       .agg(count(lit(1)).as("freq"))
 
@@ -53,11 +53,12 @@ object Bpe {
   private def replaceAll(s: Column, find: String, repl: String): Column =
     call_function("replace", s, lit(find), lit(repl))
 
-  /** Induce `nMerges` merges over a (word, freq) vocabulary: each
-    * step counts adjacent symbol pairs weighted by word frequency,
-    * merges the most frequent (tie-break: pair string ascending), and
-    * rewrites the working vocabulary. */
-  def train(vocabDf: DataFrame, nMerges: Int): Seq[Merge] = {
+  /** Induce 8 merges over a (word, freq) vocabulary: each step counts
+    * adjacent symbol pairs weighted by word frequency, merges the most
+    * frequent (tie-break: pair string ascending), and rewrites the
+    * working vocabulary. */
+  def train(vocabDf: DataFrame): Seq[Merge] = {
+    val nMerges = 8
     var w = Caches.persistTracked(
       vocabDf.select(spaced(col("word")).as("seq"), col("freq")))
     val out = Seq.newBuilder[Merge]
@@ -81,13 +82,12 @@ object Bpe {
     out.result()
   }
 
-  /** Apply a learned merge list (in training order) to `wordCol`,
-    * adding `n_bpe_tokens` — the word's token count under the
+  /** Apply a learned merge list (in training order) to the `word`
+    * column, adding `n_bpe_tokens` — the word's token count under the
     * induced vocabulary. Runs on distinct words; per-doc counts come
     * from joining this against the corpus token stream. */
-  def applyMerges(words: DataFrame, wordCol: String,
-      merges: Seq[String]): DataFrame = {
-    val encoded = merges.foldLeft(spaced(col(wordCol)))(
+  def applyMerges(words: DataFrame, merges: Seq[String]): DataFrame = {
+    val encoded = merges.foldLeft(spaced(col("word")))(
       (s, p) => replaceAll(s, p, p.replace(" ", "")))
     words.withColumn("n_bpe_tokens", size(split(encoded, " ")))
   }

@@ -63,16 +63,17 @@ object Cdc {
     * Scale shape: state is corpus-sized but is touched only through
     * one LEFT ANTI and one LEFT SEMI join on the compacted batch's
     * key set (both broadcastable); the re-compaction that resolves
-    * state-vs-batch conflicts runs over batch-sized frames only. */
-  def applyChangesetVersioned(state: DataFrame, log: DataFrame,
-      key: String): DataFrame = {
+    * state-vs-batch conflicts runs over batch-sized frames only. Rows
+    * are keyed by `doc_id`. */
+  def applyChangesetVersioned(state: DataFrame, log: DataFrame)
+      : DataFrame = {
     val cols = state.columns.map(col).toIndexedSeq
-    val latest = compact(log, key).select(cols: _*)
-    val touched = latest.select(col(key))
-    val untouched = state.join(touched, Seq(key), "left_anti")
-    val contested = state.join(touched, Seq(key), "left_semi")
+    val latest = compact(log, "doc_id").select(cols: _*)
+    val touched = latest.select(col("doc_id"))
+    val untouched = state.join(touched, Seq("doc_id"), "left_anti")
+    val contested = state.join(touched, Seq("doc_id"), "left_semi")
     untouched.unionByName(
-      compact(contested.unionByName(latest), key))
+      compact(contested.unionByName(latest), "doc_id"))
   }
 
   /** The live view of a versioned state frame: tombstones dropped,

@@ -49,7 +49,7 @@ case class Recovery(forward: Int, back: Int, dropped: Int)
   *     instead of interleaving), write the cycle nonce into the lock
   *     ONCE (the lock is never rewritten after this — see the crash
   *     contract), SNAPSHOT the current file list, read exactly those
-  *     files, write their rows back as ~`targetBytes` files into the
+  *     files, write their rows back as ~128 MiB files into the
   *     same dir under fresh `compact-<nonce>-*` names (staged in a
   *     nonce-suffixed dot-prefixed temp dir Spark's file listing
   *     ignores, then renamed — a parquet file is visible only once
@@ -136,6 +136,8 @@ object Compaction {
   private val LockName = ".compact-lock"
   private val ManifestPrefix = ".compact-manifest-"
   private val ManifestMark = "COMMIT"
+  /** Size of one compacted output file. */
+  private val TargetBytes = 128L << 20
 
   /** Compact `dir` and commit immediately: with `partitionPrefix` set,
     * every subdirectory whose name starts with it is an independent
@@ -144,9 +146,8 @@ object Compaction {
     * immediate commit is safe; concurrent long reads want
     * [[compactWrite]] + a deferred [[PendingCompaction.commit]]. */
   def compact(spark: SparkSession, dir: String,
-      partitionPrefix: Option[String] = None,
-      targetBytes: Long = 128L << 20): Int = {
-    val pending = compactWrite(spark, dir, partitionPrefix, targetBytes)
+      partitionPrefix: Option[String] = None): Int = {
+    val pending = compactWrite(spark, dir, partitionPrefix)
     compactCommit(spark, pending)
     pending.size
   }
@@ -157,8 +158,7 @@ object Compaction {
     * nothing: an exception mid-call undoes every unit this call
     * staged (copies, manifests, locks) before propagating. */
   private[graft] def compactWrite(spark: SparkSession, dir: String,
-      partitionPrefix: Option[String], targetBytes: Long)
-      : PendingCompaction = {
+      partitionPrefix: Option[String]): PendingCompaction = {
     val root = new Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root))
@@ -185,7 +185,7 @@ object Compaction {
       def dataFiles(): Array[FileStatus] = fs.listStatus(d)
         .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
       def outFiles(files: Array[FileStatus]): Long = math.max(1L,
-        (files.map(_.getLen).sum + targetBytes - 1) / targetBytes)
+        (files.map(_.getLen).sum + TargetBytes - 1) / TargetBytes)
       val probe = dataFiles()
       if (probe.length > outFiles(probe)) {
         val lock = new Path(d, LockName)

@@ -55,8 +55,10 @@ object Dedup {
     * join, so the result is exactly `exact(corpus ∪ batch)` — q146's
     * oracle-checked contract. Returns the updated (fp, keep_id,
     * n_copies) table. */
-  def incrementalExact(stored: DataFrame, incoming: DataFrame,
-      expectedStored: Long): DataFrame = {
+  def incrementalExact(stored: DataFrame, incoming: DataFrame)
+      : DataFrame = {
+    // bloom sizing: the stored-fingerprint count the sketch is built for
+    val expectedStored = 100000L
     val inc = Caches.persistTracked(
       incoming
         .select(col("doc_id").as("inc_id"), fingerprint(col("text")).as("fp"))
@@ -167,8 +169,8 @@ object Dedup {
     *
     * Emits (id_a, id_b, shared, jaccard) with jaccard ≥
     * thresholdBp/10⁴, a < b. */
-  def prefixFilterPairs(docs: DataFrame, n: Int, thresholdBp: Int)
-      : DataFrame = {
+  def prefixFilterPairs(docs: DataFrame, thresholdBp: Int): DataFrame = {
+    val n = 3
     require(thresholdBp > 0 && thresholdBp <= 10000,
       s"thresholdBp must be in (0,10000], got $thresholdBp")
     import org.apache.spark.sql.expressions.Window
@@ -252,7 +254,8 @@ object Dedup {
     * (a 10-shingle doc fully contained in a 200-shingle doc has
     * jaccard 0.05 but overlap 1.0). Same inverted-index candidate
     * machinery, scale shape and stop-shingle cap as [[jaccardPairs]]. */
-  def overlapPairs(docs: DataFrame, n: Int, threshold: Double): DataFrame =
+  def overlapPairs(docs: DataFrame): DataFrame = {
+    val (n, threshold) = (3, 0.5)
     candidatePairCounts(docs, n, maxDf = 1000L)
       .withColumn("overlap",
         round(col("shared").cast("double")
@@ -260,6 +263,7 @@ object Dedup {
       .where(col("overlap") >= threshold)
       .select(col("id_a"), col("id_b"), col("na"), col("nb"),
         col("shared"), col("overlap"))
+  }
 
   /** Shared inverted-index candidate stage: pairs (a < b) meeting on at
     * least one shingle, with both set sizes and the exact intersection
@@ -390,15 +394,16 @@ object Dedup {
     *     posting index exactly as in [[incrementalJaccardPairs]].
     *
     * `storedPairs` is [[jaccardPairs]]' output over `corpus` at the
-    * SAME (n, threshold, maxDf) — in production a table READ from
-    * storage, never recomputed. The result is hash-identical to a full
-    * re-mine of corpus ∪ incoming (q133's oracle IS that re-mine).
+    * same shingle size (3), threshold (0.2) and `maxDf` — in
+    * production a table READ from storage, never recomputed. The
+    * result is hash-identical to a full re-mine of corpus ∪ incoming
+    * (q133's oracle IS that re-mine).
     * Ingest cost: |incoming| posting fanout + |X| bounded decrements —
     * the whole 100 TB corpus is touched only through the (tiny) stored
     * pair table and the per-doc shingle-size table. */
   def deltaCapJaccardPairs(storedPairs: DataFrame, corpus: DataFrame,
-      incoming: DataFrame, n: Int, threshold: Double,
-      maxDf: Long = 1000L): DataFrame = {
+      incoming: DataFrame, maxDf: Long = 1000L): DataFrame = {
+    val (n, threshold) = (3, 0.2)
     // spread = false (round-11): the adjustment's many independent
     // consumer stages fan a wide cached posting into concurrent
     // 32-task stages whose scheduling cost measured above the narrow
@@ -741,9 +746,16 @@ object Dedup {
         col("lev_ratio"))
   }
 
-  /** Banded-LSH candidate pairs + exact-Jaccard verification.
-    * numHashes = bands * rowsPerBand. Emits (id_a < id_b, jaccard)
-    * for verified pairs with jaccard >= threshold.
+  /** Banded-LSH candidate pairs + exact-Jaccard verification over
+    * word-3-shingle sets. Emits (id_a < id_b, jaccard) for verified
+    * pairs with jaccard >= 0.2.
+    *
+    * Band geometry: 4 bands of 2 MinHash rows (8 hashes). A pair at
+    * jaccard s becomes a candidate with probability 1 − (1 − s²)⁴:
+    * 0.93 at s = 0.7, where near-dups live, tapering to 0.15 at the
+    * 0.2 verify threshold. Recall at the threshold itself is not the
+    * target: guaranteeing it forces near-single-hash bands whose
+    * buckets admit everything.
     *
     * Shuffle shape (the 100 TB consideration): ONLY slim
     * (doc_id, band, bucket) rows ride the band self-join and the
@@ -752,25 +764,8 @@ object Dedup {
     * tiny verified candidate set. Carrying the arrays through the
     * candidate shuffles instead would cost
     * O(candidates × avg-shingle-set-bytes) — the arrays dominate. */
-  /** [[minhashLshPairs]] with S-curve-derived band geometry: recall
-    * 0.9 is guaranteed for pairs at jaccard ≥ 0.7, and
-    * [[graft.plans.BandGeometry.deriveMinhash]] picks the cheapest
-    * (bands, rowsPerBand) that delivers it (q23's pinned 4×2 is the
-    * derived answer). `threshold` remains the
-    * verify-stage filter; recall at the threshold itself is
-    * intentionally NOT the target (guaranteeing recall at a low
-    * threshold forces near-single-hash bands whose buckets admit
-    * everything — the candidate-generator contract guarantees recall
-    * where near-dups live and lets it taper below). */
-  def minhashLshPairsAuto(docs: DataFrame, n: Int, threshold: Double)
-      : DataFrame = {
-    val (bands, rowsPerBand) =
-      graft.plans.BandGeometry.deriveMinhash(0.7, 0.9)
-    minhashLshPairs(docs, n, bands, rowsPerBand, threshold)
-  }
-
-  def minhashLshPairs(docs: DataFrame, n: Int, bands: Int, rowsPerBand: Int,
-      threshold: Double): DataFrame = {
+  def minhashLshPairs(docs: DataFrame): DataFrame = {
+    val (n, bands, rowsPerBand, threshold) = (3, 4, 2, 0.2)
     val numHashes = bands * rowsPerBand
     val sets = shingleSets(docs, n)
     // band value = md5 of the concatenated signature slice; persisted
@@ -844,12 +839,13 @@ object Dedup {
     * zeros): (doc_id, n_tokens, n_spans, covered_tokens, longest_span,
     * dup_bp) where dup_bp = basis points of tokens inside a
     * duplicated span — integer, deterministic. */
-  /** Distinct (doc_id, cpos) token positions covered by a k-gram that
-    * also occurs in ANOTHER document. `base` = (doc_id, tk). Shared by
-    * [[crossDocDupSpans]] (statistics) and [[removeDupSpans]]
-    * (cleaning) — at 100 TB a pipeline computes this once per corpus
-    * snapshot and feeds both. */
-  private def dupCoveredPositions(base: DataFrame, k: Int): DataFrame = {
+  /** Distinct (doc_id, cpos) token positions covered by a k-gram
+    * (k = 4 tokens) that also occurs in ANOTHER document. `base` =
+    * (doc_id, tk). Shared by [[crossDocDupSpans]] (statistics) and
+    * [[removeDupSpans]] (cleaning) — at 100 TB a pipeline computes
+    * this once per corpus snapshot and feeds both. */
+  private def dupCoveredPositions(base: DataFrame): DataFrame = {
+    val k = 4
     val grams = base
       .select(col("doc_id"), posexplode(shingles(col("tk"), k)))
       .select(col("doc_id"), col("pos"), xxhash64(col("col")).as("g"))
@@ -868,9 +864,9 @@ object Dedup {
     Spread.forFanout(docs, col("doc_id"))
       .select(col("doc_id"), tokens(col("text")).as("tk"))
 
-  def crossDocDupSpans(docs: DataFrame, k: Int): DataFrame = {
+  def crossDocDupSpans(docs: DataFrame): DataFrame = {
     val base = docTokens(docs)
-    val covered = dupCoveredPositions(base, k)
+    val covered = dupCoveredPositions(base)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id")).orderBy(col("cpos"))
     val spans = covered
@@ -905,22 +901,23 @@ object Dedup {
     * inside a per-row array (array_sort over a collect_list) — state
     * is bounded by DOCUMENT length, never corpus-sized, and the sort
     * makes the aggregation deterministic under any partitioning. */
-  def removeDupSpans(docs: DataFrame, k: Int): DataFrame = {
+  def removeDupSpans(docs: DataFrame): DataFrame = {
     val base = docTokens(docs)
-    removalAudit(base, dupCoveredPositions(base, k))
+    removalAudit(base, dupCoveredPositions(base))
   }
 
   /** Surgical eval-set decontamination — cut, don't drop: where q89
     * FLAGS any training doc sharing a 13-gram with the benchmark set,
     * this removes just the matching spans (every token position
-    * covered by a k-gram that occurs anywhere in `evalDocs`) and
+    * covered by a 5-gram that occurs anywhere in `evalDocs`) and
     * keeps the rest of the document — the standard middle ground when
     * dropping whole docs wastes too much corpus. Same audit shape as
     * [[removeDupSpans]]. The eval gram set is distinct-hashed
     * (16-byte keys); at 100 TB the eval side is benchmark-sized —
     * the join broadcasts it while the corpus streams. */
-  def removeContaminatedSpans(train: DataFrame, evalDocs: DataFrame,
-      k: Int): DataFrame = {
+  def removeContaminatedSpans(train: DataFrame, evalDocs: DataFrame)
+      : DataFrame = {
+    val k = 5
     val base = docTokens(train)
     val grams = base
       .select(col("doc_id"), posexplode(shingles(col("tk"), k)))

@@ -114,11 +114,12 @@ object Graphs {
     labels
   }
 
-  /** One k-core peel round: degrees over the surviving subgraph, drop
-    * nodes below `k`, keep only edges whose BOTH endpoints survive.
+  /** One 3-core peel round: degrees over the surviving subgraph, drop
+    * nodes below `k` = 3, keep only edges whose BOTH endpoints survive.
     * `edges` must be the mirrored (src,dst)+(dst,src) undirected set,
     * so `groupBy(src)` degrees count every incident edge. */
-  private def peelOnce(edges: DataFrame, k: Int): DataFrame = {
+  private def peelOnce(edges: DataFrame): DataFrame = {
+    val k = 3
     val keep = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
       .where(col("d") >= k).select(col("src"))
     edges
@@ -127,20 +128,20 @@ object Graphs {
       .select(col("src"), col("dst"))
   }
 
-  /** BOUNDED k-core peeling: exactly `rounds` peel passes, returning
+  /** BOUNDED 3-core peeling: exactly `rounds` peel passes, returning
     * the surviving nodes with their subgraph degree. After enough
-    * rounds this IS the k-core; before convergence it is the standard
+    * rounds this IS the 3-core; before convergence it is the standard
     * bounded-pass upper approximation (supergraph of the true core) —
     * the deterministic, oracle-replayable variant ([[kcore]] runs to
     * the true fixpoint). Each round is one keyed aggregation + two
     * semi joins on node ids; lineage truncates every 2 rounds so
     * round count never compounds plan depth. */
-  def kcoreBounded(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
-    require(k >= 1 && rounds >= 1)
+  def kcoreBounded(edges: DataFrame, rounds: Int): DataFrame = {
+    require(rounds >= 1)
     var e = Caches.persistTracked(edges.select(col("src"), col("dst")))
     var it = 1
     while (it <= rounds) {
-      val next = peelOnce(e, k)
+      val next = peelOnce(e)
       // lazy truncate every round — same rationale as pageRankFixed
       e = if (it < rounds) Lineage.truncateLazy(next) else next
       it += 1
@@ -149,13 +150,12 @@ object Graphs {
       .select(col("src").as("id"), col("core_deg"))
   }
 
-  /** True k-core: peel until the node set is stable. The per-round
+  /** True 3-core: peel until the node set is stable. The per-round
     * convergence check is one scalar count to the driver (the same
     * summary-only contract as [[Dedup.connectedComponents]]); 100
     * rounds at most, as a runaway guard. Returns (id, core_deg) where
-    * every core_deg >= k. */
-  def kcore(edges: DataFrame, k: Int): DataFrame = {
-    require(k >= 1)
+    * every core_deg >= 3. */
+  def kcore(edges: DataFrame): DataFrame = {
     val maxRounds = 100
     var e = Caches.persistTracked(edges.select(col("src"), col("dst")))
     var prev = e.count()
@@ -163,8 +163,8 @@ object Graphs {
     var stable = false
     while (!stable && it < maxRounds) {
       val next = Caches.persistTracked(
-        if ((it + 1) % 4 == 0) peelOnce(e, k).transform(Lineage.truncate)
-        else peelOnce(e, k))
+        if ((it + 1) % 4 == 0) peelOnce(e).transform(Lineage.truncate)
+        else peelOnce(e))
       val m = next.count()
       stable = m == prev
       prev = m

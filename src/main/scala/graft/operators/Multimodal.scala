@@ -31,10 +31,11 @@ object Multimodal {
       id: Long, kind: String, n_bytes: Int, fingerprint: String,
       features: Array[Float])
 
-  /** Deterministic stand-in for a real decoder+embedder: derives a unit
-    * feature vector from payload bytes. A real deployment replaces ONLY
-    * this function (e.g. JNI image decode → CNN embed). */
-  def decodeStub(content: Array[Byte], dim: Int): Array[Float] = {
+  /** Deterministic stand-in for a real decoder+embedder: derives an
+    * 8-dim unit feature vector from payload bytes. A real deployment
+    * replaces ONLY this function (e.g. JNI image decode → CNN embed). */
+  def decodeStub(content: Array[Byte]): Array[Float] = {
+    val dim = 8
     val out = new Array[Float](dim)
     var h = 1125899906842597L // deterministic FNV-ish fold
     var i = 0
@@ -56,8 +57,7 @@ object Multimodal {
   /** Partition-batched feature extraction over media records — the
     * JVM analog of `mapInPandas`: one iterator per partition, codec
     * state initialized once per partition, not per record. */
-  def extractFeatures(ds: Dataset[MediaRecord], dim: Int)
-      : Dataset[MediaFeatures] = {
+  def extractFeatures(ds: Dataset[MediaRecord]): Dataset[MediaFeatures] = {
     import ds.sparkSession.implicits._
     ds.mapPartitions { it =>
       // per-partition codec init goes here (stubbed)
@@ -65,27 +65,28 @@ object Multimodal {
         val fp = java.security.MessageDigest.getInstance("MD5")
           .digest(r.content).map("%02x".format(_)).mkString
         MediaFeatures(r.id, r.kind, r.content.length, fp,
-          decodeStub(r.content, dim))
+          decodeStub(r.content))
       }
     }
   }
 
-  /** Frame sampling as pure column algebra: fixed-size windows at a
-    * stride over the payload, each fingerprinted. Zero rows are
+  /** Frame sampling as pure column algebra: 64-byte windows at a
+    * stride of 128 over the payload, each fingerprinted. Zero rows are
     * produced for payloads shorter than one frame. */
-  def frameFingerprints(content: Column, frameSize: Int, stride: Int)
-      : Column =
+  def frameFingerprints(content: Column): Column = {
+    val (frameSize, stride) = (64, 128)
     when(length(content) < frameSize, array().cast("array<string>"))
       .otherwise(transform(
         sequence(lit(0), ((length(content) - frameSize) / stride).cast("int")),
         i => md5(content.substr(i * stride + 1, lit(frameSize)))))
+  }
 
-  /** Wrap any (id, payload) frame into the media schema with metadata. */
-  def fromBinary(df: DataFrame, idCol: String, contentCol: String,
-      kind: String, format: String): DataFrame =
+  /** Wrap a `documents` frame into the media schema: `doc_id` becomes
+    * the id and the UTF-8 `text` bytes the payload. */
+  def fromBinary(df: DataFrame): DataFrame =
     df.select(
-      col(idCol).cast("long").as("id"),
-      lit(kind).as("kind"),
-      lit(format).as("format"),
-      col(contentCol).cast("binary").as("content"))
+      col("doc_id").cast("long").as("id"),
+      lit("text").as("kind"),
+      lit("utf8").as("format"),
+      col("text").cast("binary").as("content"))
 }

@@ -25,14 +25,14 @@ import org.apache.spark.sql.functions._
   */
 object ProductQuant {
 
-  /** (vec_id, j, sv): 1e-4-quantized sub-vector per subspace j. */
-  def subVectors(emb: DataFrame, idCol: String, vecCol: String,
-      m: Int, subDim: Int): DataFrame = {
+  /** (vec_id, j, sv): 1e-4-quantized sub-vector per subspace j of the
+    * `embeddings` table's 64-dim `embedding`, as 8 subspaces of 8. */
+  def subVectors(emb: DataFrame): DataFrame = {
+    val (m, subDim) = (8, 8)
     // Spread.forFanout (round-11): the m-way subspace explode below
     // otherwise runs inside a single scan task on small corpora
-    val q = Spread.forFanout(emb, col(idCol))
-      .select(col(idCol).as("vec_id"),
-        Projection.quantize(col(vecCol)).as("qv"))
+    val q = Spread.forFanout(emb, col("vec_id"))
+      .select(col("vec_id"), Projection.quantize(col("embedding")).as("qv"))
     val js = (0 until m).map(lit(_))
     q.select(col("vec_id"), col("qv"), explode(array(js: _*)).as("j"))
       .select(col("vec_id"), col("j"),
@@ -46,9 +46,11 @@ object ProductQuant {
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
       lit(0L), (acc, x) => acc + x)
 
-  /** One-iteration Lloyd codebooks per subspace: (j, cent_id, cv)
-    * with cv on the 1e-6 grid. `subs` from [[subVectors]]. */
-  def fitCodebooks(subs: DataFrame, k: Int): DataFrame = {
+  /** One-iteration Lloyd codebooks of 16 codewords per subspace:
+    * (j, cent_id, cv) with cv on the 1e-6 grid. `subs` from
+    * [[subVectors]]. */
+  def fitCodebooks(subs: DataFrame): DataFrame = {
+    val k = 16
     // init: the k lowest-id vectors' sub-vectors (ids are 0-based and
     // contiguous in the corpus tables; callers with sparse ids rank
     // first), rescaled 1e-4 → 1e-6
@@ -84,14 +86,15 @@ object ProductQuant {
       .select(col("vec_id"), col("j"), col("cent_id"))
   }
 
-  /** ADC top-k: exact query sub-vectors against the corpus CODES only
+  /** ADC top-5: exact query sub-vectors against the corpus CODES only
     * (the stored representation — m codes per vector; the original
     * vectors never load). Distance = Σ_j ‖q_j − codeword(code_j)‖²,
     * an integer. Self-matches excluded; ranks tie-break by
     * neighbor_id. Queries broadcast; the codes table is the only
     * corpus-scale frame and it joins the codebook by its m·k key. */
   def adcTopK(querySubs: DataFrame, codes: DataFrame,
-      codebooks: DataFrame, k: Int): DataFrame = {
+      codebooks: DataFrame): DataFrame = {
+    val k = 5
     val q = querySubs.select(col("vec_id").as("query_id"), col("j"),
       transform(col("sv"), x => x * 100).as("qv6"))
     val scored = codes

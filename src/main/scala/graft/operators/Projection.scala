@@ -42,13 +42,14 @@ object Projection {
   def quantize(vec: Column): Column =
     transform(vec, x => floor(x.cast("double") * 10000).cast("long"))
 
-  /** Project `df`'s `vecCol` (array<float|double>, dimension `d`) to
-    * `r` dims. Output: input columns + `qv` (the quantized original,
+  /** Project `df`'s `embedding` (array<float|double>, dimension 64) to
+    * 8 dims. Output: input columns + `qv` (the quantized original,
     * array<long>) + `pv` (the projection, array<long>). */
-  def project(df: DataFrame, vecCol: String, d: Int, r: Int): DataFrame = {
+  def project(df: DataFrame): DataFrame = {
+    val (d, r) = (64, 8)
     val signs: IndexedSeq[IndexedSeq[Int]] =
       (0 until r).map(j => (0 until d).map(dd => sign(j, dd)))
-    val q = df.withColumn("qv", quantize(col(vecCol)))
+    val q = df.withColumn("qv", quantize(col("embedding")))
     val projCols: Seq[Column] = (0 until r).map { j =>
       // Σ_d sign(j,d)·qv_d as a left fold: integer adds, fixed order.
       aggregate(

@@ -80,15 +80,16 @@ object Relevance {
     (post, lens)
   }
 
-  /** Robertson BM25 top-k over prebuilt index artifacts (k1 = 1.2,
+  /** Robertson BM25 top-10 over prebuilt index artifacts (k1 = 1.2,
     * b = 0.75, Lucene's always-positive idf). df and corpus stats are
     * derived from the postings/lens at serve time (one
     * vocabulary-sized agg + one single-row agg — both broadcast).
     * Per-term scores round to 1e-6 fixed point and docs sum LONGS so
     * multi-term float summation order cannot matter (q119's
     * convention). Output: (query_id, rank, doc_id, bm25). */
-  def bm25TopK(post: DataFrame, lens: DataFrame, queries: DataFrame,
-      k: Int = 10): DataFrame = {
+  def bm25TopK(post: DataFrame, lens: DataFrame, queries: DataFrame)
+      : DataFrame = {
+    val k = 10
     import org.apache.spark.sql.expressions.Window
     val dfT = post.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val stats = lens.agg(count(lit(1)).as("n_docs"),

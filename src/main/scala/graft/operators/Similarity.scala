@@ -337,20 +337,20 @@ object Similarity {
   }
 
   /** Multi-probe SemDeDup — the boundary-recall variant of
-    * [[semanticDedupDrops]]: candidate pairs come from a MULTI-probe
-    * assignment ([[cosineNearDupPairs]] with `nprobe` buckets per
-    * vector), so two near-duplicates split across a Voronoi boundary
+    * [[semanticDedupDrops]] at threshold 0.35: candidate pairs come
+    * from a MULTI-probe assignment ([[cosineNearDupPairs]], 2 buckets
+    * per vector), so two near-duplicates split across a Voronoi boundary
     * still meet in a shared secondary bucket — the recall SemDeDup's
     * single-cluster scoping structurally loses (measured at gen10:
-    * BASELINE.md round-6, drops fall 10% as k rises). Cost is ~nprobe×
+    * BASELINE.md round-6, drops fall 10% as k rises). Cost is ~2×
     * candidates, never ×n. The keep-policy is unchanged (the member
     * closer to its PRIMARY centroid survives; id tie-break), so this
     * strictly widens the drop set. */
-  def semanticDedupDropsMulti(corpus: DataFrame, centroids: DataFrame,
-      threshold: Double, nprobe: Int): DataFrame = {
+  def semanticDedupDropsMulti(corpus: DataFrame, centroids: DataFrame)
+      : DataFrame = {
     val asg = Caches.persistTracked(
       semanticAssign(corpus, centroids).select(col("id"), col("cscore")))
-    val pairs = cosineNearDupPairs(corpus, centroids, threshold, nprobe)
+    val pairs = cosineNearDupPairs(corpus, centroids, threshold = 0.35)
     val cand = pairs
       .select(col("id_a").as("dropped_id"), col("id_b").as("kept_id"),
         col("sim"))
@@ -399,12 +399,12 @@ object Similarity {
         col("match_sim"))
   }
 
-  /** All within-cluster pairs at or above `threshold` (id_a < id_b,
-    * 4-dp sim) with both members' centroid similarities — the
+  /** All within-cluster pairs at or above 0.25 (id_a < id_b, 4-dp
+    * sim) with both members' centroid similarities — the
     * materialization a threshold SWEEP reads (q145): mined once at
     * the lowest threshold of interest, swept in pair space. */
-  def semanticPairs(corpus: DataFrame, centroids: DataFrame,
-      threshold: Double): DataFrame = {
+  def semanticPairs(corpus: DataFrame, centroids: DataFrame): DataFrame = {
+    val threshold = 0.25
     val assigned = Caches.persistTracked(semanticAssign(corpus, centroids))
     val a = assigned.select(col("cent_id"), col("id").as("id_a"),
       col("v").as("va"), col("vn").as("na"))
@@ -442,10 +442,12 @@ object Similarity {
     * `rerankN` survivors per query fetch their float vectors BY ID for
     * the exact cosine rerank. Output per query: top-`k` neighbors with
     * the exact `sim` and the quantized gate score `sim_q` that
-    * admitted them. Both scores round to 4 dp pre-rank with id
-    * tie-breaks, so ranks are engine-portable. */
+    * admitted them (k = 5, 2 probed buckets, rerankN = 20). Both
+    * scores round to 4 dp pre-rank with id tie-breaks, so ranks are
+    * engine-portable. */
   def quantizedIvfTopK(queries: DataFrame, corpus: DataFrame,
-      centroids: DataFrame, k: Int, nprobe: Int, rerankN: Int): DataFrame = {
+      centroids: DataFrame): DataFrame = {
+    val (k, nprobe, rerankN) = (5, 2, 20)
     val assigned = withQuantized(
       nearestCentroids(corpus, centroids, "neighbor_id", 1))
       .select(col("neighbor_id"), col("cent_id"),
@@ -489,16 +491,17 @@ object Similarity {
   }
 
   /** Embedding-cosine similar-pair mining, IVF-bucketed: every vector
-    * is assigned to its `nprobe` nearest centroid buckets and ONLY
+    * is assigned to its 2 nearest centroid buckets and ONLY
     * same-bucket pairs are scored — a bucketed self-join keyed by
     * cent_id, never the O(n²) cross product. Multi-probe raises recall
-    * at Voronoi boundaries for ~nprobe× candidates (not ×n). Vectors
+    * at Voronoi boundaries for ~2× candidates (not ×n). Vectors
     * ride the bucket join (constant row width — they must be present
     * where scoring happens); the pair dedup shuffles only
     * (id_a, id_b, sim) after the threshold cut. Similarity is rounded
     * to 4 dp BEFORE thresholding for cross-engine stability. */
   def cosineNearDupPairs(corpus: DataFrame, centroids: DataFrame,
-      threshold: Double, nprobe: Int = 2): DataFrame = {
+      threshold: Double): DataFrame = {
+    val nprobe = 2
     val assigned = Caches.persistTracked(withL2(
       nearestCentroids(corpus, centroids, "id", nprobe), "v", "vn"))
     val a = assigned.select(col("id").as("id_a"), col("v").as("va"),

@@ -15,16 +15,16 @@ import org.apache.spark.sql.functions._
   */
 object Skew {
 
-  /** Equi-join `big ⋈ small` on `key`, with the big side split into
-    * `factor` salted sub-keys and the small side replicated
-    * `factor`×. Output schema = plain inner join on `key`. */
-  def saltedJoin(big: DataFrame, small: DataFrame, key: String,
-      factor: Int, saltSource: Seq[String]): DataFrame = {
+  /** Equi-join `big ⋈ small` on their column `k`, with the big side
+    * split into `factor` salted sub-keys and the small side replicated
+    * `factor`×. Output schema = plain inner join on `k`. */
+  def saltedJoin(big: DataFrame, small: DataFrame, factor: Int,
+      saltSource: Seq[String]): DataFrame = {
     require(factor >= 1)
     val salted = big.withColumn("_salt",
       pmod(hash(saltSource.map(col): _*), lit(factor)))
     val replicated = small.withColumn("_salt",
       explode(sequence(lit(0), lit(factor - 1))))
-    salted.join(replicated, Seq(key, "_salt")).drop("_salt")
+    salted.join(replicated, Seq("k", "_salt")).drop("_salt")
   }
 }

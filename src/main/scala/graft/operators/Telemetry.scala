@@ -19,13 +19,13 @@ import org.apache.spark.sql.{Column, DataFrame, Observation}
   */
 object Telemetry {
 
-  /** Attach named metrics to a batch frame. The returned Observation
-    * resolves after the FIRST action on the returned frame; `get`
-    * blocks until then. One Observation instance per action — they
-    * are single-shot by Spark's contract. */
-  def observed(df: DataFrame, name: String,
-      metric: Column, metrics: Column*): (DataFrame, Observation) = {
-    val obs = new Observation(name)
+  /** Attach metrics, observed under the name `quality`, to a batch
+    * frame. The returned Observation resolves after the FIRST action
+    * on the returned frame; `get` blocks until then. One Observation
+    * instance per action — they are single-shot by Spark's contract. */
+  def observed(df: DataFrame, metric: Column, metrics: Column*)
+      : (DataFrame, Observation) = {
+    val obs = new Observation("quality")
     (df.observe(obs, metric, metrics: _*), obs)
   }
 }

@@ -88,7 +88,7 @@ object VectorIndex {
     *
     *  1. write phase: per partition dir, SNAPSHOT the current file
     *     list, read exactly those files, write their rows back as
-    *     ~`targetBytes` compacted files into the SAME dir under fresh
+    *     ~128 MiB compacted files into the SAME dir under fresh
     *     names (via a dot-prefixed temp dir Spark's listing ignores,
     *     then rename — a parquet file is visible only once complete).
     *     Appends landing meanwhile create NEW files not in the
@@ -103,26 +103,15 @@ object VectorIndex {
     * 100 TB the same two phases run per-bucket (each bucket is an
     * independent unit, so compaction parallelizes and interleaves
     * with ingest at bucket granularity). StreamingSpec drives probe /
-    * append / probe through both phases and pins result equality. */
-  def compact(spark: SparkSession, path: String,
-      targetBytes: Long = 128L << 20): Int =
-    Compaction.compact(spark, s"$path/assignments",
-      partitionPrefix = Some("cent_id="), targetBytes = targetBytes)
-
-  /** Phase 1: returns the pending compaction (input to
-    * [[compactCommit]]). Exposed for the mid-compaction test; callers
-    * use [[compact]]. Delegates to the factored two-phase compactor
-    * ([[Compaction]] — same mechanics now shared with the CDC and
-    * pair-table maintenance). */
-  private[graft] def compactWrite(spark: SparkSession, path: String,
-      targetBytes: Long): PendingCompaction =
-    Compaction.compactWrite(spark, s"$path/assignments",
-      Some("cent_id="), targetBytes)
-
-  /** Phase 2: drop exactly the snapshot files phase 1 replaced. */
-  private[graft] def compactCommit(spark: SparkSession, path: String,
-      pending: PendingCompaction): Unit =
-    Compaction.compactCommit(spark, pending)
+    * append / probe through both phases and pins result equality.
+    *
+    * This runs phase 1 and returns the pending compaction; its
+    * [[PendingCompaction.commit]] is phase 2. Delegates to the
+    * factored two-phase compactor ([[Compaction]] — same mechanics
+    * shared with the CDC and pair-table maintenance). */
+  private[graft] def compactWrite(spark: SparkSession, path: String)
+      : PendingCompaction =
+    Compaction.compactWrite(spark, s"$path/assignments", Some("cent_id="))
 
   /** Load a saved index. Partition-column type inference may narrow
     * `cent_id` to int; restore long so probe joins stay cast-free. */

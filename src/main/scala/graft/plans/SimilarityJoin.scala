@@ -68,7 +68,7 @@ object BandGeometry {
     * price, not a tunable. A corpus-scale join that only needs
     * near-dup recall should derive at the similarity level it
     * actually cares about (e.g. 0.8), which yields wide selective
-    * bands, exactly as [[deriveMinhash]]'s simTarget contract does. */
+    * bands. */
   def derive(threshold: Double,
       targetRecall: Double = DefaultTargetRecall): (Int, Int) =
     (16 to 1 by -1).iterator
@@ -108,54 +108,15 @@ object BandGeometry {
     val candidates = for {
       r <- 16 to 1 by -1
       pBand = math.pow(p, r)
-      // double-underflow guards, same traps as deriveMinhash: a pBand
-      // so small that 1-pBand == 1.0 must not become a 1-band plan
+      // double-underflow guard: a pBand so small that 1-pBand == 1.0
+      // makes the log ratio -Infinity, which .max(1.0) would resurrect
+      // as a 1-band plan
       if pBand < 1.0 && (1.0 - pBand) < 1.0
       bD = math.ceil(math.log(1.0 - DefaultTargetRecall)
         / math.log(1.0 - pBand)).max(1.0)
       if bD * r <= budgetBits
     } yield (bD.toInt, r)
     candidates.headOption.getOrElse((budgetBits, 1))
-  }
-
-  /** MinHash (jaccard) analogue of [[derive]]: one minhash agrees for
-    * a pair at jaccard `s` with probability `s` itself, so a band of
-    * `r` hashes collides with `s^r` and ≥ 1 of `b` bands with
-    * `1 − (1 − s^r)^b`. Unlike the cosine signature there is no
-    * one-long bit budget — each hash is a full pass over the shingle
-    * set — so the objective flips: MINIMIZE total hashes (b × r)
-    * subject to recall ≥ target at `simTarget` (the similarity level
-    * the caller wants guaranteed — recall only rises above it), with
-    * `r ≥ 2` (a single-hash band buckets on one raw minhash value,
-    * which collides for ANY pair sharing the min shingle — the
-    * degenerate all-candidates case) and `maxHashes` as the cost
-    * ceiling. Ties prefer wider bands (higher selectivity, fewer
-    * false candidates). deriveMinhash(0.7, 0.9) = (4, 2) — exactly
-    * q23's pinned geometry. */
-  def deriveMinhash(simTarget: Double,
-      targetRecall: Double = DefaultTargetRecall,
-      maxHashes: Int = 64): (Int, Int) = {
-    require(simTarget > 0 && simTarget < 1, s"simTarget in (0,1): $simTarget")
-    require(targetRecall > 0 && targetRecall < 1)
-    val candidates = for {
-      r <- 2 to 16
-      pBand = math.pow(simTarget, r)
-      // both guards are double-underflow traps, not style: pBand so
-      // small that 1-pBand == 1.0 makes the log ratio -Infinity and
-      // .max(1.0) would resurrect it as a 1-band candidate
-      if pBand < 1.0 && (1.0 - pBand) < 1.0
-      // band count as Double FIRST: a tiny pBand yields b ~ 1e21,
-      // which .toInt would saturate and b * r wrap negative, slipping
-      // past the budget check
-      bD = math.ceil(math.log(1.0 - targetRecall)
-        / math.log(1.0 - pBand)).max(1.0)
-      if bD * r <= maxHashes
-    } yield (bD.toInt, r)
-    require(candidates.nonEmpty,
-      s"no (bands, rows) within $maxHashes hashes reaches " +
-        s"recall $targetRecall at jaccard $simTarget — lower the " +
-        "target or raise maxHashes")
-    candidates.minBy { case (b, r) => (b * r, -r) }
   }
 }
 

@@ -92,16 +92,16 @@ object FileManifest {
       .parquet(s"$dir/$ManifestDir")
   }
 
-  /** Read only the files whose manifest `[min_v, max_v]` for `col`
-    * overlaps `[lo, hi]`. Files WITHOUT a manifest row for `col`
-    * (null-only stats, late-added files) are kept — conservative,
-    * never wrong. The caller still applies the row-level predicate;
-    * this only shrinks the file list. */
-  def prunedRead(spark: SparkSession, dir: String, col: String,
-      lo: Double, hi: Double): DataFrame = {
+  /** Read only the files whose manifest `[min_v, max_v]` for the
+    * `value` column overlaps `[lo, hi]`. Files WITHOUT a manifest row
+    * for it (null-only stats, late-added files) are kept —
+    * conservative, never wrong. The caller still applies the
+    * row-level predicate; this only shrinks the file list. */
+  def prunedRead(spark: SparkSession, dir: String, lo: Double, hi: Double)
+      : DataFrame = {
     import spark.implicits._
     val manifest = spark.read.parquet(s"$dir/$ManifestDir")
-    val known = manifest.where($"col" === col)
+    val known = manifest.where($"col" === "value")
     val keep = known.where($"max_v" >= lo && $"min_v" <= hi)
       .select($"file").as[String].collect()
     val conf = spark.sparkContext.hadoopConfiguration

@@ -66,10 +66,9 @@ object CdcStream {
   }
 
   /** Wire a CDC log stream into the maintained table. The log must
-    * carry `key`, `seq`, `op` and the payload columns of the
+    * carry `doc_id`, `seq`, `op` and the payload columns of the
     * initialized base. Start + await the returned writer. */
-  def maintain(log: DataFrame, tablePath: String, key: String)
-      : DataStreamWriter[Row] = {
+  def maintain(log: DataFrame, tablePath: String): DataStreamWriter[Row] = {
     val spark = log.sparkSession
     log.writeStream.outputMode("append").foreachBatch {
       (batch: Dataset[Row], id: Long) =>
@@ -78,7 +77,7 @@ object CdcStream {
             s"CdcStream table $tablePath not initialized — call init()"))
         if (applied < id) {
           val prev = readVersionDir(spark, s"$tablePath/v$applied")
-          Cdc.applyChangesetVersioned(prev, batch.toDF(), key)
+          Cdc.applyChangesetVersioned(prev, batch.toDF())
             .write.mode("overwrite").parquet(s"$tablePath/v$id")
           writePointer(tablePath, id)
         } // else: retry of an applied batch — skip (exactly-once)
@@ -131,17 +130,12 @@ object CdcStream {
     Cdc.snapshotOf(readVersionDir(spark, dir.toString))
   }
 
-  /** Retention sweep: delete version directories strictly below the
-    * committed pointer, keeping the newest `keepVersions` dirs in
-    * total (the current one included) for readers that resolved the
-    * pointer just before a swing — the standard copy-on-write
-    * retention contract (a reader may lag at most `keepVersions - 1`
-    * version swings; size retention to the deployment's maximum read
-    * duration, exactly like a table format's vacuum horizon).
+  /** Retention sweep: delete every version directory strictly below
+    * the committed pointer, keeping only the current one — a table
+    * format's vacuum with a zero-swing horizon (a reader that resolved
+    * the pointer before a swing must finish before the next sweep).
     * Returns the number of version dirs removed. */
-  def vacuum(spark: SparkSession, tablePath: String,
-      keepVersions: Int = 2): Int = {
-    require(keepVersions >= 1, "must keep at least the current version")
+  def vacuum(spark: SparkSession, tablePath: String): Int = {
     val current = latestVersion(tablePath).getOrElse(
       throw new IllegalStateException(s"$tablePath not initialized"))
     val root = new org.apache.hadoop.fs.Path(tablePath)
@@ -153,7 +147,7 @@ object CdcStream {
         _ -> d.getPath))
       .filter(_._1 <= current)
       .sortBy(_._1)
-    val drop = versions.dropRight(keepVersions)
+    val drop = versions.dropRight(1)
     drop.foreach { case (_, p) => fs.delete(p, true) }
     drop.size
   }
@@ -187,6 +181,6 @@ object CdcStream {
     val v = latestVersion(tablePath).getOrElse(
       throw new IllegalStateException(s"$tablePath not initialized"))
     graft.operators.Compaction.compactWrite(spark, s"$tablePath/v$v",
-      partitionPrefix = None, targetBytes = 128L << 20)
+      partitionPrefix = None)
   }
 }

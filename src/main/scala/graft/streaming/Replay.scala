@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   *
   * Mechanics: the built-in `rate` source emits ticks (timestamp,
   * value 0,1,2,…); tick k releases the k-th fixture row (deterministic
-  * order on `orderCol`). The fixture is broadcast — each micro-batch
+  * order on `event_id`). The fixture is broadcast — each micro-batch
   * hash-joins its tick range against it with no shuffle of the
   * replayed data. Scale note: fixtures are bounded by construction
   * (they play a producer's working set, 100k rows in the reference);
@@ -23,13 +23,13 @@ import org.apache.spark.sql.functions._
 object Replay {
 
   /** Replay `fixture` (bounded) at `rowsPerSecond`, ordered by
-    * `orderCol` (ties broken by the full row struct for determinism).
+    * `event_id` (ties broken by the full row struct for determinism).
     * The stream ends silently once ticks pass the fixture size —
     * matching the reference producer's fixed `--duration` behavior. */
   def rateLimited(spark: SparkSession, fixture: DataFrame,
-      orderCol: String, rowsPerSecond: Int): DataFrame = {
+      rowsPerSecond: Int): DataFrame = {
     val cols = fixture.columns
-    val w = Window.orderBy(col(orderCol), struct(cols.map(col): _*))
+    val w = Window.orderBy(col("event_id"), struct(cols.map(col): _*))
     val indexed = fixture
       .withColumn("_idx", row_number().over(w).cast("long") - 1)
     spark.readStream.format("rate")

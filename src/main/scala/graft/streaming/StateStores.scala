@@ -32,11 +32,4 @@ object StateStores {
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
       "true")
   }
-
-  /** Back to the default (HDFS-backed, heap) provider. */
-  def useDefault(spark: SparkSession): Unit = {
-    spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.unset(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
-  }
 }

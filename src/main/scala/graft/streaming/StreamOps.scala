@@ -160,13 +160,12 @@ object StreamOps {
 
   /** Deterministic session rollup (the oracle-checkable T4 variant —
     * [[sessionMetrics]] keeps reference parity with its approx
-    * distinct): per-user sessions closing after `gap` of event-time
-    * inactivity, with exact counts and integer-cents value totals so a
-    * replay of the stream hash-matches a batch gaps-and-islands
-    * sessionization in any engine. */
-  def sessionRollup(events: DataFrame, gap: String = "10 minutes")
-      : DataFrame =
-    sessionRollupOn(events, session_window(col("ts"), gap))
+    * distinct): per-user sessions closing after 10 minutes of
+    * event-time inactivity, with exact counts and integer-cents value
+    * totals so a replay of the stream hash-matches a batch
+    * gaps-and-islands sessionization in any engine. */
+  def sessionRollup(events: DataFrame): DataFrame =
+    sessionRollupOn(events, session_window(col("ts"), "10 minutes"))
 
   /** Shared output contract of the session rollups: exact counts +
     * integer-cents totals keyed on a caller-supplied session_window
@@ -350,11 +349,11 @@ object StreamOps {
   }
 
   /** Stream-static enrichment join: attach dimension attributes to the
-    * stream (broadcast-hash per micro-batch; the dim is re-planned each
-    * batch so slowly-changing dims stay fresh). Stateless. */
-  def enriched(events: DataFrame, dim: DataFrame, eventKey: String,
-      dimKey: String): DataFrame =
-    events.join(broadcast(dim), col(eventKey) === col(dimKey), "left")
+    * stream by the events' `user_id` = the dim's `c_key`
+    * (broadcast-hash per micro-batch; the dim is re-planned each batch
+    * so slowly-changing dims stay fresh). Stateless. */
+  def enriched(events: DataFrame, dim: DataFrame): DataFrame =
+    events.join(broadcast(dim), col("user_id") === col("c_key"), "left")
 
   /** Stream-static as-of enrichment against a SLOWLY CHANGING
     * dimension. The plain stream-static shapes ([[enriched]], or
@@ -375,15 +374,13 @@ object StreamOps {
     * keyed-state regime where the dim history is co-partitioned with
     * the facts instead of broadcast. */
   def asofEnrichScd(stream: DataFrame, dimProvider: () => DataFrame,
-      key: String, leftTime: String, rightTime: String,
       asofCols: Seq[String])(
       sink: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[Row] =
     stream.writeStream.outputMode("append").foreachBatch {
       (batch: Dataset[Row], id: Long) =>
         sink(graft.operators.Analytics.asofJoinBroadcast(
-          batch.toDF(), dimProvider(), key, leftTime, rightTime,
-          asofCols), id)
+          batch.toDF(), dimProvider(), asofCols), id)
     }
 
   /** Stream-stream interval join (extension surface): purchases matched
@@ -445,74 +442,5 @@ object StreamOps {
       highValueAlerts(src),
       errorAlerts(src)))
     windowedMetrics(chained)
-  }
-
-  /** [[dedupStream]]'s semantics on the Spark-4 arbitrary-state API
-    * (`transformWithState` + [[DedupProcessor]]): per-user seen-id set
-    * in a MapState — membership checks are per-key point lookups
-    * instead of deserializing the whole seen-set blob (the v1
-    * `GroupState[Set[Long]]` shape) — expired by an EVENT-TIME timer
-    * 1 h after the user's newest event. Event-time (not the v2 TTL
-    * machinery, which is processing-time based and keeps the no-data
-    * batch loop spinning — same pitfall as v1's ProcessingTimeTimeout,
-    * see the [[dedupStream]] note). Input must be [[watermarked]].
-    * REQUIRES the RocksDB state store provider
-    * ([[StateStores.useRocksDb]]) — transformWithState does not run on
-    * the default HDFS-backed provider. */
-  def dedupStreamTws(events: Dataset[Row], spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    events
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        col("value"), col("ts"))
-      .as[(Long, Long, String, Double, java.sql.Timestamp)]
-      .groupByKey(_._2)
-      .transformWithState(new DedupProcessor, TimeMode.EventTime(),
-        OutputMode.Append())
-      .toDF("event_id", "user_id", "event_type", "value")
-  }
-}
-
-/** StatefulProcessor behind [[StreamOps.dedupStreamTws]]: MapState
-  * keyed by seen event_id (value unused), one live event-time timer
-  * per user (re-armed each batch; the previous timer is deleted so a
-  * stale early timer cannot clear state for a still-active user). */
-class DedupProcessor extends org.apache.spark.sql.streaming.StatefulProcessor[
-    Long, (Long, Long, String, Double, java.sql.Timestamp),
-    (Long, Long, String, Double)] {
-  import org.apache.spark.sql.{Encoders => E}
-  import org.apache.spark.sql.streaming.{ExpiredTimerInfo, MapState, OutputMode, TTLConfig, TimeMode, TimerValues, ValueState}
-
-  @transient private var seen: MapState[Long, Boolean] = _
-  @transient private var armedTimer: ValueState[Long] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    seen = getHandle.getMapState[Long, Boolean]("seen",
-      E.scalaLong, E.scalaBoolean, TTLConfig.NONE)
-    armedTimer = getHandle.getValueState[Long]("armedTimer",
-      E.scalaLong, TTLConfig.NONE)
-  }
-
-  override def handleInputRows(user: Long,
-      rows: Iterator[(Long, Long, String, Double, java.sql.Timestamp)],
-      timerValues: TimerValues): Iterator[(Long, Long, String, Double)] = {
-    var maxTs = timerValues.getCurrentWatermarkInMs() + 1
-    val out = rows.filter { r =>
-      if (r._5 != null) maxTs = maxTs.max(r._5.getTime)
-      if (seen.containsKey(r._1)) false
-      else { seen.updateValue(r._1, true); true }
-    }.map(r => (r._1, r._2, r._3, r._4)).toList
-    if (armedTimer.exists()) getHandle.deleteTimer(armedTimer.get())
-    val at = maxTs + 3600000L // 1 h of event time after newest activity
-    getHandle.registerTimer(at)
-    armedTimer.update(at)
-    out.iterator
-  }
-
-  override def handleExpiredTimer(user: Long, timerValues: TimerValues,
-      expiredTimerInfo: ExpiredTimerInfo)
-      : Iterator[(Long, Long, String, Double)] = {
-    seen.clear(); armedTimer.clear()
-    Iterator.empty
   }
 }

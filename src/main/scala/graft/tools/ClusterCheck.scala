@@ -301,7 +301,7 @@ object ClusterCheck {
         .select("event_id", "asof_view_id")
         .collect().map(r => (r.getLong(0), Option(r.get(1)).map(_.toString))).toMap
       val gotExec = key(Analytics.asofJoinExec(
-        purchases, views, "user_id", "ts", "v_ts", Seq("view_id")))
+        purchases, views, "v_ts", Seq("view_id")))
       val pRows = purchases.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       val vRows = views.collect()

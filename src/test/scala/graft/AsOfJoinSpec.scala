@@ -31,7 +31,7 @@ class AsOfJoinSpec extends AnyFunSuite {
   ).toDF("event_id", "user_id", "ts")
 
   test("asof exec: inclusive <=, latest prior row, nulls when none") {
-    val out = Analytics.asofJoinExec(trades, quotes, "user_id", "ts", "ts",
+    val out = Analytics.asofJoinExec(trades, quotes, "ts",
         Seq("event_id"))
       .select($"event_id", $"asof_event_id")
       .orderBy($"event_id").collect()
@@ -46,9 +46,9 @@ class AsOfJoinSpec extends AnyFunSuite {
       (201L, 10L, ts("2026-01-01 10:00:00")) // same key, same ts
     ).toDF("event_id", "user_id", "ts")
     val one = trades.where($"event_id" === 1L)
-    val exec = Analytics.asofJoinExec(one, dupQuotes, "user_id", "ts", "ts",
+    val exec = Analytics.asofJoinExec(one, dupQuotes, "ts",
       Seq("event_id")).select($"asof_event_id").head().getLong(0)
-    val carry = Analytics.asofJoin(one, dupQuotes, "user_id", "ts", "ts",
+    val carry = Analytics.asofJoin(one, dupQuotes, "ts",
       Seq("event_id")).select($"asof_event_id").head().getLong(0)
     assert(exec === 201L) // the max payload, deterministically
     assert(carry === exec)
@@ -61,9 +61,9 @@ class AsOfJoinSpec extends AnyFunSuite {
     val signups = ev.where($"event_type" === "signup")
       .select($"event_id", $"user_id", $"ts")
     val exec = Analytics.asofJoinExec(purchases, signups,
-      "user_id", "ts", "ts", Seq("event_id"))
+      "ts", Seq("event_id"))
     val carry = Analytics.asofJoin(purchases, signups,
-      "user_id", "ts", "ts", Seq("event_id"))
+      "ts", Seq("event_id"))
     assert(exec.columns.toSeq === carry.columns.toSeq)
     assert(exec.exceptAll(carry).isEmpty && carry.exceptAll(exec).isEmpty)
     assert(exec.count() === purchases.count()) // left-outer row parity
@@ -76,9 +76,9 @@ class AsOfJoinSpec extends AnyFunSuite {
     val signups = ev.where($"event_type" === "signup")
       .select($"event_id", $"user_id", $"ts")
     val bc = Analytics.asofJoinBroadcast(purchases, signups,
-      "user_id", "ts", "ts", Seq("event_id"))
+      Seq("event_id"))
     val exec = Analytics.asofJoinExec(purchases, signups,
-      "user_id", "ts", "ts", Seq("event_id"))
+      "ts", Seq("event_id"))
     assert(bc.columns.toSeq === exec.columns.toSeq)
     assert(bc.exceptAll(exec).isEmpty && exec.exceptAll(bc).isEmpty)
     val plan = bc.queryExecution.executedPlan.toString
@@ -114,9 +114,9 @@ class AsOfJoinSpec extends AnyFunSuite {
       df.select($"event_id", $"asof_event_id").collect()
         .map(row => row.getLong(0) ->
           (if (row.isNullAt(1)) None else Some(row.getLong(1)))).toMap
-    val carry = run(Analytics.asofJoin(l, r, "user_id", "ts", "ts", Seq("event_id")))
-    val exec = run(Analytics.asofJoinExec(l, r, "user_id", "ts", "ts", Seq("event_id")))
-    val bc = run(Analytics.asofJoinBroadcast(l, r, "user_id", "ts", "ts", Seq("event_id")))
+    val carry = run(Analytics.asofJoin(l, r, "ts", Seq("event_id")))
+    val exec = run(Analytics.asofJoinExec(l, r, "ts", Seq("event_id")))
+    val bc = run(Analytics.asofJoinBroadcast(l, r, Seq("event_id")))
     assert(carry === expected)
     assert(exec === expected)
     assert(bc === expected)
@@ -128,7 +128,7 @@ class AsOfJoinSpec extends AnyFunSuite {
       .select($"event_id", $"user_id", $"ts")
     val r = ev.where($"event_type" === "signup")
       .select($"event_id", $"user_id", $"ts")
-    val plan = Analytics.asofJoinExec(l, r, "user_id", "ts", "ts",
+    val plan = Analytics.asofJoinExec(l, r, "ts",
       Seq("event_id")).queryExecution.executedPlan.toString
     assert(plan.contains("AsOfJoin"))
     // exactly one exchange per side, none above the operator

@@ -88,7 +88,7 @@ class CompactionSpec extends AnyFunSuite {
     (0 until 4).foreach(i => appendFile(root, Seq(i * 2L, i * 2L + 1)))
     val before = readIds(root)
 
-    val snapshot = Compaction.compactWrite(spark, root, None, 128L << 20)
+    val snapshot = Compaction.compactWrite(spark, root, None)
     assert(snapshot.size == 4, "all four fragments in the snapshot")
     // inside the window: snapshot rows visible twice; the adopters'
     // unique-key dedup restores the original view
@@ -110,11 +110,11 @@ class CompactionSpec extends AnyFunSuite {
     (0 until 3).foreach(i => appendFile(root, Seq(i * 2L, i * 2L + 1)))
     val before = readIds(root)
 
-    val first = Compaction.compactWrite(spark, root, None, 128L << 20)
+    val first = Compaction.compactWrite(spark, root, None)
     assert(first.size == 3 && first.locks.size == 1)
     // a second compactor racing into the same unit mid-window: the
     // exclusive lock makes it a no-op instead of a double-delete
-    val second = Compaction.compactWrite(spark, root, None, 128L << 20)
+    val second = Compaction.compactWrite(spark, root, None)
     assert(second.isEmpty && second.locks.isEmpty,
       "locked unit must be skipped, not compacted twice")
     Compaction.compactCommit(spark, second)
@@ -135,7 +135,7 @@ class CompactionSpec extends AnyFunSuite {
     val before = readIds(root)
     // write phase completed, commit never ran (the crash): lock holds
     // nonce + manifest, rows visible twice
-    val crashed = Compaction.compactWrite(spark, root, None, 128L << 20)
+    val crashed = Compaction.compactWrite(spark, root, None)
     assert(crashed.nonEmpty)
     assert(Compaction.compact(spark, root) == 0,
       "unit stays locked after the crash (skip, don't interleave)")
@@ -220,7 +220,7 @@ class CompactionSpec extends AnyFunSuite {
     }
     val before = readIds(s"$root/u=a")
     intercept[Throwable] {
-      Compaction.compactWrite(spark, root, Some("u="), 128L << 20)
+      Compaction.compactWrite(spark, root, Some("u="))
     }
     // unit A's staging is fully undone: originals only, no control
     // files anywhere, and recover() finds nothing to do
@@ -343,7 +343,7 @@ class CompactionSpec extends AnyFunSuite {
       }
       val before = readIds(root)
       val pending = Compaction.compactWrite(spark, root,
-        if (buckets) Some("bucket=") else None, 128L << 20)
+        if (buckets) Some("bucket=") else None)
       assert(pending.locks.size == unitDirs.size)
 
       // per unit: pick a crash scenario, mutate the completed

@@ -68,7 +68,7 @@ class JaccardJoinSpec extends AnyFunSuite {
 
   test("DataFrame-built naive predicate rewrites too; flipped literal " +
       "form and 2-arg default shingle width both match") {
-    val jac = TextExpressions.jaccardSim(col("text_a"), col("text_b"), 3)
+    val jac = TextExpressions.jaccardSim(col("text_a"), col("text_b"))
     val df = side("id_a", "text_a").join(side("id_b", "text_b"),
       jac >= lit(0.3) && col("id_a") < col("id_b"))
     assert(hasExec(df))
@@ -92,7 +92,7 @@ class JaccardJoinSpec extends AnyFunSuite {
     assert(got.contains((1L, 2L)))
     assert(got.contains((1L, 6L)) && got.contains((2L, 6L)),
       s"identical rows 1 and 2 must pair symmetrically: $got")
-    val jac = TextExpressions.jaccardSim(col("text_a"), col("text_b"), 3)
+    val jac = TextExpressions.jaccardSim(col("text_a"), col("text_b"))
     val df = side("id_a", "text_a").join(side("id_b", "text_b"),
       jac >= lit(0.5) && col("id_a") < col("id_b"))
     assert(pairs(df).toSet === got)
@@ -103,7 +103,7 @@ class JaccardJoinSpec extends AnyFunSuite {
 
   test("threshold 0 does NOT rewrite (a no-shared-shingle pair would " +
       "qualify, which the inverted index cannot see)") {
-    val jac = TextExpressions.jaccardSim(col("text_a"), col("text_b"), 3)
+    val jac = TextExpressions.jaccardSim(col("text_a"), col("text_b"))
     val df = side("id_a", "text_a").join(side("id_b", "text_b"),
       jac >= lit(0.0) && col("id_a") < col("id_b"))
     assert(!hasExec(df), "t = 0 must stay on the literal plan")
@@ -189,7 +189,7 @@ class JaccardJoinSpec extends AnyFunSuite {
   }
 
   test("exec result is stable under input repartitioning") {
-    val jac = TextExpressions.jaccardSim(col("text_a"), col("text_b"), 3)
+    val jac = TextExpressions.jaccardSim(col("text_a"), col("text_b"))
     val df = side("id_a", "text_a").repartition(5)
       .join(side("id_b", "text_b").repartition(3),
         jac >= lit(0.3) && col("id_a") < col("id_b"))

@@ -195,8 +195,8 @@ class JobsSpec extends AnyFunSuite {
     val jsonFixture = fixture
       .select(col("event_id"),
         to_json(struct(fixture.columns.map(col): _*)).as("json"))
-    val raw = Replay.rateLimited(spark, jsonFixture, "event_id",
-      rowsPerSecond = 30).select(col("json").as("value"))
+    val raw = Replay.rateLimited(spark, jsonFixture, rowsPerSecond = 30)
+      .select(col("json").as("value"))
     val alerts = StreamOps.errorAlerts(StreamOps.withEventTime(
       StreamOps.decodeJsonEnvelope(raw)))
     val q = alerts.writeStream.format("memory").queryName("latency_t")

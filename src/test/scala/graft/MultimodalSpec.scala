@@ -12,7 +12,7 @@ class MultimodalSpec extends AnyFunSuite {
 
   test("fromBinary wraps payloads with typed metadata columns") {
     val df = Seq((1L, "hello world")).toDF("doc_id", "text")
-    val media = Multimodal.fromBinary(df, "doc_id", "text", "text", "utf8")
+    val media = Multimodal.fromBinary(df)
     assert(media.columns.toSeq === Seq("id", "kind", "format", "content"))
     val r = media.head()
     assert(r.getAs[Array[Byte]]("content").length === 11)
@@ -24,7 +24,7 @@ class MultimodalSpec extends AnyFunSuite {
       Multimodal.MediaRecord(2L, "image", "png", "payload-b".getBytes),
       Multimodal.MediaRecord(3L, "image", "png", "payload-a".getBytes)
     ).toDS().repartition(2)
-    val out = Multimodal.extractFeatures(ds, dim = 8).collect()
+    val out = Multimodal.extractFeatures(ds).collect()
       .sortBy(_.id)
     assert(out.length === 3)
     // same payload → same fingerprint and same features (determinism)
@@ -41,7 +41,7 @@ class MultimodalSpec extends AnyFunSuite {
     val df = Seq(("a" * 300, 1L), ("ab", 2L)).toDF("text", "id")
       .select(col("id"), col("text").cast("binary").as("content"))
       .withColumn("frames",
-        Multimodal.frameFingerprints(col("content"), 64, 128))
+        Multimodal.frameFingerprints(col("content")))
       .select(col("id"), size(col("frames")).as("n"))
       .as[(Long, Int)].collect().toMap
     assert(df(1L) === 2) // offsets 0 and 128 fit; 256+64 > 300

@@ -57,8 +57,7 @@ class OperatorsSpec extends AnyFunSuite {
         "kappa lambda mu nu xi omicron pi rho sigma tau"),         // superset
       (3L, "unrelated words entirely different from these others")
     ).toDF("doc_id", "text")
-    val out = Dedup.overlapPairs(contained, n = 3,
-      threshold = 0.5).collect()
+    val out = Dedup.overlapPairs(contained).collect()
     assert(out.length === 1)
     val r = out.head
     assert((r.getLong(0), r.getLong(1)) === (1L, 2L))
@@ -220,24 +219,10 @@ class OperatorsSpec extends AnyFunSuite {
     assert(labels.forall(_._2 == 0L))
   }
 
-  test("minhashLshPairsAuto derives q23's geometry and matches the explicit call") {
-    GraftTestSpark.withCaches {
-      val auto = Dedup.minhashLshPairsAuto(docs,
-        n = 3, threshold = 0.2).orderBy($"id_a", $"id_b").collect().toSeq
-      graft.operators.Caches.releaseAll()
-      val explicit = Dedup.minhashLshPairs(docs,
-        n = 3, bands = 4, rowsPerBand = 2, threshold = 0.2)
-        .orderBy($"id_a", $"id_b").collect().toSeq
-      assert(auto === explicit) // (0.7, 0.9) derives exactly (4, 2)
-      assert(auto.nonEmpty)
-    }
-  }
-
   test("minhash-LSH pairs are a subset of exact jaccard pairs (no false positives after verify)") {
     val exact = Dedup.jaccardPairs(docs, 3, 0.2)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val lsh = Dedup.minhashLshPairs(docs, 3,
-      bands = 4, rowsPerBand = 2, threshold = 0.2)
+    val lsh = Dedup.minhashLshPairs(docs)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(lsh.subsetOf(exact))
     assert(lsh.contains((1L, 2L))) // identical docs always collide
@@ -416,7 +401,7 @@ class OperatorsSpec extends AnyFunSuite {
     val df = Seq(
       ("a", 1L, 6L), ("a", 2L, 3L), ("a", 3L, 1L), ("a", 4L, 6L),
       ("b", 5L, 10L)).toDF("grp", "uid", "cnt")
-    val out = Analytics.topKPerGroup(df, Seq("grp"), "cnt", "uid", 2)
+    val out = Analytics.topKPerGroup(df, Seq("grp"), "uid", 2)
       .orderBy($"grp", $"rank").collect()
     assert(out.length === 3)
     // ties on cnt=6 break by uid: 1 before 4
@@ -439,7 +424,7 @@ class OperatorsSpec extends AnyFunSuite {
       (102L, 3L, "2024-01-01 08:00:00")
     ).toDF("event_id", "user_id", "ts")
       .withColumn("ts", to_timestamp($"ts"))
-    val out = Analytics.asofJoin(left, right, "user_id", "ts", "ts",
+    val out = Analytics.asofJoin(left, right, "ts",
       Seq("event_id")).orderBy($"event_id").collect()
     assert(out.length === 3)
     assert(out(0).getLong(3) === 100L) // 10:00 picks the equal-ts row
@@ -540,7 +525,7 @@ class OperatorsSpec extends AnyFunSuite {
     assert(stored.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       .contains((1L, 2L)))
     val delta = norm(Dedup.deltaCapJaccardPairs(stored, corpus, incoming,
-      n = 3, threshold = 0.2, maxDf = 2))
+      maxDf = 2))
     graft.operators.Caches.releaseAll()
     val full = norm(Dedup.jaccardPairs(
       corpus.unionByName(incoming), n = 3,
@@ -564,8 +549,7 @@ class OperatorsSpec extends AnyFunSuite {
     val exact = Similarity.bruteForceTopK(queries, emb, k = 5)
       .select($"query_id", $"neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val quant = Similarity.quantizedIvfTopK(queries, emb, centroids,
-        k = 5, nprobe = 2, rerankN = 20)
+    val quant = Similarity.quantizedIvfTopK(queries, emb, centroids)
       .select($"query_id", $"neighbor_id", $"sim").collect()
     graft.operators.Caches.releaseAll()
     val got = quant.map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -642,8 +626,7 @@ class OperatorsSpec extends AnyFunSuite {
     val incoming = d.where(pmod($"doc_id", lit(10)) === 5)
     val existing = d.where(pmod($"doc_id", lit(10)) =!= 5)
     val stored = Dedup.exact(existing)
-    val merged = Dedup.incrementalExact(stored, incoming,
-      expectedStored = 100000L)
+    val merged = Dedup.incrementalExact(stored, incoming)
     val full = Dedup.exact(d)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select($"fp", $"keep_id", $"n_copies")
@@ -742,8 +725,7 @@ class OperatorsSpec extends AnyFunSuite {
     val single = Similarity.semanticDedupDrops(emb, cents, 0.35)
       .select($"dropped_id").as[Long].collect().toSet
     graft.operators.Caches.releaseAll()
-    val multi = Similarity.semanticDedupDropsMulti(emb, cents, 0.35,
-        nprobe = 2)
+    val multi = Similarity.semanticDedupDropsMulti(emb, cents)
       .select($"dropped_id").as[Long].collect().toSet
     // same policy over a superset of candidate pairs: every
     // single-probe drop survives, and the boundary pairs add more
@@ -830,8 +812,8 @@ class OperatorsSpec extends AnyFunSuite {
     val emb = spark.read
       .parquet("/root/testdata/sf0.001/embeddings.parquet")
     val subs = Caches.persistTracked(
-      ProductQuant.subVectors(emb, "vec_id", "embedding", 8, 8))
-    val cb = Caches.persistTracked(ProductQuant.fitCodebooks(subs, 16))
+      ProductQuant.subVectors(emb))
+    val cb = Caches.persistTracked(ProductQuant.fitCodebooks(subs))
     // structural: every vector compresses to exactly m codes, the
     // codebook is at most m*k rows (clusters can empty out)
     val codes = Caches.persistTracked(ProductQuant.assign(subs, cb))
@@ -843,8 +825,7 @@ class OperatorsSpec extends AnyFunSuite {
     // isolates the compression loss (ADC is an L2 scorer; comparing
     // to cosine ranks would also measure metric mismatch). PQ at
     // 32x compression is lossy; demand usable recall, not equality.
-    val adc = ProductQuant.adcTopK(subs.where($"vec_id" < 8), codes,
-      cb, 5)
+    val adc = ProductQuant.adcTopK(subs.where($"vec_id" < 8), codes, cb)
     val qv = graft.operators.Projection
       .quantize(col("embedding")).as("qv")
     val full = emb.select($"vec_id", qv)
@@ -936,7 +917,7 @@ class OperatorsSpec extends AnyFunSuite {
       (3L, "rep1 rep2 rep3 rep4 mid rep1 rep2 rep3 rep4"),
       (4L, "nothing shared here at all with anyone")
     ).toDF("doc_id", "text")
-    val out = Dedup.crossDocDupSpans(d, k = 4)
+    val out = Dedup.crossDocDupSpans(d)
       .orderBy($"doc_id").collect()
     val byId = out.map(r => r.getLong(0) ->
       (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))).toMap
@@ -955,7 +936,7 @@ class OperatorsSpec extends AnyFunSuite {
       (2L, "a b c d zz1 zz2 zz3 zz4 zz5"),
       (3L, "qq e f g h i j ww")
     ).toDF("doc_id", "text")
-    val out = Dedup.crossDocDupSpans(d, k = 4)
+    val out = Dedup.crossDocDupSpans(d)
       .where($"doc_id" === 1L).collect()(0)
     assert(out.getLong(2) === 2L)   // two spans
     assert(out.getLong(3) === 10L)  // 4 + 6 covered
@@ -967,7 +948,7 @@ class OperatorsSpec extends AnyFunSuite {
       (1L, "keep1 one two three four keep2 keep3"),
       (2L, "one two three four other stuff here more")
     ).toDF("doc_id", "text")
-    val out = Dedup.removeDupSpans(d, k = 4)
+    val out = Dedup.removeDupSpans(d)
       .orderBy($"doc_id").collect()
     // doc 1: 'one two three four' removed → kept 'keep1 keep2 keep3'
     assert(out(0).getLong(2) === 3L)
@@ -977,7 +958,7 @@ class OperatorsSpec extends AnyFunSuite {
       .map("%02x".format(_)).mkString
     assert(out(0).getString(4) === expect1)
     // invariant vs the stats query: removed == covered_tokens
-    val stats = Dedup.crossDocDupSpans(d, k = 4)
+    val stats = Dedup.crossDocDupSpans(d)
       .orderBy($"doc_id").collect()
     out.zip(stats).foreach { case (r, s) =>
       assert(r.getLong(3) === s.getLong(3),
@@ -992,7 +973,7 @@ class OperatorsSpec extends AnyFunSuite {
       (1L, "pre alpha beta gamma delta epsilon post1 post2"),
       (2L, "totally clean document with no overlap at all")
     ).toDF("doc_id", "text")
-    val out = Dedup.removeContaminatedSpans(train, evalDocs, k = 5)
+    val out = Dedup.removeContaminatedSpans(train, evalDocs)
       .orderBy($"doc_id").collect()
     // doc 1: the 5-gram window hits → 5 tokens cut, 3 kept
     assert(out(0).getLong(2) === 3L)
@@ -1043,7 +1024,7 @@ class OperatorsSpec extends AnyFunSuite {
       Projection.sign(j, d))).forall(s => s == 1 || s == -1))
     val emb = spark.read
       .parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val proj = Projection.project(emb, "embedding", d = 64, r = 8)
+    val proj = Projection.project(emb)
     // projected value check on one row: recompute in Scala
     val row = proj.select($"vec_id", $"qv", $"pv")
       .where($"vec_id" === 7L).collect()(0)
@@ -1147,15 +1128,15 @@ class OperatorsSpec extends AnyFunSuite {
     ).toDF("a","b")
     val edges = und.select($"a".as("src"), $"b".as("dst"))
       .unionAll(und.select($"b".as("src"), $"a".as("dst")))
-    val core = Graphs.kcore(edges, k = 3)
+    val core = Graphs.kcore(edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(core === Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L))
     // bounded peeling converges to the same core once rounds suffice
-    val bounded = Graphs.kcoreBounded(edges, k = 3, rounds = 4)
+    val bounded = Graphs.kcoreBounded(edges, rounds = 4)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(bounded === core)
     // before convergence it is a SUPERGRAPH of the true core
-    val early = Graphs.kcoreBounded(edges, k = 3, rounds = 1)
+    val early = Graphs.kcoreBounded(edges, rounds = 1)
       .collect().map(r => r.getLong(0)).toSet
     assert(core.keySet.subsetOf(early) && early.size > core.size)
   }
@@ -1211,8 +1192,7 @@ class OperatorsSpec extends AnyFunSuite {
       df.select("id_a", "id_b", "shared").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val prefix = pairSet(
-      Dedup.prefixFilterPairs(docs, n = 3,
-        thresholdBp = 5000))
+      Dedup.prefixFilterPairs(docs, thresholdBp = 5000))
     val uncapped = pairSet(
       Dedup.jaccardPairs(docs, n = 3,
         threshold = 0.5, maxDf = 1000000000L))

@@ -18,7 +18,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     val small = Seq((0, "a"), (1, "b"), (2, "c"), (7, "zz")).toDF("k", "name")
     val plain = big.join(small, Seq("k")).select("k", "v", "name")
       .as[(Int, Int, String)].collect().toSet
-    val salted = Skew.saltedJoin(big, small, "k", factor = 4,
+    val salted = Skew.saltedJoin(big, small, factor = 4,
       saltSource = Seq("v")).select("k", "v", "name")
       .as[(Int, Int, String)].collect().toSet
     assert(salted === plain)
@@ -175,7 +175,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     // and the full salted join still returns exactly the plain rows
     val plainRows = big.join(small, Seq("k"))
       .select("k", "v", "name").as[(Long, Int, String)].collect().toSet
-    val saltedRows = Skew.saltedJoin(big, small, "k", factor = 8,
+    val saltedRows = Skew.saltedJoin(big, small, factor = 8,
         saltSource = Seq("v"))
       .select("k", "v", "name").as[(Long, Int, String)].collect().toSet
     assert(saltedRows === plainRows)
@@ -378,12 +378,12 @@ class ScaleOpsSpec extends AnyFunSuite {
     graft.operators.TempDirs.deleteRecursivelyOnExit(zDir)
     graft.operators.TempDirs.deleteRecursivelyOnExit(sDir)
     val nFiles = 16
-    // quant16 min-max scaling gives both dimensions equal weight in
+    // quant16 scaling gives both dimensions equal weight in
     // the curve (raw values would let the wide `value` range dominate
     // the key's high bits and the narrow user_id would not cluster)
     Writers.zorderedParquet(ev, zDir.getAbsolutePath,
-      graft.expressions.ZOrderExpressions.quant16($"user_id", 0, 150),
-      graft.expressions.ZOrderExpressions.quant16($"value", 0, 491), nFiles)
+      graft.expressions.ZOrderExpressions.quant16($"user_id", 150),
+      graft.expressions.ZOrderExpressions.quant16($"value", 491), nFiles)
     Writers.rangeClusteredParquet(ev, sDir.getAbsolutePath,
       Seq("user_id"), nFiles)
     // layout must not change the data
@@ -419,7 +419,7 @@ class ScaleOpsSpec extends AnyFunSuite {
   test("observe: quality counters ride the job's own action, no second scan") {
     val ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .select($"event_id", $"event_type", $"value")
-    val (df, obs) = graft.operators.Telemetry.observed(ev, "quality",
+    val (df, obs) = graft.operators.Telemetry.observed(ev,
       count(lit(1)).as("n_rows"),
       sum(when($"value" < 0, 1).otherwise(0)).as("n_negative"),
       sum(when($"event_type".isNull, 1).otherwise(0)).as("n_null_type"))
@@ -438,12 +438,12 @@ class ScaleOpsSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_manifest_").toFile
     graft.operators.TempDirs.deleteRecursivelyOnExit(dir)
     Writers.zorderedParquet(ev, dir.getAbsolutePath,
-      graft.expressions.ZOrderExpressions.quant16($"user_id", 0, 150),
-      graft.expressions.ZOrderExpressions.quant16($"value", 0, 491), 16)
+      graft.expressions.ZOrderExpressions.quant16($"user_id", 150),
+      graft.expressions.ZOrderExpressions.quant16($"value", 491), 16)
     FileManifest.write(spark, dir.getAbsolutePath, Seq("user_id", "value"))
 
     val pruned = FileManifest.prunedRead(spark, dir.getAbsolutePath,
-        "value", 100.0, 120.0)
+        100.0, 120.0)
       .where($"value" >= 100.0 && $"value" <= 120.0)
     val full = spark.read.parquet(dir.getAbsolutePath)
       .where($"value" >= 100.0 && $"value" <= 120.0)
@@ -454,7 +454,7 @@ class ScaleOpsSpec extends AnyFunSuite {
       s"expected file skipping, read ${pruned.inputFiles.length}/16")
     // a range outside every file's span reads nothing at all
     val none = FileManifest.prunedRead(spark, dir.getAbsolutePath,
-      "value", 1e6, 2e6)
+      1e6, 2e6)
     assert(none.count() === 0L)
   }
 

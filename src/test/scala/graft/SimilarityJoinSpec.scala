@@ -189,23 +189,6 @@ class SimilarityJoinSpec extends AnyFunSuite {
     assert(b1 > 0 && r1 > 0 && b1 * r1 <= 64)
   }
 
-  test("minhash band geometry: cheapest (bands, rows) meeting the " +
-      "jaccard S-curve target; q23's 4x2 is the derived default") {
-    import graft.plans.BandGeometry._
-    assert(deriveMinhash(0.7, 0.9) === ((4, 2)))
-    // the derived geometry really meets the target, one band fewer misses
-    def recall(s: Double, b: Int, r: Int): Double =
-      1.0 - math.pow(1.0 - math.pow(s, r), b)
-    assert(recall(0.7, 4, 2) >= 0.9 && recall(0.7, 3, 2) < 0.9)
-    // higher sim target → cheaper geometry; never a single-hash band
-    val (b9, r9) = deriveMinhash(0.9, 0.9)
-    assert(b9 * r9 < 8 && r9 >= 2 && recall(0.9, b9, r9) >= 0.9)
-    // unreachable target fails loudly instead of silently degrading
-    intercept[IllegalArgumentException] {
-      deriveMinhash(0.05, 0.999, maxHashes = 16)
-    }
-  }
-
   test("auto-derived geometry recovers planted moderate-sim pairs on " +
       "heavy-tailed vectors; a fixed wide-band 8x8 drops them") {
     // 40 planted pairs at cosine ≈ cos(50°) ≈ 0.643 — well above the

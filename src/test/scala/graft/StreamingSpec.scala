@@ -68,7 +68,7 @@ class StreamingSpec extends AnyFunSuite {
       StreamOps.decodeJsonEnvelope(input.toDF()))
       .select($"event_id", $"user_id", $"ts")
     val q = graft.operators.Analytics.asofJoinBroadcast(
-        events, dim, "user_id", "ts", "ts", Seq("event_id"))
+        events, dim, Seq("event_id"))
       .writeStream.format("memory").queryName("asof_stream")
       .outputMode("append").start()
     try {
@@ -99,7 +99,7 @@ class StreamingSpec extends AnyFunSuite {
       .select($"event_id", $"user_id", $"ts")
     val seen = scala.collection.mutable.Map[Long, Long]()
     val q = StreamOps.asofEnrichScd(events, () => dim,
-        "user_id", "ts", "ts", Seq("event_id")) { (out, _) =>
+        Seq("event_id")) { (out, _) =>
       out.collect().foreach { r =>
         seen.synchronized {
           seen(r.getLong(0)) = if (r.isNullAt(3)) -1L else r.getLong(3)
@@ -293,7 +293,6 @@ class StreamingSpec extends AnyFunSuite {
   test("RocksDB state store: chained stateful topology, identical results to default provider") {
     import graft.streaming.StateStores
     import scala.jdk.CollectionConverters._
-    implicit val ctx = spark.sqlContext
     val w1 = Seq(
       json(1, "2024-01-01 10:00:05", 1, "view", 1.0),
       json(2, "2024-01-01 10:00:15", 1, "view", 1.0),
@@ -305,26 +304,27 @@ class StreamingSpec extends AnyFunSuite {
     val baseline = runStream("rocks_base_t", Seq(w1, w2, w3))(
       StreamOps.chainedAlertMetrics(_))
       .collect().map(_.toSeq).toSet
-    StateStores.useRocksDb(spark)
+    // RocksDB on a derived session: the shared session keeps its provider
+    val rs = org.apache.spark.sql.graftbridge.PlanBridge.cloneSession(spark)
+    StateStores.useRocksDb(rs)
+    implicit val ctx = rs.sqlContext
+    val input = MemoryStream[String]
+    val events = StreamOps.withEventTime(
+      StreamOps.decodeJsonEnvelope(input.toDF()))
+    val q = StreamOps.chainedAlertMetrics(events).writeStream
+      .format("memory").queryName("rocks_t").outputMode("append").start()
     try {
-      val input = MemoryStream[String]
-      val events = StreamOps.withEventTime(
-        StreamOps.decodeJsonEnvelope(input.toDF()))
-      val q = StreamOps.chainedAlertMetrics(events).writeStream
-        .format("memory").queryName("rocks_t").outputMode("append").start()
-      try {
-        Seq(w1, w2, w3).foreach { b => input.addData(b); q.processAllAvailable() }
-        // proof the query really ran on RocksDB stores, not the default
-        val metrics = q.lastProgress.stateOperators
-        assert(metrics.nonEmpty)
-        assert(metrics.forall(_.customMetrics.keySet.asScala
-          .exists(_.startsWith("rocksdb"))),
-          "state operators expose no rocksdb metrics — wrong provider?")
-      } finally q.stop()
-      val rocks = spark.table("rocks_t").collect().map(_.toSeq).toSet
-      assert(rocks === baseline)
-      assert(rocks.nonEmpty)
-    } finally StateStores.useDefault(spark)
+      Seq(w1, w2, w3).foreach { b => input.addData(b); q.processAllAvailable() }
+      // proof the query really ran on RocksDB stores, not the default
+      val metrics = q.lastProgress.stateOperators
+      assert(metrics.nonEmpty)
+      assert(metrics.forall(_.customMetrics.keySet.asScala
+        .exists(_.startsWith("rocksdb"))),
+        "state operators expose no rocksdb metrics — wrong provider?")
+    } finally q.stop()
+    val rocks = rs.table("rocks_t").collect().map(_.toSeq).toSet
+    assert(rocks === baseline)
+    assert(rocks.nonEmpty)
   }
 
   test("session windows: 30-min gap splits sessions, append after watermark") {
@@ -377,43 +377,14 @@ class StreamingSpec extends AnyFunSuite {
       q.processAllAvailable()
       input.addData(Seq(
         json(1, "2024-01-01 10:01:00", 1, "view", 1.0), // dup across batches
-        json(3, "2024-01-01 10:01:01", 1, "view", 3.0)))
+        json(3, "2024-01-01 10:01:01", 1, "view", 3.0),
+        json(2, "2024-01-01 10:01:02", 2, "view", 9.0))) // other user's id 2
       q.processAllAvailable()
     } finally q.stop()
-    val ids = spark.table("dedup_t").select($"event_id")
-      .as[Long].collect().sorted
-    assert(ids.toSeq === Seq(1L, 2L, 3L))
-  }
-
-  test("transformWithState dedup (v2 state API, RocksDB): same semantics as v1") {
-    import graft.streaming.StateStores
-    implicit val ctx = spark.sqlContext
-    StateStores.useRocksDb(spark)
-    try {
-      val input = MemoryStream[String]
-      val events = StreamOps.withEventTime(
-        StreamOps.decodeJsonEnvelope(input.toDF()))
-      val q = StreamOps.dedupStreamTws(
-          StreamOps.watermarked(events.toDF()), spark)
-        .writeStream
-        .format("memory").queryName("dedup_tws_t").outputMode("append").start()
-      try {
-        input.addData(Seq(
-          json(1, "2024-01-01 10:00:00", 1, "view", 1.0),
-          json(1, "2024-01-01 10:00:01", 1, "view", 1.0), // dup in batch
-          json(2, "2024-01-01 10:00:02", 1, "click", 2.0)))
-        q.processAllAvailable()
-        input.addData(Seq(
-          json(1, "2024-01-01 10:01:00", 1, "view", 1.0), // dup across batches
-          json(3, "2024-01-01 10:01:01", 1, "view", 3.0),
-          json(2, "2024-01-01 10:01:02", 2, "view", 9.0))) // other user's id 2
-        q.processAllAvailable()
-      } finally q.stop()
-      val rows = spark.table("dedup_tws_t")
-        .select($"event_id", $"user_id").as[(Long, Long)].collect().sorted
-      // ids dedup PER USER: user 1 keeps {1,2,3}; user 2's id 2 is separate
-      assert(rows.toSeq === Seq((1L, 1L), (2L, 1L), (2L, 2L), (3L, 1L)))
-    } finally StateStores.useDefault(spark)
+    val rows = spark.table("dedup_t")
+      .select($"event_id", $"user_id").as[(Long, Long)].collect().sorted
+    // ids dedup PER USER: user 1 keeps {1,2,3}; user 2's id 2 is separate
+    assert(rows.toSeq === Seq((1L, 1L), (2L, 1L), (2L, 2L), (3L, 1L)))
   }
 
   test("K1: checkpointed parquet append sink writes finalized windows") {
@@ -620,8 +591,7 @@ class StreamingSpec extends AnyFunSuite {
     val fixture = Seq(
       (3L, "c"), (1L, "a"), (2L, "b"), (5L, "e"), (4L, "d"))
       .toDF("event_id", "payload")
-    val stream = Replay.rateLimited(spark, fixture, "event_id",
-      rowsPerSecond = 1000)
+    val stream = Replay.rateLimited(spark, fixture, rowsPerSecond = 1000)
     val q = stream.writeStream.format("memory").queryName("replay_t")
       .outputMode("append").start()
     try {
@@ -747,7 +717,7 @@ class StreamingSpec extends AnyFunSuite {
     val input = MemoryStream[String]
     val events = StreamOps.withEventTime(
       StreamOps.decodeJsonEnvelope(input.toDF()))
-    val q = StreamOps.enriched(events, dim, "user_id", "c_key")
+    val q = StreamOps.enriched(events, dim)
       .select($"event_id", $"tier")
       .writeStream.format("memory").queryName("enrich_t")
       .outputMode("append").start()
@@ -1360,7 +1330,7 @@ class StreamingSpec extends AnyFunSuite {
       // phase 1: compacted copies land, snapshot files still present —
       // every snapshot row is now visible TWICE; the probe's
       // (query_id, neighbor_id) dedup must absorb that
-      val snapshot = VectorIndex.compactWrite(spark, idxDir, 128L << 20)
+      val snapshot = VectorIndex.compactWrite(spark, idxDir)
       assert(snapshot.size >= 2, "fixture must actually consolidate files")
       assert(probeSet(idxDir) === exp1,
         "mid-compaction duplicates must not change probe results")
@@ -1370,7 +1340,7 @@ class StreamingSpec extends AnyFunSuite {
       input.addData(b2); q.processAllAvailable()
       val peak = parquetFiles().length
 
-      VectorIndex.compactCommit(spark, idxDir, snapshot)
+      snapshot.commit(spark)
       assert(probeSet(idxDir) === expectedFor(b1 ++ b2),
         "post-commit index must serve base + both streamed batches")
       val after = parquetFiles().map(_.getAbsolutePath)
@@ -1402,7 +1372,7 @@ class StreamingSpec extends AnyFunSuite {
       (3L, "spark stream batch")).toDF("query_id", "qtext")
     def topk(post: org.apache.spark.sql.DataFrame,
         lens: org.apache.spark.sql.DataFrame) =
-      graft.operators.Relevance.bm25TopK(post, lens, qs, k = 10)
+      graft.operators.Relevance.bm25TopK(post, lens, qs)
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
           r.getDouble(3))).toSeq
     val served = topk(
@@ -1508,7 +1478,7 @@ class StreamingSpec extends AnyFunSuite {
     val q = graft.streaming.CdcStream.maintain(
         input.toDF().toDF("doc_id", "seq", "op", "text", "lang",
           "source", "n_chars"),
-        tableDir, "doc_id")
+        tableDir)
       .option("checkpointLocation", chk)
       .start()
     batches.foreach { b => input.addData(b); q.processAllAvailable() }
@@ -1555,7 +1525,7 @@ class StreamingSpec extends AnyFunSuite {
     val q = graft.streaming.CdcStream.maintain(
         input.toDF().toDF("doc_id", "seq", "op", "text", "lang",
           "source", "n_chars"),
-        tableDir, "doc_id")
+        tableDir)
       .option("checkpointLocation", chk)
       .start()
     Seq(b1, b2).foreach { b => input.addData(b); q.processAllAvailable() }
@@ -1577,8 +1547,7 @@ class StreamingSpec extends AnyFunSuite {
     }
     // retention passes the horizon: old versions throw, the live
     // snapshot is untouched
-    assert(graft.streaming.CdcStream.vacuum(spark, tableDir,
-      keepVersions = 1) == 2)
+    assert(graft.streaming.CdcStream.vacuum(spark, tableDir) == 2)
     intercept[IllegalArgumentException] {
       graft.streaming.CdcStream.readSnapshotAt(spark, tableDir, 0L)
     }
@@ -1603,7 +1572,7 @@ class StreamingSpec extends AnyFunSuite {
     val q = graft.streaming.CdcStream.maintain(
         input.toDF().toDF("doc_id", "seq", "op", "text", "lang",
           "source", "n_chars"),
-        tableDir, "doc_id")
+        tableDir)
       .option("checkpointLocation", chk)
       .start()
     try {
@@ -1614,7 +1583,7 @@ class StreamingSpec extends AnyFunSuite {
       // phase 1: compacted copy lands next to the snapshot files —
       // every row of the current version is now visible TWICE
       val snapshot = graft.operators.Compaction.compactWrite(
-        spark, s"$tableDir/v$v", None, 128L << 20)
+        spark, s"$tableDir/v$v", None)
       assert(snapshot.size >= 2, "fixture must actually consolidate files")
       assert(snapNow() === baseSet,
         "readSnapshot must absorb the double-visibility window")
@@ -1654,7 +1623,7 @@ class StreamingSpec extends AnyFunSuite {
     val q = graft.streaming.CdcStream.maintain(
         input.toDF().toDF("doc_id", "seq", "op", "text", "lang",
           "source", "n_chars"),
-        tableDir, "doc_id")
+        tableDir)
       .option("checkpointLocation", chk)
       .start()
     try {
@@ -1663,7 +1632,7 @@ class StreamingSpec extends AnyFunSuite {
         .listFiles().filter(f => f.isDirectory && f.getName.startsWith("v"))
         .map(_.getName).toSeq.sorted
       assert(versionDirs().size === 2) // v-1 (init) + the b1 version
-      val removed = graft.streaming.CdcStream.vacuum(spark, tableDir, 1)
+      val removed = graft.streaming.CdcStream.vacuum(spark, tableDir)
       assert(removed === 1)
       assert(versionDirs().size === 1, "only the current version remains")
       val expected1 = asSet(graft.operators.Cdc.applyChangeset(
@@ -1719,7 +1688,7 @@ class StreamingSpec extends AnyFunSuite {
       val v = graft.streaming.CdcStream.latestVersion(tableDir).get
       // phase 1, per-bucket units: doubled pairs inside the window
       val snapshot = graft.operators.Compaction.compactWrite(
-        spark, s"$tableDir/v$v", Some("bucket="), 128L << 20)
+        spark, s"$tableDir/v$v", Some("bucket="))
       assert(snapshot.size >= 2, "fixture must actually consolidate files")
       assert(got() === exp12,
         "the (id_a, id_b) dedup must absorb the double-visibility window")

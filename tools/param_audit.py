@@ -12,10 +12,24 @@ one value:
     whose own set is that one literal).
 
 The parse is textual (comments blanked, brackets matched), so treat the
-output as a worklist to read, not a proof: a call is matched by name, a
-qualified call `Obj.f(...)` belongs to `Obj`'s `f`, and an unqualified
-call belongs to the enclosing top-level object's `f` when that object
-defines one.
+output as a worklist to read, not a proof. A call is attributed to the
+object it names:
+
+  - `Obj.f(...)` belongs to `Obj`'s `f` only;
+  - a bare `f(...)` belongs to `Obj`'s `f` only inside the file that
+    defines it (unless the enclosing top-level object defines its own
+    `f`) or after an import of `Obj`'s members (`import ...Obj._`,
+    `import ...Obj.{f, ...}`);
+  - `x.f(...)` on a lower-case receiver (a value, a package path) may
+    be any owner's `f`.
+
+A def passed as a function value (`flatMap(f)`, `transform(Obj.f)`,
+`(f _)`) counts as a call whose every argument is unknown (not a
+literal).
+
+Every flagged parameter must be on KEEP_LIST below with its reason; the
+script exits 1 when one is not, and names keep-list entries that no
+longer match a flagged parameter.
 
 Usage: python3 tools/param_audit.py [repo-root]
 """
@@ -27,14 +41,53 @@ from collections import defaultdict
 
 root = sys.argv[1] if len(sys.argv) > 1 else "."
 
+# Parameters that stay settable although every call site in the tree
+# passes one literal (or leaves one default): "Obj.f(param)" -> reason.
+KEEP_LIST = {
+    "GraftKafkaTestSource.publish(key)":
+        "perfbench compiles against it; a Kafka record key is a producer "
+        "setting",
+    "KafkaSource.stream(minPartitions)":
+        "perfbench compiles against it; a Kafka deployment option",
+    "StreamingJobs.startDetection(trigger)":
+        "deployment setting: tests pass 1 s, the reference triggers every "
+        "60 s",
+    "StreamingJobs.startSessions(trigger)":
+        "deployment setting: tests pass 1 s, the reference triggers every "
+        "60 s",
+    "StreamingJobs.startDedup(trigger)":
+        "deployment setting: tests pass 1 s, the reference triggers every "
+        "60 s",
+    "Sinks.ensureIndex(name)":
+        "deployment setting: the document index a deployment writes to",
+    "Sinks.indexSinkBatch(index)":
+        "deployment setting: the document index a deployment writes to",
+    "Sinks.consoleReport(groupCol)":
+        "deployment setting: the column a console report tallies by",
+    "Sources.withConstant(name)":
+        "the reference injects a constant column per source (bitcoin, "
+        "ethereum)",
+    "Sources.withConstant(value)":
+        "the reference injects both `bitcoin` and `ethereum`",
+    "SimilarityJoinKernels.firstCommonBand(bandBits)":
+        "test reference for firstCommonBandWords, whose band widths come "
+        "from the exec's geometry",
+}
+
 DEF = re.compile(r"(?<![\w.])def\s+([A-Za-z_]\w*)\s*")
+IMPORT = re.compile(r"\bimport\s+([\w.]+)\.(_|\{[^}]*\}|\w+)")
 OBJ = re.compile(r"(?m)^(?:(?:private|final|case|sealed|abstract)\s+)*"
                  r"(?:object|class|trait)\s+(\w+)")
 CALL = re.compile(r"(?<![\w])(?:(\w+)\s*\.\s*)?(\w+)\s*(?=\()")
+# a def passed as a function value: a whole argument `f`, `Obj.f`, `f _`
+ETA = re.compile(r"(?<=[(,])\s*(?:(\w+)\s*\.\s*)?([A-Za-z_]\w*)"
+                 r"(?:\s+_)?\s*(?=[,)])")
 PARAM = re.compile(
     r"(?:val\s+|var\s+)?(\w+)\s*:\s*((?:[^=]|=>)+?)(?:=(?!>)\s*(.+))?$", re.S)
 NAMED = re.compile(r"(\w+)\s*=(?![=>])\s*(.+)$", re.S)
-LITERAL = re.compile(r'^(-?[\d.]+[LDdf]?|"[^"]*"|true|false|None)$')
+NUM = r"-?[\d.]+[LDdf]?"
+LITERAL = re.compile(
+    rf'^({NUM}(\s*(<<|\*)\s*{NUM})*|"[^"]*"|true|false|None)$')
 
 
 def scala_files(sub):
@@ -132,6 +185,20 @@ class Source:
         om = list(OBJ.finditer(self.t))
         self.opos = [m.start() for m in om]
         self.onames = [m.group(1) for m in om]
+        # (position, object, imported member names or None for `_`)
+        self.imports = []
+        for m in IMPORT.finditer(self.t):
+            sel = m.group(2)
+            names = None if sel == "_" else {
+                n.split("=>")[0].strip() for n in sel.strip("{}").split(",")}
+            if names is not None and "_" in names:
+                names = None
+            self.imports.append((m.start(), m.group(1).split(".")[-1], names))
+
+    def imports_member(self, pos, obj, name):
+        """Whether `obj`'s member `name` is imported before `pos`."""
+        return any(ip < pos and o == obj and (ns is None or name in ns)
+                   for ip, o, ns in self.imports)
 
     def line(self, pos):
         return bisect.bisect_right(self.nl, pos) + 1
@@ -169,6 +236,7 @@ for path in scala_files("src/main"):
                         params.append(dict(
                             obj=obj, fn=name, li=li, pi=pi, name=pm.group(1),
                             default=(pm.group(3) or "").strip() or None,
+                            file=src.rel,
                             where=f"{src.rel}:{src.line(m.start())}"))
             li += 1
 
@@ -182,6 +250,14 @@ for sub in ("src/main", "src/test", "perfbench/src"):
     for path in scala_files(sub):
         src = Source(path)
         starts = sorted(def_starts.get(src.rel, []))
+
+        def record(m, lists):
+            k = bisect.bisect_left(starts, (m.start(),)) - 1
+            calls[m.group(2)].append(dict(
+                q=m.group(1), lists=lists, src=src, pos=m.start(),
+                encl=src.owner(m.start()),
+                caller=starts[k][1:] if k >= 0 else None))
+
         for m in CALL.finditer(src.t):
             name = m.group(2)
             if name not in owners or \
@@ -192,20 +268,30 @@ for sub in ("src/main", "src/test", "perfbench/src"):
             while j < len(src.t) and src.t[j] == "(":
                 inner, j = group(src.t, j, "(", ")")
                 lists.append(split_top(inner))
-            k = bisect.bisect_left(starts, (m.start(),)) - 1
-            calls[name].append(dict(
-                q=m.group(1), lists=lists, encl=src.owner(m.start()),
-                caller=starts[k][1:] if k >= 0 else None))
+            record(m, lists)
+        for m in ETA.finditer(src.t):
+            if m.group(2) in owners:
+                record(m, None)
+
+
+def reaches(c, p):
+    """Whether call `c` can be a call of p's def (see the module doc)."""
+    q = c["q"]
+    if q:
+        return q == p["obj"] or not q[0].isupper()
+    if c["src"].rel == p["file"]:
+        return c["encl"] == p["obj"] or c["encl"] not in owners[p["fn"]]
+    return c["src"].imports_member(c["pos"], p["obj"], p["fn"])
 
 
 def raw_values(p):
     """(value, calling def) for every call of p's def."""
     out = []
     for c in calls[p["fn"]]:
-        q = c["q"]
-        if q and q[0].isupper() and q != p["obj"] and q in owners[p["fn"]]:
+        if not reaches(c, p):
             continue
-        if not q and c["encl"] in owners[p["fn"]] and c["encl"] != p["obj"]:
+        if c["lists"] is None:  # passed as a function value
+            out.append(("<eta>", c["caller"]))
             continue
         if p["li"] >= len(c["lists"]):
             out.append(("<default>" if p["default"] else "<unapplied>",
@@ -256,11 +342,29 @@ for p in params:
     elif len(vals) == 1 and LITERAL.match(next(iter(vals))):
         one_literal.append((p, next(iter(vals)), direct != vals))
 
+def key(p):
+    return f"{p['obj']}.{p['fn']}({p['name']})"
+
+
+def mark(p):
+    return "kept" if key(p) in KEEP_LIST else "NOT KEPT"
+
+
 print(f"default-valued parameters: {n_default}")
 print(f"default-valued, every caller leaves the default: {len(left_default)}")
 for p in left_default:
-    print(f"  {p['where']} {p['obj']}.{p['fn']}({p['name']} = {p['default']})")
+    print(f"  [{mark(p)}] {p['where']} {p['obj']}.{p['fn']}"
+          f"({p['name']} = {p['default']})")
 print(f"one literal at every call site: {len(one_literal)}")
 for p, v, through in one_literal:
     via = " (through a pass-through)" if through else ""
-    print(f"  {p['where']} {p['obj']}.{p['fn']}({p['name']}) = {v}{via}")
+    print(f"  [{mark(p)}] {p['where']} {key(p)} = {v}{via}")
+
+flagged = [p for p in left_default] + [p for p, _, _ in one_literal]
+unkept = [key(p) for p in flagged if key(p) not in KEEP_LIST]
+stale = sorted(set(KEEP_LIST) - {key(p) for p in flagged})
+for k in stale:
+    print(f"keep-list entry matches no flagged parameter: {k}")
+print(f"flagged: {len(flagged)}, on the keep-list: "
+      f"{len(flagged) - len(unkept)}, not kept: {len(unkept)}")
+sys.exit(1 if unkept else 0)
