@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Min/max file manifest — the data-skipping layer a table format
   * (Iceberg/Delta) provides, built here from parquet FOOTER stats

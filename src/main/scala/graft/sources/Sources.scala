@@ -4,9 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-/** Batch ingest surface (SURVEY §2.1 S4-S7): the reference's two
-  * deliberately asymmetric CSV paths plus constant injection and
-  * per-job null repair.
+/** Batch ingest surface (SURVEY §2.1 S4-S5): the reference's two
+  * deliberately asymmetric CSV paths. Its constant injection (S6) and
+  * per-job null repair (S7) are Spark's own `withColumn(name, lit(v))`
+  * and `na.fill(map)`.
   *
   * Differences from the reference, on purpose:
   *  - explicit schemas instead of `inferSchema` (deterministic runs,
@@ -22,25 +23,6 @@ object Sources {
     require(schema.size == names.size)
     spark.read.schema(schema).csv(path).toDF(names: _*)
   }
-
-  /** S6: constant column injection (`lit("bitcoin")` role). */
-  def withConstant(df: DataFrame, name: String, value: String): DataFrame =
-    df.withColumn(name, lit(value))
-
-  /** S7: per-job null repair (`fillna` maps differ per job). */
-  def repairNulls(df: DataFrame, stringFills: Map[String, String],
-      numericFills: Map[String, Long] = Map.empty): DataFrame = {
-    val s = if (stringFills.nonEmpty) df.na.fill(stringFills) else df
-    if (numericFills.nonEmpty) s.na.fill(numericFills) else s
-  }
-
-  /** Schema-evolving parquet read: a lake directory written across
-    * schema versions (columns added over time) reads as the UNION
-    * schema with old files null-filled — `mergeSchema` pays a footer
-    * scan per file, so it is an explicit opt-in here, never a default
-    * (at 100 TB the footer pass alone is a job). */
-  def parquetMergeSchema(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(path)
 
   /** Quarantining CSV ingest: PERMISSIVE parse with the raw line of
     * every malformed row captured in `_corrupt` — the batch mirror of
@@ -113,14 +95,6 @@ object Writers {
     w.format("parquet").saveAsTable(table)
   }
 
-  /** Second columnar format: ORC (in every Spark distribution — no
-    * extra jar). Same write/read/pushdown contract as parquet; useful
-    * when the surrounding lake is ORC-standardized (Hive heritage).
-    * Predicate pushdown reaches the ORC reader exactly as it does the
-    * parquet one (pinned in ScaleOpsSpec). */
-  def orc(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").orc(path)
-
   /** Scale path: range-clustered parquet — `repartitionByRange` gives
     * each output file a DISJOINT key range and the within-partition
     * sort makes parquet row-group min/max stats tight, so later
@@ -164,29 +138,5 @@ object Writers {
       .sortWithinPartitions(col("__zkey"))
       .drop("__zkey")
       .write.mode("overwrite").parquet(path)
-  }
-
-  /** Small-file compaction — the ingest-hygiene job every streaming
-    * lake needs: micro-batch sinks and incremental appends leave
-    * thousands of KB-sized files, and at 100 TB the resulting
-    * footer/open overhead (and driver file-listing memory) dominates
-    * scan cost long before data volume does. Reads the directory,
-    * plans `ceil(totalBytes / targetBytes)` output files from the
-    * LISTED sizes (no data pass to decide the layout), and rewrites
-    * in one job through a plain round-robin repartition (arrival order,
-    * no re-clustering). Returns the output file count. */
-  def compactParquet(spark: org.apache.spark.sql.SparkSession,
-      inPath: String, outPath: String, targetBytes: Long): Int = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(inPath)
-    val fs = p.getFileSystem(conf)
-    val totalBytes = fs.listStatus(p).iterator
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map(_.getLen).sum
-    val nFiles = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes)
-      .toInt
-    spark.read.parquet(inPath).repartition(nFiles)
-      .write.mode("overwrite").parquet(outPath)
-    nFiles
   }
 }

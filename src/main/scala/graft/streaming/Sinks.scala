@@ -5,8 +5,9 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger
 
 /** Sink builders mirroring the reference's output topology
   * (SURVEY §2.2 K1-K7): per-query checkpointed parquet append sinks,
-  * foreachBatch reporting, a pluggable index sink (the OpenSearch
-  * role), and multi-query fan-out with a wait on any of its queries.
+  * per-batch callbacks for Spark's `writeStream.foreachBatch` (the
+  * console report, the index sink in the OpenSearch role), and
+  * multi-query fan-out with a wait on any of its queries.
   */
 object Sinks {
 
@@ -39,14 +40,6 @@ object Sinks {
     if (spark.conf.getOption(CheckpointFiles.ConfKey).isEmpty)
       spark.conf.set(CheckpointFiles.ConfKey, classOf[CheckpointFiles].getName)
 
-  /** K2: foreachBatch reporting sink. The reference pretty-prints and
-    * re-aggregates per batch on the driver; the callback receives the
-    * batch DataFrame so callers can do the same (or better, keep it
-    * distributed). */
-  def foreachBatchSink(df: DataFrame,
-      f: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    df.writeStream.outputMode("append").foreachBatch(f)
-
   /** Streaming vector ingest — each micro-batch appends into the
     * persisted IVF index ([[graft.operators.VectorIndex.append]]): the
     * index stays serveable while a stream of new embeddings lands, and
@@ -71,10 +64,10 @@ object Sinks {
       }
   }
 
-  /** K2 concrete impl: the reference's per-batch console report
-    * (batch count + grouped tallies pretty-printed on the driver —
-    * job1_bots.py:271-303). Aggregation happens engine-side; only the
-    * small summary is collected. */
+  /** K2: the reference's per-batch console report as a `foreachBatch`
+    * callback (batch count + grouped tallies pretty-printed on the
+    * driver — job1_bots.py:271-303). Aggregation happens engine-side;
+    * only the small summary is collected. */
   def consoleReport(groupCol: String): (DataFrame, Long) => Unit = {
     (batch, id) =>
       val n = batch.count()
@@ -96,20 +89,6 @@ object Sinks {
   trait IndexSink {
     def ensureIndex(name: String, mapping: Map[String, String]): Unit
     def indexDocs(index: String, docs: Iterator[Map[String, Any]]): Unit
-  }
-
-  /** In-memory IndexSink for tests / local runs. */
-  final class MemoryIndexSink extends IndexSink {
-    val indices = scala.collection.mutable.Map[String, Map[String, String]]()
-    val docs = scala.collection.mutable.ArrayBuffer[(String, Map[String, Any])]()
-    override def ensureIndex(name: String,
-        mapping: Map[String, String]): Unit = synchronized {
-      if (!indices.contains(name)) indices(name) = mapping
-    }
-    override def indexDocs(index: String,
-        batch: Iterator[Map[String, Any]]): Unit = synchronized {
-      batch.foreach(d => docs += index -> d)
-    }
   }
 
   /** Durable file-backed [[IndexSink]]: one JSON-lines file per
@@ -198,19 +177,6 @@ object Sinks {
         })
       }
     }
-  }
-
-  /** K3 parity opt-in: foreachBatch adapter keeping the reference's
-    * driver-side collect semantics bug-for-bug (the documented
-    * bottleneck). Use [[indexSinkPartitions]] unless replicating the
-    * reference's behavior exactly. */
-  def indexSinkBatch(sink: IndexSink, index: String)
-      : (DataFrame, Long) => Unit = { (batch, _) =>
-    val cols = batch.columns
-    val rows = batch.collect().iterator.map { r =>
-      cols.zipWithIndex.map { case (c, i) => c -> r.get(i) }.toMap
-    }
-    sink.indexDocs(index, rows)
   }
 
   /** K7: block until any of `queries` terminates (improvement over the

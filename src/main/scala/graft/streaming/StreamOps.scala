@@ -348,17 +348,10 @@ object StreamOps {
       .toDF("user_id", "completed_at")
   }
 
-  /** Stream-static enrichment join: attach dimension attributes to the
-    * stream by the events' `user_id` = the dim's `c_key`
-    * (broadcast-hash per micro-batch; the dim is re-planned each batch
-    * so slowly-changing dims stay fresh). Stateless. */
-  def enriched(events: DataFrame, dim: DataFrame): DataFrame =
-    events.join(broadcast(dim), col("user_id") === col("c_key"), "left")
-
   /** Stream-static as-of enrichment against a SLOWLY CHANGING
-    * dimension. The plain stream-static shapes ([[enriched]], or
-    * [[graft.operators.Analytics.asofJoinBroadcast]] applied to a
-    * static frame) pin the dim's file listing when the static subplan
+    * dimension. The plain stream-static shapes (a broadcast
+    * join, or [[graft.operators.Analytics.asofJoinBroadcast]] applied
+    * to a static frame) pin the dim's file listing when the static subplan
     * is analyzed at query start — dim rows added while the stream runs
     * stay invisible for the life of the query. This variant
     * re-resolves the dim through `dimProvider` inside foreachBatch —
@@ -424,13 +417,6 @@ object StreamOps {
     * pipeline needs. Same bounded view-side state as the inner form. */
   def purchaseAttributionOuter(events: DataFrame): DataFrame =
     attributionJoin(events, "left_outer")
-
-  /** Streaming exact dedup on event_id via the built-in
-    * dropDuplicatesWithinWatermark — state expires once the watermark
-    * passes the first-seen event time (vs. [[dedupStream]]'s custom
-    * keyed-state variant with its own timeout policy). */
-  def dedupWithinWatermark(events: DataFrame): DataFrame =
-    watermarked(events).dropDuplicatesWithinWatermark("event_id")
 
   /** T9: the full chained topology — stateful detector ∪ stateless
     * alerts → second watermark + sliding-window agg, append mode.

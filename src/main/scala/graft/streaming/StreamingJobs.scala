@@ -23,8 +23,8 @@ object StreamingJobs {
     * source plan — exactly how the reference topology behaves (each
     * query maintains independent Kafka offsets, SURVEY T12), and
     * required for single-consumer test sources like MemoryStream. */
-  def startDetection(spark: SparkSession, events: () => DataFrame,
-      outDir: String, trigger: String = "60 seconds")
+  def startDetection(events: () => DataFrame, outDir: String,
+      trigger: String = "60 seconds")
       : Seq[StreamingQuery] = {
     val src = StreamOps.watermarked(events())
     val alerts = StreamOps.alertUnion(Seq(
@@ -81,8 +81,8 @@ object StreamingJobs {
     }
 
   /** job4-analog (session tracking): session-window metrics. */
-  def startSessions(spark: SparkSession, events: DataFrame,
-      outDir: String, trigger: String = "60 seconds")
+  def startSessions(events: DataFrame, outDir: String,
+      trigger: String = "60 seconds")
       : Seq[StreamingQuery] = {
     val metrics = StreamOps.sessionMetrics(StreamOps.watermarked(events))
     Seq(Sinks.parquetAppend(metrics,

@@ -6,7 +6,6 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.expressions.{TextExpressions, TextKernels}
-import graft.plans.JaccardInvertedJoinExec
 
 /** The jaccard-threshold join extension: naive SQL/DataFrame join
   * predicates on jaccard_sim rewrite onto the exact shingle

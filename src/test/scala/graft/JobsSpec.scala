@@ -33,7 +33,7 @@ class JobsSpec extends AnyFunSuite {
       StreamOps.withEventTime(StreamOps.decodeJsonEnvelope(in.toDF()))
     }
     def addData(rows: Seq[String]): Unit = inputs.foreach(_.addData(rows))
-    val queries = StreamingJobs.startDetection(spark, events _, dir,
+    val queries = StreamingJobs.startDetection(events _, dir,
       trigger = "1 seconds")
     try {
       addData(Seq(
@@ -112,7 +112,7 @@ class JobsSpec extends AnyFunSuite {
     def ev(in: MemoryStream[String]) = StreamOps.withEventTime(
       StreamOps.decodeJsonEnvelope(in.toDF()))
     val qs =
-      StreamingJobs.startSessions(spark, ev(inputA), s"$dir/s", "1 seconds") ++
+      StreamingJobs.startSessions(ev(inputA), s"$dir/s", "1 seconds") ++
       StreamingJobs.startDedup(spark, ev(inputB), s"$dir/d", "1 seconds")
     def addData(rows: Seq[String]): Unit = {
       inputA.addData(rows); inputB.addData(rows)
@@ -263,9 +263,9 @@ class JobsSpec extends AnyFunSuite {
         .start()
     }
     def startAll(): Seq[org.apache.spark.sql.streaming.StreamingQuery] =
-      StreamingJobs.startDetection(spark, evSrc _, s"$dir/det", "1 seconds") ++
+      StreamingJobs.startDetection(evSrc _, s"$dir/det", "1 seconds") ++
         StreamingJobs.startTweetPipelines(spark, twSrc _, s"$dir/tw", "1 seconds") ++
-        StreamingJobs.startSessions(spark, evSrc(), s"$dir/s", "1 seconds") ++
+        StreamingJobs.startSessions(evSrc(), s"$dir/s", "1 seconds") ++
         StreamingJobs.startDedup(spark, evSrc(), s"$dir/d", "1 seconds") :+
         startIndexFanout()
 

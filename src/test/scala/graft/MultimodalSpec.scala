@@ -48,20 +48,6 @@ class MultimodalSpec extends AnyFunSuite {
     assert(df(2L) === 0)
   }
 
-  test("schema evolution: mergeSchema unions versions, null-fills old files") {
-    val dir = GraftTestSpark.tmpDir("graftevo")
-    // v1 files (2 columns), then the pipeline adds a quality column
-    Seq((1L, "alpha"), (2L, "beta")).toDF("doc_id", "text")
-      .write.parquet(s"$dir/tbl/v=1")
-    Seq((3L, "gamma", 0.9)).toDF("doc_id", "text", "quality")
-      .write.parquet(s"$dir/tbl/v=2")
-    val merged = Sources.parquetMergeSchema(spark, s"$dir/tbl")
-    assert(merged.columns.toSet === Set("doc_id", "text", "quality", "v"))
-    val rows = merged.orderBy(col("doc_id")).collect()
-    assert(rows(0).isNullAt(rows(0).fieldIndex("quality"))) // old file
-    assert(rows(2).getDouble(rows(2).fieldIndex("quality")) === 0.9)
-  }
-
   test("CSV quarantine: malformed rows carry their raw line, clean rows flow") {
     val dir = GraftTestSpark.tmpDir("graftquar")
     java.nio.file.Files.writeString(
@@ -92,9 +78,8 @@ class MultimodalSpec extends AnyFunSuite {
       StructField("_c2", LongType)))
     val df = Sources.csvHeaderless(spark, s"$dir/data.csv", schema,
       Seq("user_name", "user_location", "followers"))
-    val repaired = Sources.repairNulls(
-      Sources.withConstant(df, "crypto_type", "bitcoin"),
-      Map("user_location" -> "Unknown"), Map("followers" -> 0L))
+    val repaired = df.withColumn("crypto_type", lit("bitcoin"))
+      .na.fill(Map("user_location" -> "Unknown", "followers" -> 0L))
       .orderBy(col("user_name")).collect()
     assert(repaired(0).getString(1) === "Unknown")
     assert(repaired(1).getLong(2) === 0L)

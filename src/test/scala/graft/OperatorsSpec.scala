@@ -808,7 +808,7 @@ class OperatorsSpec extends AnyFunSuite {
   // ---- product quantization ----
 
   ctest("PQ: 8 codes per vector, m*k codebook, ADC recall@5 over brute force is usable") {
-    import graft.operators.{Caches, ProductQuant, Similarity}
+    import graft.operators.{Caches, ProductQuant}
     val emb = spark.read
       .parquet("/root/testdata/sf0.001/embeddings.parquet")
     val subs = Caches.persistTracked(

@@ -118,26 +118,6 @@ class ScaleOpsSpec extends AnyFunSuite {
     assert(q.count() === expected)
   }
 
-  test("ORC roundtrip: values survive and predicates push down to the " +
-      "ORC reader") {
-    val dir = GraftTestSpark.tmpDir("graftorc")
-    val tt = Tables(spark, "/root/testdata/sf0.001")
-    Writers.orc(tt.orders
-      .select($"o_orderkey", $"o_totalprice", $"o_orderpriority"),
-      s"$dir/orders")
-    val back = spark.read.orc(s"$dir/orders")
-    val q = back.where($"o_totalprice" > 400000.0)
-    // pushdown reaches the ORC scan, same contract as parquet
-    val plan = q.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters: [IsNotNull(o_totalprice), " +
-      "GreaterThan(o_totalprice,400000.0)]"), s"no ORC pushdown in:\n$plan")
-    // and the data is intact
-    val viaParquet = tt.orders.where($"o_totalprice" > 400000.0)
-      .select($"o_orderkey").as[Long].collect().sorted
-    assert(q.select($"o_orderkey").as[Long].collect().sorted
-      === viaParquet)
-  }
-
   test("native functions are callable from SQL after registration") {
     Seq((1L, "The Fast key the fast")).toDF("id", "text")
       .createOrReplaceTempView("sqldocs")
@@ -416,22 +396,6 @@ class ScaleOpsSpec extends AnyFunSuite {
       s"z-order should also prune on user_id, touched $zUser/$nFiles")
   }
 
-  test("observe: quality counters ride the job's own action, no second scan") {
-    val ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-      .select($"event_id", $"event_type", $"value")
-    val (df, obs) = graft.operators.Telemetry.observed(ev,
-      count(lit(1)).as("n_rows"),
-      sum(when($"value" < 0, 1).otherwise(0)).as("n_negative"),
-      sum(when($"event_type".isNull, 1).otherwise(0)).as("n_null_type"))
-    // the pipeline's real action — a filtered write-side count; the
-    // metrics still see EVERY input row, not just the filter's output
-    val purchases = df.where($"event_type" === "purchase").count()
-    val m = obs.get
-    assert(m("n_rows") === 1000L)
-    assert(purchases < 1000L && purchases > 0L)
-    assert(m("n_negative") === 0L && m("n_null_type") === 0L)
-  }
-
   test("file manifest: footer-stats skipping shrinks the file list, result rows unchanged") {
     val ev = spark.read.parquet("/root/testdata/sf0.01/events.parquet")
       .select($"event_id", $"user_id", $"value")
@@ -456,31 +420,5 @@ class ScaleOpsSpec extends AnyFunSuite {
     val none = FileManifest.prunedRead(spark, dir.getAbsolutePath,
       1e6, 2e6)
     assert(none.count() === 0L)
-  }
-
-  test("compaction rewrites a small-file directory into the planned file count with identical rows") {
-    val ev = spark.read.parquet("/root/testdata/sf0.01/events.parquet")
-      .select($"event_id", $"user_id", $"value")
-    val smallDir = java.nio.file.Files.createTempDirectory("graft_small_").toFile
-    val outDir = java.nio.file.Files.createTempDirectory("graft_compact_").toFile
-    graft.operators.TempDirs.deleteRecursivelyOnExit(smallDir)
-    graft.operators.TempDirs.deleteRecursivelyOnExit(outDir)
-    // simulate micro-batch debris: 40 tiny files
-    ev.repartition(40).write.mode("overwrite").parquet(smallDir.getAbsolutePath)
-    def parquetFiles(d: java.io.File) =
-      d.listFiles().filter(_.getName.endsWith(".parquet"))
-    assert(parquetFiles(smallDir).length === 40)
-    val totalBytes = parquetFiles(smallDir).map(_.length).sum
-    val planned = Writers.compactParquet(spark, smallDir.getAbsolutePath,
-      outDir.getAbsolutePath, targetBytes = totalBytes / 4 + 1)
-    assert(parquetFiles(outDir).length === planned)
-    assert(planned <= 4 && planned >= 1)
-    // row identity (id set + checksums, not just count)
-    val a = ev.agg(count(lit(1)), sum($"event_id"),
-      sum(round($"value" * 100).cast("long"))).head()
-    val b = spark.read.parquet(outDir.getAbsolutePath)
-      .agg(count(lit(1)), sum($"event_id"),
-        sum(round($"value" * 100).cast("long"))).head()
-    assert(a === b)
   }
 }

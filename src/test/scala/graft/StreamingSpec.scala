@@ -412,28 +412,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(new java.io.File(s"$dir/chk/offsets").exists) // T11 layout
   }
 
-  test("K3: foreachBatch index sink receives alert docs with mappings") {
-    implicit val ctx = spark.sqlContext
-    import graft.streaming.Sinks
-    val sink = new Sinks.MemoryIndexSink
-    sink.ensureIndex("alerts", Map("user_id" -> "long", "alert_type" -> "keyword"))
-    val input = MemoryStream[String]
-    val events = StreamOps.withEventTime(
-      StreamOps.decodeJsonEnvelope(input.toDF()))
-    val q = Sinks.foreachBatchSink(
-      StreamOps.errorAlerts(events).drop("ts"),
-      Sinks.indexSinkBatch(sink, "alerts")).start()
-    try {
-      input.addData(Seq(
-        json(1, "2024-01-01 10:00:00", 5, "error", 1.0),
-        json(2, "2024-01-01 10:00:01", 6, "view", 1.0)))
-      q.processAllAvailable()
-    } finally q.stop()
-    assert(sink.indices.contains("alerts"))
-    assert(sink.docs.map(_._2("user_id")) === Seq(5L))
-    assert(sink.docs.head._2("alert_type") === "error")
-  }
-
   test("K3 scale path: executor-side index sink ships docs inside tasks (no driver collect)") {
     implicit val ctx = spark.sqlContext
     import graft.streaming.Sinks
@@ -441,9 +419,9 @@ class StreamingSpec extends AnyFunSuite {
     val input = MemoryStream[String]
     val events = StreamOps.withEventTime(
       StreamOps.decodeJsonEnvelope(input.toDF()))
-    val q = Sinks.foreachBatchSink(
-      StreamOps.errorAlerts(events).drop("ts"),
-      Sinks.indexSinkPartitions(() => new ExecutorProbeSink, "alerts"))
+    val q = StreamOps.errorAlerts(events).drop("ts").writeStream
+      .foreachBatch(
+        Sinks.indexSinkPartitions(() => new ExecutorProbeSink, "alerts"))
       .start()
     try {
       input.addData(Seq(
@@ -476,10 +454,9 @@ class StreamingSpec extends AnyFunSuite {
       StreamOps.decodeJsonEnvelope(input.toDF()))
     new Sinks.FileIndexSink(root)
       .ensureIndex("alerts", Map("user_id" -> "long"))
-    val q = Sinks.foreachBatchSink(
-      StreamOps.errorAlerts(events).drop("ts"),
-      Sinks.indexSinkPartitions(() => new Sinks.FileIndexSink(root),
-        "alerts"))
+    val q = StreamOps.errorAlerts(events).drop("ts").writeStream
+      .foreachBatch(Sinks.indexSinkPartitions(
+        () => new Sinks.FileIndexSink(root), "alerts"))
       .start()
     try {
       input.addData(Seq(
@@ -680,7 +657,6 @@ class StreamingSpec extends AnyFunSuite {
         "60 seconds", "60 seconds")
     }
     // batch formulation: same transforms, no watermark, same rows
-    implicit val ctx = spark.sqlContext
     val batchRaw = (rows ++ closer).toDF("value")
     val batch = StreamOps.windowedMetrics(
       StreamOps.errorAlerts(
@@ -709,28 +685,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(back.getLong(0) === 7L)
     assert(back.getString(3) === "purchase")
     assert(back.getDouble(4) === 9.5)
-  }
-
-  test("stream-static enrichment join attaches dim attributes per batch") {
-    implicit val ctx = spark.sqlContext
-    val dim = Seq((5L, "gold"), (6L, "basic")).toDF("c_key", "tier")
-    val input = MemoryStream[String]
-    val events = StreamOps.withEventTime(
-      StreamOps.decodeJsonEnvelope(input.toDF()))
-    val q = StreamOps.enriched(events, dim)
-      .select($"event_id", $"tier")
-      .writeStream.format("memory").queryName("enrich_t")
-      .outputMode("append").start()
-    try {
-      input.addData(Seq(
-        json(1, "2024-01-01 10:00:00", 5, "view", 1.0),
-        json(2, "2024-01-01 10:00:01", 9, "view", 1.0)))
-      q.processAllAvailable()
-    } finally q.stop()
-    val rows = spark.table("enrich_t").collect()
-      .map(r => r.getLong(0) -> Option(r.getString(1))).toMap
-    assert(rows(1L) === Some("gold"))
-    assert(rows(2L) === None) // unmatched user keeps null tier
   }
 
   test("stream-stream interval join: views attribute to later purchases") {
@@ -776,19 +730,6 @@ class StreamingSpec extends AnyFunSuite {
     // (the watermark-advancing filler purchases are out of scope)
     assert(got.toSet === Set(3L -> 1L, 5L -> -1L))
     assert(got.length === 2, s"duplicate outer emissions: ${got.toSeq}")
-  }
-
-  test("dropDuplicatesWithinWatermark removes repeats across batches") {
-    val w1 = Seq(
-      json(1, "2024-01-01 10:00:00", 1, "view", 1.0),
-      json(1, "2024-01-01 10:00:00", 1, "view", 1.0))
-    val w2 = Seq(
-      json(1, "2024-01-01 10:00:30", 1, "view", 1.0), // dup, within wm
-      json(2, "2024-01-01 10:01:00", 1, "view", 2.0))
-    val out = runStream("ddww_t", Seq(w1, w2))(
-      StreamOps.dedupWithinWatermark(_))
-    val ids = out.select($"event_id").as[Long].collect().sorted
-    assert(ids.toSeq === Seq(1L, 2L))
   }
 
   // T11 inputs: (name suffix, checkpoint file manager of the first run,
